@@ -156,7 +156,7 @@ object Bench {
     val errs = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val loadAfter = loadAvg1m()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errs,"sf":"$sfDir","loadavg":[$loadBefore,$loadAfter]}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"queries":$qs,"errors":$errs,"sf":${jstr(sfDir)},"loadavg":[$loadBefore,$loadAfter]}"""
     println(line)
     // The stdout line is also persisted: at 80+ queries it exceeds the
     // driver's tail-capture window, so tools/check_bench_drift.py falls
@@ -190,16 +190,19 @@ object Bench {
     // PERF_rN arrives empty). Print a compact summary as the LAST stdout
     // line: it is well under the window, so the driver's tail always
     // contains one complete parseable JSON object. Per-query timings
-    // stay in the full line and in the persisted artifact.
-    val compact = s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"nerr":${errors.size},"cpus":$cpus,"sf":"$sfDir","loadavg":[$loadBefore,$loadAfter],"queries_file":"$outPath"}"""
-    println(compact)
-    if (persist) try {
+    // stay in the full line and in the persisted artifact; "ok" says
+    // whether queries_file holds THIS run's full line (false when the
+    // run did not persist or the write failed).
+    val ok = persist && (try {
       val out = java.nio.file.Paths.get(outPath)
       if (out.getParent != null) java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, line.getBytes("UTF-8"))
+      true
     } catch { case e: Throwable =>
       System.err.println(s"[bench] could not persist $outPath: ${e.getMessage}")
-    }
+      false
+    })
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"nerr":${errors.size},"cpus":$cpus,"sf":${jstr(sfDir)},"loadavg":[$loadBefore,$loadAfter],"queries_file":${jstr(outPath)},"ok":$ok}""")
     spark.stop()
   }
 }

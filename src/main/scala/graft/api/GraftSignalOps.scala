@@ -81,11 +81,7 @@ trait GraftSignalOps { this: Graft.type =>
     // MEASURED node count (≈ 2M rows ≈ tens of MB framed), not from
     // the local core count; a billion-node graph takes the shuffle
     // path unchanged.
-    // spark.graft.pagerank.noBroadcast=true forces the shuffle path —
-    // the cluster override when executor memory can't hold the rank
-    // relation even under the row gate.
-    val bcastRanks = nN <= 2e6 &&
-      !edges.sparkSession.conf.getOption("spark.graft.pagerank.noBroadcast").contains("true")
+    val bcastRanks = nN <= 2e6
     def rankSide(df: DataFrame): DataFrame = if (bcastRanks) broadcast(df) else df
     val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).cast("double").as("__deg"))
     // outdeg is nodes-sized like the rank vector: under the same gate,

@@ -232,7 +232,7 @@ object ConnectorQueries {
     }
 
   def qStreamingSessionize(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_sessionize", gateGroup)
+    gateArm(spark, dir, "q_streaming_sessionize")
 
   private def buildSessionize(spark: SparkSession, dir: String) = {
     import graft.streaming.StreamingQueries
@@ -290,12 +290,21 @@ object ConnectorQueries {
     * fall back to a solo run if ever called before a group pass.
     * Hashes are therefore unchanged vs the per-arm replays; non-leader
     * bench numbers become the deposit-lookup cost by design
-    * (BASELINE.md round-17 notes; pins re-seeded). */
-  private def gateArm(spark: SparkSession, dir: String, arm: String,
-      group: Map[String, (SparkSession, String) =>
-        (org.apache.spark.sql.streaming.StreamingQuery, () => DataFrame)]): DataFrame = {
+    * (BASELINE.md round-17 notes; pins re-seeded).
+    *
+    * The gate's streams plan their shuffle/state stages at
+    * min(8, the session's spark.sql.shuffle.partitions): 13 concurrent
+    * micro-batch queries × 32 state partitions × 4-5 triggers is
+    * thousands of near-empty state tasks per pass, pure scheduling and
+    * state-store overhead at the capped trigger sizes (≤ ~250k
+    * rows/trigger at EVERY scale — caps are n-derived). The width, like
+    * the SFT binding's state-store provider, is scoped with
+    * [[withSessionConf]]: each query clones the session conf at
+    * start(), so the caller's session gets its own values back and its
+    * batch queries are untouched. */
+  private def gateArm(spark: SparkSession, dir: String, arm: String): DataFrame = {
     val appId = spark.sparkContext.applicationId
-    val leader = group.keys.min
+    val leader = gateGroup.map(_._1).min
     // per-pass completion bound: 5 min covers every gate scale up to
     // sf1 with 10x headroom AT THE OLD SEQUENTIAL AWAIT semantics; the
     // r18 concurrent awaits all start at ~pass start, so later arms no
@@ -303,72 +312,23 @@ object ConnectorQueries {
     // multi-minute host-steal window the effective headroom is the raw
     // conf value, not 10x. Raise via conf for amplified/degraded runs.
     val timeoutMs = spark.conf.get("spark.graft.gate.timeoutMs", "300000").toLong
-    // The gate's streams plan their shuffle/state stages at the
-    // session's spark.sql.shuffle.partitions (32 in the bench): 13
-    // concurrent micro-batch queries × 32 state partitions × 4-5
-    // triggers is thousands of near-empty state tasks per pass, pure
-    // scheduling/state-store overhead at the capped trigger sizes
-    // (≤ ~250k rows/trigger at EVERY scale — caps are n-derived).
-    // Scope the gate's streams to a smaller count; each query clones
-    // the session state at start(), so restoring after the builds
-    // leaves the session's batch queries untouched. Amplified drives
-    // raise this via conf alongside gate.timeoutMs.
-    val gateParts = spark.conf.get("spark.graft.gate.shufflePartitions", "8")
-    def withGateParts[A](body: => A): A = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", gateParts)
-      try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+    val gateParts =
+      math.min(8, spark.conf.get("spark.sql.shuffle.partitions").toInt).toString
+    def withGateParts[A](body: => A): A =
+      withSessionConf(spark, "spark.sql.shuffle.partitions" -> gateParts)(body)
     if (arm != leader) {
       writtenRoots.synchronized(armDeposits.get((appId, dir, arm))) match {
         case Some(df) => return df
         case None => // solo fallback: this arm only, its own pass
-          val (q, fetch) = withGateParts(group(arm)(spark, dir))
+          val (q, fetch) = withGateParts(gateGroup.toMap.apply(arm)(spark, dir))
           require(q.awaitTermination(timeoutMs), s"streaming $arm gate timed out")
           q.stop()
           return fetch()
       }
     }
-    // leader: one concurrent AvailableNow pass over the whole group.
-    // Builds run longest-arm-first (solo-pin cost order, guide §2.6:
-    // submit the long pole first) so the arms that bound the wall —
-    // the two admission arms — start streaming while the cheap arms
-    // are still being built; alphabetical order cost the tail arm a
-    // ~1.5 s late start (r18 gate trace). Results and deposits are
-    // unchanged: the queries are independent and every arm is still
-    // awaited and fetched.
-    val trace = sys.env.contains("SPARK_GRAFT_GATE_TRACE")
-    def t0 = System.nanoTime()
-    val passStart = t0
-    // q_streaming_sft MUST build last: its binding flips the session
-    // state-store provider for its own start and restores it in a
-    // finally — any build after it would latch the restored provider
-    // (the StateStores.useRocksDB ordering caveat; RocksDBGroupPassSpec
-    // runs the whole group under RocksDB and pins exactly this).
-    val buildOrder = Seq(
-      "q_streaming_best_of_n",
-      "q_streaming_neardup", "q_streaming_embed_neardup", "q_streaming_bm25",
-      "q_streaming_sessionize", "q_streaming_kmv",
-      "q_streaming_psi", "q_streaming_rl_metrics", "q_streaming_chunks",
-      "q_streaming_decontam", "q_streaming_domain_quota",
-      "q_streaming_reservoir", "q_streaming_sft").zipWithIndex.toMap
-    // drift guard (ADVICE r18): every arm must be listed — an arm added
-    // to the group but not here would silently build first via a
-    // getOrElse(-1), and in particular could build AFTER q_streaming_sft
-    // and latch its restored state-store provider
-    require(group.keySet == buildOrder.keySet,
-      s"gate buildOrder out of sync with the group: " +
-        s"missing ${group.keySet -- buildOrder.keySet}, " +
-        s"stale ${buildOrder.keySet -- group.keySet}")
-    val started = withGateParts(group.toSeq
-      .sortBy { case (n, _) => (buildOrder(n), n) }
-      .map { case (n, build) =>
-        val b0 = t0
-        val sq = build(spark, dir)
-        if (trace) System.err.println(
-          f"[gate] build $n ${(System.nanoTime() - b0) / 1e9}%.2fs (at ${(System.nanoTime() - passStart) / 1e9}%.2fs)")
-        (n, sq)
-      })
+    // leader: one concurrent AvailableNow pass over the whole group,
+    // built in gateGroup's order
+    val started = withGateParts(gateGroup.map { case (n, build) => (n, build(spark, dir)) })
     // await + fetch PER ARM, concurrently: a finished arm's fetch (the
     // bm25 deposit re-runs IncrementalBm25.search, ~3 s) overlaps the
     // still-streaming tail arms instead of serializing after them
@@ -380,11 +340,7 @@ object ConnectorQueries {
       n -> scala.concurrent.Future {
         require(q.awaitTermination(timeoutMs), s"streaming $n gate timed out")
         q.stop()
-        val f0 = t0
-        val r = fetch()
-        if (trace) System.err.println(
-          f"[gate] done  $n at ${(f0 - passStart) / 1e9}%.2fs fetch ${(System.nanoTime() - f0) / 1e9}%.2fs")
-        r
+        fetch()
       }
     }
     val results =
@@ -396,6 +352,22 @@ object ConnectorQueries {
       for ((n, df) <- results if n != arm) armDeposits((appId, dir, n)) = df
     }
     results(arm)
+  }
+
+  /** Runs `body` with `confs` set on the session, then puts each key
+    * back as it was found: its previous value, or unset. A streaming
+    * query latches the conf at start(), so queries started inside keep
+    * the scoped values. Session conf is shared, so this assumes no
+    * other thread starts or plans a query on the session while the
+    * scope is open: the gate builds its arms sequentially on the
+    * caller's thread, and fetches only after every build. */
+  private def withSessionConf[A](spark: SparkSession, confs: (String, String)*)(body: => A): A = {
+    val found = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally confs.foreach { case (k, _) =>
+      found.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
   }
 
   /** The KMV cardinality sketch running INSIDE Structured Streaming —
@@ -414,7 +386,7 @@ object ConnectorQueries {
     * the key cardinality — the streaming-native form of approximate
     * COUNT(DISTINCT) dashboards run over an infinite feed. */
   def qStreamingKmv(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_kmv", gateGroup)
+    gateArm(spark, dir, "q_streaming_kmv")
 
   private def buildKmv(spark: SparkSession, dir: String) = {
     import graft.streaming.StreamingQueries
@@ -456,7 +428,7 @@ object ConnectorQueries {
     * 100 TB/continuous shape: state is ONE long per domain forever; a
     * trigger shuffles only its own batch on the domain key. */
   def qStreamingDomainQuota(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_domain_quota", gateGroup)
+    gateArm(spark, dir, "q_streaming_domain_quota")
 
   private def buildDomainQuota(spark: SparkSession, dir: String) = {
     import graft.streaming.StreamingQueries
@@ -490,7 +462,7 @@ object ConnectorQueries {
     * 100 TB/continuous shape: per trigger cost ∝ batch + |strata|·k;
     * the store is bounded at |strata|·k rows forever. */
   def qStreamingReservoir(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_reservoir", gateGroup)
+    gateArm(spark, dir, "q_streaming_reservoir")
 
   private def buildReservoir(spark: SparkSession, dir: String) = {
     import graft.streaming.{IncrementalReservoir, StreamingQueries}
@@ -529,7 +501,7 @@ object ConnectorQueries {
     * own pool never closes (nothing advances the watermark past it)
     * and is filtered defensively. */
   def qStreamingRlMetrics(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_rl_metrics", gateGroup)
+    gateArm(spark, dir, "q_streaming_rl_metrics")
 
   private def buildRlMetrics(spark: SparkSession, dir: String) = {
     import graft.streaming.{StreamingQueries, StreamingRlMetrics}
@@ -584,7 +556,7 @@ object ConnectorQueries {
     * process-cached and broadcast; the benchmark side never re-scans),
     * no history term at all — the one streaming arm with zero state. */
   def qStreamingDecontam(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_decontam", gateGroup)
+    gateArm(spark, dir, "q_streaming_decontam")
 
   private def buildDecontam(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalDecontam
@@ -625,7 +597,7 @@ object ConnectorQueries {
     * buckets; the query reads its terms' posting buckets and the
     * O(batches) stats rows — nothing re-scans history. */
   def qStreamingBm25(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_bm25", gateGroup)
+    gateArm(spark, dir, "q_streaming_bm25")
 
   private def buildBm25(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalBm25
@@ -670,7 +642,7 @@ object ConnectorQueries {
     * progressive-close arms). The sentinel's own pool never closes and
     * is filtered defensively. */
   def qStreamingBestOfN(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_best_of_n", gateGroup)
+    gateArm(spark, dir, "q_streaming_best_of_n")
 
   private def buildBestOfN(spark: SparkSession, dir: String) = {
     import graft.streaming.{StreamingBestOfN, StreamingQueries}
@@ -712,7 +684,7 @@ object ConnectorQueries {
     * human's activity inside gap windows times the users active near
     * the watermark frontier, never corpus-sized. */
   def qStreamingSft(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_sft", gateGroup)
+    gateArm(spark, dir, "q_streaming_sft")
 
   private def buildSft(spark: SparkSession, dir: String) = {
     import graft.streaming.{StateStores, StreamingQueries, StreamingSft}
@@ -726,19 +698,19 @@ object ConnectorQueries {
     // gate binding on the RocksDB state store (state off the executor
     // heap, changelog checkpointing) — the documented large-state
     // provider, previously suite-only (VERDICT r16 item 5). The
-    // provider conf is read at query START, so the try/finally scopes
-    // it to this one query; output parity with the default provider is
-    // pinned by RocksDBArmsSpec and the unchanged gate hash.
-    StateStores.useRocksDB(spark)
-    val q =
-      try out.toDF().writeStream.format("parquet")
+    // provider conf is read at query START, so the scope covers this
+    // one query and the session gets back the provider it had; output
+    // parity with the default provider is pinned by RocksDBArmsSpec
+    // and the unchanged gate hash.
+    val q = withSessionConf(spark, StateStores.RocksDBConf: _*) {
+      out.toDF().writeStream.format("parquet")
         .outputMode("append")
         .option("path", outDir.toString)
         .option("checkpointLocation",
           Files.createTempDirectory("ck-stream-sft-").toString)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      finally StateStores.useDefault(spark)
+    }
     (q, () => spark.read.parquet(outDir.toString).filter(col("user_id") >= 0))
   }
 
@@ -749,22 +721,30 @@ object ConnectorQueries {
     * realistic deployment shape: a production ingest runs all of these
     * operators CONCURRENTLY over the same feeds — sessionization,
     * quota, sampling, drift, dedup admission, index maintenance are
-    * one pipeline, not thirteen serial replays. */
-  private lazy val gateGroup: Map[String, (SparkSession, String) =>
-      (org.apache.spark.sql.streaming.StreamingQuery, () => DataFrame)] = Map(
+    * one pipeline, not thirteen serial replays.
+    *
+    * Listed in build order, longest arm first (solo-pin cost order,
+    * guide §2.6: submit the long pole first), so the arms that bound
+    * the wall — the two admission arms — start streaming while the
+    * cheap arms are still being built; alphabetical order cost the tail
+    * arm a ~1.5 s late start (r18 gate trace). Order never changes
+    * rows: the queries are independent and every arm is awaited and
+    * fetched. */
+  private lazy val gateGroup: Seq[(String, (SparkSession, String) =>
+      (org.apache.spark.sql.streaming.StreamingQuery, () => DataFrame))] = Seq(
     "q_streaming_best_of_n" -> (buildBestOfN _),
-    "q_streaming_kmv" -> (buildKmv _),
-    "q_streaming_rl_metrics" -> (buildRlMetrics _),
-    "q_streaming_sessionize" -> (buildSessionize _),
-    "q_streaming_sft" -> (buildSft _),
-    "q_streaming_domain_quota" -> (buildDomainQuota _),
-    "q_streaming_psi" -> (buildPsi _),
-    "q_streaming_reservoir" -> (buildReservoir _),
+    "q_streaming_neardup" -> (buildNeardup _),
+    "q_streaming_embed_neardup" -> (buildEmbedNeardup _),
     "q_streaming_bm25" -> (buildBm25 _),
+    "q_streaming_sessionize" -> (buildSessionize _),
+    "q_streaming_kmv" -> (buildKmv _),
+    "q_streaming_psi" -> (buildPsi _),
+    "q_streaming_rl_metrics" -> (buildRlMetrics _),
     "q_streaming_chunks" -> (buildChunks _),
     "q_streaming_decontam" -> (buildDecontam _),
-    "q_streaming_neardup" -> (buildNeardup _),
-    "q_streaming_embed_neardup" -> (buildEmbedNeardup _))
+    "q_streaming_domain_quota" -> (buildDomainQuota _),
+    "q_streaming_reservoir" -> (buildReservoir _),
+    "q_streaming_sft" -> (buildSft _))
 
   /** The per-micro-batch PSI drift monitor
     * ([[graft.streaming.StreamingQueries.psiMonitorBatch]]) bound
@@ -788,7 +768,7 @@ object ConnectorQueries {
     * 100 TB/continuous shape: state-free; per trigger one bounded agg
     * of the batch + a |categories|-row broadcast join. */
   def qStreamingPsi(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_psi", gateGroup)
+    gateArm(spark, dir, "q_streaming_psi")
 
   private def buildPsi(spark: SparkSession, dir: String) = {
     import graft.streaming.StreamingQueries
@@ -848,7 +828,7 @@ object ConnectorQueries {
     * bucket-pruned index + verify on candidates only — never
     * all-pairs; the store grows with ADMITTED docs only. */
   def qStreamingNeardup(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_neardup", gateGroup)
+    gateArm(spark, dir, "q_streaming_neardup")
 
   private def buildNeardup(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalDedup
@@ -893,7 +873,7 @@ object ConnectorQueries {
     * 100 TB/continuous shape: per-batch cost ∝ batch + matched
     * buckets; the store is ~16 B per unique chunk forever. */
   def qStreamingChunks(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_chunks", gateGroup)
+    gateArm(spark, dir, "q_streaming_chunks")
 
   private def buildChunks(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalChunkStore
@@ -1002,7 +982,7 @@ object ConnectorQueries {
     * bucket-pruned vector index + verify on candidates only; the
     * store grows with ADMITTED vectors only. */
   def qStreamingEmbedNeardup(spark: SparkSession, dir: String): DataFrame =
-    gateArm(spark, dir, "q_streaming_embed_neardup", gateGroup)
+    gateArm(spark, dir, "q_streaming_embed_neardup")
 
   private def buildEmbedNeardup(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalEmbedDedup

@@ -124,12 +124,10 @@ object DedupQueries {
   }
 
   def minhashDupesOn(df: DataFrame, id: String, text: String, threshold: Double): DataFrame = {
-    val docs = df.sparkSession.conf
-      .getOption("spark.graft.minhash.mat").getOrElse("ckpt") match {
-      case "none"  => signatures(df, id, text)
-      case "cache" => signatures(df, id, text).persist()
-      case _       => signatures(df, id, text).localCheckpoint(true)
-    }
+    // the signature frame feeds the band self-join and both shingle
+    // lookups: materialize it once (eager checkpoint beat both lazy
+    // persist and recompute in an interleaved in-JVM A/B)
+    val docs = signatures(df, id, text).localCheckpoint(true)
     val bands = bandsOf(docs)
 
     val candidates = bands.as("x").join(bands.as("y"),

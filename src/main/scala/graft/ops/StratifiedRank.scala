@@ -67,9 +67,7 @@ object StratifiedRank {
     // expensive projections (qPrefPairsQuality's stopword scoring,
     // qRankFuncs' tie-group agg) run a single time. Lazy and
     // spillable; recomputes on executor loss.
-    val base = if (df.sparkSession.conf
-        .getOption("spark.graft.srank.mat").contains("none")) base1
-      else base1.persist()
+    val base = base1.persist()
     // Boundaries only decide CHUNKING, never values, so they come as
     // cheaply as possible: a caller whose key distribution is known
     // (e.g. the uniform 31-bit LCG of tokenBudgetSample) passes an

@@ -25,33 +25,26 @@ object StateStores {
   val RocksDBProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** The session conf that selects RocksDB state with changelog
+    * checkpointing (per-batch deltas instead of full SST re-uploads at
+    * every commit). The gate's SFT binding scopes exactly these keys to
+    * its own query start and restores what it found. */
+  val RocksDBConf: Seq[(String, String)] = Seq(
+    "spark.sql.streaming.stateStore.providerClass" -> RocksDBProvider,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+
   /** Switch subsequently-started streaming queries in this session to
-    * RocksDB state with changelog checkpointing. Returns the session
-    * for chaining.
-    *
-    * Scope caveat (VERDICT r17): this mutates SESSION-wide conf, so
-    * inside a concurrent group build (ConnectorQueries.gateArm) any
-    * OTHER query started while the flag is set would also run on
-    * RocksDB. Today that cannot happen — the group's builds run
-    * sequentially on one thread and each query latches the provider at
-    * start, so the try/finally in the SFT binding scopes it — and the
-    * provider never affects rows (parity pinned by RocksDBStateSpec /
-    * RocksDBArmsSpec / RocksDBGroupPassSpec), so even an accidental
-    * wider scope is correctness-neutral. If builds ever become
-    * concurrent, move this to a per-query conf on the writer. */
+    * [[RocksDBConf]]. Returns the session for chaining. This mutates
+    * SESSION-wide conf: queries already running keep the provider they
+    * latched at start. */
   def useRocksDB(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDBProvider)
-    // per-batch deltas instead of full SST re-uploads at every commit
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    RocksDBConf.foreach { case (k, v) => spark.conf.set(k, v) }
     spark
   }
 
   /** Restore the Spark default (heap-backed) provider. */
   def useDefault(spark: SparkSession): SparkSession = {
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.unset(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    RocksDBConf.foreach { case (k, _) => spark.conf.unset(k) }
     spark
   }
 }

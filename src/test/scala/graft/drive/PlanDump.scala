@@ -3,10 +3,18 @@ package graft.drive
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
-/** Dumps formatted physical plans of headline queries to PLANS.md —
-  * the at-a-glance evidence that pushdown/broadcast/partial-agg/
-  * TakeOrdered actually happen. Regenerate:
-  * `sbt "Test/runMain graft.drive.PlanDump"`. */
+/** Dumps formatted physical plans. Two modes:
+  *
+  *  - no args: the headline queries at sf0.001 to PLANS.md — the
+  *    at-a-glance evidence that pushdown/broadcast/partial-agg/
+  *    TakeOrdered actually happen. Regenerate:
+  *    `sbt "Test/runMain graft.drive.PlanDump"`.
+  *  - `<round> <tag> <q1,q2,...> [sfDir]`: each named query to
+  *    plans/<round>/<query>_<tag>.txt — an optimization round's
+  *    before/after plan evidence, at sf0.01 unless `sfDir` is given
+  *    (plan shape, not data scale, is the evidence; AQE initial plans
+  *    are identical across SFs for these queries).
+  */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
@@ -14,6 +22,29 @@ object PlanDump {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.nonEmpty) roundPlans(spark, args) else headlinePlans(spark)
+    spark.stop()
+  }
+
+  private def explain(spark: SparkSession, name: String, dir: String): String =
+    graft.SparkEntry.queries(name)(spark, dir).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+
+  private def roundPlans(spark: SparkSession, args: Array[String]): Unit = {
+    val round = args(0)
+    val tag = if (args.length > 1) args(1) else "before"
+    val names = if (args.length > 2) args(2).split(',').map(_.trim).filter(_.nonEmpty).toSeq
+                else Seq.empty
+    val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
+    Files.createDirectories(Paths.get(s"plans/$round"))
+    names.foreach { name =>
+      val txt = explain(spark, name, dir)
+      Files.write(Paths.get(s"plans/$round/${name}_$tag.txt"), txt.getBytes("UTF-8"))
+      println(s"wrote plans/$round/${name}_$tag.txt (${txt.length} chars)")
+    }
+  }
+
+  private def headlinePlans(spark: SparkSession): Unit = {
     val dir = "/root/testdata/sf0.001"
     val headline = Seq(
       "q_filter_range", "q_agg_stats", "q_join_enrich", "q_topk",
@@ -45,14 +76,11 @@ object PlanDump {
     sb.append("`TakeOrderedAndProject` for top-N, partial+final `HashAggregate`,\n")
     sb.append("`floatvecdot` staying native in projections.\n")
     headline.foreach { name =>
-      val df = graft.SparkEntry.queries(name)(spark, dir)
       sb.append(s"\n## $name\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode).take(6000))
+      sb.append(explain(spark, name, dir).take(6000))
       sb.append("\n```\n")
     }
     Files.write(Paths.get("PLANS.md"), sb.toString.getBytes("UTF-8"))
     println("WROTE PLANS.md " + sb.length + " chars")
-    spark.stop()
   }
 }

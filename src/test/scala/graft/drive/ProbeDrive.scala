@@ -2,12 +2,12 @@ package graft.drive
 
 import org.apache.spark.sql.SparkSession
 
-/** Round-18 micro-probe: times one query's CONSTRUCTION (logical plan
-  * build — eager counts/checkpoints included) vs EXECUTION (noop
-  * write) separately, N reps in one JVM. Usage:
-  *   Test/runMain graft.drive.R18ProbeDrive <query> [reps] [sfDir] [cpus]
+/** Micro-probe: times one query's CONSTRUCTION (logical plan build —
+  * eager counts/checkpoints included) vs EXECUTION (noop write)
+  * separately, N reps in one JVM. Usage:
+  *   Test/runMain graft.drive.ProbeDrive <query> [reps] [sfDir] [cpus]
   */
-object R18ProbeDrive {
+object ProbeDrive {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3

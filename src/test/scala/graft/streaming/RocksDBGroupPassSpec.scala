@@ -17,11 +17,9 @@ import graft.{SparkEntry, SparkTestBase}
   * ignored conf would pass a rows-only comparison).
   *
   * Note the SFT arm's gate binding sets RocksDB for ITSELF in both
-  * passes (its documented posture), and its `finally` restores the
-  * default provider — safe here because gateArm's longest-first build
-  * order pins q_streaming_sft LAST, so every other query has already
-  * latched its provider when the restore happens (the ordering caveat
-  * documented on [[StateStores.useRocksDB]]; this spec is the pin). */
+  * passes (its documented posture) and then restores whatever provider
+  * the session had, so in the RocksDB pass every arm built after it
+  * still starts on RocksDB, and in the default pass none does. */
 class RocksDBGroupPassSpec extends SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"

@@ -127,17 +127,28 @@ def load_bench(path):
         _check_cpus(d["parsed"], path)
         return d["parsed"]["queries"], d["parsed"].get("loadavg")
     m = re.search(r'\{"metric".*\}', d.get("tail", ""))
+    parsed = None
     if m:
         try:
             parsed = json.loads(m.group(0))
-            # The bench's LAST stdout line is a compact driver-facing
-            # summary with no "queries" map (round 19); per-query data
-            # lives in the persisted artifact — fall through to it.
-            if "queries" in parsed:
-                _check_cpus(parsed, path)
-                return parsed["queries"], parsed.get("loadavg")
         except json.JSONDecodeError:
             pass  # tail-capture truncated the line mid-JSON
+    if parsed is not None:
+        _check_cpus(parsed, path)
+        if "queries" in parsed:
+            return parsed["queries"], parsed.get("loadavg")
+        # The bench's LAST stdout line is a compact summary with no
+        # "queries" map; per-query data lives in the file it names,
+        # which holds this run's line only when "ok".
+        qf = parsed.get("queries_file")
+        if qf and parsed.get("ok", True):
+            qpath = Path(qf)
+            if not qpath.is_absolute():
+                qpath = Path(__file__).parent.parent / qpath
+            if qpath.exists():
+                q = json.load(open(qpath))
+                _check_cpus(q, qpath)
+                return q["queries"], q.get("loadavg")
     # Bench.scala persists the full line to target/bench_last.json for
     # exactly this case: the 199-query line exceeds tail capture.
     if FALLBACK.exists():
