@@ -40,10 +40,15 @@ private[streaming] object Admission {
 }
 
 /** Crash-safe maintenance for the append-only parquet stores the
-  * incremental-dedup operators keep ([[IncrementalDedup]],
-  * [[IncrementalEmbedDedup]]): each store is a directory of
+  * incremental admission operators keep: each store is a directory of
   * subdirectories ("subs"), rewritten via a temp dir + two renames, with
-  * roll-forward recovery on every entry point.
+  * roll-forward recovery on every entry point. The four admission
+  * stores keep six bucketed indexes among their subs, laid out by
+  * [[BucketFanout]]: [[IncrementalDedup]] (`bands/`, `docs/`),
+  * [[IncrementalBm25]] (`postings/`, `docstats/`, plus the flat
+  * `stats/`), [[IncrementalChunkStore]] (`chunks/`) and
+  * [[IncrementalEmbedDedup]] (`vecs/`, plus the flat `radii/`);
+  * [[IncrementalReservoir]] swaps its flat `sample/` the same way.
   *
   * Single-OPERATOR contract (see [[IncrementalDedup.compactStore]]):
   * writers AND readers both call [[recover]], so none of them may run

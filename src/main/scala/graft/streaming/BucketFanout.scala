@@ -1,11 +1,25 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Size-adaptive bucket fan-out for the directory-partitioned
-  * incremental indexes ([[IncrementalDedup]] band store,
-  * [[IncrementalChunkStore]] chunk store).
+/** The bucketed-index layout of the incremental admission stores, and
+  * its size-adaptive fan-out. Six indexes share it, each declared
+  * below as one [[Index]] description:
+  *  - [[IncrementalDedup]]: [[Bands]] (LSH band rows) and [[Docs]]
+  *    (admitted text);
+  *  - [[IncrementalBm25]]: [[Postings]] and [[DocStats]];
+  *  - [[IncrementalChunkStore]]: [[Chunks]];
+  *  - [[IncrementalEmbedDedup]]: [[Vecs]].
+  *
+  * An index lives at `storeDir/<sub>`, directory-partitioned by
+  * `<dirCol> = pmod(<key>, fanout)`; every append writes one file per
+  * non-empty bucket and stamps the `_fanout` manifest, every rewrite
+  * ends at one file per non-empty bucket clustered by the sort keys,
+  * and every per-trigger read is pruned to the touched buckets' dirs.
+  * The stores call these operations and keep only their admission
+  * logic.
   *
   * The fan-out trades two costs that move in opposite directions:
   *  - per-trigger PRUNED READ ≈ touched_buckets/fanout of the index —
@@ -183,4 +197,104 @@ object BucketFanout {
     else writeManifest(spark, path, actual)
     t
   }
+
+  /** One bucketed index: `storeDir/<sub>`, directory-partitioned by
+    * `dirCol = pmod(key, fanout)`, data columns `cols` in file order,
+    * rewrites clustered by `dirCol` then `sortKeys`. */
+  final class Index(sub: String, dirCol: String, key: Column,
+      cols: Seq[String], sortKeys: Seq[String]) {
+
+    def path(storeDir: String): String = s"$storeDir/$sub"
+
+    /** A row's bucket at `fanout`. */
+    private def bucket(fanout: Int): Column = pmod(key, lit(fanout.toLong)).cast("int")
+
+    /** The fan-out the persisted index is bucketed at (manifest, or the
+      * occupied-dir detection for pre-manifest stores). */
+    def fanout(spark: SparkSession, storeDir: String): Int =
+      storeFanout(spark, path(storeDir), dirCol)
+
+    /** [[BucketFanout.reconcile]] with this index's rewrite: the fan-out
+      * THIS batch must bucket with, after any threshold-crossing
+      * re-bucketing. `pre` runs on the read rows before re-bucketing. */
+    def reconcile(spark: SparkSession, storeDir: String,
+        pre: DataFrame => DataFrame = identity): Int =
+      BucketFanout.reconcile(spark, storeDir, sub, dirCol)(rewrite(spark, _, pre))
+
+    /** Maintenance rewrite at the [[target]] fan-out, crash-safe via
+      * [[AtomicStore.swapIn]]; a no-op when the index does not exist. */
+    def compact(spark: SparkSession, storeDir: String,
+        pre: DataFrame => DataFrame = identity): Unit =
+      if (AtomicStore.exists(spark, path(storeDir))) {
+        val f = target(spark, path(storeDir), dirCol)
+        AtomicStore.swapIn(spark, storeDir, sub)(rewrite(spark, f, pre))
+      }
+
+    /** The compaction policy: more than `maxFilesPerBucket` files per
+      * occupied bucket. Every append writes one file per non-empty
+      * bucket, so files/bucket ≈ triggers since the last compaction. */
+    def overFilesPerBucket(spark: SparkSession, storeDir: String,
+        maxFilesPerBucket: Int): Boolean = {
+      val (files, dirs) = AtomicStore.filesPerDir(spark, path(storeDir), dirCol)
+      dirs > 0L && files > maxFilesPerBucket * dirs
+    }
+
+    /** Append `rows` (carrying at least `cols`) bucketed at `fanout`,
+      * then stamp the manifest. Repartitioning by the dir column first
+      * writes one file per non-empty bucket per batch instead of
+      * tasks × buckets tiny files. */
+    def append(rows: DataFrame, storeDir: String, fanout: Int): Unit = {
+      rows.select(cols.map(col) :+ bucket(fanout).as(dirCol): _*)
+        .repartition(col(dirCol))
+        .write.mode(SaveMode.Append).partitionBy(dirCol).parquet(path(storeDir))
+      writeManifest(rows.sparkSession, path(storeDir), fanout)
+    }
+
+    /** The distinct buckets `keys` (a frame carrying this index's key
+      * column) touch at `fanout` — a driver-side collect bounded by
+      * `fanout`, not by data size. */
+    def bucketsOf(keys: DataFrame, fanout: Int): Seq[Int] =
+      keys.select(bucket(fanout)).distinct().collect().map(_.getInt(0)).toSeq
+
+    /** The pruned read of the index at `indexPath`: a static `IN` filter
+      * on the dir column, so Spark plans the read over only those
+      * buckets' files (visible as `numFiles` in the scan metrics). */
+    def scan(spark: SparkSession, indexPath: String, buckets: Seq[Int]): DataFrame =
+      spark.read.parquet(indexPath).filter(col(dirCol).isin(buckets.map(Int.box): _*))
+
+    /** Re-bucket every row from its own key at `fanout`, one file per
+      * non-empty bucket, manifest stamped into `tmp` so it rides the
+      * swap. */
+    private def rewrite(spark: SparkSession, fanout: Int,
+        pre: DataFrame => DataFrame)(live: String, tmp: String): Unit = {
+      pre(spark.read.parquet(live).select(cols.map(col): _*))
+        .withColumn(dirCol, bucket(fanout))
+        .repartition(col(dirCol))
+        .sortWithinPartitions((dirCol +: sortKeys).map(col): _*)
+        .write.partitionBy(dirCol).parquet(tmp)
+      writeManifest(spark, tmp, fanout)
+    }
+  }
+
+  /** [[IncrementalDedup]]'s LSH band rows, bucketed by band hash. */
+  val Bands = new Index("bands", "bucket", col("bandhash"),
+    Seq("doc_id", "band", "bandhash"), Seq("band", "bandhash"))
+  /** [[IncrementalDedup]]'s admitted text, bucketed by doc id so the
+    * history verify fetches only the candidates' own dbuckets (the
+    * unpruned candidate fetch scanned the whole admitted text table per
+    * trigger, ~95 MB/probe at sf1 — FanoutScaleDrive). */
+  val Docs = new Index("docs", "dbucket", col("doc_id"),
+    Seq("doc_id", "text"), Seq("doc_id"))
+  /** [[IncrementalBm25]]'s postings, bucketed by term hash. */
+  val Postings = new Index("postings", "bucket", xxhash64(col("term")),
+    Seq("term", "doc_id", "tf"), Seq("term", "doc_id"))
+  /** [[IncrementalBm25]]'s per-doc lengths, the store's commit record. */
+  val DocStats = new Index("docstats", "dbucket", col("doc_id"),
+    Seq("doc_id", "dl"), Seq("doc_id"))
+  /** [[IncrementalChunkStore]]'s chunk keys, bucketed by fingerprint. */
+  val Chunks = new Index("chunks", "bucket", col("chunk_fp"),
+    Seq("chunk_fp", "chunk_len"), Seq("chunk_fp", "chunk_len"))
+  /** [[IncrementalEmbedDedup]]'s admitted vectors, bucketed by IVF cell. */
+  val Vecs = new Index("vecs", "bucket", col("cell"),
+    Seq("doc_id", "vec", "nrm", "cell"), Seq("cell"))
 }

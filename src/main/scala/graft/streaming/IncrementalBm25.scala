@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.streaming.BucketFanout.{DocStats, Postings}
+
 /** Streaming retrieval-index maintenance: a `foreachBatch` postings /
   * document-statistics updater whose queries return EXACTLY what the
   * batch [[graft.api.Graft.bm25Search]] returns over every document
@@ -19,16 +21,14 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Store layout under `storeDir` ([[AtomicStore]] crash contract, same
-  * as [[IncrementalChunkStore]]):
+  * as [[IncrementalChunkStore]]; the two indexes are laid out by
+  * [[BucketFanout]]):
   *  - `postings/` — (term, doc_id, tf), parquet, directory-partitioned
   *    by `bucket = pmod(xxhash64(term), fanout)` so a query's read is
-  *    pruned to its own terms' buckets (fan-out starts at
-  *    [[TermBuckets]], grows with store size per [[BucketFanout]],
-  *    stamped in `postings/_fanout`);
+  *    pruned to its own terms' buckets ([[BucketFanout.Postings]]);
   *  - `docstats/` — (doc_id, dl), partitioned by
   *    `dbucket = pmod(doc_id, fanout)` so admission's seen-check
-  *    reads only the batch's own doc buckets (adaptive likewise,
-  *    `docstats/_fanout`);
+  *    reads only the batch's own doc buckets ([[BucketFanout.DocStats]]);
   *  - `stats/` — one (anchor, n, dlsum) delta row per admitted batch,
   *    so a query's corpus aggregate (N, avgdl) reads O(batches) tiny
   *    rows instead of scanning the full docstats history; compaction
@@ -68,59 +68,9 @@ import org.apache.spark.sql.functions._
   * batch path, so the equality the spec pins cannot drift. */
 object IncrementalBm25 {
 
-  /** STARTING posting-list bucket fan-out (the
-    * [[IncrementalChunkStore.ChunkBuckets]] sizing argument: enough
-    * directories that a query's pruned read touches a small fraction,
-    * few enough that per-batch appends don't spray tiny files).
-    * Size-adaptive like the band/chunk stores ([[BucketFanout]]):
-    * grows 64 → 256 → 1024 at store byte thresholds via a crash-safe
-    * re-bucketing, stamped in `postings/_fanout`; the read paths
-    * ([[search]], [[statsCorpus]]) always bucket with the PERSISTED
-    * fan-out, so a constant change can never desync probes from dirs. */
-  val TermBuckets: Int = BucketFanout.Base
-  /** STARTING doc-stats bucket fan-out for the admission seen-check
-    * (adaptive likewise; stamped in `docstats/_fanout`). */
-  val DocBuckets: Int = BucketFanout.Base
-
   /** Anchor of the folded stats row compaction writes (below any real
     * doc id, so it can never collide with a batch's min-fresh-id). */
   private val FoldedAnchor = Long.MinValue
-
-  private def termBucket(fanout: Int) =
-    pmod(xxhash64(col("term")), lit(fanout.toLong)).cast("int")
-  private def docBucket(c: String, fanout: Int) =
-    pmod(col(c), lit(fanout.toLong)).cast("int")
-
-  /** The fan-outs the persisted indexes are bucketed at. */
-  def postingsFanout(spark: SparkSession, storeDir: String): Int =
-    BucketFanout.storeFanout(spark, s"$storeDir/postings")
-  def docstatsFanout(spark: SparkSession, storeDir: String): Int =
-    BucketFanout.storeFanout(spark, s"$storeDir/docstats", "dbucket")
-
-  /** Pure re-bucket rewrites for the fan-out migrations (compaction's
-    * distinct/GC is NOT folded in here — a migration must be a
-    * layout-only change; at-least-once duplicates stay and the read
-    * paths keep distinct-ing them). */
-  private def postingsRewrite(spark: SparkSession, fanout: Int)(
-      live: String, tmp: String): Unit = {
-    spark.read.parquet(live)
-      .select(col("term"), col("doc_id"), col("tf"))
-      .withColumn("bucket", termBucket(fanout))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("term"), col("doc_id"))
-      .write.partitionBy("bucket").parquet(tmp)
-    BucketFanout.writeManifest(spark, tmp, fanout)
-  }
-  private def docstatsRewrite(spark: SparkSession, fanout: Int)(
-      live: String, tmp: String): Unit = {
-    spark.read.parquet(live)
-      .select(col("doc_id"), col("dl"))
-      .withColumn("dbucket", docBucket("doc_id", fanout))
-      .repartition(col("dbucket"))
-      .sortWithinPartitions(col("dbucket"), col("doc_id"))
-      .write.partitionBy("dbucket").parquet(tmp)
-    BucketFanout.writeManifest(spark, tmp, fanout)
-  }
 
   private[streaming] def recoverStore(spark: SparkSession, storeDir: String): Unit =
     AtomicStore.recover(spark, storeDir, Seq("postings", "docstats", "stats"))
@@ -139,8 +89,7 @@ object IncrementalBm25 {
       storeDir: String, crashAfter: Int): DataFrame = {
     val spark = batch.sparkSession
     recoverStore(spark, storeDir)
-    val postingsPath = s"$storeDir/postings"
-    val docstatsPath = s"$storeDir/docstats"
+    val docstatsPath = DocStats.path(storeDir)
     val statsPath = s"$storeDir/stats"
 
     // pin the batch once (round 18; IncrementalDedup rationale): the
@@ -152,11 +101,8 @@ object IncrementalBm25 {
     // silently MERGE their texts under one doc (the tf groupBy spans both)
     Admission.requireUnique(pinned, "IncrementalBm25.admitBatch", id)
 
-    bootstrapStats(spark, storeDir)
-    val termFan = BucketFanout.reconcile(spark, storeDir, "postings")(
-      postingsRewrite(spark, _))
-    val docFan = BucketFanout.reconcile(spark, storeDir, "docstats", "dbucket")(
-      docstatsRewrite(spark, _))
+    val termFan = Postings.reconcile(spark, storeDir)
+    val docFan = DocStats.reconcile(spark, storeDir)
 
     // tf is cached too: it feeds BOTH the dl rollup and the postings
     // append — without the cache the tokenize + term-grain shuffle runs
@@ -166,25 +112,19 @@ object IncrementalBm25 {
         explode(graft.api.Graft.tokens(coalesce(col(text), lit("")))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
       .cache()
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-      .withColumn("dbucket", docBucket("doc_id", docFan))
-      .cache()
+    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")).cache()
 
     // keep-first: ids already COMMITTED (present in docstats) are
     // replays — the read is pruned to the batch's own doc buckets
     val fresh =
       if (AtomicStore.exists(spark, docstatsPath)) {
-        val batchBuckets = dl.select(col("dbucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq // ≤ DocBuckets by construction
-        val seen = spark.read.parquet(docstatsPath)
-          .filter(col("dbucket").isin(batchBuckets.map(Int.box): _*))
+        val seen = DocStats.scan(spark, docstatsPath, DocStats.bucketsOf(dl, docFan))
           .select(col("doc_id"))
         dl.join(seen, Seq("doc_id"), "left_anti")
       } else dl
     // eager checkpoint: the appends below must not feed back into the
     // plan that decided freshness on a recompute
-    val freshIds = fresh.select(col("doc_id"), col("dl"), col("dbucket"))
-      .localCheckpoint(true)
+    val freshIds = fresh.select(col("doc_id"), col("dl")).localCheckpoint(true)
     val fr = freshIds
       .agg(min(col("doc_id")).as("a"), count(lit(1)).as("n"), sum(col("dl")).as("s"))
       .head()
@@ -192,12 +132,7 @@ object IncrementalBm25 {
     if (fr.getLong(1) > 0L) {
       // 1. postings — on a crash-then-replay these rows appear twice as
       //    EXACT duplicates; reads distinct them, compaction removes them
-      tf.join(freshIds.select(col("doc_id")), Seq("doc_id"))
-        .select(col("term"), col("doc_id"), col("tf"))
-        .withColumn("bucket", termBucket(termFan))
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Append).partitionBy("bucket").parquet(postingsPath)
-      BucketFanout.writeManifest(spark, postingsPath, termFan)
+      Postings.append(tf.join(freshIds.select(col("doc_id")), Seq("doc_id")), storeDir, termFan)
       if (crashAfter == 1) throw new InjectedCrash("after postings")
       // 2. stats delta — anchored by the min fresh id so a replayed
       //    duplicate folds away at read time
@@ -207,10 +142,7 @@ object IncrementalBm25 {
       if (crashAfter == 2) throw new InjectedCrash("after stats")
       // 3. docstats — the COMMIT RECORD: lands last, so an uncommitted
       //    batch is always fully re-appended by its replay
-      freshIds.select(col("doc_id"), col("dl"), col("dbucket"))
-        .repartition(col("dbucket"))
-        .write.mode(SaveMode.Append).partitionBy("dbucket").parquet(docstatsPath)
-      BucketFanout.writeManifest(spark, docstatsPath, docFan)
+      DocStats.append(freshIds, storeDir, docFan)
     }
 
     val out = dl.select(col("doc_id").as(id), col("dl"))
@@ -221,30 +153,6 @@ object IncrementalBm25 {
     tf.unpersist()
     out
     } finally batch.unpersist()
-  }
-
-  /** One-time migration for stores written before the stats sub
-    * existed: seed it with a single folded row from the docstats
-    * history. Written via temp-dir + rename (the [[AtomicStore]]
-    * pattern): a crash mid-write must not leave a partial stats/ that
-    * later entries would trust as complete — that would silently
-    * corrupt N/avgdl forever. */
-  private def bootstrapStats(spark: SparkSession, storeDir: String): Unit = {
-    val docstatsPath = s"$storeDir/docstats"
-    val statsPath = s"$storeDir/stats"
-    if (AtomicStore.exists(spark, docstatsPath) && !AtomicStore.exists(spark, statsPath)) {
-      import spark.implicits._
-      val r = spark.read.parquet(docstatsPath)
-        .agg(count(lit(1)).as("n"), sum(col("dl")).as("s")).head()
-      val tmp = s"$storeDir/__compact_stats"
-      val fs = new org.apache.hadoop.fs.Path(storeDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      Seq((FoldedAnchor, r.getLong(0), r.getLong(1))).toDF("anchor", "n", "dlsum")
-        .coalesce(1).write.parquet(tmp)
-      require(fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(statsPath)), "bootstrapStats: rename failed")
-    }
   }
 
   /** Corpus aggregate (N, Σdl) from the stats deltas: fold replayed
@@ -274,10 +182,9 @@ object IncrementalBm25 {
     val checked =
       if (anchors.isEmpty || !AtomicStore.exists(spark, s"$storeDir/docstats")) real
       else {
-        val docFan = docstatsFanout(spark, storeDir)
+        val docFan = DocStats.fanout(spark, storeDir)
         val dbuckets = anchors.map(a => math.floorMod(a, docFan.toLong).toInt).distinct
-        val committed = spark.read.parquet(s"$storeDir/docstats")
-          .filter(col("dbucket").isin(dbuckets.map(Int.box): _*))
+        val committed = DocStats.scan(spark, DocStats.path(storeDir), dbuckets)
           .filter(col("doc_id").isin(anchors.map(Long.box): _*))
           .select(col("doc_id").as("anchor"))
         real.join(committed, Seq("anchor"), "left_semi")
@@ -307,43 +214,52 @@ object IncrementalBm25 {
              k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "search needs at least one query term")
     recoverStore(spark, storeDir)
-    val docstatsPath = s"$storeDir/docstats"
-    val postingsPath = s"$storeDir/postings"
+    val docstatsPath = DocStats.path(storeDir)
+    val postingsPath = Postings.path(storeDir)
     if (!AtomicStore.exists(spark, docstatsPath) ||
         !AtomicStore.exists(spark, postingsPath))
       return spark.range(0).select(col("id").as("doc_id"),
         lit(0.0).as("score"), col("id").as("rank"))
-    val termFan = postingsFanout(spark, storeDir)
+    val termFan = Postings.fanout(spark, storeDir)
     val qBuckets = queryTerms
       .map(t => math.floorMod(TermHash.xx64(t), termFan.toLong).toInt)
       .distinct
     // distinct kills the exact-duplicate rows a crash-then-replay leaves
-    val qtfRaw = spark.read.parquet(postingsPath)
-      .filter(col("bucket").isin(qBuckets.map(Int.box): _*))
+    val qtfRaw = Postings.scan(spark, postingsPath, qBuckets)
       .filter(col("term").isin(queryTerms: _*))
       .select(col("term"), col("doc_id"), col("tf"))
       .distinct()
     // dl read pruned to the candidates' dbuckets (bounded driver-side
     // collect, ≤ the docstats fan-out — the admitBatch pattern)
-    val candBuckets = qtfRaw
-      .select(docBucket("doc_id", docstatsFanout(spark, storeDir)).as("dbucket"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+    val candBuckets = DocStats.bucketsOf(qtfRaw, DocStats.fanout(spark, storeDir))
     if (candBuckets.isEmpty)
       return spark.range(0).select(col("id").as("doc_id"),
         lit(0.0).as("score"), col("id").as("rank"))
-    val dl = spark.read.parquet(docstatsPath)
-      .filter(col("dbucket").isin(candBuckets.map(Int.box): _*))
+    val dl = DocStats.scan(spark, docstatsPath, candBuckets)
       .select(col("doc_id"), col("dl"))
     // drop postings of UNCOMMITTED docs (crashed batch not yet
     // replayed): docstats is the commit record, and the pruned dl
     // covers every candidate, so the semi-join is exact
     val qtf = qtfRaw.join(dl.select(col("doc_id")), Seq("doc_id"), "left_semi")
     val dfreq = qtf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val corpus =
-      if (AtomicStore.exists(spark, s"$storeDir/stats")) statsCorpus(spark, storeDir)
-      else spark.read.parquet(docstatsPath) // pre-stats store, one-time shape
-        .agg(count(lit(1)).as("__n"), sum(col("dl")).as("__dlsum"))
-    graft.api.Graft.bm25TopKPre(qtf, dfreq, dl, corpus, "doc_id", k, k1, b)
+    // docstats exists, so stats does too: every batch appends stats
+    // before its docstats commit record
+    graft.api.Graft.bm25TopKPre(qtf, dfreq, dl, statsCorpus(spark, storeDir),
+      "doc_id", k, k1, b)
+  }
+
+  /** Compaction policy ([[IncrementalDedup.maybeCompact]] semantics,
+    * same single-operator contract): compact when EITHER index holds
+    * more than `maxFilesPerBucket` files per occupied bucket; returns
+    * true iff it compacted. */
+  def maybeCompact(spark: SparkSession, storeDir: String,
+      maxFilesPerBucket: Int = 32): Boolean = {
+    recoverStore(spark, storeDir)
+    val over = Postings.overFilesPerBucket(spark, storeDir, maxFilesPerBucket) ||
+      DocStats.overFilesPerBucket(spark, storeDir, maxFilesPerBucket)
+    if (!over) return false
+    compactStore(spark, storeDir)
+    true
   }
 
   /** Compact all subs: postings/docstats to one file per non-empty
@@ -353,55 +269,15 @@ object IncrementalBm25 {
     * garbage-collects rows of batches that crashed uncommitted and
     * were never replayed (ids absent from docstats). Crash-safe via
     * [[AtomicStore.swapIn]]. */
-  /** Compaction policy ([[IncrementalDedup.maybeCompact]] semantics,
-    * same single-operator contract): compact when EITHER index holds
-    * more than `maxFilesPerBucket` files per occupied bucket; returns
-    * true iff it compacted. */
-  def maybeCompact(spark: SparkSession, storeDir: String,
-      maxFilesPerBucket: Int = 32): Boolean = {
-    recoverStore(spark, storeDir)
-    val (pf, pd) = AtomicStore.filesPerDir(spark, s"$storeDir/postings", "bucket")
-    val (df, dd) = AtomicStore.filesPerDir(spark, s"$storeDir/docstats", "dbucket")
-    val over = (pd > 0L && pf > maxFilesPerBucket * pd) ||
-      (dd > 0L && df > maxFilesPerBucket * dd)
-    if (!over) return false
-    compactStore(spark, storeDir)
-    true
-  }
-
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
     recoverStore(spark, storeDir)
     val committed =
       if (AtomicStore.exists(spark, s"$storeDir/docstats"))
         spark.read.parquet(s"$storeDir/docstats").select(col("doc_id")).cache()
       else spark.range(0).select(col("id").as("doc_id"))
-    val termFan =
-      if (AtomicStore.exists(spark, s"$storeDir/postings"))
-        BucketFanout.target(spark, s"$storeDir/postings")
-      else TermBuckets
-    AtomicStore.swapIn(spark, storeDir, "postings") { (live, tmp) =>
-      spark.read.parquet(live)
-        .select(col("term"), col("doc_id"), col("tf")).distinct()
-        .join(committed, Seq("doc_id"), "left_semi")
-        .withColumn("bucket", termBucket(termFan))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket"), col("term"), col("doc_id"))
-        .write.partitionBy("bucket").parquet(tmp)
-      BucketFanout.writeManifest(spark, tmp, termFan)
-    }
-    val docFan =
-      if (AtomicStore.exists(spark, s"$storeDir/docstats"))
-        BucketFanout.target(spark, s"$storeDir/docstats", "dbucket")
-      else DocBuckets
-    AtomicStore.swapIn(spark, storeDir, "docstats") { (live, tmp) =>
-      spark.read.parquet(live)
-        .select(col("doc_id"), col("dl")).distinct()
-        .withColumn("dbucket", docBucket("doc_id", docFan))
-        .repartition(col("dbucket"))
-        .sortWithinPartitions(col("dbucket"), col("doc_id"))
-        .write.partitionBy("dbucket").parquet(tmp)
-      BucketFanout.writeManifest(spark, tmp, docFan)
-    }
+    Postings.compact(spark, storeDir,
+      _.distinct().join(committed, Seq("doc_id"), "left_semi"))
+    DocStats.compact(spark, storeDir, _.distinct())
     // stats are RECONCILED, not folded: recompute the single row from
     // the (just-compacted) docstats commit record. Folding the deltas
     // would preserve any drift the deltas picked up — e.g. a docstats

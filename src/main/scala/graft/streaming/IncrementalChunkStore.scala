@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.streaming.BucketFanout.Chunks
 
 /** Streaming storage-level dedup accounting: content-defined chunks
   * (gear CDC, [[graft.api.Graft.cdcChunkRows]]) of each arriving
@@ -23,10 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Store layout under `storeDir`: `chunks/` — (chunk_fp, chunk_len)
   * keys of every chunk seen, parquet, directory-partitioned by
-  * `bucket = pmod(chunk_fp, fanout)` (fan-out starts at
-  * [[ChunkBuckets]], grows with store size per [[BucketFanout]], and
-  * is stamped in `chunks/_fanout`). Matching is by the 64-bit
-  * FNV-1a fingerprint + length (fpp ≈ n²/2⁶⁴ per equal-length pair —
+  * `bucket = pmod(chunk_fp, fanout)` ([[BucketFanout.Chunks]]; the
+  * fan-out starts at 64 and grows with store size). Matching is by the
+  * 64-bit FNV-1a fingerprint + length (fpp ≈ n²/2⁶⁴ per equal-length pair —
   * the standard chunk-store tradeoff; the store never needs chunk
   * BYTES for accounting, which keeps it ~16 B per unique chunk).
   *
@@ -50,44 +51,8 @@ import org.apache.spark.sql.functions._
   * the store converges. */
 object IncrementalChunkStore {
 
-  /** STARTING bucket fan-out of the chunk-index layout (the
-    * [[IncrementalDedup.BandBuckets]] sizing argument — including its
-    * measured dynamic-partition commit tax, which caps per-trigger
-    * append cost ∝ dir count; see BandWriteProbeDrive). Size-adaptive:
-    * grows 64 → 256 → 1024 at the [[BucketFanout]] byte thresholds via
-    * a crash-safe re-bucketing; the store's actual fan-out is stamped
-    * in `chunks/_fanout` and every batch buckets with it. */
-  val ChunkBuckets: Int = BucketFanout.Base
-
-  private def bucketCol(fanout: Int) =
-    pmod(col("chunk_fp"), lit(fanout.toLong)).cast("int")
-
-  /** The fan-out the persisted chunk index is bucketed at. */
-  def storeFanout(spark: SparkSession, storeDir: String): Int =
-    BucketFanout.storeFanout(spark, s"$storeDir/chunks")
-
-  /** The chunk-store rewrite at `fanout`: (re)bucket every key from its
-    * own fingerprint, dedup, cluster by join keys, stamp the manifest. */
-  private def chunksRewrite(spark: SparkSession, fanout: Int)(
-      live: String, tmp: String): Unit = {
-    spark.read.parquet(live)
-      .select(col("chunk_fp"), col("chunk_len"))
-      .withColumn("bucket", bucketCol(fanout)).distinct()
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("chunk_fp"), col("chunk_len"))
-      .write.partitionBy("bucket").parquet(tmp)
-    BucketFanout.writeManifest(spark, tmp, fanout)
-  }
-
   private[streaming] def recoverStore(spark: SparkSession, storeDir: String): Unit =
     AtomicStore.recover(spark, storeDir, Seq("chunks"))
-
-  /** The pruned index read for a batch touching `buckets` (static IN
-    * filter on the partition directory column). */
-  private[streaming] def chunkIndexScan(spark: SparkSession, chunksPath: String,
-      buckets: Seq[Int]): DataFrame =
-    spark.read.parquet(chunksPath)
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
 
   /** Run one admission step: returns per-doc novelty accounting
     * (id, n_chunks, novel_chunks, novel_chars, total_chars,
@@ -105,22 +70,18 @@ object IncrementalChunkStore {
     // two rows sharing an id would collide on (doc, chunk_idx) and the
     // per-doc novelty accounting would silently merge their chunks
     Admission.requireUnique(pinned, "IncrementalChunkStore.admitBatch", id)
-    val chunksPath = s"$storeDir/chunks"
-    val fanout = BucketFanout.reconcile(spark, storeDir, "chunks")(
-      chunksRewrite(spark, _))
+    val chunksPath = Chunks.path(storeDir)
+    val fanout = Chunks.reconcile(spark, storeDir, _.distinct())
 
     val rows = graft.api.Graft
       .cdcChunkRows(pinned.select(col(id), col(text)), id, text, window, modulus)
       .select(col("__id"), col("chunk_idx"), col("chunk_len"), col("chunk_fp"))
-      .withColumn("bucket", bucketCol(fanout))
       .cache()
 
     // 1. history: does the chunk key already exist in the store?
     val withSeen =
       if (AtomicStore.exists(spark, chunksPath)) {
-        val batchBuckets = rows.select(col("bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq // ≤ ChunkBuckets by construction
-        val seen = chunkIndexScan(spark, chunksPath, batchBuckets)
+        val seen = Chunks.scan(spark, chunksPath, Chunks.bucketsOf(rows, fanout))
           .select(col("chunk_fp"), col("chunk_len")).distinct()
           .withColumn("__seen", lit(true))
         rows.join(seen, Seq("chunk_fp", "chunk_len"), "left")
@@ -154,11 +115,7 @@ object IncrementalChunkStore {
       .localCheckpoint(true)
 
     // 3. append the first-seen keys, one file per non-empty bucket
-    marked.filter(col("__novel"))
-      .select(col("chunk_fp"), col("chunk_len"), col("bucket"))
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(chunksPath)
-    BucketFanout.writeManifest(spark, chunksPath, fanout)
+    Chunks.append(marked.filter(col("__novel")), storeDir, fanout)
     rows.unpersist()
     perDoc
     } finally batch.unpersist()
@@ -176,9 +133,6 @@ object IncrementalChunkStore {
       .select(col("id").as("chunk_fp"), col("id").as("chunk_len")).limit(0)
   }
 
-  /** Compact the append-only index to one file per non-empty bucket,
-    * rows de-duplicated and clustered by the join keys; crash-safe via
-    * [[AtomicStore.swapIn]] under the single-operator contract. */
   /** Compaction policy ([[IncrementalDedup.maybeCompact]] semantics,
     * same single-operator contract): compact when the chunk index
     * holds more than `maxFilesPerBucket` files per occupied bucket;
@@ -186,17 +140,16 @@ object IncrementalChunkStore {
   def maybeCompact(spark: SparkSession, storeDir: String,
       maxFilesPerBucket: Int = 32): Boolean = {
     recoverStore(spark, storeDir)
-    val (files, dirs) = AtomicStore.filesPerDir(spark, s"$storeDir/chunks", "bucket")
-    if (dirs == 0L || files <= maxFilesPerBucket * dirs) return false
+    if (!Chunks.overFilesPerBucket(spark, storeDir, maxFilesPerBucket)) return false
     compactStore(spark, storeDir)
     true
   }
 
+  /** Compact the append-only index to one file per non-empty bucket,
+    * rows de-duplicated and clustered by the join keys; crash-safe via
+    * [[AtomicStore.swapIn]] under the single-operator contract. */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
     recoverStore(spark, storeDir)
-    if (AtomicStore.exists(spark, s"$storeDir/chunks")) {
-      val f = BucketFanout.target(spark, s"$storeDir/chunks")
-      AtomicStore.swapIn(spark, storeDir, "chunks")(chunksRewrite(spark, f))
-    }
+    Chunks.compact(spark, storeDir, _.distinct())
   }
 }

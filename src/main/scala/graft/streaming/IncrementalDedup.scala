@@ -1,9 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.DedupQueries
+import graft.streaming.BucketFanout.{Bands, Docs}
 
 /** Streaming NEAR-duplicate dedup: admit each arriving micro-batch's
   * documents against the full history of previously-admitted documents
@@ -18,17 +19,16 @@ import graft.ops.DedupQueries
   *   }.option("checkpointLocation", ck).start()
   * }}}
   *
-  * Store layout under `storeDir` (both plain parquet, append-only):
+  * Store layout under `storeDir` (both plain parquet, append-only,
+  * laid out by [[BucketFanout]], whose fan-out starts at 64 and grows
+  * with store size):
   *  - `docs/`  — admitted (doc_id, text), directory-partitioned by
-  *    `dbucket = pmod(doc_id, fanout)` so the history verify fetches
-  *    CANDIDATE texts from the candidates' own dbuckets instead of
-  *    scanning the whole admitted table per trigger (stamped in
-  *    `docs/_fanout`)
+  *    `dbucket = pmod(doc_id, fanout)` ([[BucketFanout.Docs]]) so the
+  *    history verify fetches CANDIDATE texts from the candidates' own
+  *    dbuckets instead of scanning the whole admitted table per trigger
   *  - `bands/` — admitted LSH band rows (doc_id, band, bandhash),
-  *    directory-partitioned by `bucket = pmod(bandhash, fanout)` where
-  *    the fan-out starts at [[BandBuckets]] and grows with store size
-  *    (see [[BucketFanout]]; the store's actual fan-out is stamped in
-  *    `bands/_fanout`)
+  *    directory-partitioned by `bucket = pmod(bandhash, fanout)`
+  *    ([[BucketFanout.Bands]])
   *
   * Scale shape — per-batch cost is ∝ batch + candidates, NOT history:
   * the batch's band rows equi-join the PERSISTED band table (no
@@ -59,144 +59,13 @@ import graft.ops.DedupQueries
   * the replay-during-append edge. */
 object IncrementalDedup {
 
-  /** STARTING bucket fan-out of the band index directory layout
-    * (= [[BucketFanout.Base]]). 64 balances the per-trigger pruned
-    * read against the dynamic-partition COMMIT cost every append pays
-    * (super-linear in dir count — 40k-row append: 256 dirs ≈ 4-6 s,
-    * 64 ≈ 1.1 s, 16 ≈ 0.5 s, BandWriteProbeDrive) on a SMALL store.
-    * The fan-out is size-adaptive: it grows 64 → 256 → 1024 at the
-    * [[BucketFanout]] byte thresholds via a crash-safe
-    * [[AtomicStore.swapIn]] re-bucketing, because at a 100 TB admitted
-    * corpus a fixed 64 makes each bucket ~1.5 TB and the per-trigger
-    * read grows linearly with history again. The store's ACTUAL
-    * fan-out is stamped in a `bands/_fanout` manifest (detected from
-    * the occupied dirs for pre-manifest stores) and every batch
-    * buckets with it — a constant/schedule change can never desync
-    * probe buckets from persisted dir values. */
-  val BandBuckets: Int = BucketFanout.Base
-
   private def exists(spark: SparkSession, path: String): Boolean =
     AtomicStore.exists(spark, path)
-
-  private def bucketCol(fanout: Int) =
-    pmod(col("bandhash"), lit(fanout.toLong)).cast("int")
-
-  /** Whether the store at `path` has the `dirCol=` directory layout.
-    * A store written before bucketing — flat parquet files at the
-    * root — must NOT receive a partitioned append: the mixed layout
-    * fails Spark's partition discovery ("Conflicting directory
-    * structures") and bricks the store. */
-  private def hasBucketDirs(spark: SparkSession, path: String,
-      dirCol: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(p).exists(s => s.isDirectory && s.getPath.getName.startsWith(s"$dirCol="))
-  }
-  private def bandsBucketed(spark: SparkSession, bandsPath: String): Boolean =
-    hasBucketDirs(spark, bandsPath, "bucket")
-
-  /** The band-index scan a batch with band-rows in `buckets` performs:
-    * a static `IN` filter on the partition directory column, so Spark
-    * plans the read over only those buckets' files (visible as
-    * `numFiles` in the scan metrics). `buckets` must be computed at the
-    * store's own fan-out ([[storeFanout]]) — admitBatch reconciles
-    * before probing. Exposed for the spec that pins the pruning.
-    * Pre-bucketing stores (no `bucket` dir column) fall back to a full
-    * scan with the bucket derived — correct, unpruned; `compactStore`
-    * migrates them. */
-  private[streaming] def bandIndexScan(spark: SparkSession, bandsPath: String,
-      buckets: Seq[Int]): DataFrame = {
-    val raw = spark.read.parquet(bandsPath)
-    if (raw.columns.contains("bucket"))
-      raw.filter(col("bucket").isin(buckets.map(Int.box): _*))
-    else raw.withColumn("bucket", bucketCol(BucketFanout.storeFanout(spark, bandsPath)))
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
-  }
-
-  /** The fan-out the persisted band index is bucketed at (manifest, or
-    * occupied-dir detection for pre-manifest stores). Exposed for
-    * specs/drives. */
-  def storeFanout(spark: SparkSession, storeDir: String): Int =
-    BucketFanout.storeFanout(spark, s"$storeDir/bands")
 
   /** Roll the store forward past a compaction crash ([[AtomicStore
     * .recover]] semantics); called by every store entry point. */
   private[streaming] def recoverStore(spark: SparkSession, storeDir: String): Unit =
     AtomicStore.recover(spark, storeDir, Seq("docs", "bands"))
-
-  private def swapIn(spark: SparkSession, storeDir: String, sub: String)(
-      rewrite: (String, String) => Unit): Unit =
-    AtomicStore.swapIn(spark, storeDir, sub)(rewrite)
-
-  /** The band-store rewrite at `fanout`: (re)bucket every row from its
-    * own bandhash, one file per non-empty bucket, rows clustered by the
-    * join keys, manifest stamped into the rewrite so it rides the swap.
-    * Shared by [[compactStore]], the in-place migration a pre-bucketing
-    * store gets on its first post-upgrade append, and the size-adaptive
-    * fan-out growth. */
-  private def bandsRewrite(spark: SparkSession, fanout: Int)(
-      live: String, tmp: String): Unit = {
-    spark.read.parquet(live)
-      .withColumn("bucket", bucketCol(fanout))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("band"), col("bandhash"))
-      .write.partitionBy("bucket").parquet(tmp)
-    BucketFanout.writeManifest(spark, tmp, fanout)
-  }
-
-  /** Reconcile the persisted layout with the size schedule and return
-    * the fan-out THIS batch must bucket with: migrates flat
-    * (pre-bucketing) stores, grows the fan-out crash-safely when the
-    * store crossed a [[BucketFanout]] threshold, and otherwise just
-    * reads the store's stamped/detected fan-out. Monotonic — never
-    * re-buckets downward. */
-  private def reconcileFanout(spark: SparkSession, storeDir: String,
-      bandsPath: String): Int = {
-    // A pre-bucketing store (flat parquet at bands/ root) must be
-    // migrated BEFORE any partitioned append: bucket= dirs next to flat
-    // files fail Spark's partition discovery ("Conflicting directory
-    // structures") on the next read — the store would be bricked.
-    if (exists(spark, bandsPath) && !bandsBucketed(spark, bandsPath)) {
-      val f = BucketFanout.target(spark, bandsPath)
-      swapIn(spark, storeDir, "bands")(bandsRewrite(spark, f))
-      return f
-    }
-    BucketFanout.reconcile(spark, storeDir, "bands")(bandsRewrite(spark, _))
-  }
-
-  private def docBucketCol(fanout: Int) =
-    pmod(col("doc_id"), lit(fanout.toLong)).cast("int")
-
-  /** The docs-store rewrite at `fanout`: bucket every admitted doc by
-    * `dbucket = pmod(doc_id, fanout)`. The docs store is bucketed for
-    * the same reason docstats is in [[IncrementalBm25]]: the history
-    * verify re-shingles CANDIDATE docs only, and without a pruned
-    * lookup that "candidates-only" join still SCANS the whole admitted
-    * text table per trigger — measured ~95 MB/probe at sf1 (dominating
-    * the probe's I/O and growing linearly with history; FanoutScaleDrive
-    * round-17 found it). With the layout, the candidate fetch reads
-    * only the candidates' own dbuckets. */
-  private def docsRewrite(spark: SparkSession, fanout: Int)(
-      live: String, tmp: String): Unit = {
-    spark.read.parquet(live)
-      .select(col("doc_id"), col("text"))
-      .withColumn("dbucket", docBucketCol(fanout))
-      .repartition(col("dbucket"))
-      .sortWithinPartitions(col("dbucket"), col("doc_id"))
-      .write.partitionBy("dbucket").parquet(tmp)
-    BucketFanout.writeManifest(spark, tmp, fanout)
-  }
-
-  /** [[reconcileFanout]] for the docs store (dir column `dbucket`). */
-  private def reconcileDocsFanout(spark: SparkSession, storeDir: String,
-      docsPath: String): Int = {
-    if (exists(spark, docsPath) && !hasBucketDirs(spark, docsPath, "dbucket")) {
-      val f = BucketFanout.target(spark, docsPath, "dbucket")
-      swapIn(spark, storeDir, "docs")(docsRewrite(spark, f))
-      return f
-    }
-    BucketFanout.reconcile(spark, storeDir, "docs", "dbucket")(docsRewrite(spark, _))
-  }
 
   /** Run one admission step; appends admitted docs + their band rows to
     * the store and returns the admitted (id, text) frame. */
@@ -221,16 +90,16 @@ object IncrementalDedup {
     // canonicalization (self-pairs are excluded) and double-append
     phase("requireUnique")
     Admission.requireUnique(pinned, "IncrementalDedup.admitBatch", id)
-    val docsPath = s"$storeDir/docs"
-    val bandsPath = s"$storeDir/bands"
+    val docsPath = Docs.path(storeDir)
+    val bandsPath = Bands.path(storeDir)
 
-    // Reconcile layout first: flat-store migration, size-adaptive
-    // fan-out growth, pre-manifest detection — after this, `fanout` is
-    // BOTH what the persisted dirs were bucketed with and what this
-    // batch buckets with, so probe values always match dir values.
+    // Reconcile layout first: size-adaptive fan-out growth, pre-manifest
+    // detection — after this, `fanout` is BOTH what the persisted dirs
+    // were bucketed with and what this batch buckets with, so probe
+    // values always match dir values.
     phase("reconcile-fanout")
-    val fanout = reconcileFanout(spark, storeDir, bandsPath)
-    val docFanout = reconcileDocsFanout(spark, storeDir, docsPath)
+    val fanout = Bands.reconcile(spark, storeDir)
+    val docFanout = Docs.reconcile(spark, storeDir)
 
     val newDocs = pinned.select(col(id).as("doc_id"), col(text).as("text"))
     // cached: reused for history verify AND the admitted band append, so
@@ -239,8 +108,7 @@ object IncrementalDedup {
     // also cached: the bucket-discovery collect below is its own action,
     // and bandsOf's posexplode would otherwise re-run for it before the
     // candidate join and the band append reuse the rows
-    val newBands = DedupQueries.bandsOf(newSigs)
-      .withColumn("bucket", bucketCol(fanout)).cache()
+    val newBands = DedupQueries.bandsOf(newSigs).cache()
 
     // 1. history rejection: batch bands ⋈ persisted band index →
     //    candidate (new, seen) pairs → exact verify on shingles of the
@@ -250,9 +118,7 @@ object IncrementalDedup {
     val rejectedByHistory: DataFrame =
       if (exists(spark, bandsPath)) {
         phase("bucket-discovery")
-        val batchBuckets = newBands.select(col("bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val seenBands = bandIndexScan(spark, bandsPath, batchBuckets)
+        val seenBands = Bands.scan(spark, bandsPath, Bands.bucketsOf(newBands, fanout))
           .select(col("doc_id").as("seen_id"), col("band"), col("bandhash"))
         val cand = newBands.join(seenBands, Seq("band", "bandhash"))
           .select(col("doc_id"), col("seen_id")).distinct()
@@ -264,14 +130,8 @@ object IncrementalDedup {
         // whole admitted text table — the docs-store analog of the
         // band-index pruning (the unpruned join scanned all of docs/
         // per trigger, an O(history) read)
-        val candBuckets = cand
-          .select(pmod(col("seen_id"), lit(docFanout.toLong)).cast("int").as("b"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        val docsRaw = spark.read.parquet(docsPath)
-        val docsPruned =
-          if (docsRaw.columns.contains("dbucket"))
-            docsRaw.filter(col("dbucket").isin(candBuckets.map(Int.box): _*))
-          else docsRaw // pre-bucketing store mid-migration: full scan, correct
+        val docsPruned = Docs.scan(spark, docsPath,
+          Docs.bucketsOf(cand.select(col("seen_id").as("doc_id")), docFanout))
         val seenSh = DedupQueries.shingleFrame(
           docsPruned.select(col("doc_id"), col("text"))
             .join(cand.select(col("seen_id").as("doc_id")).distinct(), Seq("doc_id")),
@@ -345,21 +205,12 @@ object IncrementalDedup {
       scala.concurrent.ExecutionContext.fromExecutorService(appendPool)
     val docsF = scala.concurrent.Future {
       phase("docs-append")
-      admitted.withColumn("dbucket", docBucketCol(docFanout))
-        .repartition(col("dbucket"))
-        .write.mode(SaveMode.Append).partitionBy("dbucket").parquet(docsPath)
-      BucketFanout.writeManifest(spark, docsPath, docFanout)
+      Docs.append(admitted, storeDir, docFanout)
     }
-    // repartition by bucket before the partitioned append: one file per
-    // non-empty bucket per batch instead of tasks × buckets tiny files
     val bandsF = scala.concurrent.Future {
       phase("bands-append")
-      newBands.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .repartition(col("bucket"))
-        .write.mode(SaveMode.Append).partitionBy("bucket").parquet(bandsPath)
-      // stamp the fan-out the dirs were just written at (first append
-      // creates the store; later appends overwrite with the same value)
-      BucketFanout.writeManifest(spark, bandsPath, fanout)
+      Bands.append(newBands.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+        storeDir, fanout)
     }
     try {
       import scala.concurrent.duration.Duration
@@ -390,6 +241,27 @@ object IncrementalDedup {
     else spark.range(0).select(col("id").as("doc_id"), lit("").as("text")).limit(0)
   }
 
+  /** Compaction POLICY for a long-running ingest: compact when the
+    * append-only band index has accumulated more than
+    * `maxFilesPerBucket` files per occupied bucket (each trigger
+    * appends one file per non-empty bucket, so files/bucket ≈ triggers
+    * since the last compaction — the small-files metadata tax grows
+    * linearly with it). Returns true iff it compacted. Runs under the
+    * same single-operator contract as [[compactStore]]: call it from
+    * the ingest's OWN maintenance slot (e.g. every N triggers inside
+    * foreachBatch, or a quiet window) — never concurrently with other
+    * store entry points. Because [[compactStore]] rewrites at the
+    * size-scheduled fan-out, a maintenance-window `maybeCompact` also
+    * pre-pays any pending fan-out migration, so the next trigger's
+    * reconcile is a no-op instead of a mid-trigger rewrite. */
+  def maybeCompact(spark: SparkSession, storeDir: String,
+      maxFilesPerBucket: Int = 32): Boolean = {
+    recoverStore(spark, storeDir)
+    if (!Bands.overFilesPerBucket(spark, storeDir, maxFilesPerBucket)) return false
+    compactStore(spark, storeDir)
+    true
+  }
+
   /** Compact the append-only store: every micro-batch appends its own
     * parquet files, so a long-running ingest accumulates
     * batches × partitions small files — the classic metadata killer at
@@ -409,43 +281,13 @@ object IncrementalDedup {
     * liveness marker left by a crash would instead disable recovery
     * forever — so the contract, not a marker, carries this.)
     *
-    * Bands and docs keep (or, for a pre-bucketing store, acquire) their
-    * bucket directory layouts at the size-scheduled fan-out, ending at
-    * one file per non-empty bucket with rows clustered by the read
-    * keys — so the per-batch pruned reads open exactly one file per
-    * probed bucket. (`parts` is retained for source compatibility; the
-    * docs rewrite is bucketed now, so it is ignored.) */
-  /** Compaction POLICY for a long-running ingest: compact when the
-    * append-only band index has accumulated more than
-    * `maxFilesPerBucket` files per occupied bucket (each trigger
-    * appends one file per non-empty bucket, so files/bucket ≈ triggers
-    * since the last compaction — the small-files metadata tax grows
-    * linearly with it). Returns true iff it compacted. Runs under the
-    * same single-operator contract as [[compactStore]]: call it from
-    * the ingest's OWN maintenance slot (e.g. every N triggers inside
-    * foreachBatch, or a quiet window) — never concurrently with other
-    * store entry points. Because [[compactStore]] rewrites at the
-    * size-scheduled fan-out, a maintenance-window `maybeCompact` also
-    * pre-pays any pending fan-out migration, so the next trigger's
-    * reconcile is a no-op instead of a mid-trigger rewrite. */
-  def maybeCompact(spark: SparkSession, storeDir: String,
-      maxFilesPerBucket: Int = 32): Boolean = {
-    recoverStore(spark, storeDir)
-    val (files, dirs) = AtomicStore.filesPerDir(spark, s"$storeDir/bands", "bucket")
-    if (dirs == 0L || files <= maxFilesPerBucket * dirs) return false
-    compactStore(spark, storeDir)
-    true
-  }
-
-  def compactStore(spark: SparkSession, storeDir: String, parts: Int = 16): Unit = {
+    * Bands and docs keep their bucket directory layouts at the
+    * size-scheduled fan-out, ending at one file per non-empty bucket
+    * with rows clustered by the read keys — so the per-batch pruned
+    * reads open exactly one file per probed bucket. */
+  def compactStore(spark: SparkSession, storeDir: String): Unit = {
     recoverStore(spark, storeDir) // clears any crashed prior compaction
-    if (exists(spark, s"$storeDir/docs")) {
-      val f = BucketFanout.target(spark, s"$storeDir/docs", "dbucket")
-      swapIn(spark, storeDir, "docs")(docsRewrite(spark, f))
-    }
-    if (exists(spark, s"$storeDir/bands")) {
-      val f = BucketFanout.target(spark, s"$storeDir/bands")
-      swapIn(spark, storeDir, "bands")(bandsRewrite(spark, f))
-    }
+    Docs.compact(spark, storeDir)
+    Bands.compact(spark, storeDir)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VecMath.float_dot
 import graft.ops.Ivf
+import graft.streaming.BucketFanout.Vecs
 
 /** Streaming EMBEDDING near-duplicate dedup: admit each arriving
   * micro-batch's vectors against the full history of previously-admitted
@@ -20,9 +21,10 @@ import graft.ops.Ivf
   *    batch ([[graft.ops.Ivf.save]] format) and amortized across every
   *    later batch: no per-trigger centroid training.
   *  - `vecs/`  — admitted (doc_id, vec, nrm, cell), directory-partitioned
-  *    by `bucket = pmod(cell, fanout)`, append-only (fan-out starts at
-  *    [[VecBuckets]], grows with store size per [[BucketFanout]],
-  *    stamped in `vecs/_fanout`).
+  *    by `bucket = pmod(cell, fanout)`, append-only
+  *    ([[BucketFanout.Vecs]]; the fan-out starts at 64 and grows with
+  *    store size — a fan-out above nlist simply converges to one cell
+  *    per directory, the pruned-read-optimal layout).
   *  - `radii/` — append-only (cell, radius) rows; the live per-cell
   *    radius is the MAX per cell, maintained by appending each admitted
   *    batch's home angles. Nlist-sized reads, never corpus-sized.
@@ -45,44 +47,7 @@ import graft.ops.Ivf
   * missed pairs, never a nested loop. */
 object IncrementalEmbedDedup {
 
-  /** STARTING bucket fan-out of the vector index directory layout
-    * (same role as [[IncrementalDedup.BandBuckets]]): cells hash into
-    * 64 directories, so a batch probing k cells reads ≤ min(k, fanout)
-    * directories. Size-adaptive like the band/chunk stores
-    * ([[BucketFanout]]): the fan-out grows 64 → 256 → 1024 at store
-    * byte thresholds via a crash-safe re-bucketing, stamped in
-    * `vecs/_fanout` — a fan-out above nlist simply converges to one
-    * cell per directory, the pruned-read-optimal layout. */
-  val VecBuckets: Int = BucketFanout.Base
-
-  private def bucketCol(fanout: Int) = pmod(col("cell"), lit(fanout)).cast("int")
-
-  /** The fan-out the persisted vector index is bucketed at. */
-  def storeFanout(spark: SparkSession, storeDir: String): Int =
-    BucketFanout.storeFanout(spark, s"$storeDir/vecs")
-
-  /** The vector-index rewrite at `fanout`: re-bucket every row from its
-    * own cell, cluster by cell, stamp the manifest. */
-  private def vecsRewrite(spark: SparkSession, fanout: Int)(
-      live: String, tmp: String): Unit = {
-    spark.read.parquet(live)
-      .withColumn("bucket", bucketCol(fanout))
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("cell"))
-      .write.partitionBy("bucket").parquet(tmp)
-    BucketFanout.writeManifest(spark, tmp, fanout)
-  }
-
   private def clamp(t: Double): Double = math.max(-1.0, math.min(1.0, t))
-
-  /** The vector-index scan a batch probing cells in `buckets` performs:
-    * a static `IN` filter on the partition directory column (visible as
-    * `numFiles` in the scan metrics). Exposed for the spec that pins
-    * the pruning. */
-  private[streaming] def vecIndexScan(spark: SparkSession, vecsPath: String,
-      buckets: Seq[Int]): DataFrame =
-    spark.read.parquet(vecsPath)
-      .filter(col("bucket").isin(buckets.map(Int.box): _*))
 
   /** Roll the store forward past a compaction crash ([[AtomicStore
     * .recover]] semantics); called by every store entry point. `index/`
@@ -136,14 +101,13 @@ object IncrementalEmbedDedup {
     // two rows sharing an id would both survive within-batch
     // canonicalization (self-pairs are excluded) and double-append
     Admission.requireUnique(pinned, "IncrementalEmbedDedup.admitBatch", id)
-    val vecsPath = s"$storeDir/vecs"
+    val vecsPath = Vecs.path(storeDir)
     val radiiPath = s"$storeDir/radii"
     val indexPath = s"$storeDir/index"
 
     val newVecs = pinned.select(col(id).as("doc_id"), col(vec).as("vec"))
     if (newVecs.isEmpty) return newVecs
-    val fanout = BucketFanout.reconcile(spark, storeDir, "vecs")(
-      vecsRewrite(spark, _))
+    val fanout = Vecs.reconcile(spark, storeDir)
 
     // amortized index: trained once, on the first non-empty batch; all
     // radii live in radii/ (the saved radii are the train-time zeros)
@@ -165,7 +129,7 @@ object IncrementalEmbedDedup {
 
     // 1. history rejection: radius-rule probe → equi-join the persisted
     //    vector index on cell, pruned to the probed buckets' directories
-    //    (≤ VecBuckets literals — bounded driver-side by construction)
+    //    (≤ fanout literals — bounded driver-side by construction)
     val rejectedByHistory: DataFrame =
       if (AtomicStore.exists(spark, vecsPath)) {
         val radii = liveRadii(spark, radiiPath, index.nlist)
@@ -174,11 +138,8 @@ object IncrementalEmbedDedup {
         val probed = Ivf.assignWithinRadii(
             newVecs, "doc_id", "vec", index.centroids, radii, maxPairRad)
           .select(col("doc_id"), col("vec").as("__v"), col("nrm"), col("cell"))
-          .withColumn("bucket", bucketCol(fanout))
           .cache()
-        val batchBuckets = probed.select(col("bucket")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val hist = vecIndexScan(spark, vecsPath, batchBuckets)
+        val hist = Vecs.scan(spark, vecsPath, Vecs.bucketsOf(probed, fanout))
           .select(col("vec").as("__hv"), col("nrm").as("__hnrm"), col("cell"))
         // no id-inequality filter: a replayed vector must self-match its
         // admitted copy (cosine 1.0 ≥ threshold) and be rejected
@@ -208,7 +169,6 @@ object IncrementalEmbedDedup {
       .join(survivors.join(clusters, Seq("doc_id"), "left")
         .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
         .select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .withColumn("bucket", bucketCol(fanout))
       .localCheckpoint(true)
 
     // radii BEFORE vectors: a crash between the two appends must leave
@@ -218,12 +178,7 @@ object IncrementalEmbedDedup {
     admittedHome.groupBy(col("cell")).agg(max(col("cell_angle")).as("radius"))
       .coalesce(1)
       .write.mode(SaveMode.Append).parquet(radiiPath)
-    // repartition by bucket before the partitioned append: one file per
-    // non-empty bucket per batch instead of tasks × buckets tiny files
-    admittedHome.select(col("doc_id"), col("vec"), col("nrm"), col("cell"), col("bucket"))
-      .repartition(col("bucket"))
-      .write.mode(SaveMode.Append).partitionBy("bucket").parquet(vecsPath)
-    BucketFanout.writeManifest(spark, vecsPath, fanout)
+    Vecs.append(admittedHome, storeDir, fanout)
     admittedHome.select(col("doc_id"), col("vec"))
     } finally batch.unpersist()
   }
@@ -239,12 +194,6 @@ object IncrementalEmbedDedup {
       lit(null).cast("array<float>").as("vec"))
   }
 
-  /** Compact the append-only store: vecs/ collapses to one file per
-    * non-empty bucket (rows clustered by cell — the pruned-read-optimal
-    * layout); radii/ collapses to one row per cell. Crash-safe via the
-    * same temp-and-swap + roll-forward as [[IncrementalDedup
-    * .compactStore]], and under the same single-operator contract
-    * (writers AND readers paused — see that method's scaladoc). */
   /** Compaction policy ([[IncrementalDedup.maybeCompact]] semantics,
     * same single-operator contract): compact when the vector index
     * holds more than `maxFilesPerBucket` files per occupied bucket;
@@ -252,18 +201,20 @@ object IncrementalEmbedDedup {
   def maybeCompact(spark: SparkSession, storeDir: String,
       maxFilesPerBucket: Int = 32): Boolean = {
     recoverStore(spark, storeDir)
-    val (files, dirs) = AtomicStore.filesPerDir(spark, s"$storeDir/vecs", "bucket")
-    if (dirs == 0L || files <= maxFilesPerBucket * dirs) return false
+    if (!Vecs.overFilesPerBucket(spark, storeDir, maxFilesPerBucket)) return false
     compactStore(spark, storeDir)
     true
   }
 
+  /** Compact the append-only store: vecs/ collapses to one file per
+    * non-empty bucket (rows clustered by cell — the pruned-read-optimal
+    * layout); radii/ collapses to one row per cell. Crash-safe via the
+    * same temp-and-swap + roll-forward as [[IncrementalDedup
+    * .compactStore]], and under the same single-operator contract
+    * (writers AND readers paused — see that method's scaladoc). */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
     recoverStore(spark, storeDir)
-    if (AtomicStore.exists(spark, s"$storeDir/vecs")) {
-      val f = BucketFanout.target(spark, s"$storeDir/vecs")
-      AtomicStore.swapIn(spark, storeDir, "vecs")(vecsRewrite(spark, f))
-    }
+    Vecs.compact(spark, storeDir)
     AtomicStore.swapIn(spark, storeDir, "radii") { (live, tmp) =>
       spark.read.parquet(live)
         .groupBy(col("cell")).agg(max(col("radius")).as("radius"))

@@ -111,22 +111,10 @@ object IncrementalReservoir {
   }
 
   /** The store's sample as (stratum, id, weight, rank) — a plain scan
-    * of the persisted admission state, no window on the read path.
-    * Stores written before the rank column was persisted (pre-r16)
-    * lack it; the read path falls back to computing it with the same
-    * window the write path uses — identical values by construction
-    * (the store holds exactly the rows that window ranked ≤ k), so a
-    * pre-upgrade store stays readable until its next admitBatch
-    * rewrites it with rank persisted. */
+    * of the persisted admission state, no window on the read path. */
   def current(spark: SparkSession, storeDir: String): DataFrame = {
     AtomicStore.recover(spark, storeDir, Seq(Sub))
-    val raw = spark.read.parquet(s"$storeDir/$Sub")
-    val ranked =
-      if (raw.columns.contains("rank")) raw
-      else raw.withColumn("rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("stratum"))
-          .orderBy(col("__key").desc, col("id").asc)).cast("long"))
-    ranked.select(col("stratum"), col("id"), col("weight"), col("rank"))
+    spark.read.parquet(s"$storeDir/$Sub")
+      .select(col("stratum"), col("id"), col("weight"), col("rank"))
   }
 }

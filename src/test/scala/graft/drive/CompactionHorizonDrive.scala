@@ -175,11 +175,11 @@ object CompactionHorizonDrive {
       store
     }
     val pre = buildPending()
-    require(IncrementalDedup.storeFanout(spark, pre) == 64)
+    require(BucketFanout.Bands.fanout(spark, pre) == 64)
     val tC = System.nanoTime()
     IncrementalDedup.compactStore(spark, pre)
     val prepaySec = (System.nanoTime() - tC) / 1e9
-    if (IncrementalDedup.storeFanout(spark, pre) != 256) {
+    if (BucketFanout.Bands.fanout(spark, pre) != 256) {
       println("COMPACTHORIZON PREPAY FAIL: maintenance compaction did not " +
         "rewrite at the scheduled fan-out")
       ok = false
@@ -194,7 +194,7 @@ object CompactionHorizonDrive {
     }
     val ctl = buildPending()
     val (_, migrateSec, _) = admitSlice(math.min(10, triggers - 1), ctl)
-    if (IncrementalDedup.storeFanout(spark, ctl) != 256) {
+    if (BucketFanout.Bands.fanout(spark, ctl) != 256) {
       println("COMPACTHORIZON PREPAY FAIL: control admit did not migrate")
       ok = false
     }

@@ -117,7 +117,7 @@ object FanoutScaleDrive {
           .collect().map(_.getLong(0)).toSet
         val probeSec = (System.nanoTime() - t1) / 1e9
         val probeMb = (bytesRead.get() - b0) / 1e6
-        val fanout = IncrementalDedup.storeFanout(spark, store)
+        val fanout = BucketFanout.Bands.fanout(spark, store)
         val histMb = BucketFanout.dirBytes(spark, s"$store/bands") / 1e6
         println(f"FANOUTSCALE $mode%-8s round=$k hist=${k * stride} " +
           f"fanout=$fanout%4d bandsMB=$histMb%6.1f bigSec=$bigSec%6.2f " +

@@ -270,10 +270,10 @@ class IncrementalBm25Spec extends SparkTestBase {
 
     val postingsPath = s"$store/postings"
     val allFiles = IncrementalDedupSpec.walkParquet(postingsPath)
-    assert(allFiles.size > IncrementalBm25.TermBuckets / 4,
+    assert(allFiles.size > BucketFanout.Base / 4,
       s"seed store too small to prove pruning: ${allFiles.size}")
     val qBuckets = query
-      .map(t => math.floorMod(TermHash.xx64(t), IncrementalBm25.TermBuckets.toLong).toInt)
+      .map(t => math.floorMod(TermHash.xx64(t), BucketFanout.Base.toLong).toInt)
       .distinct
     val scan = spark.read.parquet(postingsPath)
       .filter(col("bucket").isin(qBuckets.map(Int.box): _*))
@@ -284,7 +284,7 @@ class IncrementalBm25Spec extends SparkTestBase {
     // the driver-side term hash must agree with the writer's xxhash64
     val sparkBuckets = corpus.take(1).toDF("doc_id", "text")
       .select(explode(split(lit(query.mkString(" ")), " ")).as("term"))
-      .select(pmod(xxhash64(col("term")), lit(IncrementalBm25.TermBuckets.toLong)).cast("int"))
+      .select(pmod(xxhash64(col("term")), lit(BucketFanout.Base.toLong)).cast("int"))
       .distinct().collect().map(_.getInt(0)).toSet
     assert(qBuckets.toSet === sparkBuckets, "driver xxhash64 disagrees with Spark's")
 
@@ -330,9 +330,9 @@ class IncrementalBm25Spec extends SparkTestBase {
       val grown = run(adaptive)
       assert(grown === control,
         "search answers diverged across the fan-out migration")
-      assert(IncrementalBm25.postingsFanout(spark, adaptive) === 256)
-      assert(IncrementalBm25.docstatsFanout(spark, adaptive) === 256)
-      assert(IncrementalBm25.postingsFanout(spark, fixed) === 64)
+      assert(BucketFanout.Postings.fanout(spark, adaptive) === 256)
+      assert(BucketFanout.DocStats.fanout(spark, adaptive) === 256)
+      assert(BucketFanout.Postings.fanout(spark, fixed) === 64)
       // post-migration dirs are self-consistent with the new fan-out
       val badP = spark.read.parquet(s"$adaptive/postings")
         .filter(col("bucket") =!= pmod(xxhash64(col("term")), lit(256L)).cast("int"))

@@ -103,9 +103,9 @@ class IncrementalChunkStoreSpec extends SparkTestBase {
     val probeText = rnd(999, 300)
     val probeBuckets = graft.api.Graft
       .cdcChunkRows(Seq(99L -> probeText).toDF("doc_id", "text"), "doc_id", "text", 16, 64L)
-      .select(pmod(col("chunk_fp"), lit(IncrementalChunkStore.ChunkBuckets.toLong)).cast("int"))
+      .select(pmod(col("chunk_fp"), lit(BucketFanout.Base.toLong)).cast("int"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    val scan = IncrementalChunkStore.chunkIndexScan(spark, chunksPath, probeBuckets)
+    val scan = BucketFanout.Chunks.scan(spark, chunksPath, probeBuckets)
     scan.collect()
     val filesRead = IncrementalDedupSpec.scannedFiles(scan)
     assert(filesRead > 0 && filesRead < allFiles.size,
@@ -148,9 +148,9 @@ class IncrementalChunkStoreSpec extends SparkTestBase {
       val grown = run(adaptive)
       assert(grown === control,
         s"novelty accounting diverged across the migration: $grown vs $control")
-      assert(IncrementalChunkStore.storeFanout(spark, adaptive) === 256,
+      assert(BucketFanout.Chunks.fanout(spark, adaptive) === 256,
         "adaptive chunk store did not migrate")
-      assert(IncrementalChunkStore.storeFanout(spark, fixed) === 64)
+      assert(BucketFanout.Chunks.fanout(spark, fixed) === 64)
       assert(IncrementalChunkStore.storedChunks(spark, adaptive).count() ===
         IncrementalChunkStore.storedChunks(spark, fixed).count())
       // the re-bucketed dirs are self-consistent with the new fan-out

@@ -133,7 +133,7 @@ class IncrementalDedupSpec extends SparkTestBase {
     def parquetFiles(sub: String): Int = IncrementalDedupSpec.walkParquet(s"$store/$sub").size
     val beforeDocs = parquetFiles("docs")
     val beforeBands = parquetFiles("bands")
-    IncrementalDedup.compactStore(spark, store, parts = 1)
+    IncrementalDedup.compactStore(spark, store)
     // docs AND bands collapse to ONE file per non-empty bucket
     // directory (the pruned-read-optimal layout; docs are dbucket-
     // partitioned since the round-17 candidate-fetch pruning)
@@ -243,12 +243,12 @@ class IncrementalDedupSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val probeBuckets = DedupQueries.bandsOf(
         DedupQueries.signatures(probe, "doc_id", "text"))
-      .select(pmod(col("bandhash"), lit(IncrementalDedup.BandBuckets.toLong)).cast("int"))
+      .select(pmod(col("bandhash"), lit(BucketFanout.Base.toLong)).cast("int"))
       .distinct().collect().map(_.getInt(0)).toSeq
 
     // the exact scan admitBatch plans for this batch: execute it and read
     // the physical scan's numFiles metric
-    val scan = IncrementalDedup.bandIndexScan(spark, bandsPath, probeBuckets)
+    val scan = BucketFanout.Bands.scan(spark, bandsPath, probeBuckets)
     scan.collect()
     val filesRead = IncrementalDedupSpec.scannedFiles(scan)
     val expected = probeBuckets.map(b =>
@@ -265,39 +265,29 @@ class IncrementalDedupSpec extends SparkTestBase {
       "pruned index changed admission decisions")
   }
 
-  test("appending to a pre-bucketing store (flat band files) migrates the " +
-      "layout instead of bricking partition discovery") {
+  test("a flat-layout store (no bucket dirs) is not a supported layout: " +
+      "admitBatch throws and adds no parquet file") {
     import graft.ops.DedupQueries
     val store = Files.createTempDirectory("incdedup-flat-").toString
-    // seed the store the way the pre-bucketing code did: docs/ plain,
-    // bands/ as FLAT parquet at the root, no bucket column
+    // docs/ and bands/ as FLAT parquet at the root, no dir columns —
+    // a layout no code writes
     val seed = (1L to 10L).map(doc(_, "f"))
     val seedDf = spark.createDataFrame(seed).toDF("doc_id", "text")
     seedDf.write.parquet(s"$store/docs")
     DedupQueries.bandsOf(DedupQueries.signatures(seedDf, "doc_id", "text"))
       .write.parquet(s"$store/bands")
+    def files(sub: String): Set[String] =
+      IncrementalDedupSpec.walkParquet(s"$store/$sub").map(_.getPath).toSet
+    val (docsBefore, bandsBefore) = (files("docs"), files("bands"))
     assert(new java.io.File(s"$store/bands").listFiles()
       .exists(f => f.isFile && f.getName.endsWith(".parquet")),
       "seed store is not flat — test setup broken")
 
-    // the upgrade-boundary batch: a near-dup of seeded doc 1 plus a novel doc
-    val out = admit(Seq(90L -> (doc(1L, "f")._2 + " x"), 91L -> doc(91L, "n")._2), store)
-    assert(out.collect().map(_.getLong(0)).toSet === Set(91L),
-      "admission decisions wrong across the layout migration")
-
-    // the store must still be readable (the bricking failure mode is
-    // 'Conflicting directory structures' on this exact read) and fully
-    // bucketed: no flat parquet left at the root
-    val bandDocs = spark.read.parquet(s"$store/bands")
-      .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
-    assert(bandDocs === (1L to 10L).toSet + 91L, s"band index lost rows: $bandDocs")
-    assert(!new java.io.File(s"$store/bands").listFiles()
-      .exists(f => f.isFile && f.getName.endsWith(".parquet")),
-      "flat files survived next to bucket= dirs")
-
-    // and later batches keep working against the migrated layout
-    val later = admit(Seq(92L -> (doc(91L, "n")._2 + " y"), 93L -> doc(93L, "m")._2), store)
-    assert(later.collect().map(_.getLong(0)).toSet === Set(93L))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      admit(Seq(90L -> (doc(1L, "f")._2 + " x"), 91L -> doc(91L, "n")._2), store)
+    }
+    assert(files("docs") === docsBefore, "admitBatch wrote into the flat docs/")
+    assert(files("bands") === bandsBefore, "admitBatch wrote into the flat bands/")
   }
 
   test("a compaction crash at any point leaves a store that serves identical " +
@@ -316,7 +306,7 @@ class IncrementalDedupSpec extends SparkTestBase {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$fsRoot/__compact_docs")),
       "stale compaction artifact not cleaned")
     // a fresh compaction over the recovered store succeeds
-    IncrementalDedup.compactStore(spark, fsRoot, parts = 1)
+    IncrementalDedup.compactStore(spark, fsRoot)
     assert(admit(dupOf1, fsRoot).count() === 0L)
 
     // crash point 2: between the two renames — live dir moved aside,
@@ -347,7 +337,8 @@ class IncrementalDedupSpec extends SparkTestBase {
     // re-shingles the full text).
     val store = Files.createTempDirectory("incdedup-legacy-").toString
     val seed = spark.createDataFrame(Seq(doc(1L, "g"))).toDF("doc_id", "text")
-    seed.write.parquet(s"$store/docs")
+    seed.withColumn("dbucket", pmod(col("doc_id"), lit(64L)).cast("int"))
+      .write.partitionBy("dbucket").parquet(s"$store/docs")
     val highBands = DedupQueries.bandsOf(
         DedupQueries.signatures(seed, "doc_id", "text"))
       .withColumn("bucket", pmod(col("bandhash"), lit(256L)).cast("int"))
@@ -356,12 +347,12 @@ class IncrementalDedupSpec extends SparkTestBase {
     highBands.repartition(col("bucket"))
       .write.partitionBy("bucket").parquet(s"$store/bands")
 
-    val detected = IncrementalDedup.storeFanout(spark, store)
+    val detected = BucketFanout.Bands.fanout(spark, store)
     val maxDir = new java.io.File(s"$store/bands").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("bucket="))
       .map(_.getName.stripPrefix("bucket=").toInt).max
     assert(detected >= maxDir + 1 && Integer.bitCount(detected) === 1 &&
-      detected >= IncrementalDedup.BandBuckets,
+      detected >= BucketFanout.Base,
       s"detected fan-out $detected does not cover max dir $maxDir")
 
     // near-dup of the seeded doc + a novel doc: pre-fix code admits BOTH
@@ -370,7 +361,7 @@ class IncrementalDedupSpec extends SparkTestBase {
     assert(out.collect().map(_.getLong(0)).toSet === Set(3L),
       "near-dup re-admitted: legacy high-fan-out dirs were not probed")
     // the store is now stamped and stays at the detected fan-out
-    assert(IncrementalDedup.storeFanout(spark, store) === detected)
+    assert(BucketFanout.Bands.fanout(spark, store) === detected)
     // appended rows bucket consistently: every dir value is the row's
     // own bandhash mod the detected fan-out
     val bad = spark.read.parquet(s"$store/bands")
@@ -413,9 +404,9 @@ class IncrementalDedupSpec extends SparkTestBase {
       val grown = run(adaptive)
       assert(grown === control,
         s"admission diverged across the migration: $grown vs $control")
-      assert(IncrementalDedup.storeFanout(spark, adaptive) === 256,
+      assert(BucketFanout.Bands.fanout(spark, adaptive) === 256,
         "adaptive store did not migrate")
-      assert(IncrementalDedup.storeFanout(spark, fixed) === 64)
+      assert(BucketFanout.Bands.fanout(spark, fixed) === 64)
       // batch-1 history (written at 64, re-bucketed to 256) still
       // rejects: replayed batch-1 docs self-match post-migration
       assert(admit(b1.map { case (i, t) => (i + 100L, t) }, adaptive).count() === 0L,
@@ -423,7 +414,7 @@ class IncrementalDedupSpec extends SparkTestBase {
       // growth is monotonic: removing the override cannot shrink 256
       spark.conf.unset(BucketFanout.GrowAt256Key)
       admit(Seq(doc(50L, "z")), adaptive)
-      assert(IncrementalDedup.storeFanout(spark, adaptive) === 256,
+      assert(BucketFanout.Bands.fanout(spark, adaptive) === 256,
         "fan-out shrank after the threshold override was removed")
     } finally spark.conf.unset(BucketFanout.GrowAt256Key)
   }

@@ -131,12 +131,12 @@ class IncrementalEmbedDedupSpec extends SparkTestBase {
     val probeDf = Seq(500L -> dupOf(3, 0)).toDF("doc_id", "vec")
     val probeBuckets = Ivf.assignWithinRadii(probeDf, "doc_id", "vec",
         index.centroids, radii, math.acos(T))
-      .select(pmod(col("cell"), lit(IncrementalEmbedDedup.VecBuckets)).cast("int"))
+      .select(pmod(col("cell"), lit(BucketFanout.Base)).cast("int"))
       .distinct().collect().map(_.getInt(0)).toSeq
     assert(probeBuckets.nonEmpty && probeBuckets.size < 16,
       s"probe fan-out ${probeBuckets.size} buckets — radius rule not selective")
 
-    val scan = IncrementalEmbedDedup.vecIndexScan(spark, vecsPath, probeBuckets)
+    val scan = BucketFanout.Vecs.scan(spark, vecsPath, probeBuckets)
     scan.collect()
     val filesRead = IncrementalDedupSpec.scannedFiles(scan)
     val expected = probeBuckets.map(b =>
@@ -218,8 +218,8 @@ class IncrementalEmbedDedupSpec extends SparkTestBase {
       val grown = run(adaptive)
       assert(grown === control,
         s"admission diverged across the migration: $grown vs $control")
-      assert(IncrementalEmbedDedup.storeFanout(spark, adaptive) === 256)
-      assert(IncrementalEmbedDedup.storeFanout(spark, fixed) === 64)
+      assert(BucketFanout.Vecs.fanout(spark, adaptive) === 256)
+      assert(BucketFanout.Vecs.fanout(spark, fixed) === 64)
       // batch-1 vectors (written at 64, re-bucketed to 256) still reject
       assert(admit(Seq((300L, fam(0, 0))), adaptive).count() === 0L,
         "pre-migration history lost its rejection power")
