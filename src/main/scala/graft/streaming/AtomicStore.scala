@@ -10,6 +10,11 @@ import org.apache.spark.sql.functions._
   * fail-loudly convention; dedup the batch upstream). */
 private[streaming] object Admission {
 
+  /** Run `body`, then unpersist `frames` whether it returned or threw:
+    * a per-batch cache must not outlive its call on any exit path. */
+  def releasing[T](frames: DataFrame*)(body: => T): T =
+    try body finally frames.foreach(_.unpersist())
+
   /** Fail if any `keys` tuple appears more than once in the batch. */
   def requireUnique(batch: DataFrame, op: String, keys: String*): Unit = {
     val dup = batch.groupBy(keys.map(col): _*)

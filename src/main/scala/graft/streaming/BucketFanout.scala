@@ -26,24 +26,51 @@ import org.apache.spark.sql.functions._
   *    shrinks with fan-out (a small batch touches ≤ its own key count
   *    of buckets, so only a high fan-out keeps the read a small
   *    fraction once the index is large);
-  *  - per-trigger dynamic-partition COMMIT — grows super-linearly with
-  *    non-empty dir count (measured, BandWriteProbeDrive: 40k-row
-  *    append at 256 dirs ≈ 4-6 s, 64 ≈ 1.1 s, 16 ≈ 0.5 s).
+  *  - per-trigger FIXED COST of the dir count — one file per non-empty
+  *    bucket per append, and above
+  *    `spark.sql.sources.parallelPartitionDiscovery.threshold` (32 by
+  *    default) bucket dirs the pruned read's file listing becomes its
+  *    own Spark job ("Listing leaf files and directories for N
+  *    paths") instead of a driver-side listing.
   *
   * A FIXED fan-out is therefore wrong at one end or the other: 256
   * capped trigger throughput at ~0.2 Hz on kilobyte stores (the r16
-  * finding), while 64 at a 100 TB admitted corpus makes each bucket
-  * ~1.5 TB and the per-trigger read grows linearly with history again.
-  * The schedule below starts at 64 and grows 64 → 256 → 1024 at store
+  * finding), while 32 at a 100 TB admitted corpus makes each bucket
+  * ~3 TB and the per-trigger read grows linearly with history again.
+  * The schedule below starts at 32 and grows 32 → 256 → 1024 at store
   * size thresholds where the scan a higher fan-out saves dwarfs the
-  * extra commit seconds (defaults: 4 GiB and 64 GiB — at 4 GiB a
-  * small-batch trigger reads ~3.7 GiB under 64 buckets vs ~1.9 GiB
-  * under 256, saving seconds per trigger for a one-time rewrite;
-  * thresholds are runtime conf so drives can cross a boundary at
-  * fixture scale). Growth is MONOTONIC (max(actual, scheduled)) — a
-  * store is never re-bucketed downward, so byte counts hovering at a
-  * threshold cannot churn rewrites, and legacy 256-bucket stores keep
-  * their layout instead of paying a shrink.
+  * extra per-file and listing seconds (defaults: 4 GiB and 64 GiB — at
+  * 4 GiB a small-batch trigger reads nearly all of a 32-bucket index
+  * vs ~1.9 GiB under 256, saving seconds per trigger for a one-time
+  * rewrite; thresholds are runtime conf so drives can cross a
+  * boundary at fixture scale). Growth is MONOTONIC (max(actual,
+  * scheduled)) — a store is never re-bucketed downward, so byte counts
+  * hovering at a threshold cannot churn rewrites, and stores written
+  * under an earlier floor (64) or at 256 keep their layout instead of
+  * paying a shrink.
+  *
+  * Why the floor is 32, not 64: 32 dirs is the largest count Spark
+  * still lists on the driver, so a trigger's two pruned reads
+  * ([[IncrementalDedup]]'s `bands/` and `docs/`) run no listing job —
+  * at 64 each was a 64-task job of 220-300 ms, two per trigger — and
+  * an append writes at most 32 files per index instead of 64
+  * (`streaming.store_files` of the admit benchmark halves). The cost:
+  * below 4 GiB a pruned read covers touched/32 of an index instead of
+  * touched/64. For `bands/` that costs nothing at trigger sizes: a
+  * 500-doc trigger's 16,000 band hashes touch every bucket at either
+  * fan-out, and a single doc's 32 band hashes already touch ~25 of 64
+  * or ~20 of 32. Only the candidate fetch from `docs/` of a very small
+  * trigger reads a larger share. Measured on a 4-core host (local[4])
+  * by `graft.drive.BandWriteProbeDrive`, which appends a 500-doc
+  * trigger's 16,000 band rows with [[Index.append]] and reads every
+  * bucket back with [[Index.scan]]: an append into an existing index
+  * takes 2.07 s at 256 buckets, 0.74 s at 64, 0.55 s at 32 and 0.34 s
+  * at 16; the read-back takes 2.72 / 0.77 / 0.30 / 0.27 s, and the
+  * 256- and 64-bucket reads each run one job more, the file listing.
+  * On the traced admit benchmark (seed 1, 500-doc triggers over a
+  * ~1.5 MB store) moving the floor from 64 to 32 together with the
+  * explicit partition count in [[Index.append]] took the admitBatch
+  * call from 7.31 s to 5.48 s at the median per trigger.
   *
   * The store's actual fan-out travels WITH the store as a `_fanout`
   * manifest file at the index root (underscore-prefixed, so Spark's
@@ -71,8 +98,9 @@ import org.apache.spark.sql.functions._
   * there are at most two such rewrites ever. */
 object BucketFanout {
 
-  /** Fan-out floor and the value every store starts at. */
-  val Base = 64
+  /** Fan-out floor and the value every store starts at: the largest
+    * dir count Spark lists without a job (see the header). */
+  val Base = 32
 
   /** Runtime-settable thresholds (bytes of index data ABOVE which the
     * scheduled fan-out becomes 256 / 1024). Must be positive: the
@@ -240,12 +268,18 @@ object BucketFanout {
     }
 
     /** Append `rows` (carrying at least `cols`) bucketed at `fanout`,
-      * then stamp the manifest. Repartitioning by the dir column first
-      * writes one file per non-empty bucket per batch instead of
-      * tasks × buckets tiny files. */
+      * then stamp the manifest. Hash-repartitioning by the dir column
+      * puts each bucket in exactly one partition, so an append writes
+      * one file per non-empty bucket instead of tasks × buckets tiny
+      * files. The partition count is explicit, min(fanout,
+      * defaultParallelism): AQE coalesces a bare `repartition(col)` of
+      * a trigger-sized batch to ONE task that writes every bucket's
+      * file in turn (~11-15 ms a file), while a requested count is
+      * never coalesced, so the files are written by parallel tasks. */
     def append(rows: DataFrame, storeDir: String, fanout: Int): Unit = {
+      val writers = math.min(fanout, rows.sparkSession.sparkContext.defaultParallelism)
       rows.select(cols.map(col) :+ bucket(fanout).as(dirCol): _*)
-        .repartition(col(dirCol))
+        .repartition(writers, col(dirCol))
         .write.mode(SaveMode.Append).partitionBy(dirCol).parquet(path(storeDir))
       writeManifest(rows.sparkSession, path(storeDir), fanout)
     }

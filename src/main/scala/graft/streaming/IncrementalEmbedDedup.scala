@@ -22,7 +22,7 @@ import graft.streaming.BucketFanout.Vecs
   *    later batch: no per-trigger centroid training.
   *  - `vecs/`  — admitted (doc_id, vec, nrm, cell), directory-partitioned
   *    by `bucket = pmod(cell, fanout)`, append-only
-  *    ([[BucketFanout.Vecs]]; the fan-out starts at 64 and grows with
+  *    ([[BucketFanout.Vecs]]; the fan-out starts at 32 and grows with
   *    store size — a fan-out above nlist simply converges to one cell
   *    per directory, the pruned-read-optimal layout).
   *  - `radii/` — append-only (cell, radius) rows; the live per-cell
@@ -139,17 +139,17 @@ object IncrementalEmbedDedup {
             newVecs, "doc_id", "vec", index.centroids, radii, maxPairRad)
           .select(col("doc_id"), col("vec").as("__v"), col("nrm"), col("cell"))
           .cache()
-        val hist = Vecs.scan(spark, vecsPath, Vecs.bucketsOf(probed, fanout))
-          .select(col("vec").as("__hv"), col("nrm").as("__hnrm"), col("cell"))
-        // no id-inequality filter: a replayed vector must self-match its
-        // admitted copy (cosine 1.0 ≥ threshold) and be rejected
-        val rejected = probed.join(hist, Seq("cell"))
-          .filter(round(float_dot(col("__v"), col("__hv"))
-            / col("nrm") / col("__hnrm"), 12) >= threshold)
-          .select(col("doc_id")).distinct()
-          .localCheckpoint(true) // materialize before unpersist
-        probed.unpersist()
-        rejected
+        Admission.releasing(probed) {
+          val hist = Vecs.scan(spark, vecsPath, Vecs.bucketsOf(probed, fanout))
+            .select(col("vec").as("__hv"), col("nrm").as("__hnrm"), col("cell"))
+          // no id-inequality filter: a replayed vector must self-match its
+          // admitted copy (cosine 1.0 ≥ threshold) and be rejected
+          probed.join(hist, Seq("cell"))
+            .filter(round(float_dot(col("__v"), col("__hv"))
+              / col("nrm") / col("__hnrm"), 12) >= threshold)
+            .select(col("doc_id")).distinct()
+            .localCheckpoint(true) // materialize before unpersist
+        }
       } else spark.range(0).select(col("id").as("doc_id"))
 
     val survivors = newVecs.join(rejectedByHistory, Seq("doc_id"), "left_anti")

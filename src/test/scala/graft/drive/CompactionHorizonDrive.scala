@@ -105,7 +105,7 @@ object CompactionHorizonDrive {
     }
 
     def run(compact: Boolean): Seq[Obs] = {
-      // fixed 64 buckets for the horizon phase: the sawtooth is the
+      // fixed Base buckets for the horizon phase: the sawtooth is the
       // observable here, the size schedule gets its own phase below
       spark.conf.set(BucketFanout.GrowAt256Key, Long.MaxValue.toString)
       spark.conf.set(BucketFanout.GrowAt1024Key, Long.MaxValue.toString)
@@ -170,12 +170,12 @@ object CompactionHorizonDrive {
       for (k <- 0 until math.min(10, triggers - 1))
         admitSlice(k, store)
       // enable the schedule below the store's current size: the
-      // 64 -> 256 migration is now pending
+      // Base -> 256 migration is now pending
       spark.conf.set(BucketFanout.GrowAt256Key, (64L << 10).toString)
       store
     }
     val pre = buildPending()
-    require(BucketFanout.Bands.fanout(spark, pre) == 64)
+    require(BucketFanout.Bands.fanout(spark, pre) == BucketFanout.Base)
     val tC = System.nanoTime()
     IncrementalDedup.compactStore(spark, pre)
     val prepaySec = (System.nanoTime() - tC) / 1e9

@@ -12,14 +12,14 @@ import graft.streaming.{BucketFanout, IncrementalDedup}
   * 10 rounds of sf1 ingest through the UNMODIFIED
   * [[IncrementalDedup.admitBatch]], history growing ~10×, run twice —
   * once with the fan-out thresholds shrunk so the store migrates
-  * 64 → 256 → 1024 mid-run (crash-safe swap rewrites), once pinned at
-  * 64 (the fixed control).
+  * Base → 256 → 1024 mid-run (crash-safe swap rewrites), once pinned
+  * at [[BucketFanout.Base]] (the fixed control).
   *
   * Each round admits one BIG batch (history growth) and then one TINY
   * probe batch (the high-frequency continuous-ingest trigger whose
   * cost must stay flat). The probe's task-level input bytes are the
   * scale observable: a 5-doc batch carries ~160 band rows, which touch
-  * ~92% of 64 buckets but ~14% of 1024 — so under the fixed control
+  * ~99% of 32 buckets (~92% of 64) but ~14% of 1024 — so under the fixed control
   * the probe's pruned read grows linearly with history, while the
   * adaptive store's read drops at each migration boundary and stays
   * bounded. (Seconds follow bytes at 100 TB; at sf1 the absolute scan
@@ -89,14 +89,14 @@ object FanoutScaleDrive {
 
     def run(mode: String): Seq[Set[Long]] = {
       if (mode == "adaptive") {
-        // default 4/16 MiB: migrate 64 -> 256 around round 2 of the
+        // default 4/16 MiB: migrate Base -> 256 around round 2 of the
         // ~15 MB-final band store (shrink via args to cross 1024 too)
         spark.conf.set(BucketFanout.GrowAt256Key, Grow256.toString)
         spark.conf.set(BucketFanout.GrowAt1024Key, Grow1024.toString)
       } else {
         spark.conf.unset(BucketFanout.GrowAt256Key)
         spark.conf.unset(BucketFanout.GrowAt1024Key)
-        // pin the control at 64 regardless of size
+        // pin the control at Base regardless of size
         spark.conf.set(BucketFanout.GrowAt256Key, Long.MaxValue.toString)
         spark.conf.set(BucketFanout.GrowAt1024Key, Long.MaxValue.toString)
       }

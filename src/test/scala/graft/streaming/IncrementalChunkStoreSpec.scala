@@ -132,6 +132,8 @@ class IncrementalChunkStoreSpec extends SparkTestBase {
 
   test("size-adaptive fan-out growth: novelty accounting identical across " +
       "a 64 -> 256 migration, pre-migration chunks still dedup") {
+    // "64" in the name is the fan-out floor when the test was written;
+    // the migration it pins is BucketFanout.Base -> 256
     def run(store: String): Seq[Map[Long, Long]] =
       Seq(
         Seq(1L -> rnd(11, 3000), 2L -> rnd(12, 3000)),
@@ -150,7 +152,7 @@ class IncrementalChunkStoreSpec extends SparkTestBase {
         s"novelty accounting diverged across the migration: $grown vs $control")
       assert(BucketFanout.Chunks.fanout(spark, adaptive) === 256,
         "adaptive chunk store did not migrate")
-      assert(BucketFanout.Chunks.fanout(spark, fixed) === 64)
+      assert(BucketFanout.Chunks.fanout(spark, fixed) === BucketFanout.Base)
       assert(IncrementalChunkStore.storedChunks(spark, adaptive).count() ===
         IncrementalChunkStore.storedChunks(spark, fixed).count())
       // the re-bucketed dirs are self-consistent with the new fan-out

@@ -388,6 +388,8 @@ class IncrementalDedupSpec extends SparkTestBase {
 
   test("size-adaptive fan-out growth: admission decisions identical across " +
       "a 64 -> 256 migration, cross-boundary history still rejects") {
+    // "64" in the name is the fan-out floor when the test was written;
+    // the migration it pins is BucketFanout.Base -> 256
     val fixed = Files.createTempDirectory("incdedup-fixed-").toString
     val adaptive = Files.createTempDirectory("incdedup-adapt-").toString
     val b1 = Seq(doc(1L, "p"), 2L -> (doc(1L, "p")._2 + " ax"), doc(3L, "q"))
@@ -396,9 +398,9 @@ class IncrementalDedupSpec extends SparkTestBase {
     def run(store: String): Seq[Set[Long]] =
       Seq(b1, b2, b3).map(b => admit(b, store).collect().map(_.getLong(0)).toSet)
 
-    val control = run(fixed) // default thresholds: stays at 64
+    val control = run(fixed) // default thresholds: stays at Base
     try {
-      // 1-byte threshold: batch 1 creates the store at 64 (empty store
+      // 1-byte threshold: batch 1 creates the store at Base (empty store
       // schedules Base), batch 2's reconcile sees bytes >= 1 and grows
       spark.conf.set(BucketFanout.GrowAt256Key, "1")
       val grown = run(adaptive)
@@ -406,8 +408,8 @@ class IncrementalDedupSpec extends SparkTestBase {
         s"admission diverged across the migration: $grown vs $control")
       assert(BucketFanout.Bands.fanout(spark, adaptive) === 256,
         "adaptive store did not migrate")
-      assert(BucketFanout.Bands.fanout(spark, fixed) === 64)
-      // batch-1 history (written at 64, re-bucketed to 256) still
+      assert(BucketFanout.Bands.fanout(spark, fixed) === BucketFanout.Base)
+      // batch-1 history (written at Base, re-bucketed to 256) still
       // rejects: replayed batch-1 docs self-match post-migration
       assert(admit(b1.map { case (i, t) => (i + 100L, t) }, adaptive).count() === 0L,
         "pre-migration history lost its rejection power")
@@ -417,6 +419,81 @@ class IncrementalDedupSpec extends SparkTestBase {
       assert(BucketFanout.Bands.fanout(spark, adaptive) === 256,
         "fan-out shrank after the threshold override was removed")
     } finally spark.conf.unset(BucketFanout.GrowAt256Key)
+  }
+
+  test("an admitBatch that throws releases every per-batch cache") {
+    val store = Files.createTempDirectory("incdedup-release-").toString
+    // a flat-layout store: admitBatch materializes the batch's
+    // signatures and bands, then throws on the pruned band scan
+    val seed = spark.createDataFrame((1L to 10L).map(doc(_, "rl"))).toDF("doc_id", "text")
+    seed.write.parquet(s"$store/docs")
+    graft.ops.DedupQueries.bandsOf(
+        graft.ops.DedupQueries.signatures(seed, "doc_id", "text"))
+      .write.parquet(s"$store/bands")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[org.apache.spark.sql.AnalysisException] {
+      admit(Seq(20L -> doc(20L, "rl")._2, 21L -> doc(21L, "rm")._2), store)
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persistent RDDs left by the failed admitBatch: $leaked")
+  }
+
+  test("admitBatch on a fresh store runs no file-listing job, and each " +
+      "append writes exactly one file per non-empty bucket") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val store = Files.createTempDirectory("incdedup-listing-").toString
+    // (job group, description) of every job; the admits run under
+    // their own group, so the checks' own reads below do not count
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(js.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        jobs.add(prop("spark.jobGroup.id") -> prop("spark.job.description"))
+      }
+    }
+    // one new file per bucket dir that gained rows, and the dirs that
+    // gained files are exactly the buckets of the batch's admitted rows
+    def checkOneFilePerBucket(sub: String, dirCol: String, before: Set[java.io.File],
+        admitted: Seq[Long]): Unit = {
+      val added = IncrementalDedupSpec.walkParquet(s"$store/$sub").toSet -- before
+      val perDir = added.groupBy(_.getParentFile.getName).map { case (d, fs) => d -> fs.size }
+      assert(perDir.values.forall(_ == 1), s"$sub: more than one new file in a bucket: $perDir")
+      val buckets = spark.read.parquet(s"$store/$sub")
+        .filter(col("doc_id").isin(admitted.map(Long.box): _*))
+        .select(col(dirCol)).distinct().collect().map(r => s"$dirCol=${r.getInt(0)}").toSet
+      assert(perDir.keySet === buckets, s"$sub: new files do not match the touched buckets")
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // 40 docs x 32 bands cover every band bucket, and at a 64-bucket
+      // floor 40 doc ids would occupy more docs dirs than the 32 Spark
+      // lists without a job
+      for (ids <- Seq(1L to 40L, 41L to 80L)) {
+        val bandsBefore = IncrementalDedupSpec.walkParquet(s"$store/bands").toSet
+        val docsBefore = IncrementalDedupSpec.walkParquet(s"$store/docs").toSet
+        spark.sparkContext.setJobGroup("admit-under-test", "admitBatch")
+        val admitted =
+          try admit(ids.map(doc(_, "lj")), store).collect().map(_.getLong(0)).toSeq
+          finally spark.sparkContext.clearJobGroup()
+        assert(admitted.size === ids.size)
+        checkOneFilePerBucket("bands", "bucket", bandsBefore, admitted)
+        checkOneFilePerBucket("docs", "dbucket", docsBefore, admitted)
+      }
+      // listener events arrive in job order: once a marker job's start
+      // is seen, every earlier job's start has been delivered too
+      val marker = "incdedup-listing-marker"
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def seen = jobs.toArray(Array.empty[(String, String)]).toSeq
+      while (!seen.exists(_._2 == marker) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(seen.exists(_._2 == marker), "listener never saw the marker job")
+      val admitJobs = seen.filter(_._1 == "admit-under-test").map(_._2)
+      assert(admitJobs.nonEmpty, "no admitBatch job carried the test's job group")
+      val listing = admitJobs.filter(_.startsWith("Listing leaf files"))
+      assert(listing.isEmpty, s"file-listing jobs ran: $listing")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
 

@@ -203,6 +203,8 @@ class IncrementalEmbedDedupSpec extends SparkTestBase {
 
   test("size-adaptive fan-out growth: admission decisions identical across " +
       "a 64 -> 256 migration, pre-migration history still rejects") {
+    // "64" in the name is the fan-out floor when the test was written;
+    // the migration it pins is BucketFanout.Base -> 256
     def run(store: String): Seq[Set[Long]] =
       Seq(
         (0 until 8).map(f => (f.toLong, fam(f, 0))),
@@ -219,8 +221,8 @@ class IncrementalEmbedDedupSpec extends SparkTestBase {
       assert(grown === control,
         s"admission diverged across the migration: $grown vs $control")
       assert(BucketFanout.Vecs.fanout(spark, adaptive) === 256)
-      assert(BucketFanout.Vecs.fanout(spark, fixed) === 64)
-      // batch-1 vectors (written at 64, re-bucketed to 256) still reject
+      assert(BucketFanout.Vecs.fanout(spark, fixed) === BucketFanout.Base)
+      // batch-1 vectors (written at Base, re-bucketed to 256) still reject
       assert(admit(Seq((300L, fam(0, 0))), adaptive).count() === 0L,
         "pre-migration history lost its rejection power")
       val bad = spark.read.parquet(s"$adaptive/vecs")
