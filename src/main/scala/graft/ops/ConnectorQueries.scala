@@ -1,11 +1,17 @@
 package graft.ops
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.sources.FileStreamClient
+import graft.streaming.StreamingQueries
 
 /** Puts the DSv2 connector itself under the DuckDB oracle gate:
   * `events` rows are produced into a file-backed stream through the
@@ -15,20 +21,30 @@ import graft.sources.FileStreamClient
   * scan-side decoding are all on the hook for exactness. */
 object ConnectorQueries {
 
-  // The sink write runs once per (spark app, source dir) — re-planning,
-  // explain-then-execute and repeated driver calls reuse the same stream
-  // root instead of re-running the write job and leaking a new temp dir.
-  // Roots are registered for JVM-exit cleanup BEFORE the write job runs,
-  // so a failed write cannot leak its directory; the write executes
-  // under a plain lock (not inside ConcurrentHashMap.computeIfAbsent,
-  // which would pin a bin lock for the duration of a Spark job).
-  private val writtenRoots =
-    scala.collection.mutable.Map[(String, String), java.nio.file.Path]()
+  /** A feed stream (or the decontamination arm's static store): where
+    * it lives, its stream name, the fixture-scaled per-trigger cap, and
+    * the fixture's event-time span in micros (0 for the timeless
+    * streams). */
+  private[graft] final case class FeedInfo(
+      root: Path, stream: String, triggerCap: Long, spanUs: Long)
+
+  // Each feed is written once per (spark app, dir, stream): re-planning,
+  // explain-then-execute and repeated driver calls reuse the same root
+  // instead of re-running the write job and leaking a new temp dir. The
+  // root is registered for JVM-exit cleanup (tempDir) BEFORE the write
+  // job runs, so a failed write cannot leak its directory; the write
+  // executes under a plain lock (not inside
+  // ConcurrentHashMap.computeIfAbsent, which would pin a bin lock for
+  // the duration of a Spark job).
+  private val feeds = scala.collection.mutable.Map[(String, String), FeedInfo]()
+  private def once(spark: SparkSession, key: String)(make: => FeedInfo): FeedInfo =
+    feeds.synchronized(feeds.getOrElseUpdate((spark.sparkContext.applicationId, key), make))
+
   private val rootsToClean =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
   sys.addShutdownHook {
     rootsToClean.forEach { root =>
-      def rm(p: java.nio.file.Path): Unit = {
+      def rm(p: Path): Unit = {
         if (Files.isDirectory(p)) {
           val l = Files.list(p)
           try l.forEach(rm) finally l.close()
@@ -39,28 +55,33 @@ object ConnectorQueries {
     }
   }
 
+  /** A fresh temp dir, deleted at JVM exit: every feed root, store,
+    * sink and checkpoint the gate writes lives in one. */
+  private def tempDir(prefix: String): Path = {
+    val d = Files.createTempDirectory(prefix)
+    rootsToClean.add(d)
+    d
+  }
+
   private val parts = 8
 
   def qDisRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val root = writtenRoots.synchronized {
-      writtenRoots.getOrElseUpdate((spark.sparkContext.applicationId, dir), {
-        val r = Files.createTempDirectory("dis-roundtrip-")
-        rootsToClean.add(r)
-        new FileStreamClient(r).createStream("events", parts)
-        Tables.events(spark, dir)
-          .select(
-            col("event_id").cast("string").as("key"),
-            col("event_type").as("value"),
-            pmod(col("user_id"), lit(parts)).cast("int").as("partition"))
-          .write.format("dis")
-          .option("client.root", r.toString).option("stream", "events")
-          .mode("append").save()
-        r
-      })
+    val feed = once(spark, s"$dir#events") {
+      val r = tempDir("dis-roundtrip-")
+      new FileStreamClient(r).createStream("events", parts)
+      Tables.events(spark, dir)
+        .select(
+          col("event_id").cast("string").as("key"),
+          col("event_type").as("value"),
+          pmod(col("user_id"), lit(parts)).cast("int").as("partition"))
+        .write.format("dis")
+        .option("client.root", r.toString).option("stream", "events")
+        .mode("append").save()
+      FeedInfo(r, "events", 0L, 0L)
     }
 
     spark.read.format("dis")
-      .option("client.root", root.toString).option("stream", "events")
+      .option("client.root", feed.root.toString).option("stream", feed.stream)
       .load()
       .select(col("partition"), col("value").cast("string").as("event_type"))
       .groupBy(col("partition"), col("event_type"))
@@ -70,6 +91,114 @@ object ConnectorQueries {
   val oracle: String =
     """SELECT (user_id % 8)::INT AS partition, event_type, count(*) AS cnt
       |FROM events GROUP BY 1, 2""".stripMargin
+
+  /** The per-trigger record cap, scaled with the fixture so replay
+    * cost stays O(few triggers) at every gate scale (round-15 verdict
+    * item 3: 20 fixed-cap triggers × ~1 s overhead each made every
+    * sf1 streaming entry cost ~20 s). ⌈n/4⌉ keeps 4-5 micro-batches —
+    * still a genuine multi-trigger replay (incremental state merge,
+    * per-trigger planning all exercised) — while the 50k floor leaves
+    * the sf0.01/sf0.1 trigger counts (and their pins) unchanged. */
+  private def scaledTriggerCap(n: Long): Long = math.max(50000L, (n + 3) / 4)
+
+  /** Writes (once per app+dir) the one-partition feed `stream`: the
+    * rows `make` returns, ordered by `orderKey`, each as one JSON value
+    * at partition 0, so arrival order is `orderKey` order — the gate
+    * bindings' determinism contract. `make` also returns the feed's
+    * per-trigger cap and event-time span. */
+  private def feed(spark: SparkSession, dir: String, stream: String, orderKey: String)(
+      make: => (DataFrame, Long, Long)): FeedInfo =
+    once(spark, s"$dir#$stream") {
+      val r = tempDir(s"dis-$stream-")
+      new FileStreamClient(r).createStream(stream, 1)
+      val (rows, cap, spanUs) = make
+      rows.orderBy(col(orderKey))
+        .select(to_json(struct(rows.columns.map(col): _*)).as("value"),
+          lit(0).as("partition"))
+        .coalesce(1) // one ordered partition: arrival order = orderKey order
+        .write.format("dis")
+        .option("client.root", r.toString).option("stream", stream)
+        .mode("append").save()
+      FeedInfo(r, stream, cap, spanUs)
+    }
+
+  /** Streaming read of `feed` at `cap` records per trigger, its JSON
+    * values parsed with `schema` into top-level columns. */
+  private def readFeed(spark: SparkSession, feed: FeedInfo, cap: Long,
+      schema: StructType): DataFrame =
+    spark.readStream.format("dis")
+      .option("client.root", feed.root.toString).option("stream", feed.stream)
+      .option("maxRecordsPerTrigger", cap.toString)
+      .load()
+      .select(from_json(col("value").cast("string"), schema).as("d"))
+      .select(col("d.*"))
+
+  /** Streaming read of the sessions feed as events (`ts` a timestamp). */
+  private def readEvents(spark: SparkSession, feed: FeedInfo, cap: Long): DataFrame =
+    StreamingQueries.readEvents(spark, feed.root.toString, feed.stream,
+      Map("maxRecordsPerTrigger" -> cap.toString))
+
+  /** The ts-ordered events feed with the flush sentinel — shared by
+    * every streaming gate binding over `events`; one ts-ordered
+    * partition keeps the watermark monotone. The sentinel sits one
+    * fixture SPAN + 1 day past the last real event (span-scaled, not a
+    * fixed offset) so the final watermark closes not only every 30-min
+    * session but also the whole-run pools of [[qStreamingRlMetrics]]
+    * (quiet = span + 1 h). */
+  private def sessionsFeed(spark: SparkSession, dir: String): FeedInfo =
+    feed(spark, dir, "sessions", "ts_us") {
+      val ev = Tables.events(spark, dir)
+      val stats = ev.agg(max(unix_micros(col("ts"))),
+        min(unix_micros(col("ts"))), count(lit(1))).collect()(0)
+      val (maxUs, minUs, n) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
+      val spanUs = maxUs - minUs
+      val sentinel = spark.range(1).select(
+        lit(-1L).as("event_id"),
+        lit(maxUs + spanUs + 24L * 3600 * 1000000).as("ts_us"),
+        lit(-1L).as("user_id"), lit("flush").as("event_type"),
+        lit(0.0).as("value"), lit(null).cast("string").as("props"))
+      (ev.select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
+          col("user_id"), col("event_type"), col("value"), col("props"))
+        .unionAll(sentinel), scaledTriggerCap(n), spanUs)
+    }
+
+  /** The doc_id-ordered documents feeds. `docs` carries METADATA only
+    * (the admission bindings key on (doc_id, lang, source, n_chars));
+    * its global id order is [[qStreamingDomainQuota]]'s determinism
+    * contract: ingest-order quota == the batch cap's smallest-id keeper
+    * rule. `docstext` (`text`) carries ALL documents WITH TEXT — the
+    * text-keyed arms' feed (decontamination, BM25 index maintenance,
+    * admission stores), kept separate so the metadata arms' payloads
+    * stay small. Arms that gate only a corpus slice filter the stream
+    * map-side. */
+  private def docsFeed(spark: SparkSession, dir: String, text: Boolean): FeedInfo = {
+    val (stream, cols) =
+      if (text) ("docstext", Seq("doc_id", "text"))
+      else ("docs", Seq("doc_id", "lang", "source", "n_chars"))
+    feed(spark, dir, stream, "doc_id") {
+      val docs = Tables.documents(spark, dir).select(cols.map(col): _*)
+      // docs are ~20× fewer than events at every sf; a lower floor
+      // keeps sf1 at 4 triggers without pushing sf0.01 past 1
+      (docs, math.max(12500L, (docs.count() + 3) / 4), 0L)
+    }
+  }
+
+  private val docTextSchema =
+    StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType)))
+
+  /** One benchmark-gram store per (app, dir) — IncrementalDecontam's
+    * store is STATIC (built once from the doc_id % 97 ≡ 0 slice, the
+    * same benchmark split as the batch gate), so every stream call and
+    * every micro-batch checks against identical state. */
+  private def decontamStore(spark: SparkSession, dir: String): Path =
+    once(spark, s"$dir#deconstore") {
+      val r = tempDir("stream-decon-store-")
+      graft.streaming.IncrementalDecontam.buildStore(
+        Tables.documents(spark, dir)
+          .filter(pmod(col("doc_id"), lit(97)) === 0).select(col("text")),
+        "text", r.toString, n = 4)
+      FeedInfo(r, "", 0L, 0L)
+    }.root
 
   /** Puts a STREAMING arm under the DuckDB hash oracle — the
     * round-14 verdict's ask: the ten streaming arms were suite-proven
@@ -104,142 +233,12 @@ object ConnectorQueries {
     * (Spark merges [a,a+g) ∪ [b,b+g) iff b < a+g); session_end =
     * last ts + 30 min. State scale: O(open sessions) — watermark
     * eviction, the same shape at any corpus size. */
-  /** A gate-binding feed stream: where it lives, the fixture-scaled
-    * per-trigger cap, and the fixture's event-time span in micros
-    * (0 for the timeless docs stream). */
-  private[graft] final case class FeedInfo(
-      root: java.nio.file.Path, triggerCap: Long, spanUs: Long)
-  private val feedInfos =
-    scala.collection.mutable.Map[(String, String), FeedInfo]()
-
-  /** The per-trigger record cap, scaled with the fixture so replay
-    * cost stays O(few triggers) at every gate scale (round-15 verdict
-    * item 3: 20 fixed-cap triggers × ~1 s overhead each made every
-    * sf1 streaming entry cost ~20 s). ⌈n/4⌉ keeps 4-5 micro-batches —
-    * still a genuine multi-trigger replay (incremental state merge,
-    * per-trigger planning all exercised) — while the 50k floor leaves
-    * the sf0.01/sf0.1 trigger counts (and their pins) unchanged. */
-  private def scaledTriggerCap(n: Long): Long = math.max(50000L, (n + 3) / 4)
-
-  /** Writes (once per app+dir) the ts-ordered single-partition events
-    * stream with the flush sentinel — shared by every streaming gate
-    * binding over `events`. The sentinel sits one fixture SPAN + 1 day
-    * past the last real event (span-scaled, not a fixed offset) so the
-    * final watermark closes not only every 30-min session but also the
-    * whole-run pools of [[qStreamingRlMetrics]] (quiet = span + 1 h). */
-  private def ensureSessionsStream(spark: SparkSession, dir: String): FeedInfo =
-    writtenRoots.synchronized {
-      feedInfos.getOrElseUpdate((spark.sparkContext.applicationId, s"$dir#sessions"), {
-        val r = Files.createTempDirectory("dis-sessions-")
-        rootsToClean.add(r)
-        new FileStreamClient(r).createStream("sessions", 1)
-        val ev = Tables.events(spark, dir)
-        val stats = ev.agg(max(unix_micros(col("ts"))),
-          min(unix_micros(col("ts"))), count(lit(1))).collect()(0)
-        val (maxUs, minUs, n) = (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-        val spanUs = maxUs - minUs
-        val sentinel = ev.sparkSession.range(1).select(
-          lit(-1L).as("event_id"),
-          lit(maxUs + spanUs + 24L * 3600 * 1000000).as("ts_us"),
-          lit(-1L).as("user_id"), lit("flush").as("event_type"),
-          lit(0.0).as("value"), lit(null).cast("string").as("props"))
-        ev.select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-            col("user_id"), col("event_type"), col("value"), col("props"))
-          .unionAll(sentinel)
-          .orderBy(col("ts_us"))
-          .select(to_json(struct(col("event_id"), col("ts_us"), col("user_id"),
-            col("event_type"), col("value"), col("props"))).as("value"),
-            lit(0).as("partition"))
-          .coalesce(1) // one ts-ordered partition: monotone watermark
-          .write.format("dis")
-          .option("client.root", r.toString).option("stream", "sessions")
-          .mode("append").save()
-        FeedInfo(r, scaledTriggerCap(n), spanUs)
-      })
-    }
-
-  /** Writes (once per app+dir) the doc_id-ordered single-partition
-    * document-METADATA stream (no text — the admission bindings key on
-    * (doc_id, lang, source, n_chars) only). Global id order is the
-    * binding's determinism contract for [[qStreamingDomainQuota]]:
-    * ingest-order quota == the batch cap's smallest-id keeper rule. */
-  private def ensureDocsStream(spark: SparkSession, dir: String): FeedInfo =
-    writtenRoots.synchronized {
-      feedInfos.getOrElseUpdate((spark.sparkContext.applicationId, s"$dir#docs"), {
-        val r = Files.createTempDirectory("dis-docs-")
-        rootsToClean.add(r)
-        new FileStreamClient(r).createStream("docs", 1)
-        val docs = Tables.documents(spark, dir)
-          .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        val n = docs.count()
-        docs.orderBy(col("doc_id"))
-          .select(to_json(struct(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))).as("value"), lit(0).as("partition"))
-          .coalesce(1) // one id-ordered partition: arrival order = id order
-          .write.format("dis")
-          .option("client.root", r.toString).option("stream", "docs")
-          .mode("append").save()
-        // docs are ~20× fewer than events at every sf; a lower floor
-        // keeps sf1 at 4 triggers without pushing sf0.01 past 1
-        FeedInfo(r, math.max(12500L, (n + 3) / 4), 0L)
-      })
-    }
-
-  /** Writes (once per app+dir) ALL documents WITH TEXT as a
-    * single-partition id-ordered stream — the text-keyed arms' feed
-    * (decontamination, BM25 index maintenance; kept separate from the
-    * metadata docs stream so the admission arms' payloads stay small).
-    * Arms that gate only a corpus slice filter the stream map-side. */
-  private def ensureDocsTextStream(spark: SparkSession, dir: String): FeedInfo =
-    writtenRoots.synchronized {
-      feedInfos.getOrElseUpdate((spark.sparkContext.applicationId, s"$dir#docstext"), {
-        val r = Files.createTempDirectory("dis-docstext-")
-        rootsToClean.add(r)
-        new FileStreamClient(r).createStream("docstext", 1)
-        val docs = Tables.documents(spark, dir)
-          .select(col("doc_id"), col("text"))
-        val n = docs.count()
-        docs.orderBy(col("doc_id"))
-          .select(to_json(struct(col("doc_id"), col("text"))).as("value"),
-            lit(0).as("partition"))
-          .coalesce(1)
-          .write.format("dis")
-          .option("client.root", r.toString).option("stream", "docstext")
-          .mode("append").save()
-        FeedInfo(r, math.max(12500L, (n + 3) / 4), 0L)
-      })
-    }
-
-  /** One benchmark-gram store per (app, dir) — IncrementalDecontam's
-    * store is STATIC (built once from the doc_id % 97 ≡ 0 slice, the
-    * same benchmark split as the batch gate), so every stream call and
-    * every micro-batch checks against identical state. */
-  private def ensureDecontamStore(spark: SparkSession, dir: String): java.nio.file.Path =
-    writtenRoots.synchronized {
-      feedInfos.get((spark.sparkContext.applicationId, s"$dir#deconstore")) match {
-        case Some(f) => f.root
-        case None =>
-          val r = Files.createTempDirectory("stream-decon-store-")
-          rootsToClean.add(r)
-          graft.streaming.IncrementalDecontam.buildStore(
-            Tables.documents(spark, dir)
-              .filter(pmod(col("doc_id"), lit(97)) === 0).select(col("text")),
-            "text", r.toString, n = 4)
-          feedInfos.update(
-            (spark.sparkContext.applicationId, s"$dir#deconstore"), FeedInfo(r, 0L, 0L))
-          r
-      }
-    }
-
   def qStreamingSessionize(spark: SparkSession, dir: String): DataFrame =
     gateArm(spark, dir, "q_streaming_sessionize")
 
   private def buildSessionize(spark: SparkSession, dir: String) = {
-    import graft.streaming.StreamingQueries
-    val feed = ensureSessionsStream(spark, dir)
-    val events = StreamingQueries.readEvents(spark, feed.root.toString, "sessions",
-      Map("maxRecordsPerTrigger" -> feed.triggerCap.toString))
-    val sessions = events
+    val feed = sessionsFeed(spark, dir)
+    val sessions = readEvents(spark, feed, feed.triggerCap)
       .withColumn("cents", floor(col("value") * 100.0 + 0.5).cast("long"))
       .withWatermark("ts", "10 minutes")
       .groupBy(org.apache.spark.sql.functions.session_window(col("ts"), "30 minutes"),
@@ -249,51 +248,84 @@ object ConnectorQueries {
         col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("n_events"), col("sum_cents"))
-    val name = s"stream_sessions_${sinkSeq.incrementAndGet()}"
-    val q = sessions.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"ck-$name-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => spark.table(name).filter(col("user_id") >= 0))
+    memoryArm("sessions", sessions)(_.filter(col("user_id") >= 0))
   }
+
+  /** A started arm: its query, and the fetch of its rows once it ends. */
+  private type Started = (StreamingQuery, () => DataFrame)
+
+  /** Starts `writer` as an AvailableNow query checkpointed in a fresh
+    * temp dir: every gate arm's query starts here. */
+  private def start(tag: String, writer: DataStreamWriter[_]): StreamingQuery =
+    writer.option("checkpointLocation", tempDir(s"ck-$tag-").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
 
   private val sinkSeq = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Deposited results of the latest group pass, keyed (appId, dir, arm). */
-  private val armDeposits =
-    scala.collection.mutable.Map[(String, String, String), DataFrame]()
+  /** A memory-sink arm: starts `df` into a fresh in-memory table in
+    * output `mode`; the arm's rows are `fetch` of that table. */
+  private def memoryArm(tag: String, df: DataFrame, mode: String = "append")(
+      fetch: DataFrame => DataFrame): Started = {
+    val name = s"stream_${tag}_${sinkSeq.incrementAndGet()}"
+    val q = start(name, df.writeStream.format("memory").queryName(name).outputMode(mode))
+    (q, () => fetch(df.sparkSession.table(name)))
+  }
 
-  /** The streaming gate's shared-pass machinery (VERDICT r16 item 2).
+  /** The rows of the latest group pass per (appId, dir), by arm name. */
+  private val passes =
+    scala.collection.mutable.Map[(String, String), Map[String, DataFrame]]()
+
+  /** The streaming gate: every `qStreaming*` binding calls this with
+    * its arm's name, and every arm runs through [[runArms]].
     *
-    * Each gate arm used to pay its own full AvailableNow replay per
-    * call — feed read, per-trigger planning, checkpoint WAL, state
-    * store, sink — a 1-4 s fixed floor per arm that made the 13 arms
-    * 35% of the sf0.1 bench. Arms that read the SAME feed are
-    * independent streaming queries, so one pass runs them
-    * CONCURRENTLY: the group's wall-clock is ~its slowest member plus
-    * core contention, not the sum of 4-5 per-arm floors. (Concurrent
-    * queries over one dis feed are safe: each query has its own
-    * checkpoint/sink/store, and ReaderCache hands concurrent tasks on
-    * a cached (group, stream, partition) an uncached consumer.)
+    * Each arm used to pay its own full AvailableNow replay per call —
+    * feed read, per-trigger planning, checkpoint WAL, state store, sink
+    * — a 1-4 s fixed floor per arm that made the 13 arms 35% of the
+    * sf0.1 bench. The arms are independent streaming queries (each has
+    * its own checkpoint, sink and store; ReaderCache hands concurrent
+    * tasks on a cached (group, stream, partition) an uncached
+    * consumer), so one pass runs them all CONCURRENTLY over the shared
+    * feeds: its wall-clock is ~the slowest arm plus core contention,
+    * not the sum of the per-arm floors, and concurrency cannot change
+    * any arm's rows.
     *
-    * Accounting contract: each group's LEADER is its alphabetically
-    * first member, so Verify's and Bench's sorted call order hit it
-    * before the rest. The leader's binding ALWAYS runs the whole group
-    * fresh and returns its own result — its bench pin measures the
-    * group's one shared pass, keeping a live drift signal that any
-    * member's kernel regression stretches. Non-leader bindings return
-    * the latest group run's deposit — identical rows by construction
-    * (same stream definitions, caps and feed; the queries are
-    * independent, so concurrency cannot change any arm's rows) — and
-    * fall back to a solo run if ever called before a group pass.
-    * Hashes are therefore unchanged vs the per-arm replays; non-leader
-    * bench numbers become the deposit-lookup cost by design
-    * (BASELINE.md round-17 notes; pins re-seeded).
+    * Accounting contract: the LEADER is `gateGroup.head`,
+    * q_streaming_best_of_n, also the alphabetically first arm, so
+    * Verify's and Bench's sorted call orders reach it first. The
+    * leader's binding ALWAYS runs the whole group fresh and returns its
+    * own rows — its bench pin measures the group's one shared pass,
+    * keeping a live drift signal that any arm's kernel regression
+    * stretches. The pass's rows are kept per (app, dir); a non-leader
+    * binding returns its arm's rows of the latest pass — identical by
+    * construction (same stream definitions, caps and feeds), so hashes
+    * match the per-arm replays and non-leader bench numbers are the
+    * lookup cost by design (BASELINE.md round-17 notes). A non-leader
+    * called before any pass on its dir runs SOLO, a pass of its own arm
+    * only: `tools/bench_reference_solo.json` (`check_bench_drift.py
+    * --solo`) pins each arm's own replay through this path, so a
+    * kernel regression the 13-arm wall would hide still shows. */
+  private def gateArm(spark: SparkSession, dir: String, arm: String): DataFrame = {
+    val key = (spark.sparkContext.applicationId, dir)
+    if (arm == gateGroup.head._1) {
+      val rows = runArms(spark, dir, gateGroup)
+      passes.synchronized(passes(key) = rows)
+      rows(arm)
+    } else passes.synchronized(passes.get(key)) match {
+      case Some(rows) => rows(arm)
+      case None => runArms(spark, dir, gateGroup.filter(_._1 == arm))(arm)
+    }
+  }
+
+  /** Runs `arms` as one concurrent AvailableNow pass and returns each
+    * arm's rows by name. The arms are built in the given order on the
+    * caller's thread; then each is awaited, stopped and fetched on its
+    * own thread, so a finished arm's fetch (the bm25 arm re-runs
+    * IncrementalBm25.search, ~3 s) overlaps the arms still streaming
+    * instead of serializing after them.
     *
-    * The gate's streams plan their shuffle/state stages at
-    * min(8, the session's spark.sql.shuffle.partitions): 13 concurrent
+    * The streams plan their shuffle/state stages at min(8, the
+    * session's spark.sql.shuffle.partitions): 13 concurrent
     * micro-batch queries × 32 state partitions × 4-5 triggers is
     * thousands of near-empty state tasks per pass, pure scheduling and
     * state-store overhead at the capped trigger sizes (≤ ~250k
@@ -302,56 +334,30 @@ object ConnectorQueries {
     * [[withSessionConf]]: each query clones the session conf at
     * start(), so the caller's session gets its own values back and its
     * batch queries are untouched. */
-  private def gateArm(spark: SparkSession, dir: String, arm: String): DataFrame = {
-    val appId = spark.sparkContext.applicationId
-    val leader = gateGroup.map(_._1).min
-    // per-pass completion bound: 5 min covers every gate scale up to
+  private def runArms(spark: SparkSession, dir: String,
+      arms: Seq[(String, (SparkSession, String) => Started)]): Map[String, DataFrame] = {
+    // per-arm completion bound: 5 min covers every gate scale up to
     // sf1 with 10x headroom AT THE OLD SEQUENTIAL AWAIT semantics; the
     // r18 concurrent awaits all start at ~pass start, so later arms no
     // longer inherit earlier arms' await durations as slack — under a
     // multi-minute host-steal window the effective headroom is the raw
     // conf value, not 10x. Raise via conf for amplified/degraded runs.
     val timeoutMs = spark.conf.get("spark.graft.gate.timeoutMs", "300000").toLong
-    val gateParts =
-      math.min(8, spark.conf.get("spark.sql.shuffle.partitions").toInt).toString
-    def withGateParts[A](body: => A): A =
-      withSessionConf(spark, "spark.sql.shuffle.partitions" -> gateParts)(body)
-    if (arm != leader) {
-      writtenRoots.synchronized(armDeposits.get((appId, dir, arm))) match {
-        case Some(df) => return df
-        case None => // solo fallback: this arm only, its own pass
-          val (q, fetch) = withGateParts(gateGroup.toMap.apply(arm)(spark, dir))
-          require(q.awaitTermination(timeoutMs), s"streaming $arm gate timed out")
-          q.stop()
-          return fetch()
-      }
+    val width = math.min(8, spark.conf.get("spark.sql.shuffle.partitions").toInt).toString
+    val started = withSessionConf(spark, "spark.sql.shuffle.partitions" -> width) {
+      arms.map { case (n, build) => (n, build(spark, dir)) }
     }
-    // leader: one concurrent AvailableNow pass over the whole group,
-    // built in gateGroup's order
-    val started = withGateParts(gateGroup.map { case (n, build) => (n, build(spark, dir)) })
-    // await + fetch PER ARM, concurrently: a finished arm's fetch (the
-    // bm25 deposit re-runs IncrementalBm25.search, ~3 s) overlaps the
-    // still-streaming tail arms instead of serializing after them
-    val fetchPool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(2, started.size))
-    implicit val fetchEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(fetchPool)
-    val futures = started.map { case (n, (q, fetch)) =>
-      n -> scala.concurrent.Future {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(started.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    val rows = started.map { case (n, (q, fetch)) =>
+      n -> Future {
         require(q.awaitTermination(timeoutMs), s"streaming $n gate timed out")
         q.stop()
         fetch()
       }
     }
-    val results =
-      try futures.map { case (n, f) =>
-        n -> scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-      }.toMap
-      finally fetchPool.shutdown()
-    writtenRoots.synchronized {
-      for ((n, df) <- results if n != arm) armDeposits((appId, dir, n)) = df
-    }
-    results(arm)
+    try rows.map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
+    finally pool.shutdown()
   }
 
   /** Runs `body` with `confs` set on the session, then puts each key
@@ -389,11 +395,8 @@ object ConnectorQueries {
     gateArm(spark, dir, "q_streaming_kmv")
 
   private def buildKmv(spark: SparkSession, dir: String) = {
-    import graft.streaming.StreamingQueries
-    val feed = ensureSessionsStream(spark, dir)
-    val events = StreamingQueries.readEvents(spark, feed.root.toString, "sessions",
-      Map("maxRecordsPerTrigger" -> feed.triggerCap.toString))
-    val est = events
+    val feed = sessionsFeed(spark, dir)
+    val est = readEvents(spark, feed, feed.triggerCap)
       // null-safe: a null event_type row must stay IN (the batch oracle
       // keeps it as its own group); =!= alone would null-drop it
       .filter(coalesce(col("event_type"), lit("")) =!= "flush" &&
@@ -404,14 +407,7 @@ object ConnectorQueries {
       .agg(graft.functions.KmvMinHashes.kmv_min_hashes(col("__h"), 64).as("__mins"))
       .select(col("event_type"),
         graft.api.Graft.kmvEstimate(col("__mins"), 64).as("n_distinct_kmv"))
-    val name = s"stream_kmv_${sinkSeq.incrementAndGet()}"
-    val q = est.writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"ck-$name-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => spark.table(name))
+    memoryArm("kmv", est, "complete")(identity)
   }
 
   /** Ingest-time per-domain admission quota running INSIDE Structured
@@ -431,19 +427,10 @@ object ConnectorQueries {
     gateArm(spark, dir, "q_streaming_domain_quota")
 
   private def buildDomainQuota(spark: SparkSession, dir: String) = {
-    import graft.streaming.StreamingQueries
-    val feed = ensureDocsStream(spark, dir)
-    val docs = StreamingQueries.readDocs(spark, feed.root.toString, "docs",
-      Map("maxRecordsPerTrigger" -> feed.triggerCap.toString))
+    val feed = docsFeed(spark, dir, text = false)
+    val docs = readFeed(spark, feed, feed.triggerCap, StreamingQueries.docSchema)
     val admitted = StreamingQueries.domainQuota(spark, docs, "source", "doc_id", 10)
-    val name = s"stream_quota_${sinkSeq.incrementAndGet()}"
-    val q = admitted.toDF().writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"ck-$name-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => spark.table(name).select(col("id").as("doc_id"),
+    memoryArm("quota", admitted.toDF())(_.select(col("id").as("doc_id"),
       col("domain").as("source"), col("rank")))
   }
 
@@ -465,24 +452,17 @@ object ConnectorQueries {
     gateArm(spark, dir, "q_streaming_reservoir")
 
   private def buildReservoir(spark: SparkSession, dir: String) = {
-    import graft.streaming.{IncrementalReservoir, StreamingQueries}
-    val feed = ensureDocsStream(spark, dir)
-    val docs = StreamingQueries.readDocs(spark, feed.root.toString, "docs",
-      Map("maxRecordsPerTrigger" -> feed.triggerCap.toString))
-    val storeDir = Files.createTempDirectory("stream-reservoir-")
-    rootsToClean.add(storeDir)
-    IncrementalReservoir.init(spark, storeDir.toString)
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        IncrementalReservoir.admitBatch(
-          batch, "lang", "doc_id", "n_chars", k = 20, storeDir.toString)
-        ()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory("ck-stream-reservoir-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => IncrementalReservoir.current(spark, storeDir.toString)
+    import graft.streaming.IncrementalReservoir
+    val feed = docsFeed(spark, dir, text = false)
+    val storeDir = tempDir("stream-reservoir-").toString
+    IncrementalReservoir.init(spark, storeDir)
+    val q = start("stream-reservoir",
+      readFeed(spark, feed, feed.triggerCap, StreamingQueries.docSchema).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          IncrementalReservoir.admitBatch(batch, "lang", "doc_id", "n_chars", k = 20, storeDir)
+          ()
+        })
+    (q, () => IncrementalReservoir.current(spark, storeDir)
       .select(col("stratum").as("lang"), col("id").as("doc_id"),
         col("weight").cast("long").as("n_chars"), col("rank")))
   }
@@ -504,41 +484,18 @@ object ConnectorQueries {
     gateArm(spark, dir, "q_streaming_rl_metrics")
 
   private def buildRlMetrics(spark: SparkSession, dir: String) = {
-    import graft.streaming.{StreamingQueries, StreamingRlMetrics}
-    val feed = ensureSessionsStream(spark, dir)
+    import graft.streaming.StreamingRlMetrics
+    val feed = sessionsFeed(spark, dir)
     // ONE data trigger for this arm: whole-run pools mean nothing can
     // close before the sentinel, so every extra trigger only
     // re-serializes the full buffered state to the state store (~40%
     // of the arm's sf1 cost measured at 5 triggers). Cross-trigger
     // state merge is pinned by StreamingRlMetricsSpec; the gate buys
     // the end-to-end source→state→sink path, not trigger count.
-    val events = StreamingQueries.readEvents(spark, feed.root.toString, "sessions",
-      Map("maxRecordsPerTrigger" -> (feed.triggerCap * 5).toString))
-    val out = StreamingRlMetrics.monitor(spark, events,
+    val out = StreamingRlMetrics.monitor(spark, readEvents(spark, feed, feed.triggerCap * 5),
       quietUs = feed.spanUs + 3600L * 1000000)
-    val name = s"stream_rl_${sinkSeq.incrementAndGet()}"
-    val q = out.toDF().writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"ck-$name-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => spark.table(name).filter(col("user_id") >= 0))
+    memoryArm("rl", out.toDF())(_.filter(col("user_id") >= 0))
   }
-
-  /** Streaming read of the docs-with-text feed. */
-  private def readDocsText(spark: SparkSession, feed: FeedInfo): DataFrame =
-    spark.readStream.format("dis")
-      .option("client.root", feed.root.toString).option("stream", "docstext")
-      .option("maxRecordsPerTrigger", feed.triggerCap.toString)
-      .load()
-      .select(from_json(col("value").cast("string"),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))).as("d"))
-      .select(col("d.*"))
 
   /** Streaming benchmark decontamination
     * ([[graft.streaming.IncrementalDecontam]]) bound under the driver
@@ -560,24 +517,20 @@ object ConnectorQueries {
 
   private def buildDecontam(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalDecontam
-    val feed = ensureDocsTextStream(spark, dir)
-    val store = ensureDecontamStore(spark, dir)
+    val feed = docsFeed(spark, dir, text = true)
+    val store = decontamStore(spark, dir).toString
     // map-side slice: only the corpus side (doc_id % 97 ≠ 0) is gated;
     // the benchmark slice lives in the static store
-    val docs = readDocsText(spark, feed).filter(pmod(col("doc_id"), lit(97)) =!= 0)
-    val outDir = Files.createTempDirectory("stream-decon-out-")
-    rootsToClean.add(outDir)
-    val q = docs.writeStream
+    val docs = readFeed(spark, feed, feed.triggerCap, docTextSchema)
+      .filter(pmod(col("doc_id"), lit(97)) =!= 0)
+    val outDir = tempDir("stream-decon-out-").toString
+    val q = start("stream-decon", docs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IncrementalDecontam.checkBatch(batch, "doc_id", "text", store.toString)
-          .write.mode("append").parquet(outDir.toString)
+        IncrementalDecontam.checkBatch(batch, "doc_id", "text", store)
+          .write.mode("append").parquet(outDir)
         ()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory("ck-stream-decon-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => spark.read.parquet(outDir.toString))
+      })
+    (q, () => spark.read.parquet(outDir))
   }
 
   /** Streaming retrieval-index maintenance
@@ -601,26 +554,20 @@ object ConnectorQueries {
 
   private def buildBm25(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalBm25
-    val feed = ensureDocsTextStream(spark, dir)
-    val storeDir = Files.createTempDirectory("stream-bm25-")
-    rootsToClean.add(storeDir)
+    val feed = docsFeed(spark, dir, text = true)
+    val storeDir = tempDir("stream-bm25-").toString
     // TWO data triggers for this arm: each batch pays 3 bucketed
     // parquet appends (store maintenance is the cost, not data volume)
     // — two batches still exercise the cross-batch keep-first
     // seen-check and the stats-delta fold, at half the replay cost;
     // the N-batch path is pinned in IncrementalBm25Spec
-    val q = readDocsText(spark, FeedInfo(feed.root, feed.triggerCap * 2, 0L))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        IncrementalBm25.admitBatch(batch, "doc_id", "text", storeDir.toString)
-        ()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory("ck-stream-bm25-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => IncrementalBm25.search(spark, storeDir.toString,
-      Seq("join", "hash", "vector"), k = 25))
+    val q = start("stream-bm25",
+      readFeed(spark, feed, feed.triggerCap * 2, docTextSchema).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          IncrementalBm25.admitBatch(batch, "doc_id", "text", storeDir)
+          ()
+        })
+    (q, () => IncrementalBm25.search(spark, storeDir, Seq("join", "hash", "vector"), k = 25))
   }
 
   /** Online rejection sampling
@@ -645,20 +592,11 @@ object ConnectorQueries {
     gateArm(spark, dir, "q_streaming_best_of_n")
 
   private def buildBestOfN(spark: SparkSession, dir: String) = {
-    import graft.streaming.{StreamingBestOfN, StreamingQueries}
-    val feed = ensureSessionsStream(spark, dir)
-    val events = StreamingQueries.readEvents(spark, feed.root.toString, "sessions",
-      Map("maxRecordsPerTrigger" -> (feed.triggerCap * 5).toString))
-    val out = StreamingBestOfN.selectBest(spark, events,
+    import graft.streaming.StreamingBestOfN
+    val feed = sessionsFeed(spark, dir)
+    val out = StreamingBestOfN.selectBest(spark, readEvents(spark, feed, feed.triggerCap * 5),
       quietUs = feed.spanUs + 3600L * 1000000)
-    val name = s"stream_bofn_${sinkSeq.incrementAndGet()}"
-    val q = out.toDF().writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation",
-        Files.createTempDirectory(s"ck-$name-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => spark.table(name).filter(col("user_id") >= 0))
+    memoryArm("bofn", out.toDF())(_.filter(col("user_id") >= 0))
   }
 
   /** Ingest-time SFT transcript assembly
@@ -687,13 +625,10 @@ object ConnectorQueries {
     gateArm(spark, dir, "q_streaming_sft")
 
   private def buildSft(spark: SparkSession, dir: String) = {
-    import graft.streaming.{StateStores, StreamingQueries, StreamingSft}
-    val feed = ensureSessionsStream(spark, dir)
-    val events = StreamingQueries.readEvents(spark, feed.root.toString, "sessions",
-      Map("maxRecordsPerTrigger" -> (feed.triggerCap * 2).toString))
-    val out = StreamingSft.assembleSessions(spark, events)
-    val outDir = Files.createTempDirectory("stream-sft-out-")
-    rootsToClean.add(outDir)
+    import graft.streaming.{StateStores, StreamingSft}
+    val feed = sessionsFeed(spark, dir)
+    val out = StreamingSft.assembleSessions(spark, readEvents(spark, feed, feed.triggerCap * 2))
+    val outDir = tempDir("stream-sft-out-").toString
     // 100 TB deployment posture: the progressive-eviction arm runs its
     // gate binding on the RocksDB state store (state off the executor
     // heap, changelog checkpointing) — the documented large-state
@@ -703,35 +638,27 @@ object ConnectorQueries {
     // parity with the default provider is pinned by RocksDBArmsSpec
     // and the unchanged gate hash.
     val q = withSessionConf(spark, StateStores.RocksDBConf: _*) {
-      out.toDF().writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", outDir.toString)
-        .option("checkpointLocation",
-          Files.createTempDirectory("ck-stream-sft-").toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      start("stream-sft", out.toDF().writeStream.format("parquet")
+        .outputMode("append").option("path", outDir))
     }
-    (q, () => spark.read.parquet(outDir.toString).filter(col("user_id") >= 0))
+    (q, () => spark.read.parquet(outDir).filter(col("user_id") >= 0))
   }
 
-  /** ALL thirteen streaming gate arms as ONE concurrent AvailableNow
-    * pass (see [[gateArm]]); leader q_streaming_best_of_n (the
-    * alphabetically first arm, so the sorted Verify/Bench call orders
-    * hit it before every deposit consumer). One pass is also the
-    * realistic deployment shape: a production ingest runs all of these
-    * operators CONCURRENTLY over the same feeds — sessionization,
-    * quota, sampling, drift, dedup admission, index maintenance are
-    * one pipeline, not thirteen serial replays.
+  /** ALL thirteen streaming gate arms, in the order [[runArms]] builds
+    * them in the leader's pass; the head, q_streaming_best_of_n, is
+    * the leader (see [[gateArm]]). One pass is also the realistic
+    * deployment shape: a production ingest runs all of these operators
+    * CONCURRENTLY over the same feeds — sessionization, quota,
+    * sampling, drift, dedup admission, index maintenance are one
+    * pipeline, not thirteen serial replays.
     *
-    * Listed in build order, longest arm first (solo-pin cost order,
-    * guide §2.6: submit the long pole first), so the arms that bound
-    * the wall — the two admission arms — start streaming while the
-    * cheap arms are still being built; alphabetical order cost the tail
-    * arm a ~1.5 s late start (r18 gate trace). Order never changes
-    * rows: the queries are independent and every arm is awaited and
-    * fetched. */
-  private lazy val gateGroup: Seq[(String, (SparkSession, String) =>
-      (org.apache.spark.sql.streaming.StreamingQuery, () => DataFrame))] = Seq(
+    * After the leader, longest arm first (solo-pin cost order, guide
+    * §2.6: submit the long pole first), so the arms that bound the wall
+    * — the two admission arms — start streaming while the cheap arms
+    * are still being built; alphabetical order cost the tail arm a
+    * ~1.5 s late start (r18 gate trace). Order never changes rows: the
+    * queries are independent and every arm is awaited and fetched. */
+  private lazy val gateGroup: Seq[(String, (SparkSession, String) => Started)] = Seq(
     "q_streaming_best_of_n" -> (buildBestOfN _),
     "q_streaming_neardup" -> (buildNeardup _),
     "q_streaming_embed_neardup" -> (buildEmbedNeardup _),
@@ -771,41 +698,33 @@ object ConnectorQueries {
     gateArm(spark, dir, "q_streaming_psi")
 
   private def buildPsi(spark: SparkSession, dir: String) = {
-    import graft.streaming.StreamingQueries
-    val feed = ensureDocsStream(spark, dir)
+    val feed = docsFeed(spark, dir, text = false)
     val ref = Tables.documents(spark, dir)
       .groupBy(col("lang")).agg(count(lit(1)).as("n_a")).persist()
     // materialize once, before the stream starts; its total is the
     // feed row count the per-arm trigger cap derives from
     val n = ref.agg(sum(col("n_a"))).collect()(0).getLong(0)
     val cap = math.max(125L, (n + 3) / 4)
-    val docs = StreamingQueries.readDocs(spark, feed.root.toString, "docs",
-      Map("maxRecordsPerTrigger" -> cap.toString))
-    val outDir = Files.createTempDirectory("stream-psi-out-")
-    rootsToClean.add(outDir)
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val report = StreamingQueries.psiMonitorBatch(batch, batchId, "lang", ref)
-          .withColumnRenamed("batch_id", "__bid")
-        if (!batch.isEmpty)
-          report.write.mode("append").parquet(outDir.toString)
-        ()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory("ck-stream-psi-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    val outDir = tempDir("stream-psi-out-").toString
+    val q = start("stream-psi",
+      readFeed(spark, feed, cap, StreamingQueries.docSchema).writeStream
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          val report = StreamingQueries.psiMonitorBatch(batch, batchId, "lang", ref)
+            .withColumnRenamed("batch_id", "__bid")
+          if (!batch.isEmpty)
+            report.write.mode("append").parquet(outDir)
+          ()
+        })
     (q, () => {
       ref.unpersist()
       // densify trigger ids → data-batch index (bounded frame:
       // |batches| × |langs| rows)
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("__bid"))
-      spark.read.parquet(outDir.toString)
+      spark.read.parquet(outDir)
         .withColumn("batch_id", (dense_rank().over(w) - 1).cast("long"))
         .drop("__bid")
     })
   }
-
 
   /** Streaming MinHash near-duplicate ADMISSION
     * ([[graft.streaming.IncrementalDedup]]) bound under the driver
@@ -832,26 +751,21 @@ object ConnectorQueries {
 
   private def buildNeardup(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalDedup
-    val feed = ensureDocsTextStream(spark, dir)
+    val feed = docsFeed(spark, dir, text = true)
     // per-arm cap (PSI rationale): exactly 2 data batches at every
     // gate scale — cross-batch rejection needs a prior batch, and the
     // signature kernel over the whole corpus is this arm's real cost,
     // so 2 batches buys the history path at half the fixed overhead
     val n = Tables.documents(spark, dir).count()
     val cap = math.max(250L, (n + 1) / 2)
-    val storeDir = Files.createTempDirectory("stream-neardup-")
-    rootsToClean.add(storeDir)
-    val q = readDocsText(spark, FeedInfo(feed.root, cap, 0L))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        IncrementalDedup.admitBatch(batch, "doc_id", "text", 0.8, storeDir.toString)
-        ()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory("ck-stream-neardup-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => IncrementalDedup.admittedDocs(spark, storeDir.toString))
+    val storeDir = tempDir("stream-neardup-").toString
+    val q = start("stream-neardup",
+      readFeed(spark, feed, cap, docTextSchema).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          IncrementalDedup.admitBatch(batch, "doc_id", "text", 0.8, storeDir)
+          ()
+        })
+    (q, () => IncrementalDedup.admittedDocs(spark, storeDir))
   }
 
   /** Streaming chunk-store novelty accounting
@@ -877,26 +791,19 @@ object ConnectorQueries {
 
   private def buildChunks(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalChunkStore
-    val feed = ensureDocsTextStream(spark, dir)
-    val storeDir = Files.createTempDirectory("stream-chunks-")
-    rootsToClean.add(storeDir)
-    val outDir = Files.createTempDirectory("stream-chunks-out-")
-    rootsToClean.add(outDir)
+    val feed = docsFeed(spark, dir, text = true)
+    val storeDir = tempDir("stream-chunks-").toString
+    val outDir = tempDir("stream-chunks-out-").toString
     // TWO data triggers (the BM25 arm's store-maintenance rationale)
-    val q = readDocsText(spark, FeedInfo(feed.root, feed.triggerCap * 2, 0L))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        IncrementalChunkStore.admitBatch(batch, "doc_id", "text", storeDir.toString)
-          .write.mode("append").parquet(outDir.toString)
-        ()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory("ck-stream-chunks-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => spark.read.parquet(outDir.toString))
+    val q = start("stream-chunks",
+      readFeed(spark, feed, feed.triggerCap * 2, docTextSchema).writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          IncrementalChunkStore.admitBatch(batch, "doc_id", "text", storeDir)
+            .write.mode("append").parquet(outDir)
+          ()
+        })
+    (q, () => spark.read.parquet(outDir))
   }
-
 
   /** Global-first-occurrence novelty over the batch CDC chunk table:
     * one window by chunk text, per-doc aggregate — the id-ordered
@@ -919,46 +826,19 @@ object ConnectorQueries {
        |      / sum(chunk_len)::DOUBLE, 6) AS dedup_ratio
        |FROM r GROUP BY doc_id""".stripMargin
 
-  /** Writes (once per app+dir) ALL embeddings as a single-partition
-    * id-ordered stream — the vector arms' feed. Vectors transport as
-    * array<double> (float→double, double→JSON, JSON→double, and the
-    * final cast back to float are each exact, so the streamed vector
-    * is bit-identical to the fixture's). */
-  private def ensureVecsStream(spark: SparkSession, dir: String): FeedInfo =
-    writtenRoots.synchronized {
-      feedInfos.getOrElseUpdate((spark.sparkContext.applicationId, s"$dir#vecs"), {
-        val r = Files.createTempDirectory("dis-vecs-")
-        rootsToClean.add(r)
-        new FileStreamClient(r).createStream("vecs", 1)
-        val vecs = Tables.embeddings(spark, dir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-        vecs.orderBy(col("vec_id"))
-          .select(to_json(struct(col("vec_id"), col("embedding"))).as("value"),
-            lit(0).as("partition"))
-          .coalesce(1)
-          .write.format("dis")
-          .option("client.root", r.toString).option("stream", "vecs")
-          .mode("append").save()
-        FeedInfo(r, 0L, 0L) // per-arm caps: vector arms derive their own
-      })
+  /** ALL embeddings as an id-ordered feed — the vector arms' feed,
+    * each arm deriving its own cap. Vectors transport as array<double>
+    * (float→double, double→JSON, JSON→double, and the final cast back
+    * to float are each exact, so the streamed vector is bit-identical
+    * to the fixture's). */
+  private def vecsFeed(spark: SparkSession, dir: String): FeedInfo =
+    feed(spark, dir, "vecs", "vec_id") {
+      (Tables.embeddings(spark, dir).select(col("vec_id"),
+        col("embedding").cast("array<double>").as("embedding")), 0L, 0L)
     }
 
-  /** Streaming read of the vectors feed → (vec_id, vec: array<float>). */
-  private def readVecs(spark: SparkSession, root: java.nio.file.Path,
-      cap: Long): DataFrame =
-    spark.readStream.format("dis")
-      .option("client.root", root.toString).option("stream", "vecs")
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(from_json(col("value").cast("string"),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("embedding",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.DoubleType))))).as("v"))
-      .select(col("v.vec_id").as("vec_id"),
-        col("v.embedding").cast("array<float>").as("vec"))
+  private val vecSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(DoubleType))))
 
   /** Streaming EMBEDDING near-duplicate admission
     * ([[graft.streaming.IncrementalEmbedDedup]]) bound under the
@@ -986,7 +866,7 @@ object ConnectorQueries {
 
   private def buildEmbedNeardup(spark: SparkSession, dir: String) = {
     import graft.streaming.IncrementalEmbedDedup
-    val feed = ensureVecsStream(spark, dir)
+    val feed = vecsFeed(spark, dir)
     val m = Tables.embeddings(spark, dir)
       .filter(pmod(col("vec_id"), lit(2)) === 0).count()
     // per-arm cap (PSI rationale): exactly 2 data batches of the SLICE
@@ -999,21 +879,16 @@ object ConnectorQueries {
     // diverged from the oracle for fixtures with < floor even ids —
     // ADVICE r16). max(1, ·) only keeps maxRecordsPerTrigger legal on
     // an empty slice.
-    val cap = math.max(1L, m)
-    val storeDir = Files.createTempDirectory("stream-embdedup-")
-    rootsToClean.add(storeDir)
-    val q = readVecs(spark, feed.root, cap)
+    val storeDir = tempDir("stream-embdedup-").toString
+    val vecs = readFeed(spark, feed, math.max(1L, m), vecSchema)
+      .select(col("vec_id"), col("embedding").cast("array<float>").as("vec"))
       .filter(pmod(col("vec_id"), lit(2)) === 0)
-      .writeStream
+    val q = start("stream-embdedup", vecs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        IncrementalEmbedDedup.admitBatch(batch, "vec_id", "vec", 0.45, storeDir.toString)
+        IncrementalEmbedDedup.admitBatch(batch, "vec_id", "vec", 0.45, storeDir)
         ()
-      }
-      .option("checkpointLocation",
-        Files.createTempDirectory("ck-stream-embdedup-").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    (q, () => IncrementalEmbedDedup.admittedVecs(spark, storeDir.toString)
+      })
+    (q, () => IncrementalEmbedDedup.admittedVecs(spark, storeDir)
       .select(col("doc_id").as("vec_id")))
   }
 

@@ -72,6 +72,10 @@ object IncrementalDedup {
   def admitBatch(batch: DataFrame, id: String, text: String,
       threshold: Double, storeDir: String): DataFrame = {
     val spark = batch.sparkSession
+    // each phase labels its jobs admitBatch/<phase>; the caller's own
+    // description (or none) is restored on every exit path, so jobs the
+    // caller runs after the return are not counted as the store's
+    val callerDescription = spark.sparkContext.getLocalProperty("spark.job.description")
     def phase(s: String): Unit =
       spark.sparkContext.setJobDescription(s"admitBatch/$s")
     recoverStore(spark, storeDir)
@@ -200,7 +204,6 @@ object IncrementalDedup {
       // (exact-dup band rows, removed by compaction) — unlike the embed
       // store there is no over/under-bound asymmetry between the subs.
       // Job groups/descriptions are thread-local: set per thread.
-      phase(null)
       val appendPool = java.util.concurrent.Executors.newFixedThreadPool(2)
       implicit val appendEc: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(appendPool)
@@ -224,10 +227,12 @@ object IncrementalDedup {
           .map(f => scala.util.Try(scala.concurrent.Await.result(f, Duration.Inf)))
         outcomes.foreach(_.get)
       } finally appendPool.shutdown()
-      phase(null)
       admitted
     }
-    } finally batch.unpersist()
+    } finally {
+      batch.unpersist()
+      spark.sparkContext.setJobDescription(callerDescription)
+    }
   }
 
   /** The admitted corpus so far (empty frame if nothing admitted).

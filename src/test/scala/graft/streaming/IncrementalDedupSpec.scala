@@ -438,6 +438,45 @@ class IncrementalDedupSpec extends SparkTestBase {
     assert(leaked.isEmpty, s"persistent RDDs left by the failed admitBatch: $leaked")
   }
 
+  test("admitBatch leaves the caller's job description as it found it, " +
+      "and labels no job admitBatch/null") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val store = Files.createTempDirectory("incdedup-desc-").toString
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        descriptions.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    val caller = "incdedup-desc-caller"
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobDescription(caller)
+    try {
+      // a fresh store, then an append to it
+      for (ids <- Seq(1L to 10L, 11L to 20L)) {
+        val admitted = admit(ids.map(doc(_, "ld")), store)
+        assert(spark.sparkContext.getLocalProperty("spark.job.description") === caller)
+        // a job the caller runs after the return
+        assert(admitted.count() === ids.size)
+      }
+      // listener events arrive in job order: once a marker job's start
+      // is seen, every earlier job's start has been delivered too
+      val marker = "incdedup-desc-marker"
+      spark.sparkContext.setJobDescription(marker)
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def seen = descriptions.toArray(Array.empty[String]).toSeq
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(seen.contains(marker), "listener never saw the marker job")
+      assert(!seen.contains("admitBatch/null"), "a job was labelled admitBatch/null")
+      assert(seen.count(_ == caller) >= 2, "the caller's own jobs lost its description")
+      assert(seen.exists(_.startsWith("admitBatch/")), "no job carried a phase label")
+    } finally {
+      spark.sparkContext.setJobDescription(null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
   test("admitBatch on a fresh store runs no file-listing job, and each " +
       "append writes exactly one file per non-empty bucket") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
