@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.VecMath.float_dot
-
 /** The engine's public operator API: every operator parameterized over
   * the caller's DataFrame and column names. The `SparkEntry.queries`
   * entries are thin fixture bindings of these.

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.VecMath.float_dot
+import graft.functions.VecMath.{cos12, float_dot, norm}
 
 /** Dedup, similarity search & relational extensions — one slice of the [[Graft]] facade, split from a single
   * 3,300-line object purely to keep source files reviewable. All
@@ -296,20 +296,58 @@ trait GraftDedupOps { this: Graft.type =>
 
   // ---------- similarity search ----------
 
+  /** One side of a cosine join: the id, the vector and its norm under
+    * the names the operator ranks on, then passthrough `extra` columns.
+    * `dot` is `int_dot` for int8 codes. */
+  private[graft] def normedSide(df: DataFrame, id: Column, vec: String, v: String,
+      nrm: String, extra: Seq[Column] = Nil,
+      dot: (Column, Column) => Column = float_dot): DataFrame =
+    df.select((id +: col(vec).as(v) +: extra): _*).withColumn(nrm, norm(col(v), dot))
+
+  /** The query-side × corpus-side cosine of the kNN kernels: the
+    * [[normedSide]]s named (`__q`, `__qnrm`) and (`__v`, `__nrm`). */
+  private def sideCos: Column =
+    cos12(float_dot(col("__q"), col("__v")), col("__qnrm"), col("__nrm"))
+
+  /** The per-group top-k: `rank` = row_number per `group` on
+    * (`score` desc, `member` asc), rows with rank ≤ k. A filter on the
+    * raw row_number, so the plan keeps its WindowGroupLimit. */
+  private[graft] def topK(df: DataFrame, group: String, score: String, member: String,
+      k: Int, rank: String = "rank"): DataFrame = {
+    val w = Window.partitionBy(col(group)).orderBy(col(score).desc, col(member).asc)
+    df.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** kNN label vote over (query_id, __l) neighbor rows: the label with
+    * the most votes per query, ties to the smaller label. */
+  private def vote(neighbors: DataFrame): DataFrame = {
+    val votes = neighbors.groupBy(col("query_id"), col("__l")).agg(count(lit(1)).as("__n"))
+    val w = Window.partitionBy(col("query_id")).orderBy(col("__n").desc, col("__l").asc)
+    votes.withColumn("__r", row_number().over(w))
+      .filter(col("__r") === 1)
+      .select(col("query_id"), col("__l").as("label_pred"), col("__n").cast("long").as("votes"))
+  }
+
+  /** The IVF operators' train-then-call step: trains `ivf`'s centroids
+    * on `corpus` and hands the index overload an index with zero stored
+    * radii and `ivf`'s resolved probe and replication counts. */
+  private def withTrainedIndex[T](corpus: DataFrame, id: String, vec: String,
+      ivf: graft.ops.Ivf.Params)(f: (graft.ops.Ivf.Index, Int, Int) => T): T = {
+    val centroids = graft.ops.Ivf.trainCentroids(corpus, id, vec, ivf)
+    f(graft.ops.Ivf.Index(centroids, new Array[Double](centroids.length)),
+      ivf.resolveNprobe(centroids.length), ivf.corpusAssign)
+  }
+
   /** Exact cosine top-k: for each row of `queries`, the k nearest rows
     * of `corpus` (queries are broadcast; corpus never shuffles).
     * Output: (query_id, neighbor_id, rank, cos). */
   def knn(corpus: DataFrame, id: String, vec: String,
       queries: DataFrame, queryId: String, queryVec: String, k: Int = 5): DataFrame = {
-    val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("__v"))
-      .withColumn("__nrm", sqrt(float_dot(col("__v"), col("__v"))))
-    val q = queries.select(col(queryId).as("query_id"), col(queryVec).as("__q"))
-      .withColumn("__qnrm", sqrt(float_dot(col("__q"), col("__q"))))
+    val c = normedSide(corpus, col(id).as("neighbor_id"), vec, "__v", "__nrm")
+    val q = normedSide(queries, col(queryId).as("query_id"), queryVec, "__q", "__qnrm")
     val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", round(float_dot(col("__q"), col("__v")) / col("__qnrm") / col("__nrm"), 12))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("cos", sideCos)
+    topK(scored, "query_id", "cos", "neighbor_id", k)
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"), col("cos"))
   }
 
@@ -359,18 +397,13 @@ trait GraftDedupOps { this: Graft.type =>
     // labels keep their source type (string categories are as valid as
     // int classes) — a cast here would null out non-numeric labels and
     // silently emit nothing
-    val c = corpus.select(col(id).as("neg_id"), col(vec).as("__v"),
-        col(label).as("neg_label"))
-      .withColumn("__nrm", sqrt(float_dot(col("__v"), col("__v"))))
-    val a = anchors.select(col(anchorId).as("anchor_id"), col(anchorVec).as("__q"),
-        col(anchorLabel).as("__albl"))
-      .withColumn("__qnrm", sqrt(float_dot(col("__q"), col("__q"))))
+    val c = normedSide(corpus, col(id).as("neg_id"), vec, "__v", "__nrm",
+      Seq(col(label).as("neg_label")))
+    val a = normedSide(anchors, col(anchorId).as("anchor_id"), anchorVec, "__q", "__qnrm",
+      Seq(col(anchorLabel).as("__albl")))
     val scored = c.join(broadcast(a), !(col("neg_label") <=> col("__albl")))
-      .withColumn("cos",
-        round(float_dot(col("__q"), col("__v")) / col("__qnrm") / col("__nrm"), 12))
-    val w = Window.partitionBy(col("anchor_id")).orderBy(col("cos").desc, col("neg_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+      .withColumn("cos", sideCos)
+    topK(scored, "anchor_id", "cos", "neg_id", k)
       .select(col("anchor_id"), col("rank").cast("long").as("rank"),
         col("neg_id"), col("neg_label"), col("cos"))
   }
@@ -405,23 +438,14 @@ trait GraftDedupOps { this: Graft.type =>
     val qArr = queries.select(col(queryId).cast("long"), col(queryVec)).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble)))
     val shortlist = math.max(k * rerank, k)
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id").asc)
-    val cand = Pq.adcShortlist(codes, id, cb, qArr, shortlist)
-      .withColumn("__r", row_number().over(wAdc))
-      .filter(col("__r") <= shortlist)
+    val cand = topK(Pq.adcShortlist(codes, id, cb, qArr, shortlist),
+        "query_id", "adc", "neighbor_id", shortlist, "__r")
       .select(col("query_id"), col("neighbor_id"))
-    val c = corpus.select(col(id).cast("long").as("neighbor_id"), col(vec).as("__v"))
-      .withColumn("__nrm", sqrt(float_dot(col("__v"), col("__v"))))
-    val q = queries.select(col(queryId).cast("long").as("query_id"), col(queryVec).as("__q"))
-      .withColumn("__qnrm", sqrt(float_dot(col("__q"), col("__q"))))
+    val c = normedSide(corpus, col(id).cast("long").as("neighbor_id"), vec, "__v", "__nrm")
+    val q = normedSide(queries, col(queryId).cast("long").as("query_id"), queryVec, "__q", "__qnrm")
     val exact = cand.join(c, Seq("neighbor_id")).join(broadcast(q), Seq("query_id"))
-      .withColumn("cos",
-        round(float_dot(col("__q"), col("__v")) / col("__qnrm") / col("__nrm"), 12))
-    val wCos = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    exact.withColumn("rank", row_number().over(wCos))
-      .filter(col("rank") <= k)
+      .withColumn("cos", sideCos)
+    topK(exact, "query_id", "cos", "neighbor_id", k)
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("long").as("rank"), col("cos"))
   }
@@ -454,9 +478,7 @@ trait GraftDedupOps { this: Graft.type =>
     // all-zero stored radii: the indexed overload measures df's own
     // per-cell radii and takes the max, so this trains per call and
     // probes exactly as this method always did
-    val centroids = graft.ops.Ivf.trainCentroids(df, id, vec, ivf)
-    embedNearDup(df, id, vec, threshold,
-      graft.ops.Ivf.Index(centroids, new Array[Double](centroids.length)))
+    withTrainedIndex(df, id, vec, ivf)((index, _, _) => embedNearDup(df, id, vec, threshold, index))
   }
 
   /** [[embedNearDup]] against a PREBUILT index ([[graft.ops.Ivf.train]]
@@ -499,8 +521,7 @@ trait GraftDedupOps { this: Graft.type =>
     // correctness-shaped (strictly less work, simpler output contract).
     home.as("a").join(probed.as("b"),
         col("a.cell") === col("b.cell") && col(s"a.$id") < col(s"b.$id"))
-      .withColumn("cos", round(
-        float_dot(col("a.__v"), col("b.__v")) / col("a.nrm") / col("b.nrm"), 12))
+      .withColumn("cos", cos12(float_dot(col("a.__v"), col("b.__v")), col("a.nrm"), col("b.nrm")))
       .filter(col("cos") >= threshold)
       .select(col(s"a.$id").as("id_a"), col(s"b.$id").as("id_b"), col("cos"))
   }
@@ -513,12 +534,9 @@ trait GraftDedupOps { this: Graft.type =>
     * vs the exact scan. Output schema matches [[knn]]. */
   def ivfKnn(corpus: DataFrame, id: String, vec: String,
       queries: DataFrame, queryId: String, queryVec: String, k: Int,
-      ivf: graft.ops.Ivf.Params = graft.ops.Ivf.Params()): DataFrame = {
-    import graft.ops.Ivf
-    val centroids = Ivf.trainCentroids(corpus, id, vec, ivf)
-    ivfKnnCells(corpus, id, vec, queries, queryId, queryVec, k,
-      centroids, ivf.resolveNprobe(centroids.length), ivf.corpusAssign)
-  }
+      ivf: graft.ops.Ivf.Params = graft.ops.Ivf.Params()): DataFrame =
+    withTrainedIndex(corpus, id, vec, ivf)(
+      ivfKnn(corpus, id, vec, queries, queryId, queryVec, k, _, _, _))
 
   /** [[ivfKnn]] against a PREBUILT index ([[graft.ops.Ivf.train]] /
     * [[graft.ops.Ivf.load]] / [[graft.ops.Ivf.strideIndex]]) with
@@ -528,36 +546,28 @@ trait GraftDedupOps { this: Graft.type =>
     * .strideIndex]]. */
   def ivfKnn(corpus: DataFrame, id: String, vec: String,
       queries: DataFrame, queryId: String, queryVec: String, k: Int,
-      index: graft.ops.Ivf.Index, nprobe: Int, corpusAssign: Int): DataFrame =
-    ivfKnnCells(corpus, id, vec, queries, queryId, queryVec, k,
-      index.centroids, nprobe, corpusAssign)
-
-  private def ivfKnnCells(corpus: DataFrame, id: String, vec: String,
-      queries: DataFrame, queryId: String, queryVec: String, k: Int,
-      centroids: Array[Array[Double]], nprobe: Int, corpusAssign: Int): DataFrame = {
+      index: graft.ops.Ivf.Index, nprobe: Int, corpusAssign: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     require(corpusAssign >= 1, s"corpusAssign must be >= 1, got $corpusAssign")
     import graft.ops.Ivf
-    val assigned = Ivf.assign(corpus, id, vec, centroids, corpusAssign)
+    val assigned = Ivf.assign(corpus, id, vec, index.centroids, corpusAssign)
       .select(col(id).as("neighbor_id"), col(vec).as("__v"), col("nrm").as("__nrm"), col("cell"))
-    val probes = Ivf.assign(queries, queryId, queryVec, centroids, nprobe)
+    val probes = Ivf.assign(queries, queryId, queryVec, index.centroids, nprobe)
       .select(col(queryId).as("query_id"), col(queryVec).as("__q"), col("nrm").as("__qnrm"), col("cell"))
     // no broadcast hint: Catalyst/AQE broadcasts a small query side on
     // its own; a huge query set must shuffle-join on cell or it would
     // blow the broadcast limit
     val scored = assigned.join(probes, Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos", round(float_dot(col("__q"), col("__v")) / col("__qnrm") / col("__nrm"), 12))
+      .withColumn("cos", sideCos)
       // replication + multi-probe surface the same (query, neighbor)
       // pair through several cells: collapse before ranking or row_number
       // would count the duplicate. cos is a pure function of the pair, so
       // dedup on the keys alone is exact.
       .select(col("query_id"), col("neighbor_id"), col("cos"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, "query_id", "cos", "neighbor_id", k)
       .select(col("query_id"), col("neighbor_id"), col("rank").cast("long").as("rank"), col("cos"))
   }
 
@@ -580,13 +590,9 @@ trait GraftDedupOps { this: Graft.type =>
   def hardNegativesIvf(corpus: DataFrame, id: String, vec: String, label: String,
       anchors: DataFrame, anchorId: String, anchorVec: String,
       anchorLabel: String, k: Int = 3,
-      ivf: graft.ops.Ivf.Params = graft.ops.Ivf.Params()): DataFrame = {
-    import graft.ops.Ivf
-    val centroids = Ivf.trainCentroids(corpus, id, vec, ivf)
-    hardNegativesIvf(corpus, id, vec, label, anchors, anchorId, anchorVec,
-      anchorLabel, k, Ivf.Index(centroids, new Array[Double](centroids.length)),
-      ivf.resolveNprobe(centroids.length), ivf.corpusAssign)
-  }
+      ivf: graft.ops.Ivf.Params = graft.ops.Ivf.Params()): DataFrame =
+    withTrainedIndex(corpus, id, vec, ivf)(hardNegativesIvf(corpus, id, vec, label,
+      anchors, anchorId, anchorVec, anchorLabel, k, _, _, _))
 
   /** [[hardNegativesIvf]] against a prebuilt index with explicit
     * probe/replication counts (see the [[ivfKnn]] index overload). */
@@ -607,15 +613,12 @@ trait GraftDedupOps { this: Graft.type =>
         col("nrm").as("__qnrm"), col("cell"), col(anchorLabel).as("__albl"))
     val scored = c.join(a, Seq("cell"))
       .filter(!(col("neg_label") <=> col("__albl")))
-      .withColumn("cos",
-        round(float_dot(col("__q"), col("__v")) / col("__qnrm") / col("__nrm"), 12))
+      .withColumn("cos", sideCos)
       // replication + multi-probe dedup, the ivfKnn argument: cos is a
       // pure function of the (anchor, neg) pair
       .select(col("anchor_id"), col("neg_id"), col("neg_label"), col("cos"))
       .dropDuplicates("anchor_id", "neg_id")
-    val w = Window.partitionBy(col("anchor_id")).orderBy(col("cos").desc, col("neg_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, "anchor_id", "cos", "neg_id", k)
       .select(col("anchor_id"), col("rank").cast("long").as("rank"),
         col("neg_id"), col("neg_label"), col("cos"))
   }
@@ -639,15 +642,8 @@ trait GraftDedupOps { this: Graft.type =>
   def knnClassify(labeled: DataFrame, id: String, vec: String, label: String,
       unlabeled: DataFrame, queryId: String, queryVec: String, k: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val nn = knn(labeled, id, vec, unlabeled, queryId, queryVec, k)
-    val votes = nn
-      .join(labeled.select(col(id).as("neighbor_id"), col(label).as("__l")), Seq("neighbor_id"))
-      .groupBy(col("query_id"), col("__l"))
-      .agg(count(lit(1)).as("__n"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__n").desc, col("__l").asc)
-    votes.withColumn("__r", row_number().over(w))
-      .filter(col("__r") === 1)
-      .select(col("query_id"), col("__l").as("label_pred"), col("__n").cast("long").as("votes"))
+    vote(knn(labeled, id, vec, unlabeled, queryId, queryVec, k)
+      .join(labeled.select(col(id).as("neighbor_id"), col(label).as("__l")), Seq("neighbor_id")))
   }
 
   /** [[knnClassify]] for query sets at CORPUS scale — the swap the
@@ -663,13 +659,9 @@ trait GraftDedupOps { this: Graft.type =>
     * form and exact equality when the probe covers every cell. */
   def knnClassifyIvf(labeled: DataFrame, id: String, vec: String, label: String,
       unlabeled: DataFrame, queryId: String, queryVec: String, k: Int = 5,
-      ivf: graft.ops.Ivf.Params = graft.ops.Ivf.Params()): DataFrame = {
-    import graft.ops.Ivf
-    val centroids = Ivf.trainCentroids(labeled, id, vec, ivf)
-    knnClassifyIvf(labeled, id, vec, label, unlabeled, queryId, queryVec, k,
-      Ivf.Index(centroids, new Array[Double](centroids.length)),
-      ivf.resolveNprobe(centroids.length), ivf.corpusAssign)
-  }
+      ivf: graft.ops.Ivf.Params = graft.ops.Ivf.Params()): DataFrame =
+    withTrainedIndex(labeled, id, vec, ivf)(
+      knnClassifyIvf(labeled, id, vec, label, unlabeled, queryId, queryVec, k, _, _, _))
 
   /** [[knnClassifyIvf]] against a prebuilt index with explicit
     * probe/replication counts (see the [[ivfKnn]] index overload). */
@@ -688,21 +680,12 @@ trait GraftDedupOps { this: Graft.type =>
         col("nrm").as("__qnrm"), col("cell"))
     val nn = c.join(q, Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cos",
-        round(float_dot(col("__q"), col("__v")) / col("__qnrm") / col("__nrm"), 12))
+      .withColumn("cos", sideCos)
       // label is a pure function of the neighbor, so key-only dedup
       // stays exact (the ivfKnn argument)
       .select(col("query_id"), col("neighbor_id"), col("__l"), col("cos"))
       .dropDuplicates("query_id", "neighbor_id")
-    val wR = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("neighbor_id").asc)
-    val votes = nn.withColumn("__r", row_number().over(wR))
-      .filter(col("__r") <= k)
-      .groupBy(col("query_id"), col("__l"))
-      .agg(count(lit(1)).as("__n"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("__n").desc, col("__l").asc)
-    votes.withColumn("__r", row_number().over(w))
-      .filter(col("__r") === 1)
-      .select(col("query_id"), col("__l").as("label_pred"), col("__n").cast("long").as("votes"))
+    vote(topK(nn, "query_id", "cos", "neighbor_id", k, "__r"))
   }
 
   /** Skew-resistant aggregation: two-phase sum/count with an explicit
@@ -1003,6 +986,14 @@ trait GraftDedupOps { this: Graft.type =>
 
   // ---------- sampling ----------
 
+  /** The engine-replicable 31-bit LCG, `(x' · 1103515245 + 12345) mod m`
+    * on a long column. The id is folded into 31 bits (x' = x mod 2^31)
+    * BEFORE the multiply: 2^31·1103515245 stays under 2^62, so the
+    * arithmetic never overflows Long (ANSI mode would fail the query;
+    * non-ANSI would wrap and diverge from the verifying engine). */
+  private[graft] def lcg(x: Column, m: Long): Column =
+    pmod(pmod(x, lit(2147483648L)) * lit(1103515245L) + lit(12345L), lit(m))
+
   /** Deterministic stratified sampling: keep a row iff
     * LCG(hashCol) mod 10000 < rate(stratum)·10000. No RNG state —
     * the decision is pure integer arithmetic on the row's own id, so
@@ -1013,12 +1004,7 @@ trait GraftDedupOps { this: Graft.type =>
   def hashSample(df: DataFrame, stratumCol: String, hashCol: String,
       rates: Map[String, Double]): DataFrame = {
     require(rates.values.forall(r => r >= 0.0 && r <= 1.0), "rates must be in [0,1]")
-    // fold the id into 31 bits BEFORE the LCG multiply: 2^31·1103515245
-    // stays under 2^62, so the arithmetic never overflows Long (ANSI
-    // mode would fail the query; non-ANSI would wrap and diverge from
-    // the verifying engine)
-    val bucket = pmod(pmod(col(hashCol), lit(2147483648L)) * lit(1103515245L) + lit(12345L),
-      lit(10000L))
+    val bucket = lcg(col(hashCol), 10000L)
     // integer thresholds (basis points): no FP boundary ambiguity
     val rateExpr = rates.foldLeft(lit(0L)) { case (acc, (s, r)) =>
       when(col(stratumCol) === s, lit(math.round(r * 10000))).otherwise(acc)
@@ -1049,8 +1035,7 @@ trait GraftDedupOps { this: Graft.type =>
   def tokenBudgetSample(df: DataFrame, id: String, stratumCol: String,
       tokensCol: String, budgets: Map[String, Long]): DataFrame = {
     require(budgets.values.forall(_ >= 0L), "budgets must be non-negative")
-    val order = pmod(pmod(col(id), lit(2147483648L)) * lit(1103515245L) + lit(12345L),
-      lit(2147483648L))
+    val order = lcg(col(id), 2147483648L)
     val budgetExpr = budgets.foldLeft(lit(0L)) { case (acc, (s, b)) =>
       when(col(stratumCol) === s, lit(b)).otherwise(acc)
     }
@@ -1092,8 +1077,7 @@ trait GraftDedupOps { this: Graft.type =>
     * sort stays shard-file-sized by construction. */
   def epochShuffle(df: DataFrame, id: String, nShards: Int): DataFrame = {
     require(nShards >= 1, s"nShards must be >= 1, got $nShards")
-    val key = pmod(pmod(col(id), lit(2147483648L)) * lit(1103515245L) + lit(12345L),
-      lit(2147483648L))
+    val key = lcg(col(id), 2147483648L)
     val w = Window.partitionBy(col("shard")).orderBy(col("__key").asc, col(id).asc)
     df.select(col(id), key.as("__key"),
         pmod(key, lit(nShards.toLong)).cast("long").as("shard"))

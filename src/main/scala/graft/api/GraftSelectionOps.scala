@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.VecMath.float_dot
+import graft.functions.VecMath.{cos12, float_dot}
 
 /** Scale joins, data selection, monitoring & near-dup kernels — one slice of the [[Graft]] facade, split from a single
   * 3,300-line object purely to keep source files reviewable. All
@@ -170,7 +170,7 @@ trait GraftSelectionOps { this: Graft.type =>
     // reassociating vectorizer on either side.
     val dropped = a.join(bb, Seq("cell"))
       .filter(col("__ida") < col("__idb") &&
-        round(float_dot(col("__va"), col("__vb")) / col("__na") / col("__nb"), 12) >= tau)
+        cos12(float_dot(col("__va"), col("__vb")), col("__na"), col("__nb")) >= tau)
       .select(col("__idb").as(id)).distinct()
     assigned.select(col(id), col("cell"))
       .join(dropped, Seq(id), "left_anti")
@@ -232,9 +232,7 @@ trait GraftSelectionOps { this: Graft.type =>
   /** The KMV sketch's 31-bit LCG hash of an integral column — shared
     * by the batch and streaming bindings so their estimates are
     * bit-identical. */
-  private[graft] def kmvHash(value: Column): Column =
-    pmod(pmod(value.cast("long"), lit(2147483648L)) * lit(1103515245L)
-      + lit(12345L), lit(2147483648L))
+  private[graft] def kmvHash(value: Column): Column = lcg(value.cast("long"), 2147483648L)
 
   /** The KMV estimate from a ≤k min-hash set: exact count below k
     * (the sketch is complete there), else (k−1)·M/(h_k+½) rounded to

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.VecMath.float_dot
+import graft.functions.VecMath.{cos12, dot, norm}
 
 /** Quality signals, gating & retrieval — one slice of the [[Graft]] facade, split from a single
   * 3,300-line object purely to keep source files reviewable. All
@@ -184,11 +184,7 @@ trait GraftSignalOps { this: Graft.type =>
     val b = bench.select(col(benchId).cast("long"), col(benchVec)).collect()
       .map { r => (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble)) }
       .sortBy(_._1)
-    val bNorms = b.map { case (_, v) =>
-      var ss = 0.0; var i = 0
-      while (i < v.length) { ss += v(i) * v(i); i += 1 }
-      math.sqrt(ss)
-    }
+    val bNorms = b.map { case (_, v) => norm(v) }
     val bc = corpus.sparkSession.sparkContext.broadcast((b, bNorms))
     val enc = Encoders.row(StructType(Seq(
       StructField(id, LongType), StructField("max_cos", DoubleType),
@@ -198,18 +194,13 @@ trait GraftSignalOps { this: Graft.type =>
         val (benchVecs, norms) = bc.value
         rows.map { r =>
           val v = r.getSeq[Float](1).toArray.map(_.toDouble)
-          var ss = 0.0; var i = 0
-          while (i < v.length) { ss += v(i) * v(i); i += 1 }
-          val vn = math.sqrt(ss)
+          val vn = norm(v)
           var bestCos = Double.NegativeInfinity
           var bestId = -1L
           var bi = 0
           while (bi < benchVecs.length) {
             val (bid, bv) = benchVecs(bi)
-            var dot = 0.0; var j = 0
-            while (j < bv.length) { dot += v(j) * bv(j); j += 1 }
-            val cos = BigDecimal(dot / vn / norms(bi))
-              .setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
+            val cos = cos12(dot(bv, v), vn, norms(bi))
             if (cos > bestCos) { bestCos = cos; bestId = bid } // ties: lower id wins (sorted)
             bi += 1
           }

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.VecMath.float_dot
-
 /** Corpus structuring, classification & profiling — one slice of the [[Graft]] facade, split from a single
   * 3,300-line object purely to keep source files reviewable. All
   * operators remain accessible ONLY as `Graft.<op>` (the self-type
@@ -133,9 +131,7 @@ trait GraftStructureOps { this: Graft.type =>
                    splits: Seq[(String, Double)]): DataFrame = {
     require(splits.nonEmpty, "need at least one split")
     require(math.abs(splits.map(_._2).sum - 1.0) < 1e-9, "fractions must sum to 1")
-    val bucket = pmod(
-      pmod(col(groupCol), lit(2147483648L)) * lit(1103515245L) + lit(12345L),
-      lit(10000L))
+    val bucket = lcg(col(groupCol), 10000L)
     val cum = splits.scanLeft(0L) { case (acc, (_, f)) =>
       acc + math.round(f * 10000) }.tail
     val assign = splits.init.zip(cum.init).reverse
@@ -153,9 +149,7 @@ trait GraftStructureOps { this: Graft.type =>
     * at a rate that leaves ~10k candidates, then apply this exactly. */
   def sampleKPerStratum(df: DataFrame, stratumCol: String, idCol: String,
                         k: Int): DataFrame = {
-    val key = pmod(
-      pmod(col(idCol), lit(2147483648L)) * lit(1103515245L) + lit(12345L),
-      lit(2147483648L))
+    val key = lcg(col(idCol), 2147483648L)
     val w = Window.partitionBy(col(stratumCol)).orderBy(key.asc, col(idCol).asc)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)

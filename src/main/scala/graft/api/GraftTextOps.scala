@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.VecMath.float_dot
-
 /** Text curation & decontamination — one slice of the [[Graft]] facade, split from a single
   * 3,300-line object purely to keep source files reviewable. All
   * operators remain accessible ONLY as `Graft.<op>` (the self-type

@@ -97,8 +97,20 @@ case class IntVecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The bit-stable cosine contract, with one owner per engine form:
+  * float→double products summed left to right, divided by each side's
+  * norm (sqrt of the same left-to-right self-dot) one side at a time,
+  * rounded HALF_UP to 12 decimals (Spark `round(x, 12)`: the decimal
+  * string of the double, so NaN/±Inf pass through unrounded). Rankings
+  * on it order by (cos desc, id asc). The Column forms here
+  * ([[norm]], [[cos12]]) are what the Spark operators run, the JVM forms
+  * ([[dot]], [[round12]], the Double [[cos12]]) are what the row
+  * kernels run, and [[cosSql]] is the DuckDB form the oracles run: the
+  * same arithmetic in the same order in all three, so the engines agree
+  * to the bit. */
 object VecMath {
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import org.apache.spark.sql.functions.{round, sqrt}
 
   /** Dot product of two array<float> columns as double. */
   def float_dot(a: Column, b: Column): Column =
@@ -114,4 +126,41 @@ object VecMath {
     * (== DedupQueries.polyHashS; SQL surface: `poly_hash`). */
   def poly_hash(s: Column): Column =
     ColumnBridge.column(PolyHash(ColumnBridge.expression(s)))
+
+  /** A vector column's norm: sqrt of its self-dot, `float_dot` by
+    * default, `int_dot` for int8 codes. */
+  def norm(v: Column, dot: (Column, Column) => Column = float_dot): Column =
+    sqrt(dot(v, v))
+
+  /** The contract's cosine from a dot product and the two norms. */
+  def cos12(dot: Column, na: Column, nb: Column): Column =
+    round(dot / na / nb, 12)
+
+  /** Left-to-right double dot product over the first `a.length` slots. */
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < a.length) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
+  def norm(v: Array[Double]): Double = math.sqrt(dot(v, v))
+
+  /** Spark `round(x, 12)` on the JVM: HALF_UP on the double's decimal
+    * string, NaN and ±Inf unchanged. */
+  def round12(x: Double): Double =
+    if (x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** The DuckDB form of [[cos12]] for two 64-d list columns, as the
+    * oracles spell it. */
+  def cosSql(a: String, b: String): String =
+    s"""round(
+       |      list_sum(list_transform(range(1, 65), i -> $a[i]::DOUBLE * $b[i]::DOUBLE))
+       |      / sqrt(list_sum(list_transform(range(1, 65), i -> $a[i]::DOUBLE * $a[i]::DOUBLE)))
+       |      / sqrt(list_sum(list_transform(range(1, 65), i -> $b[i]::DOUBLE * $b[i]::DOUBLE))),
+       |      12)""".stripMargin
+
+  /** The row kernels' form of the Column [[cos12]]. */
+  def cos12(dot: Double, na: Double, nb: Double): Double = round12(dot / na / nb)
 }

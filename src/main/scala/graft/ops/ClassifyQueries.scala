@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VecMath.cosSql
+
 /** Gate bindings for the classification + profiling operators
   * ([[graft.api.Graft.nbTrain]]/[[graft.api.Graft.nbScore]],
   * [[graft.api.Graft.profile]]) — the trainable quality/language
@@ -250,17 +252,13 @@ object ClassifyQueries {
     * (round(cos, 12), neighbor-id rank ties) restricted to the labeled
     * side, plus the vote resolution: votes DESC, label ASC. */
   val knnClassifyOracle: String =
-    """WITH q AS (
+    s"""WITH q AS (
       |  SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 100),
       |c AS (
       |  SELECT vec_id, embedding, label FROM embeddings WHERE vec_id >= 100),
       |scored AS (
       |  SELECT q.query_id, c.vec_id AS neighbor_id, c.label,
-      |    round(
-      |      list_sum(list_transform(range(1, 65), i -> qv[i]::DOUBLE * c.embedding[i]::DOUBLE))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> qv[i]::DOUBLE * qv[i]::DOUBLE)))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE))),
-      |      12) AS cos
+      |    ${cosSql("qv", "c.embedding")} AS cos
       |  FROM c, q WHERE c.vec_id <> q.query_id),
       |topk AS (
       |  SELECT query_id, label FROM (
@@ -313,11 +311,7 @@ object ClassifyQueries {
       |  WHERE r <= 8 AND vec_id % 5 = 0
       |), cand AS (
       |  SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id, c.label,
-      |    round(
-      |      list_sum(list_transform(range(1, 65), i -> q.qv[i]::DOUBLE * c.embedding[i]::DOUBLE))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> q.qv[i]::DOUBLE * q.qv[i]::DOUBLE)))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE))),
-      |      12) AS cos
+      |    ${cosSql("q.qv", "c.embedding")} AS cos
       |  FROM c JOIN q USING (cell)
       |  WHERE c.vec_id <> q.query_id
       |), topk AS (

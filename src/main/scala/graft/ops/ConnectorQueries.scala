@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 
+import graft.functions.VecMath.cosSql
 import graft.sources.FileStreamClient
 import graft.streaming.StreamingQueries
 
@@ -897,9 +898,7 @@ object ConnectorQueries {
     * cosine as the pair set, batch = the slice's id-rank halves,
     * per-batch recursive-CTE connected components, history rejection
     * via an edge into the prior batch's admitted set. */
-  val streamingEmbedNeardupOracle: String = {
-    def dot(a: String, b: String) =
-      s"list_sum(list_transform(range(1, 65), i -> $a.embedding[i]::DOUBLE * $b.embedding[i]::DOUBLE))"
+  val streamingEmbedNeardupOracle: String =
     s"""WITH RECURSIVE sl AS MATERIALIZED (
        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0
        |),
@@ -913,9 +912,7 @@ object ConnectorQueries {
        |pairs AS MATERIALIZED (
        |  SELECT vec_a AS doc_a, vec_b AS doc_b FROM (
        |    SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-       |      round(${dot("a", "b")}
-       |        / sqrt(${dot("a", "a")})
-       |        / sqrt(${dot("b", "b")}), 12) AS cos
+       |      ${cosSql("a.embedding", "b.embedding")} AS cos
        |    FROM sl a, sl b WHERE a.vec_id < b.vec_id)
        |  WHERE cos >= 0.45
        |),
@@ -956,7 +953,6 @@ object ConnectorQueries {
        |a1 AS MATERIALIZED (
        |  SELECT doc_id FROM a0 UNION ALL SELECT doc_id FROM k1)
        |SELECT doc_id AS vec_id FROM a1""".stripMargin
-  }
 
   /** The two-batch admission replay: exact-Jaccard pairs (the
     * q_minhash_dupes oracle — banding is recall-complete on these

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.Graft
+import graft.functions.VecMath.cosSql
 
 /** Gate bindings + DuckDB oracles for the round-9 third-pass operators:
   * corpus admission caps (per-domain cap, canonical-URL dedup), BM25
@@ -194,7 +195,7 @@ object CurationQueries {
     * knnOracle scoring for the single query) full-outer joined with the
     * micro-quantized RRF sum, ranks tie-broken on the id. */
   val hybridSearchOracle: String =
-    """WITH terms AS (
+    s"""WITH terms AS (
       |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), t -> t <> '')) AS term
       |  FROM documents
       |), tf AS (
@@ -226,11 +227,7 @@ object CurationQueries {
       |), sem AS (
       |  SELECT doc_id, r1 FROM (
       |    SELECT e.vec_id AS doc_id, row_number() OVER (ORDER BY
-      |      round(
-      |        list_sum(list_transform(range(1, 65), i -> q.qv[i]::DOUBLE * e.embedding[i]::DOUBLE))
-      |        / sqrt(list_sum(list_transform(range(1, 65), i -> q.qv[i]::DOUBLE * q.qv[i]::DOUBLE)))
-      |        / sqrt(list_sum(list_transform(range(1, 65), i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE))),
-      |        12) DESC, e.vec_id ASC)::BIGINT AS r1
+      |      ${cosSql("q.qv", "e.embedding")} DESC, e.vec_id ASC)::BIGINT AS r1
       |    FROM embeddings e, (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) q
       |    WHERE e.vec_id <> 0)
       |  WHERE r1 <= 50
@@ -332,11 +329,7 @@ object CurationQueries {
       |), dropped AS (
       |  SELECT DISTINCT b.vec_id FROM home a JOIN home b USING (cell)
       |  WHERE a.vec_id < b.vec_id
-      |    AND round(
-      |      list_sum(list_transform(range(1, 65), i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> a.embedding[i]::DOUBLE * a.embedding[i]::DOUBLE)))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> b.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))),
-      |      12) >= (0.45)::DOUBLE
+      |    AND ${cosSql("a.embedding", "b.embedding")} >= (0.45)::DOUBLE
       |)
       |SELECT vec_id, cell::INT AS cell FROM home
       |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)""".stripMargin

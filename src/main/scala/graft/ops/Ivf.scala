@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.VecMath.{dot, norm}
+
 /** Deterministic IVF (inverted-file) index over `array<float>` vector
   * columns — the 100 TB shape for similarity search and embedding
   * near-dedup (north star; the reference has no vector surface).
@@ -202,10 +204,7 @@ object Ivf {
   }
 
   private def unit(v: Array[Double]): Array[Double] = {
-    var ss = 0.0
-    var i = 0
-    while (i < v.length) { ss += v(i) * v(i); i += 1 }
-    val nrm = math.sqrt(ss)
+    val nrm = norm(v)
     if (nrm == 0.0) v else v.map(_ / nrm)
   }
 
@@ -216,11 +215,7 @@ object Ivf {
     var bestCos = -2.0
     var c = 0
     while (c < centroids.length) {
-      val cv = centroids(c)
-      var dot = 0.0
-      var i = 0
-      while (i < v.length) { dot += v(i) * cv(i); i += 1 }
-      val cos = dot / vnrm
+      val cos = dot(v, centroids(c)) / vnrm
       if (cos > bestCos) { bestCos = cos; best = c }
       c += 1
     }
@@ -313,20 +308,13 @@ object Ivf {
         rows.flatMap { r =>
           val vf = r.getSeq[Float](1).toArray
           val v = vf.map(_.toDouble)
-          var ss = 0.0
-          var i = 0
-          while (i < v.length) { ss += v(i) * v(i); i += 1 }
-          val nrm = math.sqrt(ss)
+          val nrm = norm(v)
           // (cos to cell, angle to cell, cell id): centroids are unit
           // vectors, so cos = dot/|v|. Ranking uses the RAW cos
           // ([[cellRank]]); the angle exists only for the radius
           // rules, clamped for acos domain safety.
           val cells = Array.tabulate(centroids.length) { c =>
-            val cv = centroids(c)
-            var dot = 0.0
-            var j = 0
-            while (j < v.length) { dot += v(j) * cv(j); j += 1 }
-            val cos = if (nrm == 0.0) 0.0 else dot / nrm
+            val cos = if (nrm == 0.0) 0.0 else dot(v, centroids(c)) / nrm
             (cos, math.acos(math.max(-1.0, math.min(1.0, cos))), c)
           }
           val extras = Array.tabulate[Any](nExtra)(k => r.get(2 + k))

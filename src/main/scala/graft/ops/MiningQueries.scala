@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.Graft
+import graft.functions.VecMath.cosSql
 
 /** Gate bindings for the round-9 corpus-mining / curation operators:
   * heavy hitters, winnowing fingerprints, PageRank authority, URL
@@ -337,11 +338,7 @@ object MiningQueries {
        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 97 <> 0
        |), scored AS (
        |  SELECT c.vec_id, b.bid,
-       |    round(
-       |      list_sum(list_transform(range(1, 65), i -> c.embedding[i]::DOUBLE * b.bv[i]::DOUBLE))
-       |      / sqrt(list_sum(list_transform(range(1, 65), i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE)))
-       |      / sqrt(list_sum(list_transform(range(1, 65), i -> b.bv[i]::DOUBLE * b.bv[i]::DOUBLE))),
-       |      12) AS cos
+       |    ${cosSql("c.embedding", "b.bv")} AS cos
        |  FROM c, b
        |)
        |SELECT vec_id, cos AS max_cos, bid AS nearest_id,

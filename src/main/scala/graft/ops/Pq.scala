@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.functions.VecMath.{norm, round12}
+
 /** Deterministic product quantization (PQ) over `array<float>` vector
   * columns — the COMPRESSED-vector ANN path (Jégou et al., "Product
   * Quantization for Nearest Neighbor Search", the IVFADC family).
@@ -138,15 +140,12 @@ object Pq {
         rows.map { r =>
           val v = r.getSeq[Float](1).toArray.map(_.toDouble)
           val code = new Array[Byte](books.length)
-          var ss = 0.0
-          var i = 0
-          while (i < v.length) { ss += v(i) * v(i); i += 1 }
           var s = 0
           while (s < books.length) {
             code(s) = nearestCode(v, s * dsub, books(s)).toByte
             s += 1
           }
-          Row(r.getLong(0), code, math.sqrt(ss))
+          Row(r.getLong(0), code, norm(v))
         }
       }(enc)
   }
@@ -188,7 +187,7 @@ object Pq {
             d
           }
         }
-        val qnrm = queries.map { case (_, q) => math.sqrt(q.map(x => x * x).sum) }
+        val qnrm = queries.map { case (_, q) => norm(q) }
         // eviction order: worst first = lower adc, then HIGHER id (so the
         // kept set ties toward lower ids — matching the global tiebreak)
         val worstFirst = Ordering.by[(Double, Long), (Double, Long)](t => (-t._1, t._2))
@@ -203,10 +202,9 @@ object Pq {
               var adc = 0.0
               var s = 0
               while (s < m) { adc += luts(qi)(s)(code(s) & 0xff); s += 1 }
-              // Spark round(x, 12) semantics (BigDecimal HALF_UP) —
-              // the same pairing every round-12 oracle in the gate uses
-              val cos = java.math.BigDecimal.valueOf(adc / (qnrm(qi) * nrm))
-                .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
+              // Spark round(x, 12) semantics — the same pairing every
+              // round-12 oracle in the gate uses
+              val cos = round12(adc / (qnrm(qi) * nrm))
               val h = heaps(qi)
               if (h.size < shortlist) h.enqueue((cos, nid))
               else {

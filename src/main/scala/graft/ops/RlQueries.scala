@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.VecMath.cosSql
+
 /** Post-training data construction — the RLHF-side siblings of the SFT
   * family ([[SftQueries]]): best-of-N candidate selection (rejection
   * sampling), contrastive hard-negative mining, and curriculum
@@ -281,16 +283,12 @@ object RlQueries {
   }
 
   val hardNegativesOracle: String =
-    """WITH a AS (
+    s"""WITH a AS (
       |  SELECT vec_id AS anchor_id, embedding AS qv, label AS albl
       |  FROM embeddings WHERE vec_id < 64
       |), scored AS (
       |  SELECT a.anchor_id, e.vec_id AS neg_id, e.label::BIGINT AS neg_label,
-      |    round(
-      |      list_sum(list_transform(range(1, 65), i -> qv[i]::DOUBLE * e.embedding[i]::DOUBLE))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> qv[i]::DOUBLE * qv[i]::DOUBLE)))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE))),
-      |      12) AS cos
+      |    ${cosSql("qv", "e.embedding")} AS cos
       |  FROM embeddings e, a WHERE e.label IS DISTINCT FROM a.albl
       |)
       |SELECT anchor_id, rank, neg_id, neg_label, cos FROM (
@@ -359,11 +357,7 @@ object RlQueries {
       |), cand AS (
       |  SELECT DISTINCT a.vec_id AS anchor_id, c.vec_id AS neg_id,
       |    c.label::BIGINT AS neg_label,
-      |    round(
-      |      list_sum(list_transform(range(1, 65), i -> a.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> a.embedding[i]::DOUBLE * a.embedding[i]::DOUBLE)))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE))),
-      |      12) AS cos
+      |    ${cosSql("a.embedding", "c.embedding")} AS cos
       |  FROM corpus c JOIN anchors a USING (cell)
       |  WHERE c.label IS DISTINCT FROM a.label
       |)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VecMath.float_dot
+import graft.functions.VecMath.{cos12, cosSql, float_dot, norm}
 
 /** Similarity search over `embeddings.embedding` (array<float>, 64-d) —
   * the ANN surface a training-data pipeline needs (north star).
@@ -18,23 +18,6 @@ import graft.functions.VecMath.float_dot
   * cross product.
   */
 object SimilarityQueries {
-
-  /** Cosine similarity of two float vectors via the codegen'd
-    * [[graft.functions.FloatVecDot]] expression: left-to-right double
-    * accumulation — deterministic and bit-identical to the SQL-oracle
-    * formulation, ~100× faster than the interpreted HOF route.
-    * Prefer [[cosinePrenormed]] across joins (norms computed once per
-    * side instead of once per pair). */
-  private def cosine(a: Column, b: Column): Column =
-    float_dot(a, b) / sqrt(float_dot(a, a)) / sqrt(float_dot(b, b))
-
-  /** Cosine from precomputed norms (hoist `sqrt(dot(v,v))` to each
-    * join side — O(n) norms instead of O(pairs)). */
-  private def cosinePrenormed(a: Column, b: Column, normA: Column, normB: Column): Column =
-    float_dot(a, b) / normA / normB
-
-  private def withNorm(df: DataFrame, vec: String, norm: String): DataFrame =
-    df.withColumn(norm, sqrt(float_dot(col(vec), col(vec))))
 
   private val K = 5
   private val NQueries = 10 // vec_id < 10 play the role of query vectors
@@ -54,11 +37,7 @@ object SimilarityQueries {
     s"""WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < $NQueries),
        |scored AS (
        |  SELECT q.query_id, e.vec_id AS neighbor_id,
-       |    round(
-       |      list_sum(list_transform(range(1, 65), i -> qv[i]::DOUBLE * e.embedding[i]::DOUBLE))
-       |      / sqrt(list_sum(list_transform(range(1, 65), i -> qv[i]::DOUBLE * qv[i]::DOUBLE)))
-       |      / sqrt(list_sum(list_transform(range(1, 65), i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE))),
-       |      12) AS cos
+       |    ${cosSql("qv", "e.embedding")} AS cos
        |  FROM embeddings e, q WHERE e.vec_id <> q.query_id
        |)
        |SELECT query_id, neighbor_id, rank, cos FROM (
@@ -80,13 +59,9 @@ object SimilarityQueries {
       .select(col("id_a").as("vec_a"), col("id_b").as("vec_b"), col("cos"))
 
   val neardupOracle: String =
-    """SELECT vec_a, vec_b, cos FROM (
+    s"""SELECT vec_a, vec_b, cos FROM (
       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-      |    round(
-      |      list_sum(list_transform(range(1, 65), i -> a.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> a.embedding[i]::DOUBLE * a.embedding[i]::DOUBLE)))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> b.embedding[i]::DOUBLE * b.embedding[i]::DOUBLE))),
-      |      12) AS cos
+      |    ${cosSql("a.embedding", "b.embedding")} AS cos
       |  FROM embeddings a, embeddings b
       |  WHERE a.vec_id < b.vec_id)
       |WHERE cos >= 0.45""".stripMargin
@@ -121,11 +96,7 @@ object SimilarityQueries {
       |  WHERE r <= 10 AND vec_id < $NQueries
       |), cand AS (
       |  SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id,
-      |    round(
-      |      list_sum(list_transform(range(1, 65), i -> q.qv[i]::DOUBLE * c.embedding[i]::DOUBLE))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> q.qv[i]::DOUBLE * q.qv[i]::DOUBLE)))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> c.embedding[i]::DOUBLE * c.embedding[i]::DOUBLE))),
-      |      12) AS cos
+      |    ${cosSql("q.qv", "c.embedding")} AS cos
       |  FROM c JOIN q USING (cell)
       |  WHERE c.vec_id <> q.query_id
       |)
@@ -221,11 +192,7 @@ object SimilarityQueries {
       |    FROM adc) WHERE r <= ${8 * K}
       |), scored AS (
       |  SELECT s.query_id, s.neighbor_id,
-      |    round(
-      |      list_sum(list_transform(range(1, 65), i -> q.qv[i]::DOUBLE * e.embedding[i]::DOUBLE))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> q.qv[i]::DOUBLE * q.qv[i]::DOUBLE)))
-      |      / sqrt(list_sum(list_transform(range(1, 65), i -> e.embedding[i]::DOUBLE * e.embedding[i]::DOUBLE))),
-      |      12) AS cos
+      |    ${cosSql("q.qv", "e.embedding")} AS cos
       |  FROM short s
       |  JOIN embeddings e ON e.vec_id = s.neighbor_id
       |  JOIN q ON q.query_id = s.query_id
@@ -256,15 +223,15 @@ object SimilarityQueries {
   def qMaxsimSearch(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val corpus = withNorm(emb, "embedding", "__nrm")
+    val corpus = emb.withColumn("__nrm", norm(col("embedding")))
       .select((col("vec_id") / MsVecsPerDoc).cast("long").as("doc"),
         col("embedding"), col("__nrm"))
-    val qtoks = withNorm(emb.filter(col("vec_id") < MsVecsPerDoc), "embedding", "__qnrm")
+    val qtoks = emb.filter(col("vec_id") < MsVecsPerDoc)
+      .withColumn("__qnrm", norm(col("embedding")))
       .select(col("vec_id").as("qtok"), col("embedding").as("__qv"), col("__qnrm"))
     val scored = corpus.join(broadcast(qtoks), col("doc") =!= 0L)
       .select(col("doc"), col("qtok"),
-        round(cosinePrenormed(col("embedding"), col("__qv"), col("__nrm"), col("__qnrm")),
-          12).as("__cos"))
+        cos12(float_dot(col("embedding"), col("__qv")), col("__nrm"), col("__qnrm")).as("__cos"))
     val perTok = scored.groupBy(col("doc"), col("qtok"))
       .agg(floor(max(col("__cos")) * 1e6 + 0.5).cast("long").as("__m"))
     perTok.groupBy(col("doc"))
@@ -352,19 +319,15 @@ object SimilarityQueries {
     * Output: (query_id, neighbor_id, rank, cos_q). */
   private[graft] def sq8Knn(corpus: DataFrame, id: String, codes: String,
       queries: DataFrame, queryId: String, queryCodes: String, k: Int): DataFrame = {
+    import graft.api.Graft.{normedSide, topK}
     import graft.functions.VecMath.int_dot
-    val c = corpus.select(col(id).as("neighbor_id"), col(codes).as("__c"))
-      .withColumn("__nrm", sqrt(int_dot(col("__c"), col("__c"))))
-    val q = queries.select(col(queryId).as("query_id"), col(queryCodes).as("__qc"))
-      .withColumn("__qnrm", sqrt(int_dot(col("__qc"), col("__qc"))))
+    val c = normedSide(corpus, col(id).as("neighbor_id"), codes, "__c", "__nrm", dot = int_dot)
+    val q = normedSide(queries, col(queryId).as("query_id"), queryCodes, "__qc", "__qnrm",
+      dot = int_dot)
     val scored = c.join(broadcast(q), col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        round(int_dot(col("__qc"), col("__c")) / col("__qnrm") / col("__nrm"), 12)
-          .as("cos_q"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_q").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+        cos12(int_dot(col("__qc"), col("__c")), col("__qnrm"), col("__nrm")).as("cos_q"))
+    topK(scored, "query_id", "cos_q", "neighbor_id", k)
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("long").as("rank"), col("cos_q"))
   }
@@ -494,41 +457,30 @@ object SimilarityQueries {
       .select(col(id).cast("long").as("__id"), col(vec).as("__v"))
       .crossJoin(broadcast(q))
       .select(col("__id"), col("__v"),
-        round(cosine(col("qv"), col("__v")), 12).as("rel"))
+        cos12(float_dot(col("qv"), col("__v")), norm(col("qv")), norm(col("__v"))).as("rel"))
       .orderBy(col("rel").desc, col("__id").asc)
       .limit(shortlistN)
       .collect() // bounded: shortlistN rows
-    def r12(x: Double): Double =
-      BigDecimal(x).setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
-    def cosLocal(a: Seq[Float], b: Seq[Float]): Double = {
-      var (ab, aa, bb) = (0.0, 0.0, 0.0); var i = 0
-      while (i < a.length) {
-        ab += a(i).toDouble * b(i).toDouble
-        aa += a(i).toDouble * a(i).toDouble
-        bb += b(i).toDouble * b(i).toDouble
-        i += 1
-      }
-      ab / math.sqrt(aa) / math.sqrt(bb)
-    }
+    import graft.functions.VecMath.{dot, round12}
     var remaining = short.map { r =>
       // penalty starts at −1 (≤ any cosine), so the first fold takes
       // the raw pick-cosine even when negative — mirrors the oracle's
       // greatest(−1.0, cos) stage-1 form
-      (r.getLong(0), r.getSeq[Float](1), r.getDouble(2), -1.0)
+      (r.getLong(0), r.getSeq[Float](1).toArray.map(_.toDouble), r.getDouble(2), -1.0)
     }.toVector // (id, vec, rel, penalty)
     val picks = Vector.newBuilder[(Long, Long, Double)]
     var step = 1
     while (step <= k && remaining.nonEmpty) {
       val scored = remaining.map { case (id, v, rel, pen) =>
         val s = if (step == 1) rel
-        else r12(lambda * rel - (1.0 - lambda) * pen)
+        else round12(lambda * rel - (1.0 - lambda) * pen)
         (id, v, rel, pen, s)
       }
       val best = scored.minBy { case (id, _, _, _, s) => (-s, id) }
       picks += ((step.toLong, best._1, best._5))
       remaining = remaining.collect {
         case (id, v, rel, pen) if id != best._1 =>
-          (id, v, rel, math.max(pen, r12(cosLocal(v, best._2))))
+          (id, v, rel, math.max(pen, cos12(dot(v, best._2), norm(v), norm(best._2))))
       }
       step += 1
     }
@@ -539,12 +491,6 @@ object SimilarityQueries {
     * unrolled as [[MmrK]] CTE stages — stage k's candidate table
     * carries each remaining row's running max-cosine penalty. */
   val mmrSelectOracle: String = {
-    def cosSql(a: String, b: String): String =
-      s"""round(
-         |      list_sum(list_transform(range(1, 65), i -> $a[i]::DOUBLE * $b[i]::DOUBLE))
-         |      / sqrt(list_sum(list_transform(range(1, 65), i -> $a[i]::DOUBLE * $a[i]::DOUBLE)))
-         |      / sqrt(list_sum(list_transform(range(1, 65), i -> $b[i]::DOUBLE * $b[i]::DOUBLE))),
-         |      12)""".stripMargin
     // stage k ≥ 1: sel_k picks from c_k; c_{k+1} drops the pick and
     // folds its cosine into the running penalty
     def stage(k: Int): String = {

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.VecMath.float_dot
+import graft.functions.VecMath.{cos12, float_dot}
 import graft.ops.Ivf
 import graft.streaming.BucketFanout.Vecs
 
@@ -145,8 +145,8 @@ object IncrementalEmbedDedup {
           // no id-inequality filter: a replayed vector must self-match its
           // admitted copy (cosine 1.0 ≥ threshold) and be rejected
           probed.join(hist, Seq("cell"))
-            .filter(round(float_dot(col("__v"), col("__hv"))
-              / col("nrm") / col("__hnrm"), 12) >= threshold)
+            .filter(cos12(float_dot(col("__v"), col("__hv")), col("nrm"), col("__hnrm"))
+              >= threshold)
             .select(col("doc_id")).distinct()
             .localCheckpoint(true) // materialize before unpersist
         }

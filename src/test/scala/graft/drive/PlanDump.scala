@@ -3,7 +3,7 @@ package graft.drive
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
-/** Dumps formatted physical plans. Two modes:
+/** Dumps formatted physical plans, or the oracle text. Three modes:
   *
   *  - no args: the headline queries at sf0.001 to PLANS.md — the
   *    at-a-glance evidence that pushdown/broadcast/partial-agg/
@@ -14,9 +14,14 @@ import org.apache.spark.sql.SparkSession
   *    before/after plan evidence, at sf0.01 unless `sfDir` is given
   *    (plan shape, not data scale, is the evidence; AQE initial plans
   *    are identical across SFs for these queries).
+  *  - `oracle <outFile>`: every `SparkEntry.oracleSql` value, one
+  *    `name<TAB>sql` line per query in name order, with all whitespace
+  *    deleted — diff two dumps to show a refactor left the oracle text
+  *    unchanged up to layout.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    if (args.headOption.contains("oracle")) { oracleText(args(1)); return }
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
@@ -42,6 +47,14 @@ object PlanDump {
       Files.write(Paths.get(s"plans/$round/${name}_$tag.txt"), txt.getBytes("UTF-8"))
       println(s"wrote plans/$round/${name}_$tag.txt (${txt.length} chars)")
     }
+  }
+
+  private def oracleText(out: String): Unit = {
+    val lines = graft.SparkEntry.oracleSql.toSeq.sortBy(_._1).map { case (name, sql) =>
+      s"$name\t${sql.replaceAll("\\s+", "")}\n"
+    }
+    Files.write(Paths.get(out), lines.mkString.getBytes("UTF-8"))
+    println(s"wrote $out (${lines.size} oracle queries)")
   }
 
   private def headlinePlans(spark: SparkSession): Unit = {
