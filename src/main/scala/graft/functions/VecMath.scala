@@ -107,10 +107,16 @@ case class IntVecDot(left: Expression, right: Expression)
   * ([[dot]], [[round12]], the Double [[cos12]]) are what the row
   * kernels run, and [[cosSql]] is the DuckDB form the oracles run: the
   * same arithmetic in the same order in all three, so the engines agree
-  * to the bit. */
+  * to the bit.
+  *
+  * Zero vectors: a vector of norm 0 has no direction, so its cosine is
+  * 0.0 with every vector, itself included (the rule `Ivf` already uses
+  * to assign cells). All three forms test the norms before dividing,
+  * so a zero vector neither fails the query (Spark's ANSI divide) nor
+  * turns into NaN. */
 object VecMath {
   import org.apache.spark.sql.graftbridge.ColumnBridge
-  import org.apache.spark.sql.functions.{round, sqrt}
+  import org.apache.spark.sql.functions.{lit, round, sqrt, when}
 
   /** Dot product of two array<float> columns as double. */
   def float_dot(a: Column, b: Column): Column =
@@ -134,33 +140,37 @@ object VecMath {
 
   /** The contract's cosine from a dot product and the two norms. */
   def cos12(dot: Column, na: Column, nb: Column): Column =
-    round(dot / na / nb, 12)
+    when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(round(dot / na / nb, 12))
 
   /** Left-to-right double dot product over the first `a.length` slots. */
-  def dot(a: Array[Double], b: Array[Double]): Double = {
+  private[graft] def dot(a: Array[Double], b: Array[Double]): Double = {
     var s = 0.0
     var i = 0
     while (i < a.length) { s += a(i) * b(i); i += 1 }
     s
   }
 
-  def norm(v: Array[Double]): Double = math.sqrt(dot(v, v))
+  private[graft] def norm(v: Array[Double]): Double = math.sqrt(dot(v, v))
 
   /** Spark `round(x, 12)` on the JVM: HALF_UP on the double's decimal
     * string, NaN and ±Inf unchanged. */
-  def round12(x: Double): Double =
+  private[graft] def round12(x: Double): Double =
     if (x.isNaN || x.isInfinite) x
     else java.math.BigDecimal.valueOf(x).setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** The DuckDB form of [[cos12]] for two 64-d list columns, as the
     * oracles spell it. */
-  def cosSql(a: String, b: String): String =
-    s"""round(
+  private[graft] def cosSql(a: String, b: String): String =
+    s"""CASE WHEN list_sum(list_transform(range(1, 65), i -> $a[i]::DOUBLE * $a[i]::DOUBLE)) = 0
+       |      OR list_sum(list_transform(range(1, 65), i -> $b[i]::DOUBLE * $b[i]::DOUBLE)) = 0
+       |    THEN 0.0::DOUBLE
+       |    ELSE round(
        |      list_sum(list_transform(range(1, 65), i -> $a[i]::DOUBLE * $b[i]::DOUBLE))
        |      / sqrt(list_sum(list_transform(range(1, 65), i -> $a[i]::DOUBLE * $a[i]::DOUBLE)))
        |      / sqrt(list_sum(list_transform(range(1, 65), i -> $b[i]::DOUBLE * $b[i]::DOUBLE))),
-       |      12)""".stripMargin
+       |      12) END""".stripMargin
 
   /** The row kernels' form of the Column [[cos12]]. */
-  def cos12(dot: Double, na: Double, nb: Double): Double = round12(dot / na / nb)
+  private[graft] def cos12(dot: Double, na: Double, nb: Double): Double =
+    if (na == 0.0 || nb == 0.0) 0.0 else round12(dot / na / nb)
 }

@@ -157,7 +157,10 @@ object Pq {
     * each corpus row costs m byte-indexed adds instead of a dim-length
     * dot product. Emits ≤ partitions × |queries| × shortlist rows (the
     * global top-`shortlist` per query is a subset of the union of the
-    * per-partition ones); self-matches (id == query id) are skipped.
+    * per-partition ones); self-matches (id == query id) are skipped,
+    * and a zero vector on either side scores 0.0 (the
+    * [[graft.functions.VecMath]] zero-vector rule, so a full shortlist
+    * still equals exact kNN).
     * Output: (query_id, neighbor_id, adc), with `adc` ROUND-12 (the
     * gate's tie-proofing: duplicate corpus vectors produce exactly
     * equal ADC, and an unrounded (adc, id) cut at the shortlist
@@ -198,13 +201,14 @@ object Pq {
           val nrm = r.getDouble(2)
           var qi = 0
           while (qi < queries.length) {
-            if (queries(qi)._1 != nid && nrm > 0.0 && qnrm(qi) > 0.0) {
+            if (queries(qi)._1 != nid) {
               var adc = 0.0
               var s = 0
               while (s < m) { adc += luts(qi)(s)(code(s) & 0xff); s += 1 }
               // Spark round(x, 12) semantics — the same pairing every
               // round-12 oracle in the gate uses
-              val cos = round12(adc / (qnrm(qi) * nrm))
+              val cos = if (nrm == 0.0 || qnrm(qi) == 0.0) 0.0
+                else round12(adc / (qnrm(qi) * nrm))
               val h = heaps(qi)
               if (h.size < shortlist) h.enqueue((cos, nid))
               else {

@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VecMath.{cos12, cosSql, float_dot, norm}
+import graft.functions.VecMath.{cos12, cosSql, dot, float_dot, int_dot, norm, round12}
 
 /** Similarity search over `embeddings.embedding` (array<float>, 64-d) —
   * the ANN surface a training-data pipeline needs (north star).
@@ -177,7 +177,8 @@ object SimilarityQueries {
       |  FROM q, cb, subs
       |), adc AS (
       |  SELECT l.query_id, c.vec_id AS neighbor_id,
-      |    round(sum(l.l) / (max(qn.qn) * max(n.nrm)), 12) AS a
+      |    CASE WHEN max(qn.qn) = 0 OR max(n.nrm) = 0 THEN 0.0::DOUBLE
+      |      ELSE round(sum(l.l) / (max(qn.qn) * max(n.nrm)), 12) END AS a
       |  FROM codes c
       |  JOIN lut l ON l.sub = c.sub AND l.code = c.code
       |  JOIN nrm n ON n.vec_id = c.vec_id
@@ -320,7 +321,6 @@ object SimilarityQueries {
   private[graft] def sq8Knn(corpus: DataFrame, id: String, codes: String,
       queries: DataFrame, queryId: String, queryCodes: String, k: Int): DataFrame = {
     import graft.api.Graft.{normedSide, topK}
-    import graft.functions.VecMath.int_dot
     val c = normedSide(corpus, col(id).as("neighbor_id"), codes, "__c", "__nrm", dot = int_dot)
     val q = normedSide(queries, col(queryId).as("query_id"), queryCodes, "__qc", "__qnrm",
       dot = int_dot)
@@ -461,7 +461,6 @@ object SimilarityQueries {
       .orderBy(col("rel").desc, col("__id").asc)
       .limit(shortlistN)
       .collect() // bounded: shortlistN rows
-    import graft.functions.VecMath.{dot, round12}
     var remaining = short.map { r =>
       // penalty starts at −1 (≤ any cosine), so the first fold takes
       // the raw pick-cosine even when negative — mirrors the oracle's

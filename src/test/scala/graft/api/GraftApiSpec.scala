@@ -926,4 +926,86 @@ class GraftApiSpec extends SparkTestBase {
     assert(out.filter(_._1 == 2L).toSeq === Seq((2L, 0L, 2L, "a b")))
     assert(!out.exists(_._1 == 3L))
   }
+
+  test("every cosine operator runs on a corpus holding an all-zero vector: " +
+      "its cosine is 0.0 with every vector and it is never a near-dup") {
+    // id 3 is the zero vector; the rest form two tight pairs and a loner
+    def v(xs: Float*): Array[Float] = xs.toArray.padTo(8, 0.0f)
+    val corpus = Seq(
+      (1L, 0, v(1.0f)), (2L, 0, v(0.9f, 0.1f)), (3L, 1, v()),
+      (4L, 1, v(0.0f, 1.0f)), (5L, 0, v(0.0f, 0.9f, 0.1f)), (6L, 1, v(0f, 0f, 0f, 1.0f))
+    ).toDF("rid", "lab", "v")
+    val Zero = 3L
+    // (id, id, cos) triples of an output: no NaN anywhere, and every
+    // pair that involves the zero vector scores exactly 0.0
+    def zeroScoresZero(df: org.apache.spark.sql.DataFrame, a: String, b: String,
+        cos: String): Seq[(Long, Long, Double)] = {
+      val t = df.select(col(a).cast("long"), col(b).cast("long"), col(cos)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+      assert(!t.exists(_._3.isNaN), t)
+      t.filter(r => r._1 == Zero || r._2 == Zero).foreach(r => assert(r._3 === 0.0, r))
+      t
+    }
+
+    val nn = zeroScoresZero(
+      Graft.knn(corpus, "rid", "v", corpus, "rid", "v", 5), "query_id", "neighbor_id", "cos")
+    assert(nn.size === 30)
+    assert(nn.count(r => r._1 == Zero || r._2 == Zero) === 10)
+    val coded = Graft.sq8Encode(corpus, "v")
+    val sq = zeroScoresZero(Graft.sq8Knn(coded, "rid", "codes", coded, "rid", "codes", 5),
+      "query_id", "neighbor_id", "cos_q")
+    assert(sq.count(r => r._1 == Zero || r._2 == Zero) === 10)
+    // a full shortlist (rerank·k ≥ |corpus|) is exact kNN, zero vector included
+    val pq = zeroScoresZero(Graft.pqKnn(corpus, "rid", "v", corpus, "rid", "v", 5, rerank = 2,
+      pq = graft.ops.Pq.Params(m = 2, ksub = 4)), "query_id", "neighbor_id", "cos")
+    assert(pq.toSet === nn.toSet)
+    zeroScoresZero(Graft.ivfKnn(corpus, "rid", "v", corpus, "rid", "v", 5),
+      "query_id", "neighbor_id", "cos")
+    zeroScoresZero(Graft.hardNegatives(corpus, "rid", "v", "lab", corpus, "rid", "v", "lab"),
+      "anchor_id", "neg_id", "cos")
+    zeroScoresZero(Graft.hardNegativesIvf(corpus, "rid", "v", "lab", corpus, "rid", "v", "lab"),
+      "anchor_id", "neg_id", "cos")
+    assert(Graft.knnClassify(corpus, "rid", "v", "lab", corpus, "rid", "v", 3).count() === 6)
+    assert(Graft.knnClassifyIvf(corpus, "rid", "v", "lab", corpus, "rid", "v", 3).count() === 6)
+
+    // near-dups: the two planted pairs, and no pair with the zero vector
+    // even at a threshold just above 0
+    for (t <- Seq(0.5, 1e-9)) {
+      val pairs = zeroScoresZero(Graft.embedNearDup(corpus, "rid", "v", t), "id_a", "id_b", "cos")
+      assert(pairs.map(p => (p._1, p._2)).toSet.contains((1L, 2L)), pairs)
+      assert(!pairs.exists(p => p._1 == Zero || p._2 == Zero), pairs)
+      val kept = Graft.semDedup(corpus, "rid", "v", t).collect().map(_.getLong(0)).toSet
+      assert(kept.contains(Zero), kept)
+    }
+
+    // row kernels: MMR with the zero vector as a candidate and as the
+    // query, and embedding decontamination against a bench holding it
+    val picked = Graft.mmrSelect(corpus.filter($"rid" =!= 1L), "rid", "v",
+      corpus.filter($"rid" === 1L), "v", 5).collect()
+    assert(picked.length === 5 && !picked.exists(_.getDouble(2).isNaN))
+    assert(Graft.mmrSelect(corpus.filter($"rid" =!= Zero), "rid", "v",
+      corpus.filter($"rid" === Zero), "v", 3).collect().map(_.getDouble(2)).toSeq ===
+      Seq(0.0, 0.0, 0.0))
+    val dec = Graft.embedDecontaminate(corpus, "rid", "v",
+        corpus.filter($"rid".isin(Zero, 6L)), "rid", "v", 0.5)
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2), r.getLong(3))).toMap
+    assert(dec(Zero) === ((0.0, Zero, 0L)))
+    assert(dec(1L) === ((0.0, Zero, 0L)))
+    assert(dec(6L) === ((1.0, 6L, 1L)))
+  }
+
+  test("ivfKnn probing every cell with one home cell per vector returns exactly knn's rows") {
+    val emb = graft.ops.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val queries = emb.filter($"vec_id" < 10)
+    val index = graft.ops.Ivf.strideIndex(emb, "vec_id", "embedding")
+    // cos compared by bits, not within a tolerance
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(3)))).toSet
+    val exact = rows(Graft.knn(emb, "vec_id", "embedding", queries, "vec_id", "embedding", 5))
+    val ivf = rows(Graft.ivfKnn(emb, "vec_id", "embedding", queries, "vec_id", "embedding", 5,
+      index, nprobe = index.nlist, corpusAssign = 1))
+    assert(exact.size === 50)
+    assert(ivf === exact)
+  }
 }

@@ -231,4 +231,16 @@ class IncrementalEmbedDedupSpec extends SparkTestBase {
       assert(bad === 0L, s"$bad vec rows inconsistent with fan-out 256")
     } finally spark.conf.unset(BucketFanout.GrowAt256Key)
   }
+
+  test("a batch holding an all-zero vector is admitted without error; " +
+      "the zero vector is no near-dup of anything") {
+    val store = Files.createTempDirectory("incembed-zero-").toString
+    admit(Seq(1L -> fam(0, 0), 2L -> fam(1, 0)), store)
+    // against history (the store exists) and within the batch: the zero
+    // vector's cosine is 0 with every vector, so it is admitted, and the
+    // near-dup of family 0 is still rejected
+    val out = admit(Seq(3L -> new Array[Float](Dim), 4L -> dupOf(0, 0), 5L -> fam(2, 0)), store)
+    assert(out.collect().map(_.getLong(0)).toSet === Set(3L, 5L))
+    assert(admittedIds(store) === Set(1L, 2L, 3L, 5L))
+  }
 }
