@@ -2,8 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 
-/** Chunk-count policy for the distributed two-pass prefix aggregations
-  * (running max in qLateData, prefix sum in Graft.packSequences).
+/** Chunk-count policy for the distributed two-pass prefix aggregations:
+  * the running max in qLateData, the prefix sum in Graft.packSequences,
+  * the per-stratum ranks and weight sums of [[StratifiedRank]], and the
+  * analytic LCG-key grid of Graft.tokenBudgetSample.
   *
   * The within-chunk window's parallelism equals the chunk count, so a
   * fixed constant (the old 64) caps scaling forever: at 100 TB each
@@ -14,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   * is still a trivial hash aggregate, while an uncapped count on a
   * large cluster would make the "constant" prefix data-sized. Rounded
   * to a power of two so uniform axes (the 2^31 LCG arrival axis) divide
-  * exactly. Results of both consumers are chunk-count-independent by
+  * exactly. Results of every consumer are chunk-count-independent by
   * construction — this only tunes parallelism.
   */
 object Chunking {
