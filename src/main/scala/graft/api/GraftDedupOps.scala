@@ -1019,19 +1019,11 @@ trait GraftDedupOps { this: Graft.type =>
     * docs while the stratum's RUNNING token total stays within its
     * budget. Budgets are tokens, not documents, so long docs spend the
     * budget faster — what a mixture spec actually means. Returns every
-    * row with its running total and a 0/1 `kept`.
-    *
-    * Scale shape: strata are FIXED-cardinality (a mixture spec names a
-    * handful of domains), so a dense running-sum window partitioned by
-    * the stratum would single-task-sort each domain's full slice at
-    * 100 TB (the round-11 weak class). The running total therefore
-    * comes from the distributed two-pass [[graft.ops.StratifiedRank]]
-    * kernel instead: chunk the LCG key space by quantiles, per-(domain,
-    * chunk) weight sums, broadcast exclusive prefix, within-chunk
-    * running sum — identical values, parallelism = strata × chunks.
-    * Deterministic across engines, partitionings and retries by the
-    * hashSample argument. A stratum absent from `budgets` keeps
-    * nothing (budget 0). */
+    * row with its running total and a 0/1 `kept`. The running total is
+    * the per-stratum prefix sum of the [[graft.ops.StratifiedRank]]
+    * kernel over the LCG key. Deterministic across engines,
+    * partitionings and retries by the hashSample argument. A stratum
+    * absent from `budgets` keeps nothing (budget 0). */
   def tokenBudgetSample(df: DataFrame, id: String, stratumCol: String,
       tokensCol: String, budgets: Map[String, Long]): DataFrame = {
     require(budgets.values.forall(_ >= 0L), "budgets must be non-negative")
@@ -1039,17 +1031,10 @@ trait GraftDedupOps { this: Graft.type =>
     val budgetExpr = budgets.foldLeft(lit(0L)) { case (acc, (s, b)) =>
       when(col(stratumCol) === s, lit(b)).otherwise(acc)
     }
-    // the LCG key is uniform on [0, 2^31) BY CONSTRUCTION, so the
-    // chunk boundaries are an analytic grid — no sketch pass at all
-    val grid = {
-      val n = graft.ops.Chunking.chunkCount(df.sparkSession)
-      (1 until n).map(i => 2147483648.0 * i / n).toArray
-    }
     graft.ops.StratifiedRank.stratifiedRank(
         df.select(col(id), col(stratumCol), col(tokensCol)),
         Seq(stratumCol), order, Seq(col(id).asc),
-        weight = Some(col(tokensCol)), psumName = "__below",
-        fixedBoundaries = Some(grid))
+        weight = Some(col(tokensCol)), psumName = "__below", uniformKey = true)
       .withColumn("__cum", col("__below") + col(tokensCol))
       .select(col(id), col(stratumCol), col(tokensCol),
         col("__cum").cast("long").as("cum_tokens"),

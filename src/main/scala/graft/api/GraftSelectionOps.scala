@@ -27,8 +27,8 @@ trait GraftSelectionOps { this: Graft.type =>
     *
     * Scale shape: bin assignment is a map; the per-bin table is ≤ 64
     * rows (a long's bit length), so its exclusive prefix sum is the
-    * engine's constant-size explode+groupBy pattern — never a window —
-    * and the stage lookup re-enters the corpus as a broadcast join.
+    * constant-size [[graft.ops.StratifiedRank.explodePrefix]] — never a
+    * window — and the stage lookup re-enters the corpus as a broadcast join.
     * One shuffle total (the bin aggregation), everything else map-side.
     * Stage arithmetic is pure integers (`cum_before·nStages div total`),
     * so results are engine-exact at any scale. */
@@ -40,10 +40,8 @@ trait GraftSelectionOps { this: Graft.type =>
       .withColumn("bin", length(bin(greatest(col("difficulty"), lit(1L)))).cast("long"))
     val binAgg = binned.groupBy(col("bin"))
       .agg(sum(col("__tok")).as("__btok"))
-    val prefix = binAgg.select(col("bin").as("__src"),
-        explode(sequence(col("bin") + 1, lit(65L))).as("bin"),
-        col("__btok").as("__t"))
-      .groupBy(col("bin")).agg(sum(col("__t")).as("__before"))
+    val prefix = graft.ops.StratifiedRank.explodePrefix(binAgg, "bin", 65L,
+      sum(col("__btok")).as("__before"))
     val total = binAgg.agg(sum(col("__btok")).as("__total"))
     val sched = binAgg
       .join(prefix, Seq("bin"), "left")
@@ -404,8 +402,7 @@ trait GraftSelectionOps { this: Graft.type =>
     * incremental reservoir ([[graft.streaming.IncrementalReservoir]]),
     * so their kept sets agree exactly by construction. */
   private[graft] def aresKey(id: Column, weight: Column): Column = {
-    val u = ((pmod(id.cast("long"), lit(2147483648L)) * 1103515245L + 12345L)
-      % 2147483648L).cast("double")
+    val u = lcg(id.cast("long"), 2147483648L).cast("double")
     log((u + 0.5d) / 2147483648.0d) / weight.cast("double")
   }
 

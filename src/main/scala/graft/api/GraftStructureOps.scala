@@ -21,49 +21,15 @@ trait GraftStructureOps { this: Graft.type =>
     * sequence it starts in (`seq_id`), its offset inside that sequence
     * (`seq_off`), and how many sequences it spans (`n_seqs` — a doc
     * crossing a boundary is split across sequences, exactly like the
-    * GPT-style pack-then-chunk pipeline).
-    *
-    * The global prefix sum is computed in the same distributed two-pass
-    * shape as the engine's running-max: per-chunk sums (hash agg over
-    * an id-range chunk key), an exploded constant-size prefix, and a
-    * within-chunk window — no global single-partition window at any
-    * data-sized step. Chunk boundaries come from an approximate
-    * quantile sketch of `id` (one bounded driver action), so chunks
-    * stay row-balanced under ANY id distribution — uniform-width
-    * chunking would collapse a skewed id space into one chunk. The
-    * boundaries only decide chunking, never values: the prefix sum is
-    * exact and deterministic regardless of the sketch. `id` must be
-    * non-negative and UNIQUE (ids define the pack order; duplicate ids
-    * would make the within-chunk order, and thus offsets, ambiguous). */
+    * GPT-style pack-then-chunk pipeline). `id` must be UNIQUE (ids
+    * define the pack order; duplicate ids would make offsets
+    * ambiguous). The offsets are the global prefix sum of the
+    * [[graft.ops.StratifiedRank]] kernel, exact at any scale. */
   def packSequences(df: DataFrame, id: String, tokensCol: String,
       budget: Long): DataFrame = {
     require(budget > 0, "budget must be positive")
-    // chunk count scales with the cluster (graft.ops.Chunking) so the
-    // within-chunk window isn't capped at constant parallelism; the
-    // sketch's relative error shrinks with the quantile step so
-    // adjacent boundaries don't collapse
-    val n = graft.ops.Chunking.chunkCount(df.sparkSession)
-    val boundaries = df.stat.approxQuantile(id,
-      (1 until n).map(_ / n.toDouble).toArray, math.min(0.01, 0.25 / n)).distinct.sorted
-    val nChunks = boundaries.length + 1L
-    // O(log n) codegen'd binary search — a fold of n comparisons would
-    // grow the expression tree with the cluster size
-    val chunkCol = graft.functions.SortedBucket.sorted_bucket(col(id), boundaries)
-    val chunked = df.select(col(id), col(tokensCol))
-      .withColumn("__chunk", chunkCol)
-    val chunkSum = chunked.groupBy(col("__chunk"))
-      .agg(sum(col(tokensCol)).as("__csum"))
-    val prefix = chunkSum
-      .select(col("__chunk").as("__src"),
-        explode(sequence(col("__chunk") + 1, lit(nChunks - 1))).as("__chunk"),
-        col("__csum"))
-      .filter(col("__chunk") > col("__src"))
-      .groupBy(col("__chunk")).agg(sum(col("__csum")).as("__psum"))
-    val wIn = Window.partitionBy(col("__chunk")).orderBy(col(id))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    chunked.join(broadcast(prefix), Seq("__chunk"), "left")
-      .withColumn("__insum", coalesce(sum(col(tokensCol)).over(wIn), lit(0L)))
-      .withColumn("stream_off", coalesce(col("__psum"), lit(0L)) + col("__insum"))
+    graft.ops.StratifiedRank.stratifiedRank(df.select(col(id), col(tokensCol)), Nil,
+        col(id), weight = Some(col(tokensCol)), psumName = "stream_off")
       .withColumn("seq_id", expr(s"stream_off div $budget"))
       .withColumn("seq_off", pmod(col("stream_off"), lit(budget)))
       .withColumn("n_seqs",

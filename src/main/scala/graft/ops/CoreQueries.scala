@@ -214,64 +214,20 @@ object CoreQueries {
     * by > 10 min at its arrival position — exactly what
     * withWatermark("ts","10 minutes") drops. The fixture's ts is
     * monotone in event_id, so arrival order is simulated with a
-    * deterministic LCG permutation of event_id (identical integer
-    * arithmetic in Spark and the SQL oracle). Returns the dropped rows.
-    *
-    * Scale shape: the global running max is computed in two distributed
-    * passes instead of one all-rows-to-one-partition Window —
-    *  1. chunk the arrival axis into fixed ranges; per-chunk max(ts)
-    *     is a hash aggregate (map-side partial, one narrow shuffle);
-    *  2. the exclusive prefix max over the ≤64 chunk rows is computed
-    *     by exploding each chunk's max to every LATER chunk id and
-    *     hash-aggregating — O(chunks²) rows (constant), no global
-    *     window, no nested-loop join;
-    *  3. broadcast-join the prefix back and combine with the per-chunk
-    *     running max, which is partitioned by chunk.
-    * Every data-sized operation is partitioned; only chunk-count-sized
-    * (constant) data ever meets a single partition. */
-  def qLateData(spark: SparkSession, dir: String): DataFrame = {
-    // fold the id to 31 bits BEFORE the LCG multiply: raw long ids past
-    // ~8.4e9 would overflow (2^63 / 1103515245) under ANSI — caught by
-    // the round-5 sf1 amplified run, where key domains sit at 1e9+
-    val arrival = (pmod(col("event_id"), lit(2147483648L)) * lit(1103515245L) + lit(12345L)) % lit(2147483648L)
-    // chunk count scales with the cluster (4× parallelism) so the
-    // within-chunk window's parallelism isn't capped at a constant when
-    // the data grows 1000×; pow2 so chunkWidth divides the 2^31 axis
-    // exactly. The 4096 cap bounds the O(chunks²) exploded prefix at
-    // ~8.4M constant-size rows (still one cheap hash agg) — past that,
-    // add a second prefix level instead of more chunks.
-    val nChunks = Chunking.chunkCount(spark)
-    val chunkWidth = 2147483648L / nChunks
-    val chunked = Tables.events(spark, dir)
-      .withColumn("__arr", arrival)
-      .withColumn("__chunk", (col("__arr") / chunkWidth).cast("long"))
-    // pass 1: per-chunk max event time (partial+final hash agg)
-    val chunkMax = chunked.groupBy(col("__chunk")).agg(max(col("ts")).as("__cmax"))
-    // pass 2: exclusive prefix max — each chunk's max contributes to all
-    // later chunks; nChunks²/2 rows max, plain equi hash aggregate
-    // guard the exploded targets: sequence(start, stop) runs DESCENDING
-    // when start > stop, so the last chunk would otherwise emit
-    // [nChunks, nChunks-1] and contribute its own max to its own
-    // prefix — making the "exclusive" prefix inclusive for that chunk
-    val prefix = chunkMax
-      .select(col("__chunk").as("__src"),
-        explode(sequence(col("__chunk") + 1, lit(nChunks.toLong - 1))).as("__chunk"),
-        col("__cmax"))
-      .filter(col("__chunk") > col("__src"))
-      .groupBy(col("__chunk")).agg(max(col("__cmax")).as("__pmax"))
-    // pass 3: within-chunk running max (partitioned window) ⊔ prefix;
-    // left join: the first chunk has no predecessors → null __pmax
-    val wIn = Window.partitionBy(col("__chunk")).orderBy(col("__arr"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    chunked.join(broadcast(prefix), Seq("__chunk"), "left")
-      .withColumn("__inmax", max(col("ts")).over(wIn))
-      // greatest() skips nulls: first row of a chunk has no __inmax, the
-      // first chunk has no __pmax; both null (global first row) → null →
-      // the filter drops it, matching the empty-preceding-frame oracle
-      .withColumn("max_ts_so_far", greatest(col("__inmax"), col("__pmax")))
-      .filter(col("ts") < col("max_ts_so_far") - expr("INTERVAL 10 MINUTES"))
+    * deterministic LCG permutation of event_id ([[graft.api.Graft.lcg]],
+    * identical integer arithmetic in Spark and the SQL oracle; event_id
+    * breaks ties). Returns the dropped rows. The running max is the
+    * global MAX scan of the [[StratifiedRank]] kernel over the arrival
+    * key, compared in epoch microseconds — exact, since ts has
+    * microsecond precision. */
+  def qLateData(spark: SparkSession, dir: String): DataFrame =
+    StratifiedRank.stratifiedRank(
+        Tables.events(spark, dir).select(col("event_id"), col("ts"), col("user_id")),
+        Nil, graft.api.Graft.lcg(col("event_id"), 2147483648L), Seq(col("event_id")),
+        weight = Some(unix_micros(col("ts"))), psumName = "__max_before",
+        uniformKey = true, running = StratifiedRank.Running.Max)
+      .filter(unix_micros(col("ts")) < col("__max_before") - lit(600000000L))
       .select(col("event_id"), col("ts"), col("user_id"))
-  }
 
   /** Exact dedup (north star; exactly-once analog of O1's doc,
     * dis/DISUtils.scala:43-45): distinct (user_id, event_type) pairs.

@@ -131,10 +131,11 @@ object SftQueries {
     * composed sftAssemble ∘ packSequences and paid collect_list +
     * array_sort + array_join over the whole corpus, plus a recompute
     * under the pack sketch: 3.4× slower at sf1 for identical output).
-    * That session-grain length table (two longs per session — the
-    * q_phash_dupes footprint argument) is eagerly localCheckpoint'ed,
-    * so packSequences' quantile sketch and pack join run against the
-    * tiny materialization instead of re-deriving the corpus subtree;
+    * The span table is persisted once, so the session-grain length
+    * table (two longs per session — the q_phash_dupes footprint
+    * argument) is aggregated from it a single time, and packSequences
+    * persists that small table for its own sketch and pack passes
+    * instead of re-deriving the corpus subtree;
     * the packed offsets then join back to the spans on (user_id, sid),
     * the prefix of the partitioning the spans already carry. The
     * composite pack id `user_id·2^20 + sid` keeps pack order ==
@@ -162,8 +163,9 @@ object SftQueries {
     // the session-length agg and the final pack join — persist it once
     // instead of eagerly checkpointing the derived session-length table
     // (r19 A/B: sessions-ckpt 1.29 s, sessions-persist 1.11 s,
-    // spans-persist 1.01 s: the cache also serves packSequences' own
-    // sketch action, and nothing re-runs the window chain)
+    // spans-persist 1.01 s: nothing re-runs the window chain, and the
+    // session-length table that packSequences' kernel persists for its
+    // sketch and pack passes is aggregated from this cache once)
     val spans = spans0.persist()
     val guardedSid = when(col("sid") < Stride, col("sid"))
       .otherwise(raise_error(concat(lit("packSpanTable: session id overflows the "),

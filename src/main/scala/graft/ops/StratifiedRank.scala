@@ -1,52 +1,110 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed per-stratum ranking — the scale-safe replacement for
-  * `row_number().over(Window.partitionBy(lowCardCols).orderBy(...))`.
+/** The engine's one chunked prefix scan: a per-stratum (or global)
+  * rank and exclusive running aggregate in a total order, without a
+  * data-sized single-task window. It replaces
+  * `row_number().over(Window.partitionBy(lowCardCols).orderBy(...))`
+  * and `sum/max(w).over(Window.orderBy(...).rowsBetween(unbounded, -1))`:
+  * a dense window partitioned by a FIXED-cardinality key (source, lang,
+  * event_type...) is a single-task sort per stratum, and an
+  * unpartitioned one is a single-task sort of everything — at 100× each
+  * task sorts 100× the rows (the round-11 weak class). Callers: with
+  * strata, q_pref_pairs(_quality), q_ntile, q_rank_funcs, q_interleave
+  * and [[graft.api.Graft.tokenBudgetSample]]; without,
+  * [[graft.api.Graft.packSequences]] (global prefix sum) and
+  * [[CoreQueries.qLateData]] (global running max).
   *
-  * A dense window partitioned by a FIXED-cardinality key (source, lang,
-  * event_type...) is a single-task sort per stratum: the partition key's
-  * cardinality does not grow with the data, so at 100× each task sorts
-  * 100× the rows — the "weak" plan class round-11 flagged in
-  * q_pref_pairs / q_ntile / q_rank_funcs / q_interleave. This kernel is
-  * the q_pack_sequences two-pass prefix shape generalized to strata:
-  *
-  *  1. chunk the rank key's value space by an approx-quantile sketch
-  *     (one bounded driver action; `Chunking.chunkCount` scales the
-  *     chunk count with the cluster) — chunks are row-balanced under
-  *     ANY key distribution, and every row with a given key value lands
-  *     in exactly one chunk, so chunk order refines rank order;
-  *  2. aggregate per-(stratum, chunk) row/weight counts — a frame of at
-  *     most |strata| × chunks constant-size rows;
-  *  3. exclusive prefix over that frame (window over ≤ `chunkCount`
-  *     rows per stratum — bounded by the 4096 chunk cap, NOT by data
-  *     size, so the single-task sort it implies is O(4096) forever);
+  *  1. chunk the rank key's value space. Boundaries only decide
+  *     chunking, never values, so they come as cheaply as possible: a
+  *     key that is the engine's 31-bit LCG ([[graft.api.Graft.lcg]] mod
+  *     2^31, `uniformKey`) is uniform by construction and chunks on the
+  *     analytic grid with no pass at all; any other key feeds a seeded
+  *     5% sample to an approx-quantile sketch — the sample-for-balance
+  *     tradeoff of Spark's own RangePartitioner, one bounded driver
+  *     action costing 5% of one scan, with the sketch error shrinking
+  *     with the quantile step so adjacent boundaries don't collapse.
+  *     Sketched chunks are row-balanced under ANY key distribution
+  *     (uniform-width chunks would collapse a skewed id space into one
+  *     chunk), and every row with a given key value lands in exactly one
+  *     chunk, so chunk order refines rank order;
+  *  2. aggregate per-(stratum, chunk) row counts and weights — a frame
+  *     of at most |strata| × chunks constant-size rows;
+  *  3. exclusive prefix over that frame. With strata, a window
+  *     partitioned by the strata over ≤ `chunkCount` rows each. With
+  *     none, the explode+groupBy form of [[explodePrefix]]:
+  *     `Window.partitionBy(lit(0))` would be constant-folded into an
+  *     unpartitioned window, and a global window is what this kernel
+  *     exists to avoid;
   *  4. broadcast the prefix back and add the within-(stratum, chunk)
   *     window — parallelism = strata × chunks, each task sorting
   *     ~rows/chunks rows regardless of stratum skew.
   *
-  * The quantile sketch only decides chunking, never values: the rank is
-  * exact and deterministic for any boundary set. Requirements: the rank
-  * key must be numeric, non-null, and ASCENDING in the desired rank
-  * order (negate for descending); (rankKey, tieCols) must totally order
-  * each stratum for `rankName` to be deterministic; strata columns must
-  * be low-cardinality (the broadcast prefix is |strata| × chunks rows —
-  * for id-like partition keys a plain window is already scale-safe and
-  * this kernel is the wrong tool). Rows whose rank key collapses to the
-  * same double co-locate in one chunk and are ordered there by the
-  * exact (rankKey, tieCols) — correct for any monotone numeric→double
-  * cast.
+  * The chunk count ([[chunkCount]]) is 4× the cluster's default
+  * parallelism, at least 64, rounded up to a power of two (so the 2^31
+  * grid divides exactly) and capped at 4096. A constant would cap the
+  * within-chunk parallelism forever (at 100 TB each of 64 chunks would
+  * sort ~1.5 TB on one task); the cap bounds the prefix step, whose
+  * explode form is O(chunks²) rows — 4096² / 2 ≈ 8.4M tiny rows is
+  * still one cheap hash aggregate, and the window form sorts ≤ 4096
+  * rows per stratum. Past that, add a second prefix level instead of
+  * more chunks.
+  *
+  * The rank and the aggregate are exact and deterministic for any
+  * boundary set. Requirements: the rank key must be numeric, non-null,
+  * and ASCENDING in the desired order (negate for descending);
+  * (rankKey, tieCols) must totally order each stratum; strata columns
+  * must be low-cardinality (the broadcast prefix is |strata| × chunks
+  * rows — for id-like partition keys a plain window is already
+  * scale-safe and this kernel is the wrong tool). Rows whose rank key
+  * collapses to the same double co-locate in one chunk and are ordered
+  * there by the exact (rankKey, tieCols) — correct for any monotone
+  * numeric→double cast.
   *
   * Output: the input columns plus `rankName` (1-based per-stratum
   * row_number in (rankKey, tieCols) order) and, when `weight` is given,
-  * `psumName` (the EXCLUSIVE per-stratum prefix sum of the weight in
-  * the same order — rank/cume_dist over tie-grouped frames fall out of
-  * it, see EvalQueries.qRankFuncs).
+  * `psumName`: the `running` aggregate of the long-cast weight over
+  * every EARLIER row of the stratum in the same order (SUM: 0 on the
+  * first row; MAX: null there). rank/cume_dist over tie-grouped frames
+  * fall out of it, see EvalQueries.qRankFuncs.
   */
 object StratifiedRank {
+
+  /** The running aggregate of the weight: its Spark aggregate (applied
+    * per chunk, over the chunk prefix and inside the chunk), its value
+    * over no rows, and how the earlier chunks' prefix meets the earlier
+    * rows of the row's own chunk. */
+  final class Running private (val agg: Column => Column,
+      val orEmpty: Column => Column, val combine: (Column, Column) => Column)
+
+  object Running {
+    val Sum = new Running(sum(_), coalesce(_, lit(0L)), (pre, in) => pre + coalesce(in, lit(0L)))
+    // greatest skips nulls: null only when neither side saw a row
+    val Max = new Running(max(_), identity, greatest(_, _))
+  }
+
+  /** Chunk count: 4× default parallelism in [64, 4096], rounded up to a
+    * power of two (the scale argument is in the object scaladoc). */
+  def chunkCount(spark: SparkSession): Int = Integer.highestOneBit(
+    2 * math.min(math.max(64, 4 * spark.sparkContext.defaultParallelism), 4096) - 1)
+
+  /** Exclusive prefix over a constant-size frame keyed by a dense long
+    * ordinal `key` ≤ `last`: every row's other columns are exploded to
+    * each LATER key and re-aggregated by `aggs` — O(keys²) constant-size
+    * rows and one hash aggregate, never a window. Keys with no
+    * predecessor get no row (callers left-join and fill). */
+  private[graft] def explodePrefix(frame: DataFrame, key: String, last: Long,
+      aggs: Column*): DataFrame =
+    frame.select((col(key).as("__src") +:
+        explode(sequence(col(key) + 1, lit(last))).as(key) +:
+        frame.columns.filter(_ != key).map(col)): _*)
+      // sequence(start, stop) runs DESCENDING when start > stop: the last
+      // key would otherwise feed its own prefix
+      .filter(col(key) > col("__src"))
+      .groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
 
   def stratifiedRank(
       df: DataFrame,
@@ -56,9 +114,9 @@ object StratifiedRank {
       weight: Option[Column] = None,
       rankName: String = "__srank",
       psumName: String = "__spsum",
-      fixedBoundaries: Option[Array[Double]] = None): DataFrame = {
-    require(strata.nonEmpty, "stratifiedRank needs at least one stratum column")
-    val n = Chunking.chunkCount(df.sparkSession)
+      uniformKey: Boolean = false,
+      running: Running = Running.Sum): DataFrame = {
+    val n = chunkCount(df.sparkSession)
     val base0 = df.withColumn("__rk", rankKey.cast("double"))
     val base1 = weight.fold(base0)(w => base0.withColumn("__w", w.cast("long")))
     // the input subtree feeds THREE consumers (the 5% quantile-sketch
@@ -68,17 +126,9 @@ object StratifiedRank {
     // qRankFuncs' tie-group agg) run a single time. Lazy and
     // spillable; recomputes on executor loss.
     val base = base1.persist()
-    // Boundaries only decide CHUNKING, never values, so they come as
-    // cheaply as possible: a caller whose key distribution is known
-    // (e.g. the uniform 31-bit LCG of tokenBudgetSample) passes an
-    // analytic grid and the sketch pass disappears entirely; otherwise
-    // a seeded 5% sample feeds the quantile sketch — the same
-    // sample-for-balance tradeoff Spark's own RangePartitioner makes,
-    // cutting the extra pass at 100 TB to 5% of one scan. Sketch error
-    // shrinks with the quantile step so adjacent boundaries don't
-    // collapse (the Graft.packSequences policy).
-    val boundaries = fixedBoundaries.getOrElse(
-      base.sample(withReplacement = false, 0.05, seed = 42L)
+    val boundaries = (
+      if (uniformKey) (1 until n).map(i => 2147483648.0 * i / n).toArray
+      else base.sample(withReplacement = false, 0.05, seed = 42L)
         .stat.approxQuantile("__rk",
           (1 until n).map(_ / n.toDouble).toArray, math.min(0.01, 0.25 / n)))
       .distinct.sorted
@@ -88,31 +138,39 @@ object StratifiedRank {
 
     // per-(stratum, chunk) counts — the only data-sized aggregation
     val aggFirst = count(lit(1)).as("__c")
-    val aggRest = weight.map(_ => sum(col("__w")).as("__ws")).toSeq
+    val aggRest = weight.map(_ => running.agg(col("__w")).as("__ws")).toSeq
     val counts = chunked.groupBy((strataCols :+ col("__chunk")): _*)
       .agg(aggFirst, aggRest: _*)
 
-    // exclusive prefix over the bounded counts frame: ≤ chunkCount rows
-    // per stratum by construction, so this window never sees data-sized
-    // partitions however large the corpus grows
-    val wPre = Window.partitionBy(strataCols: _*).orderBy(col("__chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefixCols = strataCols ++ Seq(
-      col("__chunk"),
-      coalesce(sum(col("__c")).over(wPre), lit(0L)).as("__cpre")) ++
-      weight.map(_ => coalesce(sum(col("__ws")).over(wPre), lit(0L)).as("__wpre"))
-    val prefix = counts.select(prefixCols: _*)
+    // exclusive prefix over the bounded counts frame, broadcast back
+    val joined =
+      if (strata.isEmpty) {
+        val prefix = explodePrefix(counts, "__chunk", boundaries.length,
+          (sum(col("__c")).as("__cpre") +:
+            weight.map(_ => running.agg(col("__ws")).as("__wpre")).toSeq): _*)
+        val j = chunked.join(broadcast(prefix), Seq("__chunk"), "left")
+          .withColumn("__cpre", coalesce(col("__cpre"), lit(0L)))
+        weight.fold(j)(_ => j.withColumn("__wpre", running.orEmpty(col("__wpre"))))
+      } else {
+        val wPre = Window.partitionBy(strataCols: _*).orderBy(col("__chunk"))
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val prefixCols = strataCols ++ Seq(
+          col("__chunk"),
+          coalesce(sum(col("__c")).over(wPre), lit(0L)).as("__cpre")) ++
+          weight.map(_ => running.orEmpty(running.agg(col("__ws")).over(wPre)).as("__wpre"))
+        chunked.join(broadcast(counts.select(prefixCols: _*)), strata :+ "__chunk")
+      }
 
-    // within-(stratum, chunk) window: parallelism strata × chunks; the
-    // exact (rankKey, tieCols) order is applied here, so the double
-    // sketch key never decides a rank, only a chunk
+    // within-(stratum, chunk) window: the exact (rankKey, tieCols) order
+    // is applied here, so the double sketch key never decides a rank,
+    // only a chunk
     val wIn = Window.partitionBy((strataCols :+ col("__chunk")): _*)
       .orderBy((rankKey.asc +: tieCols): _*)
-    val joined = chunked.join(broadcast(prefix), strata :+ "__chunk")
+    val ranked = joined
       .withColumn(rankName, col("__cpre") + row_number().over(wIn).cast("long"))
-    val withPsum = weight.fold(joined)(_ => joined.withColumn(psumName,
-      col("__wpre") + coalesce(
-        sum(col("__w")).over(wIn.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))))
+    val withPsum = weight.fold(ranked)(_ => ranked.withColumn(psumName,
+      running.combine(col("__wpre"),
+        running.agg(col("__w")).over(wIn.rowsBetween(Window.unboundedPreceding, -1)))))
     // the using-columns join moved the strata first; restore the
     // caller's column order so positional consumers are unaffected
     val outCols = df.columns.map(col) ++ (col(rankName) +:

@@ -13,8 +13,8 @@ import graft.streaming.BucketFanout.Vecs
   * ([[graft.api.Graft.embedNearDup]]), for pipelines that cannot re-run
   * corpus-wide dedup on every crawl drop. The embedding analog of
   * [[IncrementalDedup]]; same `foreachBatch` usage, same at-least-once
-  * replay semantics (a replayed vector self-matches at cosine 1.0 and is
-  * rejected).
+  * replay semantics (a replayed vector meets its admitted copy in its
+  * home cell and is rejected).
   *
   * Store layout under `storeDir`:
   *  - `index/` — the [[graft.ops.Ivf.Index]] trained ONCE on the first
@@ -141,12 +141,15 @@ object IncrementalEmbedDedup {
           .cache()
         Admission.releasing(probed) {
           val hist = Vecs.scan(spark, vecsPath, Vecs.bucketsOf(probed, fanout))
-            .select(col("vec").as("__hv"), col("nrm").as("__hnrm"), col("cell"))
-          // no id-inequality filter: a replayed vector must self-match its
-          // admitted copy (cosine 1.0 ≥ threshold) and be rejected
+            .select(col("doc_id").as("__hid"), col("vec").as("__hv"),
+              col("nrm").as("__hnrm"), col("cell"))
+          // a replayed vector meets its admitted copy in its home cell and
+          // is rejected by id: a zero vector's cosine to itself is 0.0, so
+          // only the id makes its replay a no-op too
           probed.join(hist, Seq("cell"))
-            .filter(cos12(float_dot(col("__v"), col("__hv")), col("nrm"), col("__hnrm"))
-              >= threshold)
+            .filter(col("doc_id") === col("__hid") ||
+              cos12(float_dot(col("__v"), col("__hv")), col("nrm"), col("__hnrm"))
+                >= threshold)
             .select(col("doc_id")).distinct()
             .localCheckpoint(true) // materialize before unpersist
         }

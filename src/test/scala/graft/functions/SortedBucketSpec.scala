@@ -32,7 +32,7 @@ class SortedBucketSpec extends SparkTestBase {
   }
 
   test("chunk counts derive from parallelism: pow2 in [64, 4096]") {
-    val n = graft.ops.Chunking.chunkCount(spark)
+    val n = graft.ops.StratifiedRank.chunkCount(spark)
     assert(n >= 64 && n <= 4096 && Integer.bitCount(n) == 1)
     assert(n >= math.min(4 * spark.sparkContext.defaultParallelism, 4096) ||
       n == 4096)

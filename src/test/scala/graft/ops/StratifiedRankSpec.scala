@@ -64,4 +64,40 @@ class StratifiedRankSpec extends SparkTestBase {
       .filter(col("mx") =!= col("n") || col("mn") =!= 1L || col("d") =!= col("n"))
     assert(bad.count() === 0)
   }
+
+  test("no strata: rank and weight prefix sum match the global window (documents)") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("n_chars"))
+      .withColumn("w", pmod(col("doc_id"), lit(7L)) + 1L)
+    val global = Window.orderBy(col("n_chars"), col("doc_id"))
+    val naive = docs
+      .withColumn("rn", row_number().over(global).cast("long"))
+      .withColumn("ps", coalesce(sum(col("w")).over(
+        global.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    val kernel = StratifiedRank.stratifiedRank(docs, Nil, col("n_chars"),
+      Seq(col("doc_id")), weight = Some(col("w")), rankName = "rn", psumName = "ps")
+    assert(kernel.columns.toSeq === naive.columns.toSeq)
+    assert(kernel.count() === naive.count())
+    assert(naive.exceptAll(kernel).count() === 0L)
+  }
+
+  test("running max matches the global running max (events, heavy ties)") {
+    val e = spark.read.parquet(s"$dir/events.parquet")
+      .select(col("event_id"), col("value"))
+      // ~20 distinct keys: chunk boundaries land on tie groups
+      .withColumn("v", floor(col("value") / 7).cast("long"))
+      .withColumn("w", pmod(col("event_id") * 7919L, lit(1000L)))
+    val naive = e.withColumn("mx", max(col("w")).over(
+      Window.orderBy(col("v"), col("event_id"))
+        .rowsBetween(Window.unboundedPreceding, -1)))
+    val kernel = StratifiedRank.stratifiedRank(e, Nil, col("v"),
+      Seq(col("event_id")), weight = Some(col("w")), psumName = "mx",
+      running = StratifiedRank.Running.Max).drop("__srank")
+    val keys = naive.select(countDistinct(col("v"))).head().getLong(0)
+    assert(keys >= 10L && keys <= 40L, s"$keys distinct keys")
+    assert(kernel.count() === naive.count())
+    // the first row in the order has no predecessor: null in both
+    assert(kernel.filter(col("mx").isNull).count() === 1L)
+    assert(naive.exceptAll(kernel).count() === 0L)
+  }
 }

@@ -243,4 +243,17 @@ class IncrementalEmbedDedupSpec extends SparkTestBase {
     assert(out.collect().map(_.getLong(0)).toSet === Set(3L, 5L))
     assert(admittedIds(store) === Set(1L, 2L, 3L, 5L))
   }
+
+  test("a replayed batch holding an all-zero vector is a no-op: the zero " +
+      "vector is stored once") {
+    val store = Files.createTempDirectory("incembed-zero-replay-").toString
+    val batch = Seq(1L -> fam(0, 0), 3L -> new Array[Float](Dim))
+    assert(admit(batch, store).collect().map(_.getLong(0)).toSet === Set(1L, 3L))
+    // the zero vector's cosine to its admitted copy is 0.0: only its id
+    // marks it as already admitted
+    assert(admit(batch, store).count() === 0L, "replay re-admitted vectors")
+    val stored = IncrementalEmbedDedup.admittedVecs(spark, store)
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(stored === Seq(1L, 3L))
+  }
 }
