@@ -342,18 +342,9 @@ trait GraftSelectionOps { this: Graft.type =>
     // inputs — submit them concurrently (guide §2.6) so the second's
     // tasks back-fill the first's tail instead of serializing two
     // full corpus-scan latencies
-    val histPool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val histEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(histPool)
-    val ctF = scala.concurrent.Future(bucketHist(target, targetText, buckets).collect())
-    val crF = scala.concurrent.Future(bucketHist(raw, text, buckets).collect())
-    val (ctRows, crRows) =
-      try {
-        import scala.concurrent.duration.Duration
-        val outcomes = Seq(ctF, crF)
-          .map(f => scala.util.Try(scala.concurrent.Await.result(f, Duration.Inf)))
-        (outcomes(0).get, outcomes(1).get)
-      } finally histPool.shutdown()
+    val Seq(ctRows, crRows) = graft.Jobs.awaitAll(Seq(
+      () => bucketHist(target, targetText, buckets).collect(),
+      () => bucketHist(raw, text, buckets).collect()))
     val ct = new Array[Long](buckets)
     ctRows.foreach(r => ct(r.getLong(0).toInt) = r.getLong(1))
     val cr = new Array[Long](buckets)

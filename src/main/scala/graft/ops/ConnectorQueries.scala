@@ -2,9 +2,6 @@ package graft.ops
 
 import java.nio.file.{Files, Path}
 
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -253,7 +250,7 @@ object ConnectorQueries {
   }
 
   /** A started arm: its query, and the fetch of its rows once it ends. */
-  private type Started = (StreamingQuery, () => DataFrame)
+  private[ops] type Started = (StreamingQuery, () => DataFrame)
 
   /** Starts `writer` as an AvailableNow query checkpointed in a fresh
     * temp dir: every gate arm's query starts here. */
@@ -323,7 +320,10 @@ object ConnectorQueries {
     * caller's thread; then each is awaited, stopped and fetched on its
     * own thread, so a finished arm's fetch (the bm25 arm re-runs
     * IncrementalBm25.search, ~3 s) overlaps the arms still streaming
-    * instead of serializing after them.
+    * instead of serializing after them. Each arm's query is stopped
+    * even when its await fails or times out, and every arm is awaited
+    * before a failure is rethrown ([[graft.Jobs.awaitAll]]), so no
+    * stream outlives a failed pass.
     *
     * The streams plan their shuffle/state stages at min(8, the
     * session's spark.sql.shuffle.partitions): 13 concurrent
@@ -335,7 +335,7 @@ object ConnectorQueries {
     * [[withSessionConf]]: each query clones the session conf at
     * start(), so the caller's session gets its own values back and its
     * batch queries are untouched. */
-  private def runArms(spark: SparkSession, dir: String,
+  private[ops] def runArms(spark: SparkSession, dir: String,
       arms: Seq[(String, (SparkSession, String) => Started)]): Map[String, DataFrame] = {
     // per-arm completion bound: 5 min covers every gate scale up to
     // sf1 with 10x headroom AT THE OLD SEQUENTIAL AWAIT semantics; the
@@ -348,17 +348,14 @@ object ConnectorQueries {
     val started = withSessionConf(spark, "spark.sql.shuffle.partitions" -> width) {
       arms.map { case (n, build) => (n, build(spark, dir)) }
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(started.size)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    val rows = started.map { case (n, (q, fetch)) =>
-      n -> Future {
-        require(q.awaitTermination(timeoutMs), s"streaming $n gate timed out")
-        q.stop()
+    val rows = graft.Jobs.awaitAll(started.map { case (n, (q, fetch)) =>
+      () => {
+        try require(q.awaitTermination(timeoutMs), s"streaming $n gate timed out")
+        finally q.stop()
         fetch()
       }
-    }
-    try rows.map { case (n, f) => n -> Await.result(f, Duration.Inf) }.toMap
-    finally pool.shutdown()
+    })
+    started.map(_._1).zip(rows).toMap
   }
 
   /** Runs `body` with `confs` set on the session, then puts each key

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -101,18 +101,21 @@ object SftQueries {
     * of preceding rendered-turn lengths (a window over the session,
     * same single user_id shuffle). A trainer masks the `user` spans
     * and trains on the `assistant` ones. */
-  def qSftSpans(spark: SparkSession, dir: String): DataFrame = {
+  def qSftSpans(spark: SparkSession, dir: String): DataFrame =
+    spanTable(turns(spark, dir), length(col("rendered")).cast("long"), col("rendered"))
+
+  /** The per-turn span table in any length unit: a turn's span starts at
+    * the exclusive running sum of `len` over its session's turns in
+    * (ts, event_id) order and ends `len` later. Columns (user_id, sid,
+    * turn_idx, role, span_start, span_end) and then `extra`. */
+  private def spanTable(turnRows: DataFrame, len: Column, extra: Column*): DataFrame = {
     val bySession = Window.partitionBy(col("user_id"), col("sid"))
       .orderBy(col("ts"), col("event_id"))
-    turns(spark, dir)
+    turnRows
       .withColumn("span_start", coalesce(
-        sum(length(col("rendered")).cast("long")).over(
-          bySession.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(
-        col("user_id"), col("sid"), col("turn_idx"), col("role"),
-        col("span_start"),
-        (col("span_start") + length(col("rendered")).cast("long")).as("span_end"),
-        col("rendered"))
+        sum(len).over(bySession.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select(Seq(col("user_id"), col("sid"), col("turn_idx"), col("role"),
+        col("span_start"), (col("span_start") + len).as("span_end")) ++ extra: _*)
   }
 
   /** Trainer-ready SFT packing: sessions laid end-to-end in (user_id,
@@ -207,23 +210,15 @@ object SftQueries {
     * [[sftPackTokensBpe]], spec-pinned to produce the identical pack
     * given identical lengths. Plan shape: identical to [[qSftPack]]
     * (the token count is one more map-side expression). */
-  def qSftPackTokens(spark: SparkSession, dir: String): DataFrame = {
-    val bySession = Window.partitionBy(col("user_id"), col("sid"))
-      .orderBy(col("ts"), col("event_id"))
-    val spans = turns(spark, dir)
+  def qSftPackTokens(spark: SparkSession, dir: String): DataFrame =
+    packSpanTable(spanTable(turns(spark, dir)
       // codegen'd byte-scan token count (== the TokenRe regex count,
       // TokenRunCountSpec-pinned): at 100 TB the pre-tokenizer count is
       // this operator's dominant map-side cost, and java.util.regex
       // pays alternation dispatch + region bookkeeping per row
       .withColumn("__tl",
-        graft.functions.TokenRunCount.token_run_count(col("rendered")).cast("long"))
-      .withColumn("span_start", coalesce(
-        sum(col("__tl")).over(bySession.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("user_id"), col("sid"), col("turn_idx"), col("role"),
-        col("span_start"), (col("span_start") + col("__tl")).as("span_end"))
-    packSpanTable(spans, 2048L)
-  }
+        graft.functions.TokenRunCount.token_run_count(col("rendered")).cast("long")),
+      col("__tl")), 2048L)
 
   /** [[qSftPackTokens]] with a LEARNED tokenizer: per-turn lengths come
     * from [[Bpe.encode]] under the caller's trained merge list (token
@@ -238,15 +233,7 @@ object SftQueries {
       merges: Seq[(String, String)], budget: Long): DataFrame = {
     val enc = Bpe.encode(turnsOf(events), "event_id", "rendered", merges,
       extra = Seq("user_id", "sid", "turn_idx", "role", "ts"))
-    val bySession = Window.partitionBy(col("user_id"), col("sid"))
-      .orderBy(col("ts"), col("event_id"))
-    val spans = enc
-      .withColumn("span_start", coalesce(
-        sum(col("n_tokens")).over(bySession.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("user_id"), col("sid"), col("turn_idx"), col("role"),
-        col("span_start"), (col("span_start") + col("n_tokens")).as("span_end"))
-    packSpanTable(spans, budget)
+    packSpanTable(spanTable(enc, col("n_tokens")), budget)
   }
 
   /** Preference-pair construction for reward-model training data: rank

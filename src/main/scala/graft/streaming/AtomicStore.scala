@@ -1,14 +1,101 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Loud in-batch admission guards shared by the Incremental* stores:
-  * every admission store assumes one row per key per micro-batch —
-  * violations would silently race keep-first or merge two payloads
-  * under one key, so they fail the batch instead (the repo's
-  * fail-loudly convention; dedup the batch upstream). */
+/** The lifecycle every Incremental* admission store shares, written
+  * once; each store keeps only its own logic (its subs and
+  * [[BucketFanout.Index]]es, candidate and verify logic, append order
+  * and crash-ordering argument).
+  *
+  * A store declares itself once as a [[Store]]: the prefix its jobs
+  * are labelled with, the subs crash recovery rolls forward, and the
+  * bucketed indexes its compaction policy watches. [[Store.admit]] is
+  * the one admission step:
+  *  1. roll the store forward past a compaction crash
+  *     ([[AtomicStore.recover]]);
+  *  2. record the caller's `spark.job.description`;
+  *  3. pin the batch `MEMORY_AND_DISK`;
+  *  4. fail a batch whose key columns repeat a key ([[requireUnique]],
+  *     labelled `<prefix>/requireUnique`);
+  *  5. run the store's body on the pinned frame, with a `phase(name)`
+  *     labeller that tags the body's jobs `<prefix>/<name>`;
+  *  6. on every exit path, unpersist the batch and restore the caller's
+  *     description, so jobs the caller runs after the return are not
+  *     counted as the store's.
+  *
+  * Why the pin: the batch feeds several separate actions in every
+  * store (the key guard, the batch-side materializations, the
+  * survivors' joins), and an unpinned `foreachBatch` frame re-plans
+  * from the STREAMING SOURCE per action — the sf10 planted run's
+  * per-trigger instrumentation read numInputRows = 4× the trigger cap,
+  * i.e. every ingest byte fetched four times (round 18).
+  * MEMORY_AND_DISK, not localCheckpoint: a 100 TB trigger slice must be
+  * allowed to spill, and eager truncation is unnecessary — only re-read
+  * avoidance is.
+  *
+  * Why the key guard: every admission store assumes one row per key
+  * per micro-batch — violations would silently race keep-first or
+  * merge two payloads under one key, so they fail the batch instead
+  * (the repo's fail-loudly convention; dedup the batch upstream).
+  *
+  * The compaction policy ([[Store.maybeCompact]]) is shared too:
+  * compact when any watched index holds more than `maxFilesPerBucket`
+  * files per occupied bucket. Each trigger appends one file per
+  * non-empty bucket, so files/bucket ≈ triggers since the last
+  * compaction, and the small-files metadata tax grows linearly with
+  * it. The policy runs under the single-operator contract of
+  * [[AtomicStore]]: call it from the ingest's OWN maintenance slot
+  * (e.g. every N triggers inside foreachBatch, or a quiet window) —
+  * never concurrently with other store entry points. Because a
+  * compaction rewrites at the size-scheduled fan-out, a
+  * maintenance-window `maybeCompact` also pre-pays any pending fan-out
+  * migration, so the next trigger's reconcile is a no-op instead of a
+  * mid-trigger rewrite. */
 private[streaming] object Admission {
+
+  /** One store's declaration: its job-label `prefix`, the `subs`
+    * [[AtomicStore.recover]] rolls forward, and the bucketed indexes
+    * its compaction policy `watches`. */
+  final case class Store(prefix: String, subs: Seq[String],
+      watches: Seq[BucketFanout.Index] = Nil) {
+
+    /** Roll the store forward past a compaction crash; every store
+      * entry point calls it. */
+    def recover(spark: SparkSession, storeDir: String): Unit =
+      AtomicStore.recover(spark, storeDir, subs)
+
+    /** The admission step (see [[Admission]]): `body` gets the pinned
+      * batch and the `phase` labeller. `keys` empty skips the key
+      * guard; `op` names the caller in its error. */
+    def admit[T](batch: DataFrame, storeDir: String, op: String, keys: String*)(
+        body: (DataFrame, String => Unit) => T): T = {
+      val sc = batch.sparkSession.sparkContext
+      recover(batch.sparkSession, storeDir)
+      val callerDescription = sc.getLocalProperty("spark.job.description")
+      val phase = (name: String) => sc.setJobDescription(s"$prefix/$name")
+      val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        phase("requireUnique")
+        if (keys.nonEmpty) requireUnique(pinned, op, keys: _*)
+        body(pinned, phase)
+      } finally {
+        batch.unpersist()
+        sc.setJobDescription(callerDescription)
+      }
+    }
+
+    /** The compaction policy (see [[Admission]]): recover, then run
+      * `compact` iff a watched index is over `maxFilesPerBucket` files
+      * per occupied bucket. Returns true iff it compacted. */
+    def maybeCompact(spark: SparkSession, storeDir: String, maxFilesPerBucket: Int)(
+        compact: => Unit): Boolean = {
+      recover(spark, storeDir)
+      val over = watches.exists(_.overFilesPerBucket(spark, storeDir, maxFilesPerBucket))
+      if (over) compact
+      over
+    }
+  }
 
   /** Run `body`, then unpersist `frames` whether it returned or threw:
     * a per-batch cache must not outlive its call on any exit path. */
@@ -16,31 +103,29 @@ private[streaming] object Admission {
     try body finally frames.foreach(_.unpersist())
 
   /** Fail if any `keys` tuple appears more than once in the batch. */
-  def requireUnique(batch: DataFrame, op: String, keys: String*): Unit = {
-    val dup = batch.groupBy(keys.map(col): _*)
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L).limit(1).collect()
-    if (dup.nonEmpty) throw new IllegalArgumentException(
-      s"$op: key (${keys.mkString(", ")}) = " +
-        s"(${dup.head.toSeq.dropRight(1).mkString(", ")}) appears " +
-        s"${dup.head.getLong(keys.size)} times in one batch — in-batch duplicates " +
-        "would silently corrupt keep-first admission; dedup upstream")
-  }
+  def requireUnique(batch: DataFrame, op: String, keys: String*): Unit =
+    requireAtMostOne(batch, op, keys, count(lit(1)), n => s"appears $n times in one batch — " +
+      "in-batch duplicates would silently corrupt keep-first admission; dedup upstream")
 
   /** Fail if any `keys` tuple carries more than one distinct `payload`
     * value in the batch (exact duplicate rows are fine — replays
     * re-offer identical rows by contract; CONFLICTING payloads are
     * not). */
   def requireConsistent(batch: DataFrame, op: String, payload: String,
-      keys: String*): Unit = {
+      keys: String*): Unit =
+    requireAtMostOne(batch, op, keys, countDistinct(col(payload)), n =>
+      s"carries $n conflicting '$payload' values in one batch — a replay re-offers IDENTICAL " +
+        "rows; conflicting payloads would be resolved arbitrarily, so the batch fails instead")
+
+  /** Fail, naming the first offending key, if `n` over any `keys` group
+    * exceeds 1. */
+  private def requireAtMostOne(batch: DataFrame, op: String, keys: Seq[String], n: Column,
+      what: Long => String): Unit = {
     val dup = batch.groupBy(keys.map(col): _*)
-      .agg(countDistinct(col(payload)).as("__n")).filter(col("__n") > 1L)
-      .limit(1).collect()
+      .agg(n.as("__n")).filter(col("__n") > 1L).limit(1).collect()
     if (dup.nonEmpty) throw new IllegalArgumentException(
-      s"$op: key (${keys.mkString(", ")}) = " +
-        s"(${dup.head.toSeq.dropRight(1).mkString(", ")}) carries " +
-        s"${dup.head.getLong(keys.size)} conflicting '$payload' values in one batch — " +
-        "a replay re-offers IDENTICAL rows; conflicting payloads would be " +
-        "resolved arbitrarily, so the batch fails instead")
+      s"$op: key (${keys.mkString(", ")}) = (${dup.head.toSeq.dropRight(1).mkString(", ")}) " +
+        what(dup.head.getLong(keys.size)))
   }
 }
 

@@ -258,9 +258,9 @@ object BucketFanout {
         AtomicStore.swapIn(spark, storeDir, sub)(rewrite(spark, f, pre))
       }
 
-    /** The compaction policy: more than `maxFilesPerBucket` files per
-      * occupied bucket. Every append writes one file per non-empty
-      * bucket, so files/bucket ≈ triggers since the last compaction. */
+    /** More than `maxFilesPerBucket` files per occupied bucket — the
+      * test [[Admission]]'s compaction policy applies to each index a
+      * store watches. */
     def overFilesPerBucket(spark: SparkSession, storeDir: String,
         maxFilesPerBucket: Int): Boolean = {
       val (files, dirs) = AtomicStore.filesPerDir(spark, path(storeDir), dirCol)

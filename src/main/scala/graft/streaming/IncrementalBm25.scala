@@ -72,8 +72,8 @@ object IncrementalBm25 {
     * doc id, so it can never collide with a batch's min-fresh-id). */
   private val FoldedAnchor = Long.MinValue
 
-  private[streaming] def recoverStore(spark: SparkSession, storeDir: String): Unit =
-    AtomicStore.recover(spark, storeDir, Seq("postings", "docstats", "stats"))
+  private[streaming] val store = Admission.Store("admitBatch/bm25",
+    Seq("postings", "docstats", "stats"), watches = Seq(Postings, DocStats))
 
   /** Admit one micro-batch: index every doc_id not yet in the store.
     * Returns per-doc accounting (id, dl, admitted) — `admitted = false`
@@ -86,21 +86,15 @@ object IncrementalBm25 {
   /** Test seam: `crashAfter` injects a crash after the Nth append
     * (1 = postings, 2 = stats) to exercise the commit-record ordering. */
   private[streaming] def admitBatchImpl(batch: DataFrame, id: String, text: String,
-      storeDir: String, crashAfter: Int): DataFrame = {
+      storeDir: String, crashAfter: Int): DataFrame =
+    // loud in-batch duplicate-id guard: two rows sharing an id would
+    // silently MERGE their texts under one doc (the tf groupBy spans both)
+    store.admit(batch, storeDir, "IncrementalBm25.admitBatch", id) { (pinned, phase) =>
     val spark = batch.sparkSession
-    recoverStore(spark, storeDir)
     val docstatsPath = DocStats.path(storeDir)
     val statsPath = s"$storeDir/stats"
 
-    // pin the batch once (round 18; IncrementalDedup rationale): the
-    // uniqueness probe plus the tf materialization would otherwise
-    // each re-read the streaming source
-    val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    // loud in-batch duplicate-id guard: two rows sharing an id would
-    // silently MERGE their texts under one doc (the tf groupBy spans both)
-    Admission.requireUnique(pinned, "IncrementalBm25.admitBatch", id)
-
+    phase("reconcile-fanout")
     val termFan = Postings.reconcile(spark, storeDir)
     val docFan = DocStats.reconcile(spark, storeDir)
 
@@ -118,12 +112,14 @@ object IncrementalBm25 {
       // replays — the read is pruned to the batch's own doc buckets
       val fresh =
         if (AtomicStore.exists(spark, docstatsPath)) {
+          phase("bucket-discovery")
           val seen = DocStats.scan(spark, docstatsPath, DocStats.bucketsOf(dl, docFan))
             .select(col("doc_id"))
           dl.join(seen, Seq("doc_id"), "left_anti")
         } else dl
       // eager checkpoint: the appends below must not feed back into the
       // plan that decided freshness on a recompute
+      phase("fresh-checkpoint")
       val freshIds = fresh.select(col("doc_id"), col("dl")).localCheckpoint(true)
       val fr = freshIds
         .agg(min(col("doc_id")).as("a"), count(lit(1)).as("n"), sum(col("dl")).as("s"))
@@ -132,26 +128,29 @@ object IncrementalBm25 {
       if (fr.getLong(1) > 0L) {
         // 1. postings — on a crash-then-replay these rows appear twice as
         //    EXACT duplicates; reads distinct them, compaction removes them
+        phase("postings-append")
         Postings.append(tf.join(freshIds.select(col("doc_id")), Seq("doc_id")), storeDir, termFan)
         if (crashAfter == 1) throw new InjectedCrash("after postings")
         // 2. stats delta — anchored by the min fresh id so a replayed
         //    duplicate folds away at read time
         import spark.implicits._
+        phase("stats-append")
         Seq((fr.getLong(0), fr.getLong(1), fr.getLong(2))).toDF("anchor", "n", "dlsum")
           .coalesce(1).write.mode(SaveMode.Append).parquet(statsPath)
         if (crashAfter == 2) throw new InjectedCrash("after stats")
         // 3. docstats — the COMMIT RECORD: lands last, so an uncommitted
         //    batch is always fully re-appended by its replay
+        phase("docstats-append")
         DocStats.append(freshIds, storeDir, docFan)
       }
 
+      phase("result-checkpoint")
       dl.select(col("doc_id").as(id), col("dl"))
         .join(freshIds.select(col("doc_id").as(id), lit(true).as("admitted")), Seq(id), "left")
         .withColumn("admitted", coalesce(col("admitted"), lit(false)))
         .localCheckpoint(true)
     }
-    } finally batch.unpersist()
-  }
+    }
 
   /** Corpus aggregate (N, Σdl) from the stats deltas: fold replayed
     * duplicates by anchor, check each anchor against the docstats
@@ -196,7 +195,7 @@ object IncrementalBm25 {
   /** Every admitted doc id (store entry point — rolls a crashed
     * compaction forward first). */
   def admittedDocs(spark: SparkSession, storeDir: String): DataFrame = {
-    recoverStore(spark, storeDir)
+    store.recover(spark, storeDir)
     if (AtomicStore.exists(spark, s"$storeDir/docstats"))
       spark.read.parquet(s"$storeDir/docstats").select(col("doc_id"))
     else spark.range(0).select(col("id").as("doc_id"))
@@ -211,7 +210,7 @@ object IncrementalBm25 {
   def search(spark: SparkSession, storeDir: String, queryTerms: Seq[String],
              k: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "search needs at least one query term")
-    recoverStore(spark, storeDir)
+    store.recover(spark, storeDir)
     val docstatsPath = DocStats.path(storeDir)
     val postingsPath = Postings.path(storeDir)
     if (!AtomicStore.exists(spark, docstatsPath) ||
@@ -246,19 +245,11 @@ object IncrementalBm25 {
       "doc_id", k, k1, b)
   }
 
-  /** Compaction policy ([[IncrementalDedup.maybeCompact]] semantics,
-    * same single-operator contract): compact when EITHER index holds
-    * more than `maxFilesPerBucket` files per occupied bucket; returns
+  /** The compaction policy ([[Admission]]) over both indexes; returns
     * true iff it compacted. */
   def maybeCompact(spark: SparkSession, storeDir: String,
-      maxFilesPerBucket: Int = 32): Boolean = {
-    recoverStore(spark, storeDir)
-    val over = Postings.overFilesPerBucket(spark, storeDir, maxFilesPerBucket) ||
-      DocStats.overFilesPerBucket(spark, storeDir, maxFilesPerBucket)
-    if (!over) return false
-    compactStore(spark, storeDir)
-    true
-  }
+      maxFilesPerBucket: Int = 32): Boolean =
+    store.maybeCompact(spark, storeDir, maxFilesPerBucket)(compactStore(spark, storeDir))
 
   /** Compact all subs: postings/docstats to one file per non-empty
     * bucket, clustered by their read keys; stats RECONCILED to one row
@@ -268,7 +259,7 @@ object IncrementalBm25 {
     * were never replayed (ids absent from docstats). Crash-safe via
     * [[AtomicStore.swapIn]]. */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
-    recoverStore(spark, storeDir)
+    store.recover(spark, storeDir)
     val committed =
       if (AtomicStore.exists(spark, s"$storeDir/docstats"))
         spark.read.parquet(s"$storeDir/docstats").select(col("doc_id")).cache()

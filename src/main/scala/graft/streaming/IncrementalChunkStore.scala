@@ -51,26 +51,20 @@ import graft.streaming.BucketFanout.Chunks
   * the store converges. */
 object IncrementalChunkStore {
 
-  private[streaming] def recoverStore(spark: SparkSession, storeDir: String): Unit =
-    AtomicStore.recover(spark, storeDir, Seq("chunks"))
+  private[streaming] val store =
+    Admission.Store("admitBatch/chunks", Seq("chunks"), watches = Seq(Chunks))
 
-  /** Run one admission step: returns per-doc novelty accounting
+  /** Run one admission step ([[Admission]]): returns per-doc novelty accounting
     * (id, n_chunks, novel_chunks, novel_chars, total_chars,
     * dedup_ratio) and appends the batch's first-seen chunk keys. */
   def admitBatch(batch: DataFrame, id: String, text: String, storeDir: String,
-      window: Int = 16, modulus: Long = 64L): DataFrame = {
-    val spark = batch.sparkSession
-    recoverStore(spark, storeDir)
-    // pin the batch once: the uniqueness probe and the chunk-kernel
-    // materialization are separate actions, and an unpinned
-    // foreachBatch frame re-reads the streaming source per action
-    // (round 18; IncrementalDedup rationale)
-    val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      window: Int = 16, modulus: Long = 64L): DataFrame =
     // two rows sharing an id would collide on (doc, chunk_idx) and the
     // per-doc novelty accounting would silently merge their chunks
-    Admission.requireUnique(pinned, "IncrementalChunkStore.admitBatch", id)
+    store.admit(batch, storeDir, "IncrementalChunkStore.admitBatch", id) { (pinned, phase) =>
+    val spark = batch.sparkSession
     val chunksPath = Chunks.path(storeDir)
+    phase("reconcile-fanout")
     val fanout = Chunks.reconcile(spark, storeDir, _.distinct())
 
     val rows = graft.api.Graft
@@ -81,6 +75,7 @@ object IncrementalChunkStore {
       // 1. history: does the chunk key already exist in the store?
       val withSeen =
         if (AtomicStore.exists(spark, chunksPath)) {
+          phase("bucket-discovery")
           val seen = Chunks.scan(spark, chunksPath, Chunks.bucketsOf(rows, fanout))
             .select(col("chunk_fp"), col("chunk_len")).distinct()
             .withColumn("__seen", lit(true))
@@ -100,6 +95,7 @@ object IncrementalChunkStore {
         .withColumn("__novel",
           !col("__seen") && col("__kid") === col("__id") && col("__kidx") === col("chunk_idx"))
 
+      phase("novelty-checkpoint")
       val perDoc = marked.groupBy(col("__id"))
         .agg(
           count(lit(1)).as("n_chunks"),
@@ -115,17 +111,17 @@ object IncrementalChunkStore {
         .localCheckpoint(true)
 
       // 3. append the first-seen keys, one file per non-empty bucket
+      phase("chunks-append")
       Chunks.append(marked.filter(col("__novel")), storeDir, fanout)
       perDoc
     }
-    } finally batch.unpersist()
-  }
+    }
 
   /** Unique chunk keys stored so far (store entry point — rolls
     * forward a crashed compaction; single-operator contract as
     * [[IncrementalDedup.admittedDocs]]). */
   def storedChunks(spark: SparkSession, storeDir: String): DataFrame = {
-    recoverStore(spark, storeDir)
+    store.recover(spark, storeDir)
     if (AtomicStore.exists(spark, s"$storeDir/chunks"))
       spark.read.parquet(s"$storeDir/chunks")
         .select(col("chunk_fp"), col("chunk_len")).distinct()
@@ -133,23 +129,17 @@ object IncrementalChunkStore {
       .select(col("id").as("chunk_fp"), col("id").as("chunk_len")).limit(0)
   }
 
-  /** Compaction policy ([[IncrementalDedup.maybeCompact]] semantics,
-    * same single-operator contract): compact when the chunk index
-    * holds more than `maxFilesPerBucket` files per occupied bucket;
+  /** The compaction policy ([[Admission]]) over the chunk index;
     * returns true iff it compacted. */
   def maybeCompact(spark: SparkSession, storeDir: String,
-      maxFilesPerBucket: Int = 32): Boolean = {
-    recoverStore(spark, storeDir)
-    if (!Chunks.overFilesPerBucket(spark, storeDir, maxFilesPerBucket)) return false
-    compactStore(spark, storeDir)
-    true
-  }
+      maxFilesPerBucket: Int = 32): Boolean =
+    store.maybeCompact(spark, storeDir, maxFilesPerBucket)(compactStore(spark, storeDir))
 
   /** Compact the append-only index to one file per non-empty bucket,
     * rows de-duplicated and clustered by the join keys; crash-safe via
     * [[AtomicStore.swapIn]] under the single-operator contract. */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
-    recoverStore(spark, storeDir)
+    store.recover(spark, storeDir)
     Chunks.compact(spark, storeDir, _.distinct())
   }
 }

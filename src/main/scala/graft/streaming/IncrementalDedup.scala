@@ -59,41 +59,20 @@ import graft.streaming.BucketFanout.{Bands, Docs}
   * the replay-during-append edge. */
 object IncrementalDedup {
 
-  private def exists(spark: SparkSession, path: String): Boolean =
-    AtomicStore.exists(spark, path)
+  /** Jobs labelled `admitBatch/<phase>` — the perfbench admit workload's
+    * `streaming.phase.<phase>_ms` keys on these seven names. */
+  private[streaming] val store =
+    Admission.Store("admitBatch", Seq("docs", "bands"), watches = Seq(Bands))
 
-  /** Roll the store forward past a compaction crash ([[AtomicStore
-    * .recover]] semantics); called by every store entry point. */
-  private[streaming] def recoverStore(spark: SparkSession, storeDir: String): Unit =
-    AtomicStore.recover(spark, storeDir, Seq("docs", "bands"))
-
-  /** Run one admission step; appends admitted docs + their band rows to
-    * the store and returns the admitted (id, text) frame. */
+  /** Run one admission step ([[Admission]]); appends admitted docs +
+    * their band rows to the store and returns the admitted (id, text)
+    * frame. */
   def admitBatch(batch: DataFrame, id: String, text: String,
-      threshold: Double, storeDir: String): DataFrame = {
-    val spark = batch.sparkSession
-    // each phase labels its jobs admitBatch/<phase>; the caller's own
-    // description (or none) is restored on every exit path, so jobs the
-    // caller runs after the return are not counted as the store's
-    val callerDescription = spark.sparkContext.getLocalProperty("spark.job.description")
-    def phase(s: String): Unit =
-      spark.sparkContext.setJobDescription(s"admitBatch/$s")
-    recoverStore(spark, storeDir)
-    // Pin the batch ONCE: downstream it feeds four separate actions
-    // (uniqueness probe, signature materialization, the survivors
-    // semi-join, the admitted build), and an unpinned foreachBatch
-    // frame re-plans from the STREAMING SOURCE per action — the sf10
-    // planted run's per-trigger instrumentation read numInputRows =
-    // 4× the trigger cap, i.e. every ingest byte fetched four times
-    // (round 18). MEMORY_AND_DISK, not localCheckpoint: a 100 TB
-    // trigger slice must be allowed to spill, and eager truncation is
-    // unnecessary — only re-read avoidance is.
-    val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      threshold: Double, storeDir: String): DataFrame =
     // two rows sharing an id would both survive within-batch
     // canonicalization (self-pairs are excluded) and double-append
-    phase("requireUnique")
-    Admission.requireUnique(pinned, "IncrementalDedup.admitBatch", id)
+    store.admit(batch, storeDir, "IncrementalDedup.admitBatch", id) { (pinned, phase) =>
+    val spark = batch.sparkSession
     val docsPath = Docs.path(storeDir)
     val bandsPath = Bands.path(storeDir)
 
@@ -120,7 +99,7 @@ object IncrementalDedup {
       //    own bucket directories (≤ fanout literals — bounded
       //    driver-side by construction, not by data size).
       val rejectedByHistory: DataFrame =
-        if (exists(spark, bandsPath)) {
+        if (AtomicStore.exists(spark, bandsPath)) {
           phase("bucket-discovery")
           val seenBands = Bands.scan(spark, bandsPath, Bands.bucketsOf(newBands, fanout))
             .select(col("doc_id").as("seen_id"), col("band"), col("bandhash"))
@@ -203,82 +182,50 @@ object IncrementalDedup {
       // the band match but no text to verify against and re-admits
       // (exact-dup band rows, removed by compaction) — unlike the embed
       // store there is no over/under-bound asymmetry between the subs.
-      // Job groups/descriptions are thread-local: set per thread.
-      val appendPool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val appendEc: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(appendPool)
-      val docsF = scala.concurrent.Future {
-        phase("docs-append")
-        Docs.append(admitted, storeDir, docFanout)
-      }
-      val bandsF = scala.concurrent.Future {
-        phase("bands-append")
-        Bands.append(newBands.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi"),
-          storeDir, fanout)
-      }
-      try {
-        import scala.concurrent.duration.Duration
-        // await BOTH before propagating a failure (ADVICE r18): rethrowing
-        // on the first failed future would leave the other append still
-        // writing while the foreachBatch unwinds — the replay could then
-        // overlap an in-flight append (convergent, but a concurrent writer
-        // the sequential code never had)
-        val outcomes = Seq(docsF, bandsF)
-          .map(f => scala.util.Try(scala.concurrent.Await.result(f, Duration.Inf)))
-        outcomes.foreach(_.get)
-      } finally appendPool.shutdown()
+      // Job descriptions are thread-local: each append labels its own.
+      graft.Jobs.awaitAll(Seq(
+        () => {
+          phase("docs-append")
+          Docs.append(admitted, storeDir, docFanout)
+        },
+        () => {
+          phase("bands-append")
+          Bands.append(newBands.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+            storeDir, fanout)
+        }))
       admitted
     }
-    } finally {
-      batch.unpersist()
-      spark.sparkContext.setJobDescription(callerDescription)
     }
-  }
 
   /** The admitted corpus so far (empty frame if nothing admitted).
     * Rolls forward any crashed compaction first, so it is a store ENTRY
     * POINT under the single-operator contract: do not call concurrently
     * with a running [[compactStore]] (see its scaladoc for why). */
   def admittedDocs(spark: SparkSession, storeDir: String): DataFrame = {
-    recoverStore(spark, storeDir)
-    if (exists(spark, s"$storeDir/docs"))
+    store.recover(spark, storeDir)
+    if (AtomicStore.exists(spark, s"$storeDir/docs"))
       spark.read.parquet(s"$storeDir/docs").select(col("doc_id"), col("text"))
     else spark.range(0).select(col("id").as("doc_id"), lit("").as("text")).limit(0)
   }
 
-  /** Compaction POLICY for a long-running ingest: compact when the
-    * append-only band index has accumulated more than
-    * `maxFilesPerBucket` files per occupied bucket (each trigger
-    * appends one file per non-empty bucket, so files/bucket ≈ triggers
-    * since the last compaction — the small-files metadata tax grows
-    * linearly with it). Returns true iff it compacted. Runs under the
-    * same single-operator contract as [[compactStore]]: call it from
-    * the ingest's OWN maintenance slot (e.g. every N triggers inside
-    * foreachBatch, or a quiet window) — never concurrently with other
-    * store entry points. Because [[compactStore]] rewrites at the
-    * size-scheduled fan-out, a maintenance-window `maybeCompact` also
-    * pre-pays any pending fan-out migration, so the next trigger's
-    * reconcile is a no-op instead of a mid-trigger rewrite. */
+  /** The compaction policy ([[Admission]]) over the band index;
+    * returns true iff it compacted. */
   def maybeCompact(spark: SparkSession, storeDir: String,
-      maxFilesPerBucket: Int = 32): Boolean = {
-    recoverStore(spark, storeDir)
-    if (!Bands.overFilesPerBucket(spark, storeDir, maxFilesPerBucket)) return false
-    compactStore(spark, storeDir)
-    true
-  }
+      maxFilesPerBucket: Int = 32): Boolean =
+    store.maybeCompact(spark, storeDir, maxFilesPerBucket)(compactStore(spark, storeDir))
 
   /** Compact the append-only store: every micro-batch appends its own
     * parquet files, so a long-running ingest accumulates
     * batches × partitions small files — the classic metadata killer at
     * scale. Rewrites docs/ and bands/ via a temp-dir + swap; a crash at
     * ANY point (mid-rewrite, between the two renames) is rolled forward
-    * by [[recoverStore]] on the next store operation, so the live store
+    * by the recovery on the next store operation, so the live store
     * always serves the pre-compaction content until the swap completes.
     *
     * Single-OPERATOR contract: pause every other store entry point —
     * `admitBatch` AND the readers (`admittedDocs`) — while compacting,
     * like any parquet compaction. The readers are included because they
-    * too call [[recoverStore]]: a reader racing an in-flight compaction
+    * too recover the store: a reader racing an in-flight compaction
     * cannot tell "crashed" from "running" and would delete the
     * in-progress `__compact_*` rewrite or rename `__old_*` back inside
     * the two-rename window, failing the compaction's second rename.
@@ -291,7 +238,7 @@ object IncrementalDedup {
     * with rows clustered by the read keys — so the per-batch pruned
     * reads open exactly one file per probed bucket. */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
-    recoverStore(spark, storeDir) // clears any crashed prior compaction
+    store.recover(spark, storeDir) // clears any crashed prior compaction
     Docs.compact(spark, storeDir)
     Bands.compact(spark, storeDir)
   }

@@ -49,12 +49,11 @@ object IncrementalEmbedDedup {
 
   private def clamp(t: Double): Double = math.max(-1.0, math.min(1.0, t))
 
-  /** Roll the store forward past a compaction crash ([[AtomicStore
-    * .recover]] semantics); called by every store entry point. `index/`
-    * is never swapped — it is written once, atomically enough via its
+  /** [[Admission]]'s declaration. `index/` is not a recovered sub: it
+    * is never swapped, only written once, atomically enough via its
     * `_SUCCESS` marker (see [[indexReady]]). */
-  private[streaming] def recoverStore(spark: SparkSession, storeDir: String): Unit =
-    AtomicStore.recover(spark, storeDir, Seq("vecs", "radii"))
+  private[streaming] val store =
+    Admission.Store("admitBatch/embed", Seq("vecs", "radii"), watches = Seq(Vecs))
 
   /** The index bootstrap is complete only when the write committed: a
     * crash mid-save leaves a directory without `_SUCCESS`, and the
@@ -75,7 +74,7 @@ object IncrementalEmbedDedup {
     radii
   }
 
-  /** Run one admission step; appends admitted vectors + their radii rows
+  /** Run one admission step ([[Admission]]); appends admitted vectors + their radii rows
     * to the store and returns the admitted (id, vec) frame.
     *
     * Admission semantics (deterministic given batch boundaries), exactly
@@ -87,30 +86,25 @@ object IncrementalEmbedDedup {
     *     id) per within-batch duplicate cluster. */
   def admitBatch(batch: DataFrame, id: String, vec: String,
       threshold: Double, storeDir: String,
-      ivf: Ivf.Params = Ivf.Params()): DataFrame = {
-    val spark = batch.sparkSession
-    recoverStore(spark, storeDir)
-    // Pin the batch once: it feeds several separate actions below
-    // (uniqueness probe, emptiness probe, home assignment, the radius
-    // probe, the survivors anti-join), and an unpinned foreachBatch
-    // frame re-plans from the STREAMING SOURCE per action — the sf10
-    // planted run's per-trigger instrumentation read numInputRows at
-    // ~3x the trigger cap (round 18; IncrementalDedup rationale).
-    val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+      ivf: Ivf.Params = Ivf.Params()): DataFrame =
     // two rows sharing an id would both survive within-batch
     // canonicalization (self-pairs are excluded) and double-append
-    Admission.requireUnique(pinned, "IncrementalEmbedDedup.admitBatch", id)
+    store.admit(batch, storeDir, "IncrementalEmbedDedup.admitBatch", id) { (pinned, phase) =>
+    val spark = batch.sparkSession
     val vecsPath = Vecs.path(storeDir)
     val radiiPath = s"$storeDir/radii"
     val indexPath = s"$storeDir/index"
 
     val newVecs = pinned.select(col(id).as("doc_id"), col(vec).as("vec"))
-    if (newVecs.isEmpty) return newVecs
+    phase("empty-probe")
+    if (newVecs.isEmpty) newVecs
+    else {
+    phase("reconcile-fanout")
     val fanout = Vecs.reconcile(spark, storeDir)
 
     // amortized index: trained once, on the first non-empty batch; all
     // radii live in radii/ (the saved radii are the train-time zeros)
+    phase("index")
     val index =
       if (indexReady(spark, indexPath)) Ivf.load(spark, indexPath)
       else {
@@ -123,6 +117,7 @@ object IncrementalEmbedDedup {
 
     // home assignment once per batch (map-only kernel); reused for the
     // admitted append below — localCheckpoint so it runs once
+    phase("home-assign")
     val home = Ivf.assign(newVecs, "doc_id", "vec", index.centroids, 1)
       .select(col("doc_id"), col("vec"), col("nrm"), col("cell"), col("cell_angle"))
       .localCheckpoint(true)
@@ -132,6 +127,7 @@ object IncrementalEmbedDedup {
     //    (≤ fanout literals — bounded driver-side by construction)
     val rejectedByHistory: DataFrame =
       if (AtomicStore.exists(spark, vecsPath)) {
+        phase("bucket-discovery")
         val radii = liveRadii(spark, radiiPath, index.nlist)
         // cached: the bucket-discovery collect is its own action and the
         // probe kernel would otherwise re-run before the candidate join
@@ -161,6 +157,7 @@ object IncrementalEmbedDedup {
     //    (reusing the amortized centroids — the indexed overload measures
     //    the survivors' own radii, so probing stays complete) →
     //    connected clusters → keep the min id of each cluster
+    phase("within-batch-cc")
     val pairs = graft.api.Graft.embedNearDup(survivors, "doc_id", "vec", threshold, index)
     val clusters = graft.api.Graft.dupClusters(pairs, "id_a", "id_b")
       .withColumnRenamed("id", "doc_id")
@@ -168,6 +165,7 @@ object IncrementalEmbedDedup {
     // the admitted plan reads the store's current files via the history
     // anti-join, so a lazy recompute after the appends below would see
     // its own output
+    phase("admitted-checkpoint")
     val admittedHome = home
       .join(survivors.join(clusters, Seq("doc_id"), "left")
         .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
@@ -178,36 +176,32 @@ object IncrementalEmbedDedup {
     // radii as the OVER-bound side (rows whose vectors never landed only
     // cause extra probing; the reverse order could under-bound a cell's
     // radius and silently miss qualifying pairs on every later batch)
+    phase("radii-append")
     admittedHome.groupBy(col("cell")).agg(max(col("cell_angle")).as("radius"))
       .coalesce(1)
       .write.mode(SaveMode.Append).parquet(radiiPath)
+    phase("vecs-append")
     Vecs.append(admittedHome, storeDir, fanout)
     admittedHome.select(col("doc_id"), col("vec"))
-    } finally batch.unpersist()
-  }
+    }
+    }
 
   /** The admitted vectors so far (empty frame if nothing admitted).
-    * A store ENTRY POINT under the single-operator contract (it calls
-    * [[recoverStore]]): do not run concurrently with [[compactStore]]. */
+    * A store ENTRY POINT under the single-operator contract (it
+    * recovers the store): do not run concurrently with [[compactStore]]. */
   def admittedVecs(spark: SparkSession, storeDir: String): DataFrame = {
-    recoverStore(spark, storeDir)
+    store.recover(spark, storeDir)
     if (AtomicStore.exists(spark, s"$storeDir/vecs"))
       spark.read.parquet(s"$storeDir/vecs").select(col("doc_id"), col("vec"))
     else spark.range(0).select(col("id").as("doc_id"),
       lit(null).cast("array<float>").as("vec"))
   }
 
-  /** Compaction policy ([[IncrementalDedup.maybeCompact]] semantics,
-    * same single-operator contract): compact when the vector index
-    * holds more than `maxFilesPerBucket` files per occupied bucket;
+  /** The compaction policy ([[Admission]]) over the vector index;
     * returns true iff it compacted. */
   def maybeCompact(spark: SparkSession, storeDir: String,
-      maxFilesPerBucket: Int = 32): Boolean = {
-    recoverStore(spark, storeDir)
-    if (!Vecs.overFilesPerBucket(spark, storeDir, maxFilesPerBucket)) return false
-    compactStore(spark, storeDir)
-    true
-  }
+      maxFilesPerBucket: Int = 32): Boolean =
+    store.maybeCompact(spark, storeDir, maxFilesPerBucket)(compactStore(spark, storeDir))
 
   /** Compact the append-only store: vecs/ collapses to one file per
     * non-empty bucket (rows clustered by cell — the pruned-read-optimal
@@ -216,7 +210,7 @@ object IncrementalEmbedDedup {
     * .compactStore]], and under the same single-operator contract
     * (writers AND readers paused — see that method's scaladoc). */
   def compactStore(spark: SparkSession, storeDir: String): Unit = {
-    recoverStore(spark, storeDir)
+    store.recover(spark, storeDir)
     Vecs.compact(spark, storeDir)
     AtomicStore.swapIn(spark, storeDir, "radii") { (live, tmp) =>
       spark.read.parquet(live)

@@ -33,8 +33,8 @@ import graft.api.Graft
   * falls out of the top-k cut for free) so [[current]] is a plain
   * scan — no rank window over the store on the read path.
   * Maintenance is crash-safe through [[AtomicStore.swapIn]] (temp dir +
-  * two renames, roll-forward [[AtomicStore.recover]] on every entry),
-  * under the store's single-operator contract.
+  * two renames, rolled forward by the [[Admission]] step and by every
+  * reader), under the store's single-operator contract.
   *
   * Scale shape: per trigger, the batch is keyed (shuffle-free
   * projection), unioned with the |strata|·k-row store, and cut by the
@@ -45,6 +45,9 @@ import graft.api.Graft
 object IncrementalReservoir {
 
   private val Sub = "sample"
+
+  /** Nothing to compact (the store never grows), so no watched index. */
+  private[streaming] val store = Admission.Store("admitBatch/reservoir", Seq(Sub))
 
   /** Create an empty store. Call once before streaming starts. */
   def init(spark: SparkSession, storeDir: String): Unit = {
@@ -62,14 +65,11 @@ object IncrementalReservoir {
   def admitBatch(batch: DataFrame, stratum: String, id: String, weight: String,
       k: Int, storeDir: String): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    // no key guard: exact re-offers are fine, conflicting ones are
+    // caught by requireConsistent below
+    store.admit(batch, storeDir, "IncrementalReservoir.admitBatch") { (pinned, phase) =>
     val spark = batch.sparkSession
-    AtomicStore.recover(spark, storeDir, Seq(Sub))
     val live = s"$storeDir/$Sub"
-    // pin the batch once: the consistency guard and the reservoir
-    // rebuild are separate actions over it (round 18; IncrementalDedup
-    // rationale)
-    val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
     val keyed = pinned
       .filter(col(weight).cast("double") > 0.0d)
       .select(col(stratum).cast("string").as("stratum"),
@@ -85,10 +85,12 @@ object IncrementalReservoir {
     // evicted id is undetectable without remembering every id ever
     // seen — it re-enters on its new key. Keep weights value-derived
     // upstream and that case cannot arise.
+    phase("requireConsistent")
     Admission.requireConsistent(
       spark.read.parquet(live).select(col("stratum"), col("id"), col("weight"))
         .unionByName(keyed.select(col("stratum"), col("id"), col("weight"))),
       "IncrementalReservoir.admitBatch", "weight", "stratum", "id")
+    phase("rebuild")
     val next = spark.read.parquet(live)
       .select(col("stratum"), col("id"), col("weight"), col("__key"))
       .unionByName(keyed)
@@ -103,17 +105,19 @@ object IncrementalReservoir {
           .orderBy(col("__key").desc, col("id").asc)).cast("long"))
       .filter(col("rank") <= k)
       .localCheckpoint(true) // cut lineage: the swap deletes the input files
+    phase("swap")
     AtomicStore.swapIn(spark, storeDir, Sub) { (_, tmp) =>
       next.write.parquet(tmp)
     }
+    phase("read-back")
     current(spark, storeDir)
-    } finally batch.unpersist()
+    }
   }
 
   /** The store's sample as (stratum, id, weight, rank) — a plain scan
     * of the persisted admission state, no window on the read path. */
   def current(spark: SparkSession, storeDir: String): DataFrame = {
-    AtomicStore.recover(spark, storeDir, Seq(Sub))
+    store.recover(spark, storeDir)
     spark.read.parquet(s"$storeDir/$Sub")
       .select(col("stratum"), col("id"), col("weight"), col("rank"))
   }

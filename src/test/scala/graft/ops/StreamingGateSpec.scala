@@ -59,4 +59,33 @@ class StreamingGateSpec extends SparkTestBase {
     assert(ConnectorQueries.qStreamingChunks(spark, dir).count() > 0)
     assert(ConnectorQueries.qStreamingDecontam(spark, dir).count() > 0)
   }
+
+  test("runArms: a failed arm is rethrown only after every other arm has " +
+      "stopped, so no stream outlives the pass") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    def arm(fail: Boolean): (SparkSession, String) => ConnectorQueries.Started = (s, _) => {
+      val rate = s.readStream.format("rate").option("rowsPerSecond", "100").load()
+      val q = (if (fail) rate.select(raise_error(lit("arm failed"))) else rate)
+        .writeStream.format("noop").start()
+      (q, () => s.emptyDataFrame)
+    }
+    val timeoutKey = "spark.graft.gate.timeoutMs"
+    val found = spark.conf.getOption(timeoutKey)
+    // the healthy arm never terminates on its own: the pass ends with
+    // its await timing out
+    spark.conf.set(timeoutKey, "5000")
+    try {
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        ConnectorQueries.runArms(spark, "", Seq("fails" -> arm(fail = true),
+          "streams" -> arm(fail = false)))
+      }
+      assert(e.getMessage.contains("arm failed"), e.getMessage)
+      assert(spark.streams.active.isEmpty,
+        s"streams still running after the pass threw: ${spark.streams.active.map(_.id).toSeq}")
+    } finally {
+      spark.streams.active.foreach(_.stop())
+      found.fold(spark.conf.unset(timeoutKey))(spark.conf.set(timeoutKey, _))
+    }
+  }
 }

@@ -22,7 +22,12 @@ import graft.SparkTestBase
   *     rename-window crash (live moved aside, swap never completed) is
   *     repaired by the next entry point;
   *  4. compaction safety — compaction preserves the observable state
-  *     and replays remain idempotent afterwards.
+  *     and replays remain idempotent afterwards;
+  *  5. the [[Admission]] step — every admission job is labelled
+  *     `<prefix>/<phase>` and the caller's job description is left as
+  *     found; a rejected batch leaves no persistent RDD behind; the
+  *     compaction policy fires above `maxFilesPerBucket`, is a no-op
+  *     right after, and preserves the observable state.
   *
   * `observe` returns a CANONICAL sequence (sorted, multiset semantics):
   * duplicates must stay visible so a double-append cannot hide behind a
@@ -36,7 +41,11 @@ trait StoreContractBehaviors { this: SparkTestBase =>
     admit: (DataFrame, String) => Unit,
     observe: String => Seq[String],
     crashSubs: Seq[String] = Nil,
-    compact: Option[String => Unit] = None)
+    compact: Option[String => Unit] = None,
+    jobPrefix: Option[String] = None,
+    rejectBatch: Option[() => DataFrame] = None,
+    maybeCompact: Option[(String, Int) => Boolean] = None,
+    compactWatches: Seq[String] = Nil)
 
   private def build(f: StoreFixture): (String, Seq[DataFrame]) = {
     val store = f.mkStore()
@@ -93,6 +102,88 @@ trait StoreContractBehaviors { this: SparkTestBase =>
         assert(f.observe(store) === before, "replay after compaction mutated the store")
       }
     }
+
+    f.jobPrefix.foreach { prefix =>
+      test(s"contract[${f.name}]: admission labels every job $prefix/<phase> and " +
+          "leaves the caller's job description as found") {
+        import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+        val sc = spark.sparkContext
+        val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+        val listener = new SparkListener {
+          override def onJobStart(js: SparkListenerJobStart): Unit =
+            seen.add(Option(js.properties)
+              .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+        }
+        def marker(m: String): Unit = { sc.setJobDescription(m); spark.range(1).count() }
+        val caller = s"contract-caller-${f.name}"
+        val store = f.mkStore()
+        val batches = f.mkBatches()
+        sc.addSparkListener(listener)
+        try {
+          marker("contract-start")
+          sc.setJobDescription(caller)
+          // a fresh store, then appends to it
+          batches.foreach { b =>
+            f.admit(b, store)
+            assert(sc.getLocalProperty("spark.job.description") === caller,
+              "admission did not restore the caller's job description")
+          }
+          // listener events arrive in job order: once the end marker's
+          // start is seen, every admission job's start has been too
+          marker("contract-end")
+          val deadline = System.nanoTime() + 30L * 1000000000L
+          def all = seen.toArray(Array.empty[String]).toSeq
+          while (!all.contains("contract-end") && System.nanoTime() < deadline) Thread.sleep(50)
+          val during = all.dropWhile(_ != "contract-start").dropWhile(_ == "contract-start")
+            .takeWhile(_ != "contract-end")
+          assert(during.nonEmpty, "no admission job seen — the check is vacuous")
+          val stray = during.filterNot(d => d.startsWith(s"$prefix/") && !d.endsWith("/null"))
+            .distinct
+          assert(stray.isEmpty, s"admission jobs not labelled $prefix/<phase>")
+        } finally {
+          sc.setJobDescription(null)
+          sc.removeSparkListener(listener)
+        }
+      }
+    }
+
+    f.rejectBatch.foreach { reject =>
+      test(s"contract[${f.name}]: a rejected batch leaves no persistent RDD behind " +
+          "and the observable state unchanged") {
+        val (store, _) = build(f)
+        val before = f.observe(store)
+        val cached = spark.sparkContext.getPersistentRDDs.keySet
+        intercept[IllegalArgumentException](f.admit(reject(), store))
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- cached
+        assert(leaked.isEmpty, s"persistent RDDs left by the rejected batch: $leaked")
+        assert(f.observe(store) === before, "the rejected batch mutated the store")
+      }
+    }
+
+    f.maybeCompact.foreach { policy =>
+      test(s"contract[${f.name}]: the compaction policy fires above maxFilesPerBucket, " +
+          "is a no-op right after, and preserves the observable state") {
+        val (store, _) = build(f)
+        val before = f.observe(store)
+        val fs = new org.apache.hadoop.fs.Path(store)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // (parquet files, bucket dirs) of one watched index
+        def filesAndDirs(sub: String): (Int, Int) = {
+          val p = new org.apache.hadoop.fs.Path(s"$store/$sub")
+          val dirs = fs.listStatus(p).count(st => st.isDirectory && st.getPath.getName.contains("="))
+          val it = fs.listFiles(p, true)
+          var files = 0
+          while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) files += 1
+          (files, dirs)
+        }
+        val counts = f.compactWatches.map(sub => sub -> filesAndDirs(sub))
+        assert(counts.exists { case (_, (files, dirs)) => files > dirs },
+          s"fixture vacuous: no watched index holds more files than bucket dirs: $counts")
+        assert(policy(store, 1), "policy did not fire above maxFilesPerBucket = 1")
+        assert(!policy(store, 1), "policy re-fired on a just-compacted store")
+        assert(f.observe(store) === before, "the policy's compaction changed the observable state")
+      }
+    }
   }
 }
 
@@ -133,7 +224,11 @@ class StoreContractSpec extends SparkTestBase with StoreContractBehaviors {
       top ++ ids
     },
     crashSubs = Seq("postings", "docstats", "stats"),
-    compact = Some(s => IncrementalBm25.compactStore(spark, s))))
+    compact = Some(s => IncrementalBm25.compactStore(spark, s)),
+    jobPrefix = Some("admitBatch/bm25"),
+    rejectBatch = Some(() => Seq(1L -> bmDoc(1L), 1L -> bmDoc(2L)).toDF("doc_id", "text")),
+    maybeCompact = Some((s, n) => IncrementalBm25.maybeCompact(spark, s, n)),
+    compactWatches = Seq("postings", "docstats")))
 
   // ---- IncrementalDedup: IDENTICAL-copy families (Jaccard 1), so one
   //      admit per family holds regardless of arrival order; observable
@@ -153,7 +248,11 @@ class StoreContractSpec extends SparkTestBase with StoreContractBehaviors {
       .collect().map(r => r.getString(1).split(" ").head.takeWhile(_ != 'w'))
       .sorted.toSeq,
     crashSubs = Seq("docs", "bands"),
-    compact = Some(s => IncrementalDedup.compactStore(spark, s))))
+    compact = Some(s => IncrementalDedup.compactStore(spark, s)),
+    jobPrefix = Some("admitBatch"),
+    rejectBatch = Some(() => Seq(1L -> dedupDoc(1), 1L -> dedupDoc(2)).toDF("doc_id", "text")),
+    maybeCompact = Some((s, n) => IncrementalDedup.maybeCompact(spark, s, n)),
+    compactWatches = Seq("bands")))
 
   // ---- IncrementalEmbedDedup: EXACT-copy vector families (cosine 1);
   //      observable = one-hot family index multiset ----
@@ -175,7 +274,11 @@ class StoreContractSpec extends SparkTestBase with StoreContractBehaviors {
         s"fam${v.indexOf(v.max)}"
       }.sorted.toSeq,
     crashSubs = Seq("vecs", "radii"),
-    compact = Some(s => IncrementalEmbedDedup.compactStore(spark, s))))
+    compact = Some(s => IncrementalEmbedDedup.compactStore(spark, s)),
+    jobPrefix = Some("admitBatch/embed"),
+    rejectBatch = Some(() => Seq(1L -> evec(0), 1L -> evec(1)).toDF("doc_id", "vec")),
+    maybeCompact = Some((s, n) => IncrementalEmbedDedup.maybeCompact(spark, s, n)),
+    compactWatches = Seq("vecs")))
 
   // ---- IncrementalChunkStore: observable = stored chunk-key multiset
   //      (novelty accounting is derivable from it: Σ novel_chars ==
@@ -196,7 +299,12 @@ class StoreContractSpec extends SparkTestBase with StoreContractBehaviors {
     observe = s => IncrementalChunkStore.storedChunks(spark, s)
       .collect().map(r => s"${r.getLong(0)}:${r.getLong(1)}").sorted.toSeq,
     crashSubs = Seq("chunks"),
-    compact = Some(s => IncrementalChunkStore.compactStore(spark, s))))
+    compact = Some(s => IncrementalChunkStore.compactStore(spark, s)),
+    jobPrefix = Some("admitBatch/chunks"),
+    rejectBatch = Some(() => Seq(1L -> chunkDoc(1, 300), 1L -> chunkDoc(2, 300))
+      .toDF("doc_id", "text")),
+    maybeCompact = Some((s, n) => IncrementalChunkStore.maybeCompact(spark, s, n)),
+    compactWatches = Seq("chunks")))
 
   // ---- IncrementalReservoir: observable = the sample itself (the
   //      A-Res key is value-derived, so the top-k is boundary- and
@@ -212,5 +320,8 @@ class StoreContractSpec extends SparkTestBase with StoreContractBehaviors {
       .collect().map(r =>
         s"${r.getString(0)}:${r.getLong(1)}:${r.getDouble(2)}:${r.getLong(3)}")
       .sorted.toSeq,
-    crashSubs = Seq("sample")))
+    crashSubs = Seq("sample"),
+    jobPrefix = Some("admitBatch/reservoir"),
+    // exact re-offers are allowed; a conflicting weight is not
+    rejectBatch = Some(() => Seq(("l0", 1L, 1.0), ("l0", 1L, 2.0)).toDF("lang", "doc_id", "w"))))
 }
