@@ -33,6 +33,14 @@ import org.apache.spark.sql.SparkSession
   * the min degrades to the cold sweep sample, ~1.3x, not 9x. Same
   * total budget.
   *
+  * Each sample (and each warm-prelude query) runs in its own
+  * [[Frames.scope]], so a query ends with what it cached and no sample
+  * reads an earlier sample's cache. After each sample, outside the
+  * timed region, the session's cache must be empty: a plan left cached
+  * fails that sample with a "left a cached plan after its scope" error
+  * and is cleared so the next sample starts clean. The same check runs
+  * once before the first sample.
+  *
   * SPARK_GRAFT_BENCH_ONLY (comma-separated query names) restricts the
   * run — the isolation-audit mode for chasing a drifted number without
   * the other queries contending for the same cores. Streaming-arm
@@ -79,6 +87,10 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val loadBefore = loadAvg1m()
+    // true (and the cache cleared) iff a plan is still cached
+    def leaked(): Boolean = !spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty && { spark.catalog.clearCache(); true }
+    val leakError = "left a cached plan after its scope"
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime()
@@ -108,7 +120,7 @@ object Bench {
         .filterNot(targets.contains).take(2)
         .foreach { w =>
           SparkEntry.queries.get(w).foreach { fn =>
-            try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            try Frames.scope(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
             catch { case e: Throwable =>
               System.err.println(s"[bench] warm prelude $w failed: ${e.getMessage}")
             }
@@ -116,22 +128,21 @@ object Bench {
         }
     }
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    if (leaked()) errors("_warmup") = leakError
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def sample(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
-      var failed = false
-      val sec = time {
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          failed = true
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-      }
-      if (!failed)
+    // the scope's release and the leak check run outside the timed region
+    def sample(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+      try {
+        val sec = Frames.scope(time(fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
+        if (leaked()) throw new IllegalStateException(leakError)
         best(name) = math.min(best.getOrElse(name, Double.MaxValue), sec)
-    }
+      } catch { case e: Throwable =>
+        leaked()
+        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      }
     // hybrid schedule: one interleaved sweep (the window-proof sample,
     // minutes away from the rest), then reps-1 warm back-to-back
     // samples per query (comparable to the historical warm-min pins)

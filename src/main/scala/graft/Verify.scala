@@ -24,12 +24,13 @@ object Verify {
     // sorted: deterministic dump order, and the streaming gate arms hit
     // their group LEADER (alphabetically first) before any deposit
     // consumer — unsorted hash order made some arms fall back to solo
-    // replays the one shared pass exists to avoid
+    // replays the one shared pass exists to avoid. Each query runs in
+    // its own Frames.scope: it ends with what it cached.
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Frames.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

@@ -525,16 +525,14 @@ trait GraftSelectionOps { this: Graft.type =>
     require(minCount >= 1L, s"minCount must be >= 1, got $minCount")
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val toksDf = df.select(tokens(coalesce(col(text), lit(""))).as("__t"))
-    val uni = toksDf.select(explode(col("__t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("__cu"))
-      .persist()
-    val biAll = toksDf.filter(size(col("__t")) >= 2)
+    val uni = graft.Frames.shared(toksDf.select(explode(col("__t")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("__cu")))
+    val biAll = graft.Frames.shared(toksDf.filter(size(col("__t")) >= 2)
       .select(explode(transform(sequence(lit(1), size(col("__t")) - 1),
         i => struct(element_at(col("__t"), i).as("w1"),
           element_at(col("__t"), i + 1).as("w2")))).as("__p"))
       .select(col("__p.w1"), col("__p.w2"))
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .persist()
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     val n = uni.agg(sum(col("__cu")).as("__n"))
     val nb = biAll.agg(sum(col("c12")).as("__nb"))
     val pmi =

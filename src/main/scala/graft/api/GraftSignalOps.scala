@@ -70,8 +70,8 @@ trait GraftSignalOps { this: Graft.type =>
                checkpointEvery: Int = 10): DataFrame = {
     require(checkpointEvery >= 1, s"checkpointEvery must be >= 1, got $checkpointEvery")
     val e = edges.select(col(src).as("__src"), col(dst).as("__dst"))
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst").as("node"))).distinct().cache()
+    val nodes = graft.Frames.shared(e.select(col("__src").as("node"))
+      .union(e.select(col("__dst").as("node"))).distinct())
     val nN = nodes.count().toDouble
     // The rank vector is |nodes| rows of (key, double). When that fits
     // an executor hash relation, broadcasting it turns EVERY
@@ -87,11 +87,10 @@ trait GraftSignalOps { this: Graft.type =>
     // outdeg is nodes-sized like the rank vector: under the same gate,
     // broadcasting it spares the edge table the sort+exchange of a
     // sort-merge join when filling the per-iteration cache
-    val withDeg = e.join(rankSide(outdeg), "__src").cache()
+    val withDeg = graft.Frames.shared(e.join(rankSide(outdeg), "__src"))
     // sinks: nodes that appear only as destinations (no out-edges)
-    lazy val dangling = nodes
-      .join(outdeg.select(col("__src").as("node")), Seq("node"), "left_anti")
-      .cache()
+    lazy val dangling = graft.Frames.shared(nodes
+      .join(outdeg.select(col("__src").as("node")), Seq("node"), "left_anti"))
     var ranks = nodes.select(col("node"), lit(1.0 / nN).as("rank"))
     var it = 0
     while (it < iters) {
@@ -147,10 +146,9 @@ trait GraftSignalOps { this: Graft.type =>
                         lang: String): DataFrame = {
     // one row per doc, but fed by the whole lmScore pipeline: the
     // quantile agg and the bucket join below each re-ran it
-    // unmaterialized (half the r18 ccnet plan's 36 exchanges). Lazy
-    // persist: both consumers share one InMemoryRelation with no
-    // eager-checkpoint barrier job.
-    val scored = lmScore(df, id, text, Seq(lang)).persist()
+    // unmaterialized (half the r18 ccnet plan's 36 exchanges). Shared
+    // lazily ([[graft.Frames]]).
+    val scored = graft.Frames.shared(lmScore(df, id, text, Seq(lang)))
     val cuts = scored.groupBy(col(lang))
       .agg(round(expr(s"percentile(bits_per_token, ${1.0 / 3})"), 6).as("__c1"),
            round(expr(s"percentile(bits_per_token, ${2.0 / 3})"), 6).as("__c2"))
@@ -355,10 +353,9 @@ trait GraftSignalOps { this: Graft.type =>
   def mixtureWeights(df: DataFrame, source: String, text: String,
                      alpha: Double = 0.5,
                      budgetTokens: Long = 1000000L): DataFrame = {
-    val perSource = df.groupBy(col(source))
+    val perSource = graft.Frames.shared(df.groupBy(col(source))
       .agg(count(lit(1)).as("n_docs"),
-        sum(size(tokens(coalesce(col(text), lit(""))))).cast("long").as("n_tokens"))
-      .persist()
+        sum(size(tokens(coalesce(col(text), lit(""))))).cast("long").as("n_tokens")))
     val total = perSource.agg(sum(col("n_tokens")).as("__total"))
     val raw = perSource.crossJoin(broadcast(total))
       .withColumn("__sraw",

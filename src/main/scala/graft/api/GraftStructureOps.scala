@@ -491,7 +491,8 @@ trait GraftStructureOps { this: Graft.type =>
     require(k > 0, "k must be positive")
     val enc = Encoders.row(StructType(Seq(
       StructField("w", StringType), StructField("np", LongType))))
-    val summaries = df.select(coalesce(col(text), lit("")).as("t"))
+    // bounded: ≤ (k+1) rows per partition
+    val summaries = graft.Frames.shared(df.select(coalesce(col(text), lit("")).as("t"))
       .mapPartitions { rows =>
         val counters = scala.collection.mutable.HashMap.empty[String, Long]
         var np = 0L
@@ -519,8 +520,7 @@ trait GraftStructureOps { this: Graft.type =>
           }
         }
         counters.keysIterator.map(w => Row(w, 0L)) ++ Iterator(Row(null, np))
-      }(enc)
-      .persist() // bounded: ≤ (k+1) rows per partition
+      }(enc))
     val n = summaries.agg(sum(col("np"))).head.getLong(0)
     val threshold = math.max(minCount, n / k + 1)
     val candidates = summaries.filter(col("w").isNotNull)

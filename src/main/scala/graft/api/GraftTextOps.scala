@@ -574,9 +574,8 @@ trait GraftTextOps { this: Graft.type =>
     // smoothing join below each re-ran that explode. Materializing the
     // (token, count) table also lets AQE see its real size and
     // broadcast the smoothing join when it fits.
-    val uni = toks.select(explode(col("__ts")).as("w1"))
-      .groupBy(col("w1")).agg(count(lit(1)).as("__c1"))
-      .persist()
+    val uni = graft.Frames.shared(toks.select(explode(col("__ts")).as("w1"))
+      .groupBy(col("w1")).agg(count(lit(1)).as("__c1")))
     val vocab = uni.agg(count(lit(1)).as("__v"))
     val bi = toks.select(keep :+ explode(
         when(size(col("__ts")) >= 2,

@@ -79,17 +79,14 @@ object Bpe {
     * UTF8String compare gives the distributed `orderBy`) — and are
     * pinned identical in BpeSpec, including beyond-BMP input. */
   def train(df: DataFrame, text: String, numMerges: Int,
-            maxLocalVocab: Int = 1 << 16): Seq[(String, String)] = {
-    val wc = df.select(explode(filter(split(col(text), " "), t => t =!= "")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("cnt"))
-      .cache()
+            maxLocalVocab: Int = 1 << 16): Seq[(String, String)] = graft.Frames.scope {
+    val wc = graft.Frames.shared(
+      df.select(explode(filter(split(col(text), " "), t => t =!= "")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("cnt")))
     val n = wc.count()
-    val res =
-      if (n <= maxLocalVocab)
-        trainLocal(wc.collect().map(r => (r.getString(0), r.getLong(1))), numMerges)
-      else trainDistributed(wc, numMerges)
-    wc.unpersist(false)
-    res
+    if (n <= maxLocalVocab)
+      trainLocal(wc.collect().map(r => (r.getString(0), r.getLong(1))), numMerges)
+    else trainDistributed(wc, numMerges)
   }
 
   /** Driver-side merge iteration over a collected word-count table. */
@@ -128,14 +125,16 @@ object Bpe {
   /** Distributed merge rounds over the word-count frame — the path for
     * vocabularies too large to collect. */
   private def trainDistributed(wc: DataFrame, numMerges: Int,
-      sym: String => Array[String] = wordSymbols): Seq[(String, String)] = {
+      sym: String => Array[String] = wordSymbols): Seq[(String, String)] = graft.Frames.scope {
     val enc = Encoders.row(StructType(Seq(
       StructField("syms", ArrayType(StringType)), StructField("cnt", LongType))))
-    var vocab = wc
+    // `held` is the round's shared frame; `vocab`, what the next round
+    // reads, is it or (every 8th round) its eager checkpoint
+    var held = graft.Frames.shared(wc
       .mapPartitions { it =>
         it.map(r => Row(sym(r.getString(0)).toSeq, r.getLong(1)))
-      }(enc)
-      .cache()
+      }(enc))
+    var vocab = held
     vocab.count()
 
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -154,22 +153,23 @@ object Bpe {
       else {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
         merges += ((a, b))
-        val old = vocab
-        vocab = old.mapPartitions { it =>
+        val superseded = held
+        held = graft.Frames.shared(vocab.mapPartitions { it =>
           it.map { r =>
             val syms = r.getSeq[String](0)
             Row(mergeOnce(syms, a, b), r.getLong(1))
           }
-        }(enc).cache()
+        }(enc))
         // truncate lineage every 8 rounds so the plan doesn't deepen
         // unboundedly (same pattern as dupClusters' pointer jumping)
-        if ((merges.length % 8) == 0) vocab = vocab.localCheckpoint(true)
+        vocab = if ((merges.length % 8) == 0) held.localCheckpoint(true) else held
         vocab.count()
-        old.unpersist(false)
+        // the one release ahead of the scope: memory stays bounded over
+        // numMerges rounds
+        superseded.unpersist(false)
         round += 1
       }
     }
-    vocab.unpersist(false)
     merges.toSeq
   }
 
@@ -393,22 +393,18 @@ object Bpe {
     * small. Symbols are byte-mapped chars, so the UTF-8 tie-break
     * ordering of the shared rounds applies unchanged. */
   def trainBytes(df: DataFrame, text: String, numMerges: Int,
-                 maxLocalVocab: Int = 1 << 16): Seq[(String, String)] = {
+                 maxLocalVocab: Int = 1 << 16): Seq[(String, String)] = graft.Frames.scope {
     val enc = Encoders.row(StructType(Seq(StructField("pt", StringType))))
-    val wc = df.select(coalesce(col(text), lit("")).as("__t"))
+    val wc = graft.Frames.shared(df.select(coalesce(col(text), lit("")).as("__t"))
       .mapPartitions { it =>
         it.flatMap(r => preTokenize(r.getString(0)).iterator.map(Row(_)))
       }(enc)
-      .groupBy("pt").agg(count(lit(1)).as("cnt"))
-      .cache()
+      .groupBy("pt").agg(count(lit(1)).as("cnt")))
     val n = wc.count()
-    val res =
-      if (n <= maxLocalVocab)
-        trainLocal(wc.collect().map(r => (r.getString(0), r.getLong(1))),
-          numMerges, byteSymbols)
-      else trainDistributed(wc, numMerges, byteSymbols)
-    wc.unpersist(false)
-    res
+    if (n <= maxLocalVocab)
+      trainLocal(wc.collect().map(r => (r.getString(0), r.getLong(1))),
+        numMerges, byteSymbols)
+    else trainDistributed(wc, numMerges, byteSymbols)
   }
 
   /** Byte-level encoding: pre-tokenize, then the greedy lowest-rank

@@ -77,10 +77,10 @@ object BradleyTerry {
     * strength_fx). The player set must be BOUNDED (driver round-trips
     * one row per player per iteration). */
   def fitMatches(matchesDf: DataFrame, winner: String, loser: String,
-                 iters: Int = MmIters): DataFrame = {
+                 iters: Int = MmIters): DataFrame = graft.Frames.scope {
     val spark = matchesDf.sparkSession
-    val ms = matchesDf
-      .select(col(winner).as("w_src"), col(loser).as("l_src")).cache()
+    val ms = graft.Frames.shared(matchesDf
+      .select(col(winner).as("w_src"), col(loser).as("l_src")))
     // per-player strengths, updated on the driver each iteration
     var s = Map.empty[String, Long].withDefaultValue(FxOne)
     var last: Array[(String, Long, Long, Long)] = Array.empty
@@ -127,7 +127,6 @@ object BradleyTerry {
       s = last.map(t => (t._1, t._4)).toMap.withDefaultValue(FxOne)
       it += 1
     }
-    ms.unpersist(false)
     spark.createDataFrame(last.toSeq)
       .toDF("player", "n_matches", "n_wins", "strength_fx")
   }

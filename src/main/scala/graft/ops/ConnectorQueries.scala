@@ -106,7 +106,7 @@ object ConnectorQueries {
     * per-trigger cap and event-time span. */
   private def feed(spark: SparkSession, dir: String, stream: String, orderKey: String)(
       make: => (DataFrame, Long, Long)): FeedInfo =
-    once(spark, s"$dir#$stream") {
+    once(spark, s"$dir#$stream")(graft.Jobs.described(spark.sparkContext, s"gate/feed/$stream") {
       val r = tempDir(s"dis-$stream-")
       new FileStreamClient(r).createStream(stream, 1)
       val (rows, cap, spanUs) = make
@@ -118,7 +118,7 @@ object ConnectorQueries {
         .option("client.root", r.toString).option("stream", stream)
         .mode("append").save()
       FeedInfo(r, stream, cap, spanUs)
-    }
+    })
 
   /** Streaming read of `feed` at `cap` records per trigger, its JSON
     * values parsed with `schema` into top-level columns. */
@@ -336,7 +336,8 @@ object ConnectorQueries {
     * start(), so the caller's session gets its own values back and its
     * batch queries are untouched. */
   private[ops] def runArms(spark: SparkSession, dir: String,
-      arms: Seq[(String, (SparkSession, String) => Started)]): Map[String, DataFrame] = {
+      arms: Seq[(String, (SparkSession, String) => Started)]): Map[String, DataFrame] =
+    graft.Frames.scope {
     // per-arm completion bound: 5 min covers every gate scale up to
     // sf1 with 10x headroom AT THE OLD SEQUENTIAL AWAIT semantics; the
     // r18 concurrent awaits all start at ~pass start, so later arms no
@@ -352,11 +353,11 @@ object ConnectorQueries {
       () => {
         try require(q.awaitTermination(timeoutMs), s"streaming $n gate timed out")
         finally q.stop()
-        fetch()
+        graft.Jobs.described(spark.sparkContext, s"gate/$n/fetch")(fetch())
       }
     })
     started.map(_._1).zip(rows).toMap
-  }
+    }
 
   /** Runs `body` with `confs` set on the session, then puts each key
     * back as it was found: its previous value, or unset. A streaming
@@ -697,8 +698,9 @@ object ConnectorQueries {
 
   private def buildPsi(spark: SparkSession, dir: String) = {
     val feed = docsFeed(spark, dir, text = false)
-    val ref = Tables.documents(spark, dir)
-      .groupBy(col("lang")).agg(count(lit(1)).as("n_a")).persist()
+    // shared in runArms' scope: every trigger reads it until the pass ends
+    val ref = graft.Frames.shared(Tables.documents(spark, dir)
+      .groupBy(col("lang")).agg(count(lit(1)).as("n_a")))
     // materialize once, before the stream starts; its total is the
     // feed row count the per-arm trigger cap derives from
     val n = ref.agg(sum(col("n_a"))).collect()(0).getLong(0)
@@ -714,7 +716,6 @@ object ConnectorQueries {
           ()
         })
     (q, () => {
-      ref.unpersist()
       // densify trigger ids → data-batch index (bounded frame:
       // |batches| × |langs| rows)
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("__bid"))

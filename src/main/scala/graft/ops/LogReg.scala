@@ -45,9 +45,9 @@ object LogReg {
     * last. */
   def train(df: DataFrame, label: String, text: String,
             numFeatures: Int = 256, epochs: Int = 3,
-            learningRate: Double = 0.5): Array[Double] = {
-    val data = df.select(col(label).cast("double"),
-      coalesce(col(text), lit(""))).cache()
+            learningRate: Double = 0.5): Array[Double] = graft.Frames.scope {
+    val data = graft.Frames.shared(df.select(col(label).cast("double"),
+      coalesce(col(text), lit(""))))
     val n = data.count().toDouble
     val sc = df.sparkSession.sparkContext
     val w = new Array[Double](numFeatures + 1)
@@ -75,7 +75,6 @@ object LogReg {
       }
       epoch += 1
     }
-    data.unpersist(false)
     w
   }
 
@@ -185,9 +184,9 @@ object LogReg {
     * bounded keyed agg); the corpus never shuffles. */
   def trainFixed(df: DataFrame, label: String, text: String,
                  numFeatures: Int = FixedFeatures,
-                 epochs: Int = FixedEpochs): Array[Long] = {
-    val data = df.select(col(label).cast("double"),
-      coalesce(col(text), lit(""))).cache()
+                 epochs: Int = FixedEpochs): Array[Long] = graft.Frames.scope {
+    val data = graft.Frames.shared(df.select(col(label).cast("double"),
+      coalesce(col(text), lit(""))))
     val n = data.count()
     val sc = df.sparkSession.sparkContext
     val w = new Array[Long](numFeatures + 1)
@@ -226,7 +225,6 @@ object LogReg {
       }
       epoch += 1
     }
-    data.unpersist(false)
     w
   }
 

@@ -220,13 +220,11 @@ object MiningQueries {
       .distinct()
     // share the distinct edge list across the symmetrizing union +
     // pageRank's nodes/outdeg/withDeg construction (otherwise the
-    // orders⋈lineitem→distinct subtree is recomputed four times) with a
-    // LAZY persist: the round-18 eager localCheckpoint here cost
+    // orders⋈lineitem→distinct subtree is recomputed four times), lazy
+    // ([[graft.Frames]]): the round-18 eager localCheckpoint here cost
     // +1.5-2.5 s wall (min-of-4 interleaved in-JVM A/B — its extra
-    // blocking materialization job outweighed the recompute it saved)
-    // and burned lineage fault tolerance; persist() keeps the sharing,
-    // spills under pressure, and recomputes on executor loss.
-    val e0 = e0raw.persist()
+    // blocking materialization job outweighed the recompute it saved).
+    val e0 = graft.Frames.shared(e0raw)
     val e = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
     Graft.pageRank(e, "src", "dst", iters = 3, damping = 0.85)
   }

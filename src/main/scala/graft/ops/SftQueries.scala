@@ -163,13 +163,13 @@ object SftQueries {
   private def packSpanTable(spans0: DataFrame, budget: Long): DataFrame = {
     val Stride = 1L << 20
     // the span pipeline (sessionize windows over the corpus) feeds BOTH
-    // the session-length agg and the final pack join — persist it once
+    // the session-length agg and the final pack join — share it once
     // instead of eagerly checkpointing the derived session-length table
     // (r19 A/B: sessions-ckpt 1.29 s, sessions-persist 1.11 s,
     // spans-persist 1.01 s: nothing re-runs the window chain, and the
-    // session-length table that packSequences' kernel persists for its
+    // session-length table that packSequences' kernel shares for its
     // sketch and pack passes is aggregated from this cache once)
-    val spans = spans0.persist()
+    val spans = graft.Frames.shared(spans0)
     val guardedSid = when(col("sid") < Stride, col("sid"))
       .otherwise(raise_error(concat(lit("packSpanTable: session id overflows the "),
         lit(s"pack-id stride $Stride for user "), col("user_id").cast("string"))))

@@ -378,12 +378,10 @@ object SimilarityQueries {
     // pass — the semi-join below AND the distinct query list both
     // consume it, and unmaterialized the whole BroadcastNLJ + top-k
     // subtree ran twice (two corpus scoring passes in the r18 plan
-    // dump). persist(), not an eager localCheckpoint: CacheManager
-    // substitutes BOTH identical subtrees with one InMemoryRelation
-    // computed once inside the single action, with no barrier job
-    // (an eager checkpoint here measured +0.2 s of pure overhead).
-    val exact = qSimilarityKnn(spark, dir).select(col("query_id"), col("neighbor_id"))
-      .persist()
+    // dump). Shared lazily, not eagerly checkpointed ([[graft.Frames]]):
+    // an eager checkpoint here measured +0.2 s of pure overhead.
+    val exact = graft.Frames.shared(
+      qSimilarityKnn(spark, dir).select(col("query_id"), col("neighbor_id")))
     val sq = qSimilaritySq8(spark, dir).select(col("query_id"), col("neighbor_id"))
     val hits = exact.join(sq, Seq("query_id", "neighbor_id"), "left_semi")
       .groupBy(col("query_id")).agg(count(lit(1)).as("hits"))

@@ -117,15 +117,23 @@ object StratifiedRank {
       uniformKey: Boolean = false,
       running: Running = Running.Sum): DataFrame = {
     val n = chunkCount(df.sparkSession)
-    val base0 = df.withColumn("__rk", rankKey.cast("double"))
+    // the rank key is evaluated once: a key that is not a plain column
+    // of `df` is kept in `base` in its own type (`__rko`), and the
+    // within-chunk window orders by that copy — ordering by the
+    // expression would recompute it above the prefix join, and the
+    // double `__rk` is exact only below 2^53
+    val plainKey = df.columns.exists(c => col(c) == rankKey)
+    val key = if (plainKey) rankKey else col("__rko")
+    val base0 = (if (plainKey) df else df.withColumn("__rko", rankKey))
+      .withColumn("__rk", key.cast("double"))
     val base1 = weight.fold(base0)(w => base0.withColumn("__w", w.cast("long")))
     // the input subtree feeds THREE consumers (the 5% quantile-sketch
     // sample, the per-(stratum, chunk) counts agg, and the final
-    // within-chunk window join) — persist it once so callers' possibly
-    // expensive projections (qPrefPairsQuality's stopword scoring,
-    // qRankFuncs' tie-group agg) run a single time. Lazy and
-    // spillable; recomputes on executor loss.
-    val base = base1.persist()
+    // within-chunk window join) — share it once ([[graft.Frames]]) so
+    // callers' possibly expensive projections (qPrefPairsQuality's
+    // stopword scoring, qRankFuncs' tie-group agg) run a single time.
+    // The returned plan reads it, so it lives in the caller's scope.
+    val base = graft.Frames.shared(base1)
     val boundaries = (
       if (uniformKey) (1 until n).map(i => 2147483648.0 * i / n).toArray
       else base.sample(withReplacement = false, 0.05, seed = 42L)
@@ -165,7 +173,7 @@ object StratifiedRank {
     // is applied here, so the double sketch key never decides a rank,
     // only a chunk
     val wIn = Window.partitionBy((strataCols :+ col("__chunk")): _*)
-      .orderBy((rankKey.asc +: tieCols): _*)
+      .orderBy((key.asc +: tieCols): _*)
     val ranked = joined
       .withColumn(rankName, col("__cpre") + row_number().over(wIn).cast("long"))
     val withPsum = weight.fold(ranked)(_ => ranked.withColumn(psumName,

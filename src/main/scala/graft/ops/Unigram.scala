@@ -193,20 +193,16 @@ object Unigram {
     * pinned bit-identical in UnigramSpec. */
   def train(df: DataFrame, text: String, vocabSize: Int, emIters: Int = 3,
             seedSize: Int = 4096, maxPieceLen: Int = 8,
-            maxLocalVocab: Int = 1 << 16): Model = {
+            maxLocalVocab: Int = 1 << 16): Model = graft.Frames.scope {
     val enc = Encoders.row(StructType(Seq(StructField("u", StringType))))
-    val uc = df.select(coalesce(col(text), lit("")).as("__t"))
+    val uc = graft.Frames.shared(df.select(coalesce(col(text), lit("")).as("__t"))
       .mapPartitions(it => it.flatMap(r => wordUnits(r.getString(0)).iterator.map(Row(_))))(enc)
-      .groupBy("u").agg(count(lit(1)).as("cnt"))
-      .cache()
+      .groupBy("u").agg(count(lit(1)).as("cnt")))
     val n = uc.count()
-    val res =
-      if (n <= maxLocalVocab)
-        trainLocal(uc.collect().map(r => (r.getString(0), r.getLong(1))),
-          vocabSize, emIters, seedSize, maxPieceLen)
-      else trainDistributed(uc, vocabSize, emIters, seedSize, maxPieceLen)
-    uc.unpersist(false)
-    res
+    if (n <= maxLocalVocab)
+      trainLocal(uc.collect().map(r => (r.getString(0), r.getLong(1))),
+        vocabSize, emIters, seedSize, maxPieceLen)
+    else trainDistributed(uc, vocabSize, emIters, seedSize, maxPieceLen)
   }
 
   /** Driver-side training over a collected unit-count table — also the
@@ -246,18 +242,21 @@ object Unigram {
       StructField("p", StringType), StructField("w", LongType),
       StructField("ischar", BooleanType))))
 
-    val pw = uc.mapPartitions { it =>
-      it.flatMap { r =>
-        val c = r.getLong(1)
-        substrings(r.getString(0), maxPieceLen).map(p => Row(p, c, cpLen(p) == 1))
-      }
-    }(enc).groupBy("p", "ischar").agg(sum(col("w")).as("w")).cache()
-    val chars = pw.filter(col("ischar"))
-      .collect().map(r => (r.getString(0), r.getLong(2))).toSeq
-    val multis = pw.filter(!col("ischar"))
-      .orderBy(col("w").desc, col("p").asc).limit(seedSize)
-      .collect().map(r => (r.getString(0), r.getLong(2))).toSeq
-    pw.unpersist(false)
+    // its own scope: the piece table is released before the EM rounds
+    val (chars, multis) = graft.Frames.scope {
+      val pw = graft.Frames.shared(uc.mapPartitions { it =>
+        it.flatMap { r =>
+          val c = r.getLong(1)
+          substrings(r.getString(0), maxPieceLen).map(p => Row(p, c, cpLen(p) == 1))
+        }
+      }(enc).groupBy("p", "ischar").agg(sum(col("w")).as("w")))
+      val chars = pw.filter(col("ischar"))
+        .collect().map(r => (r.getString(0), r.getLong(2))).toSeq
+      val multis = pw.filter(!col("ischar"))
+        .orderBy(col("w").desc, col("p").asc).limit(seedSize)
+        .collect().map(r => (r.getString(0), r.getLong(2))).toSeq
+      (chars, multis)
+    }
     var vocabCounts: Seq[(String, Long)] = chars ++ multis
     if (vocabCounts.isEmpty) return buildModel(Map.empty)
     var model = buildModel(renorm(vocabCounts))

@@ -14,15 +14,17 @@ import org.apache.spark.sql.functions._
   * the one admission step:
   *  1. roll the store forward past a compaction crash
   *     ([[AtomicStore.recover]]);
-  *  2. record the caller's `spark.job.description`;
-  *  3. pin the batch `MEMORY_AND_DISK`;
+  *  2. open a [[graft.Frames.scope]] and record the caller's
+  *     `spark.job.description` ([[graft.Jobs.described]]);
+  *  3. pin the batch ([[graft.Frames.shared]]);
   *  4. fail a batch whose key columns repeat a key ([[requireUnique]],
   *     labelled `<prefix>/requireUnique`);
   *  5. run the store's body on the pinned frame, with a `phase(name)`
-  *     labeller that tags the body's jobs `<prefix>/<name>`;
-  *  6. on every exit path, unpersist the batch and restore the caller's
-  *     description, so jobs the caller runs after the return are not
-  *     counted as the store's.
+  *     labeller that tags the body's jobs `<prefix>/<name>`; the body's
+  *     per-batch caches are `Frames.shared` in the same scope;
+  *  6. on every exit path, release the pin and the body's caches and
+  *     restore the caller's description, so jobs the caller runs after
+  *     the return are not counted as the store's.
   *
   * Why the pin: the batch feeds several separate actions in every
   * store (the key guard, the batch-side materializations, the
@@ -72,17 +74,12 @@ private[streaming] object Admission {
         body: (DataFrame, String => Unit) => T): T = {
       val sc = batch.sparkSession.sparkContext
       recover(batch.sparkSession, storeDir)
-      val callerDescription = sc.getLocalProperty("spark.job.description")
       val phase = (name: String) => sc.setJobDescription(s"$prefix/$name")
-      val pinned = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        phase("requireUnique")
+      graft.Frames.scope(graft.Jobs.described(sc, s"$prefix/requireUnique") {
+        val pinned = graft.Frames.shared(batch)
         if (keys.nonEmpty) requireUnique(pinned, op, keys: _*)
         body(pinned, phase)
-      } finally {
-        batch.unpersist()
-        sc.setJobDescription(callerDescription)
-      }
+      })
     }
 
     /** The compaction policy (see [[Admission]]): recover, then run
@@ -96,11 +93,6 @@ private[streaming] object Admission {
       over
     }
   }
-
-  /** Run `body`, then unpersist `frames` whether it returned or threw:
-    * a per-batch cache must not outlive its call on any exit path. */
-  def releasing[T](frames: DataFrame*)(body: => T): T =
-    try body finally frames.foreach(_.unpersist())
 
   /** Fail if any `keys` tuple appears more than once in the batch. */
   def requireUnique(batch: DataFrame, op: String, keys: String*): Unit =

@@ -101,55 +101,52 @@ object IncrementalBm25 {
     // tf is cached too: it feeds BOTH the dl rollup and the postings
     // append — without the cache the tokenize + term-grain shuffle runs
     // twice per trigger
-    val tf = pinned
+    val tf = graft.Frames.shared(pinned
       .select(col(id).cast("long").as("doc_id"),
         explode(graft.api.Graft.tokens(coalesce(col(text), lit("")))).as("term"))
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      .cache()
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")).cache()
-    Admission.releasing(dl, tf) {
-      // keep-first: ids already COMMITTED (present in docstats) are
-      // replays — the read is pruned to the batch's own doc buckets
-      val fresh =
-        if (AtomicStore.exists(spark, docstatsPath)) {
-          phase("bucket-discovery")
-          val seen = DocStats.scan(spark, docstatsPath, DocStats.bucketsOf(dl, docFan))
-            .select(col("doc_id"))
-          dl.join(seen, Seq("doc_id"), "left_anti")
-        } else dl
-      // eager checkpoint: the appends below must not feed back into the
-      // plan that decided freshness on a recompute
-      phase("fresh-checkpoint")
-      val freshIds = fresh.select(col("doc_id"), col("dl")).localCheckpoint(true)
-      val fr = freshIds
-        .agg(min(col("doc_id")).as("a"), count(lit(1)).as("n"), sum(col("dl")).as("s"))
-        .head()
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
+    val dl = graft.Frames.shared(tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
+    // keep-first: ids already COMMITTED (present in docstats) are
+    // replays — the read is pruned to the batch's own doc buckets
+    val fresh =
+      if (AtomicStore.exists(spark, docstatsPath)) {
+        phase("bucket-discovery")
+        val seen = DocStats.scan(spark, docstatsPath, DocStats.bucketsOf(dl, docFan))
+          .select(col("doc_id"))
+        dl.join(seen, Seq("doc_id"), "left_anti")
+      } else dl
+    // eager checkpoint: the appends below must not feed back into the
+    // plan that decided freshness on a recompute
+    phase("fresh-checkpoint")
+    val freshIds = fresh.select(col("doc_id"), col("dl")).localCheckpoint(true)
+    val fr = freshIds
+      .agg(min(col("doc_id")).as("a"), count(lit(1)).as("n"), sum(col("dl")).as("s"))
+      .head()
 
-      if (fr.getLong(1) > 0L) {
-        // 1. postings — on a crash-then-replay these rows appear twice as
-        //    EXACT duplicates; reads distinct them, compaction removes them
-        phase("postings-append")
-        Postings.append(tf.join(freshIds.select(col("doc_id")), Seq("doc_id")), storeDir, termFan)
-        if (crashAfter == 1) throw new InjectedCrash("after postings")
-        // 2. stats delta — anchored by the min fresh id so a replayed
-        //    duplicate folds away at read time
-        import spark.implicits._
-        phase("stats-append")
-        Seq((fr.getLong(0), fr.getLong(1), fr.getLong(2))).toDF("anchor", "n", "dlsum")
-          .coalesce(1).write.mode(SaveMode.Append).parquet(statsPath)
-        if (crashAfter == 2) throw new InjectedCrash("after stats")
-        // 3. docstats — the COMMIT RECORD: lands last, so an uncommitted
-        //    batch is always fully re-appended by its replay
-        phase("docstats-append")
-        DocStats.append(freshIds, storeDir, docFan)
-      }
-
-      phase("result-checkpoint")
-      dl.select(col("doc_id").as(id), col("dl"))
-        .join(freshIds.select(col("doc_id").as(id), lit(true).as("admitted")), Seq(id), "left")
-        .withColumn("admitted", coalesce(col("admitted"), lit(false)))
-        .localCheckpoint(true)
+    if (fr.getLong(1) > 0L) {
+      // 1. postings — on a crash-then-replay these rows appear twice as
+      //    EXACT duplicates; reads distinct them, compaction removes them
+      phase("postings-append")
+      Postings.append(tf.join(freshIds.select(col("doc_id")), Seq("doc_id")), storeDir, termFan)
+      if (crashAfter == 1) throw new InjectedCrash("after postings")
+      // 2. stats delta — anchored by the min fresh id so a replayed
+      //    duplicate folds away at read time
+      import spark.implicits._
+      phase("stats-append")
+      Seq((fr.getLong(0), fr.getLong(1), fr.getLong(2))).toDF("anchor", "n", "dlsum")
+        .coalesce(1).write.mode(SaveMode.Append).parquet(statsPath)
+      if (crashAfter == 2) throw new InjectedCrash("after stats")
+      // 3. docstats — the COMMIT RECORD: lands last, so an uncommitted
+      //    batch is always fully re-appended by its replay
+      phase("docstats-append")
+      DocStats.append(freshIds, storeDir, docFan)
     }
+
+    phase("result-checkpoint")
+    dl.select(col("doc_id").as(id), col("dl"))
+      .join(freshIds.select(col("doc_id").as(id), lit(true).as("admitted")), Seq(id), "left")
+      .withColumn("admitted", coalesce(col("admitted"), lit(false)))
+      .localCheckpoint(true)
     }
 
   /** Corpus aggregate (N, Σdl) from the stats deltas: fold replayed
@@ -258,30 +255,28 @@ object IncrementalBm25 {
     * garbage-collects rows of batches that crashed uncommitted and
     * were never replayed (ids absent from docstats). Crash-safe via
     * [[AtomicStore.swapIn]]. */
-  def compactStore(spark: SparkSession, storeDir: String): Unit = {
+  def compactStore(spark: SparkSession, storeDir: String): Unit = graft.Frames.scope {
     store.recover(spark, storeDir)
     val committed =
       if (AtomicStore.exists(spark, s"$storeDir/docstats"))
-        spark.read.parquet(s"$storeDir/docstats").select(col("doc_id")).cache()
+        graft.Frames.shared(spark.read.parquet(s"$storeDir/docstats").select(col("doc_id")))
       else spark.range(0).select(col("id").as("doc_id"))
-    Admission.releasing(committed) {
-      Postings.compact(spark, storeDir,
-        _.distinct().join(committed, Seq("doc_id"), "left_semi"))
-      DocStats.compact(spark, storeDir, _.distinct())
-      // stats are RECONCILED, not folded: recompute the single row from
-      // the (just-compacted) docstats commit record. Folding the deltas
-      // would preserve any drift the deltas picked up — e.g. a docstats
-      // job commit that landed PARTIALLY (non-atomic multi-file rename)
-      // splits one fresh set between committed and replayed, and the
-      // replay's second delta double-counts the committed part. Between
-      // compactions that window is open (appends are assumed job-commit
-      // atomic, the store-wide assumption); compaction closes it.
-      AtomicStore.swapIn(spark, storeDir, "stats") { (_, tmp) =>
-        spark.read.parquet(s"$storeDir/docstats")
-          .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("dlsum"))
-          .select(lit(FoldedAnchor).as("anchor"), col("n"), col("dlsum"))
-          .coalesce(1).write.parquet(tmp)
-      }
+    Postings.compact(spark, storeDir,
+      _.distinct().join(committed, Seq("doc_id"), "left_semi"))
+    DocStats.compact(spark, storeDir, _.distinct())
+    // stats are RECONCILED, not folded: recompute the single row from
+    // the (just-compacted) docstats commit record. Folding the deltas
+    // would preserve any drift the deltas picked up — e.g. a docstats
+    // job commit that landed PARTIALLY (non-atomic multi-file rename)
+    // splits one fresh set between committed and replayed, and the
+    // replay's second delta double-counts the committed part. Between
+    // compactions that window is open (appends are assumed job-commit
+    // atomic, the store-wide assumption); compaction closes it.
+    AtomicStore.swapIn(spark, storeDir, "stats") { (_, tmp) =>
+      spark.read.parquet(s"$storeDir/docstats")
+        .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L)).as("dlsum"))
+        .select(lit(FoldedAnchor).as("anchor"), col("n"), col("dlsum"))
+        .coalesce(1).write.parquet(tmp)
     }
   }
 

@@ -67,54 +67,51 @@ object IncrementalChunkStore {
     phase("reconcile-fanout")
     val fanout = Chunks.reconcile(spark, storeDir, _.distinct())
 
-    val rows = graft.api.Graft
+    val rows = graft.Frames.shared(graft.api.Graft
       .cdcChunkRows(pinned.select(col(id), col(text)), id, text, window, modulus)
-      .select(col("__id"), col("chunk_idx"), col("chunk_len"), col("chunk_fp"))
-      .cache()
-    Admission.releasing(rows) {
-      // 1. history: does the chunk key already exist in the store?
-      val withSeen =
-        if (AtomicStore.exists(spark, chunksPath)) {
-          phase("bucket-discovery")
-          val seen = Chunks.scan(spark, chunksPath, Chunks.bucketsOf(rows, fanout))
-            .select(col("chunk_fp"), col("chunk_len")).distinct()
-            .withColumn("__seen", lit(true))
-          rows.join(seen, Seq("chunk_fp", "chunk_len"), "left")
-            .withColumn("__seen", coalesce(col("__seen"), lit(false)))
-        } else rows.withColumn("__seen", lit(false))
+      .select(col("__id"), col("chunk_idx"), col("chunk_len"), col("chunk_fp")))
+    // 1. history: does the chunk key already exist in the store?
+    val withSeen =
+      if (AtomicStore.exists(spark, chunksPath)) {
+        phase("bucket-discovery")
+        val seen = Chunks.scan(spark, chunksPath, Chunks.bucketsOf(rows, fanout))
+          .select(col("chunk_fp"), col("chunk_len")).distinct()
+          .withColumn("__seen", lit(true))
+        rows.join(seen, Seq("chunk_fp", "chunk_len"), "left")
+          .withColumn("__seen", coalesce(col("__seen"), lit(false)))
+      } else rows.withColumn("__seen", lit(false))
 
-      // 2. within-batch: the first occurrence (min (doc_id, chunk_idx))
-      //    of each unseen key is the one that pays for storage — a keyed
-      //    keeper agg (map-side combine), never a window over the batch
-      val keeper = withSeen.filter(!col("__seen"))
-        .groupBy(col("chunk_fp"), col("chunk_len"))
-        .agg(min(struct(col("__id"), col("chunk_idx"))).as("__k"))
-        .select(col("chunk_fp"), col("chunk_len"),
-          col("__k")("__id").as("__kid"), col("__k")("chunk_idx").as("__kidx"))
-      val marked = withSeen.join(keeper, Seq("chunk_fp", "chunk_len"), "left")
-        .withColumn("__novel",
-          !col("__seen") && col("__kid") === col("__id") && col("__kidx") === col("chunk_idx"))
+    // 2. within-batch: the first occurrence (min (doc_id, chunk_idx))
+    //    of each unseen key is the one that pays for storage — a keyed
+    //    keeper agg (map-side combine), never a window over the batch
+    val keeper = withSeen.filter(!col("__seen"))
+      .groupBy(col("chunk_fp"), col("chunk_len"))
+      .agg(min(struct(col("__id"), col("chunk_idx"))).as("__k"))
+      .select(col("chunk_fp"), col("chunk_len"),
+        col("__k")("__id").as("__kid"), col("__k")("chunk_idx").as("__kidx"))
+    val marked = withSeen.join(keeper, Seq("chunk_fp", "chunk_len"), "left")
+      .withColumn("__novel",
+        !col("__seen") && col("__kid") === col("__id") && col("__kidx") === col("chunk_idx"))
 
-      phase("novelty-checkpoint")
-      val perDoc = marked.groupBy(col("__id"))
-        .agg(
-          count(lit(1)).as("n_chunks"),
-          sum(when(col("__novel"), 1L).otherwise(0L)).as("novel_chunks"),
-          sum(when(col("__novel"), col("chunk_len")).otherwise(0L)).as("novel_chars"),
-          sum(col("chunk_len")).as("total_chars"))
-        .select(col("__id").as(id), col("n_chunks"), col("novel_chunks"),
-          col("novel_chars"), col("total_chars"),
-          round(lit(1.0) - col("novel_chars").cast("double") /
-            col("total_chars").cast("double"), 6).as("dedup_ratio"))
-        // eager checkpoint BEFORE the append: the plan reads the store's
-        // current files and must not see its own output on recompute
-        .localCheckpoint(true)
+    phase("novelty-checkpoint")
+    val perDoc = marked.groupBy(col("__id"))
+      .agg(
+        count(lit(1)).as("n_chunks"),
+        sum(when(col("__novel"), 1L).otherwise(0L)).as("novel_chunks"),
+        sum(when(col("__novel"), col("chunk_len")).otherwise(0L)).as("novel_chars"),
+        sum(col("chunk_len")).as("total_chars"))
+      .select(col("__id").as(id), col("n_chunks"), col("novel_chunks"),
+        col("novel_chars"), col("total_chars"),
+        round(lit(1.0) - col("novel_chars").cast("double") /
+          col("total_chars").cast("double"), 6).as("dedup_ratio"))
+      // eager checkpoint BEFORE the append: the plan reads the store's
+      // current files and must not see its own output on recompute
+      .localCheckpoint(true)
 
-      // 3. append the first-seen keys, one file per non-empty bucket
-      phase("chunks-append")
-      Chunks.append(marked.filter(col("__novel")), storeDir, fanout)
-      perDoc
-    }
+    // 3. append the first-seen keys, one file per non-empty bucket
+    phase("chunks-append")
+    Chunks.append(marked.filter(col("__novel")), storeDir, fanout)
+    perDoc
     }
 
   /** Unique chunk keys stored so far (store entry point — rolls

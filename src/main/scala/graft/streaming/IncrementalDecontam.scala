@@ -61,14 +61,14 @@ object IncrementalDecontam {
     require(n >= 1, s"n-gram width must be >= 1, got $n")
     require(fpp > 0.0 && fpp < 1.0, s"fpp must be in (0,1), got $fpp")
     val spark = bench.sparkSession
-    val grams = bench.select(Graft.tokens(col(text)).as("__ts"))
-      .select(explode(Graft.wordGrams(col("__ts"), n)).as("__g"))
-      .distinct()
-      .cache()
-    grams.write.mode("overwrite").parquet(s"$storeDir/grams")
-    val nGrams = math.max(grams.count(), 1L)
-    val bloom = grams.stat.bloomFilter("__g", nGrams, fpp)
-    grams.unpersist()
+    val bloom = graft.Frames.scope {
+      val grams = graft.Frames.shared(bench.select(Graft.tokens(col(text)).as("__ts"))
+        .select(explode(Graft.wordGrams(col("__ts"), n)).as("__g"))
+        .distinct())
+      grams.write.mode("overwrite").parquet(s"$storeDir/grams")
+      val nGrams = math.max(grams.count(), 1L)
+      grams.stat.bloomFilter("__g", nGrams, fpp)
+    }
     val f = fs(spark, storeDir)
     val bloomPath = new org.apache.hadoop.fs.Path(s"$storeDir/bloom")
     val out = f.create(bloomPath, true)

@@ -87,114 +87,112 @@ object IncrementalDedup {
     val newDocs = pinned.select(col(id).as("doc_id"), col(text).as("text"))
     // cached: reused for history verify AND the admitted band append, so
     // the CPU-bound signature kernel runs once per batch
-    val newSigs = DedupQueries.signatures(newDocs, "doc_id", "text").cache()
+    val newSigs = graft.Frames.shared(DedupQueries.signatures(newDocs, "doc_id", "text"))
     // also cached: the bucket-discovery collect below is its own action,
     // and bandsOf's posexplode would otherwise re-run for it before the
     // candidate join and the band append reuse the rows
-    val newBands = DedupQueries.bandsOf(newSigs).cache()
-    Admission.releasing(newBands, newSigs) {
-      // 1. history rejection: batch bands ⋈ persisted band index →
-      //    candidate (new, seen) pairs → exact verify on shingles of the
-      //    candidate subset only. The index read is pruned to the batch's
-      //    own bucket directories (≤ fanout literals — bounded
-      //    driver-side by construction, not by data size).
-      val rejectedByHistory: DataFrame =
-        if (AtomicStore.exists(spark, bandsPath)) {
-          phase("bucket-discovery")
-          val seenBands = Bands.scan(spark, bandsPath, Bands.bucketsOf(newBands, fanout))
-            .select(col("doc_id").as("seen_id"), col("band"), col("bandhash"))
-          val cand = newBands.join(seenBands, Seq("band", "bandhash"))
-            .select(col("doc_id"), col("seen_id")).distinct()
-            // candidates feed TWO consumers below (the dbucket discovery
-            // collect and the verify join) — materialize once
-            .localCheckpoint(true)
-          // the candidate re-shingle reads ONLY the candidates' own
-          // dbucket directories (bounded: ≤ docFanout literals), not the
-          // whole admitted text table — the docs-store analog of the
-          // band-index pruning (the unpruned join scanned all of docs/
-          // per trigger, an O(history) read)
-          val docsPruned = Docs.scan(spark, docsPath,
-            Docs.bucketsOf(cand.select(col("seen_id").as("doc_id")), docFanout))
-          val seenSh = DedupQueries.shingleFrame(
-            docsPruned.select(col("doc_id"), col("text"))
-              .join(cand.select(col("seen_id").as("doc_id")).distinct(), Seq("doc_id")),
-            "doc_id", "text")
-            .select(col("doc_id").as("seen_id"), col("sh").as("sh_seen"))
-          cand
-            .join(newSigs.select(col("doc_id"), col("sh")), Seq("doc_id"))
-            .join(seenSh, Seq("seen_id"))
-            .filter(DedupQueries.jaccardCol(col("sh"), col("sh_seen")) >= threshold)
-            .select(col("doc_id")).distinct()
-            // eager checkpoint of the (tiny) rejected-id frame: both the
-            // within-batch pair probe and the admitted build consume
-            // survivors, and without this each re-runs the whole history
-            // verify (band scan + candidate re-shingle + jaccard)
-            .localCheckpoint(true)
-        } else spark.range(0).select(col("id").as("doc_id"))
+    val newBands = graft.Frames.shared(DedupQueries.bandsOf(newSigs))
+    // 1. history rejection: batch bands ⋈ persisted band index →
+    //    candidate (new, seen) pairs → exact verify on shingles of the
+    //    candidate subset only. The index read is pruned to the batch's
+    //    own bucket directories (≤ fanout literals — bounded
+    //    driver-side by construction, not by data size).
+    val rejectedByHistory: DataFrame =
+      if (AtomicStore.exists(spark, bandsPath)) {
+        phase("bucket-discovery")
+        val seenBands = Bands.scan(spark, bandsPath, Bands.bucketsOf(newBands, fanout))
+          .select(col("doc_id").as("seen_id"), col("band"), col("bandhash"))
+        val cand = newBands.join(seenBands, Seq("band", "bandhash"))
+          .select(col("doc_id"), col("seen_id")).distinct()
+          // candidates feed TWO consumers below (the dbucket discovery
+          // collect and the verify join) — materialize once
+          .localCheckpoint(true)
+        // the candidate re-shingle reads ONLY the candidates' own
+        // dbucket directories (bounded: ≤ docFanout literals), not the
+        // whole admitted text table — the docs-store analog of the
+        // band-index pruning (the unpruned join scanned all of docs/
+        // per trigger, an O(history) read)
+        val docsPruned = Docs.scan(spark, docsPath,
+          Docs.bucketsOf(cand.select(col("seen_id").as("doc_id")), docFanout))
+        val seenSh = DedupQueries.shingleFrame(
+          docsPruned.select(col("doc_id"), col("text"))
+            .join(cand.select(col("seen_id").as("doc_id")).distinct(), Seq("doc_id")),
+          "doc_id", "text")
+          .select(col("doc_id").as("seen_id"), col("sh").as("sh_seen"))
+        cand
+          .join(newSigs.select(col("doc_id"), col("sh")), Seq("doc_id"))
+          .join(seenSh, Seq("seen_id"))
+          .filter(DedupQueries.jaccardCol(col("sh"), col("sh_seen")) >= threshold)
+          .select(col("doc_id")).distinct()
+          // eager checkpoint of the (tiny) rejected-id frame: both the
+          // within-batch pair probe and the admitted build consume
+          // survivors, and without this each re-runs the whole history
+          // verify (band scan + candidate re-shingle + jaccard)
+          .localCheckpoint(true)
+      } else spark.range(0).select(col("id").as("doc_id"))
 
-      val survivors = newDocs.join(rejectedByHistory, Seq("doc_id"), "left_anti")
+    val survivors = newDocs.join(rejectedByHistory, Seq("doc_id"), "left_anti")
 
-      // 2. within-batch canonicalization: near-dup pairs among survivors →
-      //    connected clusters → keep the min id of each cluster. The
-      //    pairs reuse the CACHED signatures/bands computed above —
-      //    band hashes are a pure function of a doc's own signature, so
-      //    restricting the cached rows to survivors is exactly
-      //    minhashDupes(survivors) without a second kernel pass
-      val sBands = newBands.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      // no .distinct() here: a pair colliding in several bands just
-      // evaluates the (cheap, array-local) jaccard filter more than once
-      // and dupClusters' own edges-distinct dedups — the distinct cost a
-      // full exchange + AQE stage round per trigger for nothing
-      val cands = sBands.as("x").join(sBands.as("y"),
-          col("x.band") === col("y.band") &&
-          col("x.bandhash") === col("y.bandhash") &&
-          col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      val pairs = cands
-        .join(newSigs.select(col("doc_id"), col("sh").as("sh_a")),
-          col("doc_a") === col("doc_id")).drop("doc_id")
-        .join(newSigs.select(col("doc_id"), col("sh").as("sh_b")),
-          col("doc_b") === col("doc_id")).drop("doc_id")
-        .filter(DedupQueries.jaccardCol(col("sh_a"), col("sh_b")) >= threshold)
-        .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
-      phase("within-batch-cc")
-      val clusters = graft.api.Graft.dupClusters(pairs, "id_a", "id_b")
-        .withColumnRenamed("id", "doc_id")
-      // localCheckpoint (eager) truncates lineage BEFORE the store writes:
-      // the admitted plan reads the store's current files, so a lazy
-      // recompute after the appends below would see its own output
-      phase("admitted-checkpoint")
-      val admitted = survivors.join(clusters, Seq("doc_id"), "left")
-        .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
-        .select(col("doc_id"), col("text"))
-        .localCheckpoint(true)
+    // 2. within-batch canonicalization: near-dup pairs among survivors →
+    //    connected clusters → keep the min id of each cluster. The
+    //    pairs reuse the CACHED signatures/bands computed above —
+    //    band hashes are a pure function of a doc's own signature, so
+    //    restricting the cached rows to survivors is exactly
+    //    minhashDupes(survivors) without a second kernel pass
+    val sBands = newBands.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
+    // no .distinct() here: a pair colliding in several bands just
+    // evaluates the (cheap, array-local) jaccard filter more than once
+    // and dupClusters' own edges-distinct dedups — the distinct cost a
+    // full exchange + AQE stage round per trigger for nothing
+    val cands = sBands.as("x").join(sBands.as("y"),
+        col("x.band") === col("y.band") &&
+        col("x.bandhash") === col("y.bandhash") &&
+        col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+    val pairs = cands
+      .join(newSigs.select(col("doc_id"), col("sh").as("sh_a")),
+        col("doc_a") === col("doc_id")).drop("doc_id")
+      .join(newSigs.select(col("doc_id"), col("sh").as("sh_b")),
+        col("doc_b") === col("doc_id")).drop("doc_id")
+      .filter(DedupQueries.jaccardCol(col("sh_a"), col("sh_b")) >= threshold)
+      .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
+    phase("within-batch-cc")
+    val clusters = graft.api.Graft.dupClusters(pairs, "id_a", "id_b")
+      .withColumnRenamed("id", "doc_id")
+    // localCheckpoint (eager) truncates lineage BEFORE the store writes:
+    // the admitted plan reads the store's current files, so a lazy
+    // recompute after the appends below would see its own output
+    phase("admitted-checkpoint")
+    val admitted = survivors.join(clusters, Seq("doc_id"), "left")
+      .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
+      .select(col("doc_id"), col("text"))
+      .localCheckpoint(true)
 
-      // The two store appends are independent (different subdirs, both
-      // inputs eagerly materialized above) and each pays a fixed cost
-      // per non-empty bucket dir, one file each — ~0.5 s (docs) and
-      // ~0.8 s (bands) per 500-doc trigger at 32 dirs on a 4-core host,
-      // among the largest single stages of a trigger. Run them
-      // CONCURRENTLY (guide §2.6): the commit constants overlap instead
-      // of adding. Crash-ordering note: either append landing without
-      // the other converges under replay exactly like the sequential
-      // order did — docs-without-bands re-admits (exact-dup docs rows,
-      // the documented dropDuplicates class), bands-without-docs finds
-      // the band match but no text to verify against and re-admits
-      // (exact-dup band rows, removed by compaction) — unlike the embed
-      // store there is no over/under-bound asymmetry between the subs.
-      // Job descriptions are thread-local: each append labels its own.
-      graft.Jobs.awaitAll(Seq(
-        () => {
-          phase("docs-append")
-          Docs.append(admitted, storeDir, docFanout)
-        },
-        () => {
-          phase("bands-append")
-          Bands.append(newBands.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi"),
-            storeDir, fanout)
-        }))
-      admitted
-    }
+    // The two store appends are independent (different subdirs, both
+    // inputs eagerly materialized above) and each pays a fixed cost
+    // per non-empty bucket dir, one file each — ~0.5 s (docs) and
+    // ~0.8 s (bands) per 500-doc trigger at 32 dirs on a 4-core host,
+    // among the largest single stages of a trigger. Run them
+    // CONCURRENTLY (guide §2.6): the commit constants overlap instead
+    // of adding. Crash-ordering note: either append landing without
+    // the other converges under replay exactly like the sequential
+    // order did — docs-without-bands re-admits (exact-dup docs rows,
+    // the documented dropDuplicates class), bands-without-docs finds
+    // the band match but no text to verify against and re-admits
+    // (exact-dup band rows, removed by compaction) — unlike the embed
+    // store there is no over/under-bound asymmetry between the subs.
+    // Job descriptions are thread-local: each append labels its own.
+    graft.Jobs.awaitAll(Seq(
+      () => {
+        phase("docs-append")
+        Docs.append(admitted, storeDir, docFanout)
+      },
+      () => {
+        phase("bands-append")
+        Bands.append(newBands.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+          storeDir, fanout)
+      }))
+    admitted
     }
 
   /** The admitted corpus so far (empty frame if nothing admitted).

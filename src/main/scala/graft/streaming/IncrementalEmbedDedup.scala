@@ -129,26 +129,25 @@ object IncrementalEmbedDedup {
       if (AtomicStore.exists(spark, vecsPath)) {
         phase("bucket-discovery")
         val radii = liveRadii(spark, radiiPath, index.nlist)
-        // cached: the bucket-discovery collect is its own action and the
+        // shared: the bucket-discovery collect is its own action and the
         // probe kernel would otherwise re-run before the candidate join
-        val probed = Ivf.assignWithinRadii(
+        val probed = graft.Frames.shared(Ivf.assignWithinRadii(
             newVecs, "doc_id", "vec", index.centroids, radii, maxPairRad)
-          .select(col("doc_id"), col("vec").as("__v"), col("nrm"), col("cell"))
-          .cache()
-        Admission.releasing(probed) {
-          val hist = Vecs.scan(spark, vecsPath, Vecs.bucketsOf(probed, fanout))
-            .select(col("doc_id").as("__hid"), col("vec").as("__hv"),
-              col("nrm").as("__hnrm"), col("cell"))
-          // a replayed vector meets its admitted copy in its home cell and
-          // is rejected by id: a zero vector's cosine to itself is 0.0, so
-          // only the id makes its replay a no-op too
-          probed.join(hist, Seq("cell"))
-            .filter(col("doc_id") === col("__hid") ||
-              cos12(float_dot(col("__v"), col("__hv")), col("nrm"), col("__hnrm"))
-                >= threshold)
-            .select(col("doc_id")).distinct()
-            .localCheckpoint(true) // materialize before unpersist
-        }
+          .select(col("doc_id"), col("vec").as("__v"), col("nrm"), col("cell")))
+        val hist = Vecs.scan(spark, vecsPath, Vecs.bucketsOf(probed, fanout))
+          .select(col("doc_id").as("__hid"), col("vec").as("__hv"),
+            col("nrm").as("__hnrm"), col("cell"))
+        // a replayed vector meets its admitted copy in its home cell and
+        // is rejected by id: a zero vector's cosine to itself is 0.0, so
+        // only the id makes its replay a no-op too
+        probed.join(hist, Seq("cell"))
+          .filter(col("doc_id") === col("__hid") ||
+            cos12(float_dot(col("__v"), col("__hv")), col("nrm"), col("__hnrm"))
+              >= threshold)
+          .select(col("doc_id")).distinct()
+          // eager: the within-batch pairs and the admitted build re-read
+          // it in separate jobs ([[graft.Frames]])
+          .localCheckpoint(true)
       } else spark.range(0).select(col("id").as("doc_id"))
 
     val survivors = newVecs.join(rejectedByHistory, Seq("doc_id"), "left_anti")

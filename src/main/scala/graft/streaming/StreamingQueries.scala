@@ -183,8 +183,8 @@ object StreamingQueries {
     * drop's language/source/domain mix shifts from the corpus it is
     * joining). Designed for `foreachBatch`:
     * {{{
-    *   val ref = refCorpus.groupBy(col("lang"))
-    *     .agg(count(lit(1)).as("n_a")).persist()   // aggregate ONCE
+    *   val ref = graft.Frames.shared(refCorpus.groupBy(col("lang"))
+    *     .agg(count(lit(1)).as("n_a")))   // aggregate ONCE
     *   stream.writeStream.foreachBatch { (batch, id) =>
     *     StreamingQueries.psiMonitorBatch(batch, id, "lang", ref)
     *       .write.mode("append").parquet(reportDir)

@@ -88,4 +88,50 @@ class StreamingGateSpec extends SparkTestBase {
       found.fold(spark.conf.unset(timeoutKey))(spark.conf.set(timeoutKey, _))
     }
   }
+
+  test("runArms: every job an arm's fetch runs is labelled gate/<arm>/fetch") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.SparkSession
+    val armKey = "graft.test.fetchArm"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        def get(k: String) = p.flatMap(q => Option(q.getProperty(k))).getOrElse("")
+        jobs.add(get(armKey) -> get("spark.job.description"))
+      }
+    }
+    // an arm whose stream is already stopped, so its await returns at
+    // once; its fetch tags its thread with the arm and runs jobs
+    def arm(name: String): (SparkSession, String) => ConnectorQueries.Started = (s, _) => {
+      val q = s.readStream.format("rate").load().writeStream.format("noop").start()
+      q.stop()
+      (q, () => {
+        s.sparkContext.setLocalProperty(armKey, name)
+        s.range(100).groupBy((org.apache.spark.sql.functions.col("id") % 7).as("k")).count()
+          .collect()
+        s.emptyDataFrame
+      })
+    }
+    val marker = "gate-fetch-marker"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ConnectorQueries.runArms(spark, "", Seq("a" -> arm("a"), "b" -> arm("b")))
+      // listener events arrive in job order: once the marker job's start
+      // is seen, every fetch job's start has been delivered too
+      spark.sparkContext.setJobDescription(marker)
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def seen = jobs.toArray(Array.empty[(String, String)]).toSeq
+      while (!seen.exists(_._2 == marker) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(seen.exists(_._2 == marker), "listener never saw the marker job")
+      val fetched = seen.filter(_._1.nonEmpty)
+      assert(fetched.map(_._1).toSet === Set("a", "b"), s"fetch jobs seen: $fetched")
+      assert(fetched.forall { case (a, d) => d == s"gate/$a/fetch" },
+        s"a fetch job ran without its arm's label: $fetched")
+    } finally {
+      spark.sparkContext.setJobDescription(null)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }
