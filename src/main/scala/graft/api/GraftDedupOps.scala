@@ -842,15 +842,13 @@ trait GraftDedupOps { this: Graft.type =>
         s"dupClusters: id column '$c' is $dt — integral ids required " +
           "(hash other types to 64 bits first, e.g. xxhash64)")
     }
-    def checkpointed(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
     // the (possibly expensive) pair pipeline is evaluated EXACTLY once,
     // into this checkpoint — both paths read it from there. (A
     // limit(cap).collect() probe would be wrong here: CollectLimit
     // executes incrementally, re-running the pipeline with growing
     // partition counts until the limit fills — measured 1.8x on
     // q_dup_clusters when the pair count sits far below the cap.)
-    val edges = checkpointed(pairs
+    val edges = checkpointed(reliable)(pairs
       .select(col(idA).cast("long").as("src"), col(idB).cast("long").as("dst"))
       .unionAll(pairs.select(col(idB).cast("long").as("src"),
         col(idA).cast("long").as("dst")))
@@ -886,14 +884,17 @@ trait GraftDedupOps { this: Graft.type =>
     dupClustersDistributed(edges, reliable)
   }
 
+  /** Eager truncation for [[dupClusters]]: a reliable checkpoint when
+    * `reliable`, else a local one. */
+  private def checkpointed(reliable: Boolean)(df: DataFrame): DataFrame =
+    if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
+
   /** The distributed label-propagation + pointer-jumping loop behind
     * [[dupClustersCounted]], over the pre-materialized undirected
     * `edges` (src, dst) frame. */
   private def dupClustersDistributed(edges: DataFrame,
       reliable: Boolean): (DataFrame, Int) = {
-    def checkpointed(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    var labels = checkpointed(edges.select(col("src").as("id")).distinct()
+    var labels = checkpointed(reliable)(edges.select(col("src").as("id")).distinct()
       .withColumn("cluster_id", col("id")))
     // labels only ever decrease, so the label sum is a strictly
     // decreasing convergence witness: one cheap aggregate per round
@@ -913,7 +914,7 @@ trait GraftDedupOps { this: Graft.type =>
         .groupBy(col("id")).agg(min(col("cluster_id")).as("cluster_id"))
       // pointer jumping: follow each label to ITS label (left join —
       // a label that is already a root labels itself)
-      labels = checkpointed(propagated
+      labels = checkpointed(reliable)(propagated
         .join(propagated.select(col("id").as("__lid"), col("cluster_id").as("__lparent")),
           col("cluster_id") === col("__lid"), "left")
         .select(col("id"),

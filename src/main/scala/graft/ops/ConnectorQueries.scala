@@ -893,9 +893,8 @@ object ConnectorQueries {
 
   /** The two-batch embed-admission replay over the even-id slice:
     * [[graft.ops.SimilarityQueries.neardupOracle]]'s exact rounded
-    * cosine as the pair set, batch = the slice's id-rank halves,
-    * per-batch recursive-CTE connected components, history rejection
-    * via an edge into the prior batch's admitted set. */
+    * cosine as the pair set, batch = the slice's id-rank halves, then
+    * [[streamingNeardupOracle]]'s two stages ([[admissionStage]]). */
   val streamingEmbedNeardupOracle: String =
     s"""WITH RECURSIVE sl AS MATERIALIZED (
        |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0
@@ -918,39 +917,42 @@ object ConnectorQueries {
        |  SELECT doc_a AS u, doc_b AS v FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs
        |),
-       |s0 AS MATERIALIZED (SELECT doc_id FROM bdocs WHERE b = 0),
-       |r0(id, r) AS (
-       |  SELECT e.u, e.u FROM edges e
-       |    JOIN s0 x ON e.u = x.doc_id JOIN s0 y ON e.v = y.doc_id
-       |  UNION
-       |  SELECT e.u, r0.r FROM edges e
-       |    JOIN s0 x ON e.u = x.doc_id JOIN s0 y ON e.v = y.doc_id
-       |    JOIN r0 ON e.v = r0.id),
-       |k0 AS MATERIALIZED (
-       |  SELECT s0.doc_id FROM s0
-       |  LEFT JOIN (SELECT id, min(r) AS cid FROM r0 GROUP BY id) cc
-       |    ON s0.doc_id = cc.id
-       |  WHERE cc.id IS NULL OR cc.cid = s0.doc_id),
-       |a0 AS MATERIALIZED (SELECT doc_id FROM k0),
-       |s1 AS MATERIALIZED (
-       |  SELECT d.doc_id FROM bdocs d WHERE d.b = 1
-       |  AND NOT EXISTS (SELECT 1 FROM edges e
-       |    JOIN a0 p ON e.v = p.doc_id WHERE e.u = d.doc_id)),
-       |r1(id, r) AS (
-       |  SELECT e.u, e.u FROM edges e
-       |    JOIN s1 x ON e.u = x.doc_id JOIN s1 y ON e.v = y.doc_id
-       |  UNION
-       |  SELECT e.u, r1.r FROM edges e
-       |    JOIN s1 x ON e.u = x.doc_id JOIN s1 y ON e.v = y.doc_id
-       |    JOIN r1 ON e.v = r1.id),
-       |k1 AS MATERIALIZED (
-       |  SELECT s1.doc_id FROM s1
-       |  LEFT JOIN (SELECT id, min(r) AS cid FROM r1 GROUP BY id) cc
-       |    ON s1.doc_id = cc.id
-       |  WHERE cc.id IS NULL OR cc.cid = s1.doc_id),
-       |a1 AS MATERIALIZED (
-       |  SELECT doc_id FROM a0 UNION ALL SELECT doc_id FROM k1)
+       |${admissionStage(0)},
+       |${admissionStage(1)}
        |SELECT doc_id AS vec_id FROM a1""".stripMargin
+
+  /** Batch `b` of the two-batch admission replay shared by
+    * [[streamingNeardupOracle]] and [[streamingEmbedNeardupOracle]]:
+    * survivors `s<b>` (no edge into the prior batch's admitted set),
+    * their recursive connected components `r<b>`, the min-id keepers
+    * `k<b>`, and the admitted set so far `a<b>`. Reads the caller's
+    * `bdocs` (doc_id, b) and undirected `edges` (u, v). A `def`, not a
+    * `val`: both oracle vals call it during object init. */
+  private def admissionStage(b: Int): String = {
+    val surv =
+      if (b == 0) s"s$b AS MATERIALIZED (SELECT doc_id FROM bdocs WHERE b = $b)"
+      else s"""s$b AS MATERIALIZED (
+              |  SELECT d.doc_id FROM bdocs d WHERE d.b = $b
+              |  AND NOT EXISTS (SELECT 1 FROM edges e
+              |    JOIN a${b - 1} p ON e.v = p.doc_id WHERE e.u = d.doc_id))""".stripMargin
+    val cc = s"""r$b(id, r) AS (
+                |  SELECT e.u, e.u FROM edges e
+                |    JOIN s$b x ON e.u = x.doc_id JOIN s$b y ON e.v = y.doc_id
+                |  UNION
+                |  SELECT e.u, r$b.r FROM edges e
+                |    JOIN s$b x ON e.u = x.doc_id JOIN s$b y ON e.v = y.doc_id
+                |    JOIN r$b ON e.v = r$b.id)""".stripMargin
+    val keep = s"""k$b AS MATERIALIZED (
+                  |  SELECT s$b.doc_id FROM s$b
+                  |  LEFT JOIN (SELECT id, min(r) AS cid FROM r$b GROUP BY id) cc
+                  |    ON s$b.doc_id = cc.id
+                  |  WHERE cc.id IS NULL OR cc.cid = s$b.doc_id)""".stripMargin
+    val adm =
+      if (b == 0) s"a$b AS MATERIALIZED (SELECT doc_id FROM k$b)"
+      else s"a$b AS MATERIALIZED (SELECT doc_id FROM a${b - 1} " +
+        s"UNION ALL SELECT doc_id FROM k$b)"
+    Seq(surv, cc, keep, adm).mkString(",\n")
+  }
 
   /** The two-batch admission replay: exact-Jaccard pairs (the
     * q_minhash_dupes oracle — banding is recall-complete on these
@@ -960,32 +962,7 @@ object ConnectorQueries {
     * edge into the prior batches' admitted set. CTEs are MATERIALIZED:
     * without it the recursion re-expands the shingle self-join per
     * stage and the oracle never finishes. */
-  val streamingNeardupOracle: String = {
-    def stage(b: Int): String = {
-      val surv =
-        if (b == 0) s"s$b AS MATERIALIZED (SELECT doc_id FROM bdocs WHERE b = $b)"
-        else s"""s$b AS MATERIALIZED (
-                |  SELECT d.doc_id FROM bdocs d WHERE d.b = $b
-                |  AND NOT EXISTS (SELECT 1 FROM edges e
-                |    JOIN a${b - 1} p ON e.v = p.doc_id WHERE e.u = d.doc_id))""".stripMargin
-      val cc = s"""r$b(id, r) AS (
-                  |  SELECT e.u, e.u FROM edges e
-                  |    JOIN s$b x ON e.u = x.doc_id JOIN s$b y ON e.v = y.doc_id
-                  |  UNION
-                  |  SELECT e.u, r$b.r FROM edges e
-                  |    JOIN s$b x ON e.u = x.doc_id JOIN s$b y ON e.v = y.doc_id
-                  |    JOIN r$b ON e.v = r$b.id)""".stripMargin
-      val keep = s"""k$b AS MATERIALIZED (
-                    |  SELECT s$b.doc_id FROM s$b
-                    |  LEFT JOIN (SELECT id, min(r) AS cid FROM r$b GROUP BY id) cc
-                    |    ON s$b.doc_id = cc.id
-                    |  WHERE cc.id IS NULL OR cc.cid = s$b.doc_id)""".stripMargin
-      val adm =
-        if (b == 0) s"a$b AS MATERIALIZED (SELECT doc_id FROM k$b)"
-        else s"a$b AS MATERIALIZED (SELECT doc_id FROM a${b - 1} " +
-          s"UNION ALL SELECT doc_id FROM k$b)"
-      Seq(surv, cc, keep, adm).mkString(",\n")
-    }
+  val streamingNeardupOracle: String =
     s"""WITH RECURSIVE nn AS (SELECT count(*)::BIGINT AS n FROM documents),
        |bdocs AS MATERIALIZED (
        |  SELECT doc_id,
@@ -1000,11 +977,10 @@ object ConnectorQueries {
        |  SELECT doc_a AS u, doc_b AS v FROM pairs
        |  UNION SELECT doc_b, doc_a FROM pairs
        |),
-       |${stage(0)},
-       |${stage(1)}
+       |${admissionStage(0)},
+       |${admissionStage(1)}
        |SELECT d.doc_id, d.text FROM documents d
        |JOIN a1 ON d.doc_id = a1.doc_id""".stripMargin
-  }
 
   /** [[psiDriftOracle]]'s arithmetic replayed per micro-batch: the
     * reference histogram is the whole corpus's lang counts, a batch is

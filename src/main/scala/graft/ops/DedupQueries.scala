@@ -13,7 +13,13 @@ import org.apache.spark.sql.types._
   *  - MinHash+LSH: signatures are fixed-width (128 longs/doc) however
   *    large the doc; candidate generation is an equi-join on
   *    (band, bandHash) — shuffle ∝ docs × bands, never O(n²). The
-  *    exact-Jaccard verify only touches candidate pairs.
+  *    exact-Jaccard verify only touches candidate pairs. This object
+  *    owns both steps ([[bandCandidates]], [[verifyJaccard]]) for every
+  *    caller: the self-join ([[minhashDupesOn]]), the cross-corpus join
+  *    ([[crossDupesOn]]) and the streaming store's history probe and
+  *    within-batch pairs ([[graft.streaming.IncrementalDedup]], which
+  *    keeps [[graft.api.Graft.clusterDedup]]'s min-id keeper per
+  *    within-batch cluster).
   *  - SimHash: one 62-bit fingerprint per doc; bucket-join on the
   *    fingerprint prefix would shard hamming search at scale (here we
   *    emit fingerprints + close pairs).
@@ -23,10 +29,6 @@ import org.apache.spark.sql.types._
   * here is DuckDB-oracle-checkable end to end.
   */
 object DedupQueries {
-
-  // ---- shared tokenization ----
-
-  private def tokens(c: Column): Column = filter(split(c, " "), t => t =!= "")
 
   /** SQL-replicable 31-bit token hash: position-weighted char sum mixed
     * by an LCG step (`(poly * 48271) % 2147483647`). Weaker than
@@ -91,13 +93,6 @@ object DedupQueries {
       }(enc)
   }
 
-  /** Exact Jaccard on a pair of shingle arrays (set semantics). */
-  private def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double")
-
-  /** Near-duplicate pairs via MinHash → LSH banding → bucket join →
-    * exact-Jaccard verify. Output: (id_a, id_b, jaccard) — generalized
-    * entry used by [[graft.api.Graft.minhashDupes]]. */
   /** LSH band rows of a [[signatures]] frame: (doc_id, band, bandhash);
     * bandhash folds the band's signature slice so the join key is one
     * long, not an array. */
@@ -109,10 +104,6 @@ object DedupQueries {
           lit(0L), (acc, x) => pmod(acc * 31 + x, lit(P))))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandhash")
 
-  /** Exact Jaccard on shingle arrays — shared by the self-join and the
-    * incremental (batch-vs-history) verify. */
-  private[graft] def jaccardCol(a: Column, b: Column): Column = jaccard(a, b)
-
   /** Shingle arrays for an (id, text) frame — used to verify candidates
     * against a history store without recomputing full signatures. */
   private[graft] def shingleFrame(df: DataFrame, id: String, text: String): DataFrame = {
@@ -123,25 +114,43 @@ object DedupQueries {
     }(enc)
   }
 
+  /** Candidate pairs of two [[bandsOf]] frames: one row (`idA`, `idB`)
+    * per shared (band, bandhash), so a pair colliding in several bands
+    * repeats; `pair` (given the two doc_id columns) further restricts
+    * it — the self-join's `a < b`. Shuffle ∝ band rows, never O(n²). */
+  private[graft] def bandCandidates(x: DataFrame, y: DataFrame, idA: String, idB: String,
+      pair: Option[(Column, Column) => Column] = None): DataFrame = {
+    val onBand = col("x.band") === col("y.band") && col("x.bandhash") === col("y.bandhash")
+    x.as("x").join(y.as("y"), pair.fold(onBand)(p => onBand && p(col("x.doc_id"), col("y.doc_id"))))
+      .select(col("x.doc_id").as(idA), col("y.doc_id").as(idB))
+  }
+
+  /** Exact-Jaccard verify (set semantics) of candidate pairs (`idA`,
+    * `idB`) against the (doc_id, sh) shingle frames of each side:
+    * (`idA`, `idB`, jaccard) for the pairs at or above `threshold`. Only
+    * candidate pairs are touched. */
+  private[graft] def verifyJaccard(cand: DataFrame, idA: String, idB: String,
+      shA: DataFrame, shB: DataFrame, threshold: Double): DataFrame =
+    cand
+      .join(shA.select(col("doc_id"), col("sh").as("sh_a")), col(idA) === col("doc_id")).drop("doc_id")
+      .join(shB.select(col("doc_id"), col("sh").as("sh_b")), col(idB) === col("doc_id")).drop("doc_id")
+      .withColumn("jaccard", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+        size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col(idA), col(idB), col("jaccard"))
+
+  /** Near-duplicate pairs via MinHash → LSH banding → band self-join
+    * ([[bandCandidates]]) → exact-Jaccard verify ([[verifyJaccard]]).
+    * Output: (id_a, id_b, jaccard) — generalized entry used by
+    * [[graft.api.Graft.minhashDupes]]. */
   def minhashDupesOn(df: DataFrame, id: String, text: String, threshold: Double): DataFrame = {
     // the signature frame feeds the band self-join and both shingle
     // lookups: materialize it once (eager checkpoint beat both lazy
     // persist and recompute in an interleaved in-JVM A/B)
     val docs = signatures(df, id, text).localCheckpoint(true)
     val bands = bandsOf(docs)
-
-    val candidates = bands.as("x").join(bands.as("y"),
-        col("x.band") === col("y.band") &&
-        col("x.bandhash") === col("y.bandhash") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-
-    candidates
-      .join(docs.select(col("doc_id"), col("sh").as("sh_a")), col("doc_a") === col("doc_id")).drop("doc_id")
-      .join(docs.select(col("doc_id"), col("sh").as("sh_b")), col("doc_b") === col("doc_id")).drop("doc_id")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
+    val candidates = bandCandidates(bands, bands, "doc_a", "doc_b", Some(_ < _)).distinct()
+    verifyJaccard(candidates, "doc_a", "doc_b", docs, docs, threshold)
       .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"), col("jaccard"))
   }
 
@@ -260,17 +269,8 @@ object DedupQueries {
                    text: String, threshold: Double): DataFrame = {
     val sn = signatures(newDf, id, text)
     val sr = signatures(refDf, id, text)
-    val candidates = bandsOf(sn).as("x").join(bandsOf(sr).as("y"),
-        col("x.band") === col("y.band") &&
-        col("x.bandhash") === col("y.bandhash"))
-      .select(col("x.doc_id").as("new_id"), col("y.doc_id").as("ref_id"))
-      .distinct()
-    candidates
-      .join(sn.select(col("doc_id"), col("sh").as("sh_a")), col("new_id") === col("doc_id")).drop("doc_id")
-      .join(sr.select(col("doc_id"), col("sh").as("sh_b")), col("ref_id") === col("doc_id")).drop("doc_id")
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("new_id"), col("ref_id"), col("jaccard"))
+    val candidates = bandCandidates(bandsOf(sn), bandsOf(sr), "new_id", "ref_id").distinct()
+    verifyJaccard(candidates, "new_id", "ref_id", sn, sr, threshold)
   }
 
   /** Cross-corpus dedup on the fixtures: odd doc_ids play the "new

@@ -20,7 +20,7 @@ object TextQueries {
   private val StopwordsFr = Seq("le", "les", "des", "et", "est", "un", "une", "du", "que")
 
   /** Non-empty whitespace tokens of `text`. */
-  private def tokens = filter(split(col("text"), " "), t => t =!= "")
+  private def tokens = graft.api.Graft.tokens(col("text"))
 
   /** Text normalization: strip non-alphanumerics, lowercase, length. */
   def qTextClean(spark: SparkSession, dir: String): DataFrame =

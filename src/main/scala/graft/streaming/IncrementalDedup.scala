@@ -33,7 +33,10 @@ import graft.streaming.BucketFanout.{Bands, Docs}
   * Scale shape — per-batch cost is ∝ batch + candidates, NOT history:
   * the batch's band rows equi-join the PERSISTED band table (no
   * signature recomputation over history), and only candidate history
-  * docs are re-shingled for the exact-Jaccard verify. The band index is
+  * docs are re-shingled for the exact-Jaccard verify. Both the history
+  * probe and the within-batch pairs are [[DedupQueries.bandCandidates]]
+  * → [[DedupQueries.verifyJaccard]], the steps behind
+  * [[graft.api.Graft.minhashDupes]]. The band index is
   * bucket-partitioned on a bandhash prefix, so each trigger reads ONLY
   * the directories for the batch's own buckets — static partition
   * pruning, an O(batch)-bounded subset of files, not an O(history)
@@ -47,7 +50,8 @@ import graft.streaming.BucketFanout.{Bands, Docs}
   *     rejected;
   *  2. survivors dedup within the batch — one canonical doc (min id)
   *     per within-batch duplicate cluster (connected components, so a
-  *     chain a~b~c admits only a).
+  *     chain a~b~c admits only a): [[graft.api.Graft.clusterDedup]]'s
+  *     `kept` rule, the keeper [[IncrementalEmbedDedup]] uses too.
   * Micro-batch boundaries affect which witness rejects a doc — inherent
   * to any incremental dedup — but two admitted docs are NEVER verified
   * near-dups of each other, whatever the batching.
@@ -101,9 +105,7 @@ object IncrementalDedup {
       if (AtomicStore.exists(spark, bandsPath)) {
         phase("bucket-discovery")
         val seenBands = Bands.scan(spark, bandsPath, Bands.bucketsOf(newBands, fanout))
-          .select(col("doc_id").as("seen_id"), col("band"), col("bandhash"))
-        val cand = newBands.join(seenBands, Seq("band", "bandhash"))
-          .select(col("doc_id"), col("seen_id")).distinct()
+        val cand = DedupQueries.bandCandidates(newBands, seenBands, "new_id", "seen_id").distinct()
           // candidates feed TWO consumers below (the dbucket discovery
           // collect and the verify join) — materialize once
           .localCheckpoint(true)
@@ -112,18 +114,13 @@ object IncrementalDedup {
         // whole admitted text table — the docs-store analog of the
         // band-index pruning (the unpruned join scanned all of docs/
         // per trigger, an O(history) read)
-        val docsPruned = Docs.scan(spark, docsPath,
-          Docs.bucketsOf(cand.select(col("seen_id").as("doc_id")), docFanout))
+        val seenIds = cand.select(col("seen_id").as("doc_id"))
+        val docsPruned = Docs.scan(spark, docsPath, Docs.bucketsOf(seenIds, docFanout))
         val seenSh = DedupQueries.shingleFrame(
-          docsPruned.select(col("doc_id"), col("text"))
-            .join(cand.select(col("seen_id").as("doc_id")).distinct(), Seq("doc_id")),
+          docsPruned.select(col("doc_id"), col("text")).join(seenIds.distinct(), Seq("doc_id")),
           "doc_id", "text")
-          .select(col("doc_id").as("seen_id"), col("sh").as("sh_seen"))
-        cand
-          .join(newSigs.select(col("doc_id"), col("sh")), Seq("doc_id"))
-          .join(seenSh, Seq("seen_id"))
-          .filter(DedupQueries.jaccardCol(col("sh"), col("sh_seen")) >= threshold)
-          .select(col("doc_id")).distinct()
+        DedupQueries.verifyJaccard(cand, "new_id", "seen_id", newSigs, seenSh, threshold)
+          .select(col("new_id").as("doc_id")).distinct()
           // eager checkpoint of the (tiny) rejected-id frame: both the
           // within-batch pair probe and the admitted build consume
           // survivors, and without this each re-runs the whole history
@@ -131,41 +128,34 @@ object IncrementalDedup {
           .localCheckpoint(true)
       } else spark.range(0).select(col("id").as("doc_id"))
 
-    val survivors = newDocs.join(rejectedByHistory, Seq("doc_id"), "left_anti")
+    // the rejected ids here and the keeper ids below are subsets of the
+    // batch's ids, so both joins broadcast them: left to AQE, each starts
+    // as a sort-merge join and pays its shuffle stages as extra jobs
+    // before the runtime switch to broadcast
+    val survivors = newDocs.join(broadcast(rejectedByHistory), Seq("doc_id"), "left_anti")
 
     // 2. within-batch canonicalization: near-dup pairs among survivors →
-    //    connected clusters → keep the min id of each cluster. The
-    //    pairs reuse the CACHED signatures/bands computed above —
-    //    band hashes are a pure function of a doc's own signature, so
-    //    restricting the cached rows to survivors is exactly
-    //    minhashDupes(survivors) without a second kernel pass
+    //    connected clusters → clusterDedup's keepers. The pairs reuse the
+    //    CACHED signatures/bands computed above — band hashes are a pure
+    //    function of a doc's own signature, so restricting the cached
+    //    rows to survivors is exactly minhashDupes(survivors) without a
+    //    second kernel pass
     val sBands = newBands.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
     // no .distinct() here: a pair colliding in several bands just
     // evaluates the (cheap, array-local) jaccard filter more than once
     // and dupClusters' own edges-distinct dedups — the distinct cost a
     // full exchange + AQE stage round per trigger for nothing
-    val cands = sBands.as("x").join(sBands.as("y"),
-        col("x.band") === col("y.band") &&
-        col("x.bandhash") === col("y.bandhash") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    val pairs = cands
-      .join(newSigs.select(col("doc_id"), col("sh").as("sh_a")),
-        col("doc_a") === col("doc_id")).drop("doc_id")
-      .join(newSigs.select(col("doc_id"), col("sh").as("sh_b")),
-        col("doc_b") === col("doc_id")).drop("doc_id")
-      .filter(DedupQueries.jaccardCol(col("sh_a"), col("sh_b")) >= threshold)
-      .select(col("doc_a").as("id_a"), col("doc_b").as("id_b"))
+    val pairs = DedupQueries.verifyJaccard(
+      DedupQueries.bandCandidates(sBands, sBands, "id_a", "id_b", Some(_ < _)),
+      "id_a", "id_b", newSigs, newSigs, threshold)
     phase("within-batch-cc")
-    val clusters = graft.api.Graft.dupClusters(pairs, "id_a", "id_b")
-      .withColumnRenamed("id", "doc_id")
+    val keep = graft.api.Graft.clusterDedup(survivors, "doc_id", pairs, "id_a", "id_b")
+      .filter(col("kept")).select(col("doc_id"))
     // localCheckpoint (eager) truncates lineage BEFORE the store writes:
     // the admitted plan reads the store's current files, so a lazy
     // recompute after the appends below would see its own output
     phase("admitted-checkpoint")
-    val admitted = survivors.join(clusters, Seq("doc_id"), "left")
-      .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
-      .select(col("doc_id"), col("text"))
+    val admitted = survivors.join(broadcast(keep), Seq("doc_id"), "left_semi")
       .localCheckpoint(true)
 
     // The two store appends are independent (different subdirs, both

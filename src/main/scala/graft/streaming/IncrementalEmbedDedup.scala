@@ -83,7 +83,10 @@ object IncrementalEmbedDedup {
     *  1. a new vector with a verified near-dup among ADMITTED history is
     *     rejected;
     *  2. survivors dedup within the batch — one canonical vector (min
-    *     id) per within-batch duplicate cluster. */
+    *     id) per within-batch duplicate cluster:
+    *     [[graft.api.Graft.clusterDedup]]'s `kept` rule over
+    *     [[graft.api.Graft.embedNearDup]]'s pairs, the keeper
+    *     [[IncrementalDedup]] uses. */
   def admitBatch(batch: DataFrame, id: String, vec: String,
       threshold: Double, storeDir: String,
       ivf: Ivf.Params = Ivf.Params()): DataFrame =
@@ -155,21 +158,17 @@ object IncrementalEmbedDedup {
     // 2. within-batch canonicalization: near-dup pairs among survivors
     //    (reusing the amortized centroids — the indexed overload measures
     //    the survivors' own radii, so probing stays complete) →
-    //    connected clusters → keep the min id of each cluster
+    //    connected clusters → clusterDedup's keepers
     phase("within-batch-cc")
     val pairs = graft.api.Graft.embedNearDup(survivors, "doc_id", "vec", threshold, index)
-    val clusters = graft.api.Graft.dupClusters(pairs, "id_a", "id_b")
-      .withColumnRenamed("id", "doc_id")
+    val keep = graft.api.Graft.clusterDedup(survivors, "doc_id", pairs, "id_a", "id_b")
+      .filter(col("kept")).select(col("doc_id"))
     // localCheckpoint (eager) truncates lineage BEFORE the store writes:
     // the admitted plan reads the store's current files via the history
     // anti-join, so a lazy recompute after the appends below would see
     // its own output
     phase("admitted-checkpoint")
-    val admittedHome = home
-      .join(survivors.join(clusters, Seq("doc_id"), "left")
-        .filter(col("cluster_id").isNull || col("cluster_id") === col("doc_id"))
-        .select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+    val admittedHome = home.join(keep, Seq("doc_id"), "left_semi").localCheckpoint(true)
 
     // radii BEFORE vectors: a crash between the two appends must leave
     // radii as the OVER-bound side (rows whose vectors never landed only

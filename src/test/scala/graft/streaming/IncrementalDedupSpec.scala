@@ -534,6 +534,29 @@ class IncrementalDedupSpec extends SparkTestBase {
       assert(listing.isEmpty, s"file-listing jobs ran: $listing")
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("within-batch canonicalization keeps clusterDedup's keeper: only the " +
+      "min id of a chain x~y~z (x and z not near-dups) is admitted") {
+    val store = Files.createTempDirectory("incdedup-chain-").toString
+    // windows of one 116-word run, shifted by 8 words: consecutive
+    // windows share 90 of 106 3-shingles (J ≈ 0.85 ≥ 0.8), the ends
+    // share 82 of 114 (J ≈ 0.72 < 0.8). The chain's min id sits at an
+    // end, so a greedy keep-first rule would also admit z.
+    def window(from: Int): String = (from until from + 100).map(j => s"cw$j").mkString(" ")
+    val batch = Seq(1L -> window(0), 4L -> window(8), 6L -> window(16),
+      2L -> doc(2L, "cs")._2, 9L -> doc(9L, "ct")._2)
+    val df = spark.createDataFrame(batch).toDF("doc_id", "text")
+    val dupes = graft.api.Graft.minhashDupes(df, "doc_id", "text", 0.8)
+    val pairs = dupes.select(col("id_a"), col("id_b")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs === Set((1L, 4L), (4L, 6L)), s"fixture is not a chain x~y~z: $pairs")
+    val expected = graft.api.Graft.clusterDedup(df, "doc_id", dupes, "id_a", "id_b")
+      .filter(col("kept")).collect().map(_.getLong(0)).toSet
+    val admitted = admit(batch, store).collect().map(_.getLong(0)).toSet
+    assert(admitted === expected)
+    assert(admitted === Set(1L, 2L, 9L), s"admitted $admitted — expected the chain's min id and the singletons")
+    assert(IncrementalDedup.admittedDocs(spark, store).collect().map(_.getLong(0)).toSet === admitted)
+  }
 }
 
 object IncrementalDedupSpec {

@@ -256,4 +256,30 @@ class IncrementalEmbedDedupSpec extends SparkTestBase {
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(stored === Seq(1L, 3L))
   }
+
+  test("within-batch canonicalization keeps clusterDedup's keeper: only the " +
+      "min id of a chain x~y~z (x and z not near-dups) is admitted") {
+    val store = Files.createTempDirectory("incembed-chain-").toString
+    // unit vectors 8° apart in family 0's plane: consecutive ones at
+    // cosine 0.990 ≥ 0.98, the ends at 0.961 < 0.98. The chain's min id
+    // sits at an end, so a greedy keep-first rule would also admit z.
+    def at(deg: Double): Array[Float] = {
+      val v = new Array[Float](Dim)
+      v(0) = math.cos(math.toRadians(deg)).toFloat
+      v(16) = math.sin(math.toRadians(deg)).toFloat
+      v
+    }
+    val batch = Seq(1L -> at(0), 4L -> at(8), 6L -> at(16), 2L -> fam(1, 0), 9L -> fam(2, 0))
+    val df = batch.toDF("doc_id", "vec")
+    val dupes = graft.api.Graft.embedNearDup(df, "doc_id", "vec", T)
+    val pairs = dupes.select(col("id_a"), col("id_b")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs === Set((1L, 4L), (4L, 6L)), s"fixture is not a chain x~y~z: $pairs")
+    val expected = graft.api.Graft.clusterDedup(df, "doc_id", dupes, "id_a", "id_b")
+      .filter(col("kept")).collect().map(_.getLong(0)).toSet
+    val admitted = admit(batch, store).collect().map(_.getLong(0)).toSet
+    assert(admitted === expected)
+    assert(admitted === Set(1L, 2L, 9L), s"admitted $admitted — expected the chain's min id and the singletons")
+    assert(admittedIds(store) === admitted)
+  }
 }
