@@ -124,12 +124,8 @@ object ConnectorQueries {
     * values parsed with `schema` into top-level columns. */
   private def readFeed(spark: SparkSession, feed: FeedInfo, cap: Long,
       schema: StructType): DataFrame =
-    spark.readStream.format("dis")
-      .option("client.root", feed.root.toString).option("stream", feed.stream)
-      .option("maxRecordsPerTrigger", cap.toString)
-      .load()
-      .select(from_json(col("value").cast("string"), schema).as("d"))
-      .select(col("d.*"))
+    StreamingQueries.readJson(spark, feed.root.toString, feed.stream, schema, "d",
+      Map("maxRecordsPerTrigger" -> cap.toString))
 
   /** Streaming read of the sessions feed as events (`ts` a timestamp). */
   private def readEvents(spark: SparkSession, feed: FeedInfo, cap: Long): DataFrame =

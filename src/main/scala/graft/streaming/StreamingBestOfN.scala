@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Online rejection sampling — the streaming sibling of
   * [[graft.ops.RlQueries.qBestOfN]]: scored generation candidates
@@ -13,17 +11,24 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * produces for that pool, so an RLHF pipeline can keep only winners
   * at ingest instead of re-scanning the full sample log.
   *
+  * Pools are [[GapSessions]] of their key with gap `quietUs`: a key's
+  * candidates ≥ `quietUs` apart in EVENT time split into separate
+  * pools, each closed and emitted on its own, whatever the trigger
+  * boundaries (a catch-up replay whose watermark jumps past two bursts
+  * at once still emits two pools, as a live run does).
+  *
   * State shape — the deliberate contrast with [[StreamingSft]]: a
   * session transcript must BUFFER its turns (output needs every one),
   * but argmax-with-margin is an order-independent fold, so a pool's
-  * state is five scalars no matter how many candidates stream through
-  * it. Top-2 maintenance under the batch ordering (value desc,
-  * event_id asc) is merge-commutative, so out-of-order arrival inside
-  * the watermark cannot change the result — StreamingBestOfNSpec pins
-  * closed rows equal to [[graft.ops.RlQueries.bestOfNOf]]
-  * field-for-field across micro-batch boundaries and a checkpoint
-  * restart. At 100 TB/day the operator shuffles once on the pool key
-  * into the state store; everything else is per-key O(1). */
+  * summary is a count and two candidates no matter how many stream
+  * through it. The top-2 of a union is the top-2 of the two sides'
+  * top-2s under the batch ordering (value desc, event_id asc), so the
+  * merge is commutative and out-of-order arrival inside the watermark
+  * cannot change the result — StreamingBestOfNSpec pins closed rows
+  * equal to [[graft.ops.RlQueries.bestOfNOf]] field-for-field across
+  * micro-batch boundaries and a checkpoint restart. At 100 TB/day the
+  * operator shuffles once on the pool key into the state store;
+  * everything else is per-key O(1). */
 object StreamingBestOfN {
 
   /** (value desc, event_id asc) — one candidate beats another exactly
@@ -33,17 +38,20 @@ object StreamingBestOfN {
       value > o.value || (value == o.value && eventId < o.eventId)
   }
 
-  /** n + top-2 + the pool's latest event time (for the close wake-up). */
-  final case class PoolState(n: Long, best: Cand, second: Option[Cand], lastUs: Long)
+  /** n + top-2. */
+  final case class PoolState(n: Long, best: Cand, second: Option[Cand])
 
   final case class BestOfNOut(user_id: Long, event_type: String,
       n_candidates: Long, best_event_id: Long, best_score: Double,
       margin: Double)
 
-  private[streaming] def fold(st: PoolState, c: Cand): PoolState =
-    if (c.beats(st.best)) st.copy(n = st.n + 1, best = c, second = Some(st.best))
-    else if (st.second.forall(c.beats)) st.copy(n = st.n + 1, second = Some(c))
-    else st.copy(n = st.n + 1)
+  /** Top-2 of the union: the better best wins, and the runner-up is the
+    * better of its own runner-up and the other side's best. */
+  private[streaming] def merge(a: PoolState, b: PoolState): PoolState = {
+    val (hi, lo) = if (b.best.beats(a.best)) (b, a) else (a, b)
+    PoolState(a.n + b.n, hi.best,
+      Some(hi.second.filter(_.beats(lo.best)).getOrElse(lo.best)))
+  }
 
   private[streaming] def close(userId: Long, eventType: String,
       st: PoolState): BestOfNOut =
@@ -52,8 +60,13 @@ object StreamingBestOfN {
       // pool (a tied runner-up gives 0), singletons report 0
       st.best.value - st.second.map(_.value).getOrElse(st.best.value))
 
+  /** The pool key and each candidate's fields, as the pool operators
+    * (these two and [[StreamingRlMetrics.monitor]]) read them:
+    * (user_id, event_type, event_id, value). */
+  private[streaming] val Cols = Seq("user_id", "event_type", "event_id", "value")
+  private[streaming] type Ev = (Long, String, Long, Double)
+
   final case class GrpoCand(eventId: Long, value: Double)
-  final case class GrpoState(cands: List[GrpoCand], lastUs: Long)
   final case class GrpoOut(user_id: Long, event_type: String, event_id: Long,
       n: Long, adv: Double)
 
@@ -65,7 +78,8 @@ object StreamingBestOfN {
     * watermark closes the pool each candidate is emitted with its
     * pool-standardized advantage from the SAME explicit-moment
     * arithmetic as the batch query (Σv, Σv², the floor-rounding), so
-    * closed pools equal the batch rows field-for-field. Summation runs
+    * closed pools equal the batch rows field-for-field. Pools split on
+    * event-time gaps ≥ `quietUs` as [[selectBest]]'s do. Summation runs
     * in (event_id) order regardless of arrival order, so the streamed
     * result is replay-deterministic; vs the batch side (which reduces
     * in scan order) the 4-decimal floor-rounding absorbs last-ULP
@@ -78,48 +92,24 @@ object StreamingBestOfN {
       watermark: String = "10 minutes"): Dataset[GrpoOut] = {
     import spark.implicits._
     require(quietUs > 0, s"quietUs must be positive, got $quietUs")
-
-    events
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"), col("value"))
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), col("ts_us"), col("event_id"),
-        col("event_type"), col("value"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String, Double)]
-      .groupByKey(r => (r._1, r._5))
-      .flatMapGroupsWithState[GrpoState, GrpoOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((user, etype), rows, state: GroupState[GrpoState]) =>
-          var st = state.getOption.getOrElse(GrpoState(Nil, Long.MinValue))
-          rows.foreach { case (_, _, tsUs, eid, _, value) =>
-            st = GrpoState(GrpoCand(eid, value) :: st.cands,
-              math.max(st.lastUs, tsUs))
-          }
-          if (st.cands.nonEmpty &&
-              state.getCurrentWatermarkMs() * 1000L >= st.lastUs + quietUs) {
-            state.remove()
-            // deterministic summation order: by event_id, exactly the
-            // file order the batch agg reduces at the fixture grain
-            val ordered = st.cands.sortBy(_.eventId)
-            val n = ordered.length.toLong
-            var s = 0.0; var s2 = 0.0
-            ordered.foreach { c => s += c.value; s2 += c.value * c.value }
-            val varS = if (n > 1) (s2 - s * s / n) / (n - 1) else -1.0
-            ordered.iterator.map { c =>
-              val adv =
-                if (varS <= 0.0) 0.0
-                else math.floor((c.value - s / n) / math.sqrt(varS) * 1e4 + 0.5) / 1e4
-              GrpoOut(user, etype, c.eventId, n, adv)
-            }
-          } else {
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max((st.lastUs + quietUs) / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
+    GapSessions.sessions[Ev, (Long, String), List[GrpoCand], GrpoOut](
+        events, Cols, watermark, quietUs)(
+      e => (e._1, e._2), (_, e) => List(GrpoCand(e._3, e._4)), GapSessions.concat) {
+      case ((user, etype), _, pool) =>
+        // deterministic summation order: by event_id, exactly the
+        // file order the batch agg reduces at the fixture grain
+        val ordered = pool.s.sortBy(_.eventId)
+        val n = ordered.length.toLong
+        var s = 0.0; var s2 = 0.0
+        ordered.foreach { c => s += c.value; s2 += c.value * c.value }
+        val varS = if (n > 1) (s2 - s * s / n) / (n - 1) else -1.0
+        ordered.iterator.map { c =>
+          val adv =
+            if (varS <= 0.0) 0.0
+            else math.floor((c.value - s / n) / math.sqrt(varS) * 1e4 + 0.5) / 1e4
+          GrpoOut(user, etype, c.eventId, n, adv)
+        }
+    }
   }
 
   /** The streaming query: `events` must carry (user_id, ts, event_id,
@@ -132,39 +122,10 @@ object StreamingBestOfN {
       watermark: String = "10 minutes"): Dataset[BestOfNOut] = {
     import spark.implicits._
     require(quietUs > 0, s"quietUs must be positive, got $quietUs")
-
-    events
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"), col("value"))
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), col("ts_us"), col("event_id"),
-        col("event_type"), col("value"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String, Double)]
-      .groupByKey(r => (r._1, r._5))
-      .flatMapGroupsWithState[PoolState, BestOfNOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((user, etype), rows, state: GroupState[PoolState]) =>
-          // fold the batch's candidates into the O(1) pool summary;
-          // a timeout wake-up simply delivers zero rows
-          var st = state.getOption.orNull
-          rows.foreach { case (_, _, tsUs, eid, _, value) =>
-            val c = Cand(value, eid)
-            st =
-              if (st == null) PoolState(1L, c, None, tsUs)
-              else fold(st.copy(lastUs = math.max(st.lastUs, tsUs)), c)
-          }
-          if (state.getCurrentWatermarkMs() * 1000L >= st.lastUs + quietUs) {
-            state.remove()
-            Iterator.single(close(user, etype, st))
-          } else {
-            state.update(st)
-            // wake when the pool's quiet horizon could pass the watermark
-            state.setTimeoutTimestamp(
-              math.max((st.lastUs + quietUs) / 1000L + 1L,
-                state.getCurrentWatermarkMs() + 1L))
-            Iterator.empty
-          }
-      }
+    GapSessions.sessions[Ev, (Long, String), PoolState, BestOfNOut](
+        events, Cols, watermark, quietUs)(
+      e => (e._1, e._2), (_, e) => PoolState(1L, Cand(e._4, e._3), None), merge) {
+      case ((user, etype), _, pool) => Iterator.single(close(user, etype, pool.s))
+    }
   }
 }

@@ -33,23 +33,35 @@ object StreamingQueries {
     StructField("props", StringType)))
 
   /** Streaming read of a dis stream whose record values are JSON
-    * events — deserializer-pluggability analog (the reference's
-    * value.deserializer, dis/DISUtils.scala:379-380): bytes →
-    * from_json → typed columns. */
+    * events ([[eventSchema]]), `ts` a timestamp. */
   def readEvents(
       spark: SparkSession,
       root: String,
       stream: String,
-      options: Map[String, String] = Map.empty): DataFrame = {
+      options: Map[String, String] = Map.empty): DataFrame =
+    readJson(spark, root, stream, eventSchema, "e", options)
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+      .drop("ts_us")
+
+  /** Streaming read of a dis stream whose record values are JSON rows
+    * of `schema` — deserializer-pluggability analog (the reference's
+    * value.deserializer, dis/DISUtils.scala:379-380): bytes →
+    * from_json → typed top-level columns. `as` names the parsed struct
+    * column in the plan. */
+  private[graft] def readJson(
+      spark: SparkSession,
+      root: String,
+      stream: String,
+      schema: StructType,
+      as: String,
+      options: Map[String, String]): DataFrame = {
     val base = spark.readStream.format("dis")
       .option("client.root", root)
       .option("stream", stream)
     options.foldLeft(base) { case (b, (k, v)) => b.option(k, v) }
       .load()
-      .select(from_json(col("value").cast("string"), eventSchema).as("e"))
-      .select(col("e.*"))
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .drop("ts_us")
+      .select(from_json(col("value").cast("string"), schema).as(as))
+      .select(col(s"$as.*"))
   }
 
   /** Schema of the JSON document payloads the streaming-gate bindings
@@ -60,22 +72,6 @@ object StreamingQueries {
     StructField("lang", StringType),
     StructField("source", StringType),
     StructField("n_chars", LongType)))
-
-  /** Streaming read of a dis stream whose record values are JSON
-    * document-metadata rows ([[docSchema]]). */
-  def readDocs(
-      spark: SparkSession,
-      root: String,
-      stream: String,
-      options: Map[String, String] = Map.empty): DataFrame = {
-    val base = spark.readStream.format("dis")
-      .option("client.root", root)
-      .option("stream", stream)
-    options.foldLeft(base) { case (b, (k, v)) => b.option(k, v) }
-      .load()
-      .select(from_json(col("value").cast("string"), docSchema).as("d"))
-      .select(col("d.*"))
-  }
 
   /** Tumbling event-time window counts with watermarking; append mode
     * emits a window once the watermark passes its end. */
@@ -207,18 +203,15 @@ object StreamingQueries {
         batch.groupBy(col(feature)).agg(count(lit(1)).as("n_b")), feature)
       .withColumn("batch_id", lit(batchId))
 
-  /** One open session in keyed state (all times epoch micros — sub-ms
-    * precision survives the state round-trip, java.sql.Timestamp's
-    * getTime would truncate). */
-  final case class OpenSession(startUs: Long, lastUs: Long, n: Long, sum: Double)
   final case class SessionOut(user_id: Long, start_us: Long, end_us: Long,
       n_events: Long, sum_value: Double)
 
-  /** Custom-state sessionization on flatMapGroupsWithState with
-    * EventTimeTimeout — the hand-rolled equivalent of session_window,
-    * demonstrating arbitrary keyed state: multiple open sessions per
-    * user, out-of-order merges within the watermark, emission exactly
-    * when the watermark passes sessionEnd (= last event + gap).
+  /** Custom-state sessionization with EventTimeTimeout — the
+    * hand-rolled equivalent of session_window, demonstrating arbitrary
+    * keyed state: a [[GapSessions]] caller whose per-session summary is
+    * (n, sum), so multiple open sessions per user, out-of-order merges
+    * within the watermark and emission exactly when the watermark
+    * passes sessionEnd (= last event + gap) all come from the kernel.
     * Output times are epoch micros; wrap with timestamp_micros for
     * display. State is O(open sessions per user). */
   def sessionizeWithState(
@@ -231,49 +224,11 @@ object StreamingQueries {
       .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(gap))
     require(iv.months == 0, "session gap must not use month units")
     val gapUs = iv.days * 86400000000L + iv.microseconds
-
-    def mergeInto(sessions: List[OpenSession], tsUs: Long, v: Double): List[OpenSession] = {
-      // sessions kept sorted by startUs; an event joins a session if it
-      // lands within gap of its span, else opens a new one; sessions
-      // that become adjacent merge (out-of-order bridging events)
-      val joined = OpenSession(tsUs, tsUs, 1L, v)
-      val merged = (joined :: sessions).sortBy(_.startUs)
-      merged.foldLeft(List.empty[OpenSession]) { (acc, s) =>
-        acc match {
-          case head :: tail if s.startUs < head.lastUs + gapUs =>
-            OpenSession(head.startUs, math.max(head.lastUs, s.lastUs),
-              head.n + s.n, head.sum + s.sum) :: tail
-          case _ => s :: acc
-        }
-      }.reverse
+    GapSessions.sessions[(Long, Double), Long, (Long, Double), SessionOut](
+        events, Seq("user_id", "value"), watermark, gapUs)(
+      _._1, (_, e) => (1L, e._2), (a, b) => (a._1 + b._1, a._2 + b._2)) { (user, _, s) =>
+      Iterator.single(SessionOut(user, s.startUs, s.lastUs + gapUs, s.s._1, s.s._2))
     }
-
-    // the watermarked event-time column must flow INTO the stateful
-    // operator (projecting it away voids the watermark); the kernel
-    // reads the exact micros from ts_us and ignores the Timestamp
-    events.select(col("user_id"), unix_micros(col("ts")).as("ts_us"), col("value"))
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), col("ts_us"), col("value"))
-      .as[(Long, java.sql.Timestamp, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[List[OpenSession], SessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (user, rows, state: GroupState[List[OpenSession]]) =>
-          var sessions = state.getOption.getOrElse(Nil)
-          rows.foreach { case (_, _, tsUs, v) => sessions = mergeInto(sessions, tsUs, v) }
-          val watermarkUs = state.getCurrentWatermarkMs() * 1000L
-          val (closed, open) = sessions.partition(_.lastUs + gapUs <= watermarkUs)
-          if (open.isEmpty) state.remove()
-          else {
-            state.update(open)
-            // wake up when the earliest open session could close
-            val wakeMs = (open.map(_.lastUs).min + gapUs) / 1000L + 1L
-            state.setTimeoutTimestamp(math.max(wakeMs, state.getCurrentWatermarkMs() + 1L))
-          }
-          closed.sortBy(_.startUs).iterator.map(s =>
-            SessionOut(user, s.startUs, s.lastUs + gapUs, s.n, s.sum))
-      }
   }
 
   /** Custom keyed state via flatMapGroupsWithState: running per-user

@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Live RL-metrics monitor — the ingest-time sibling of
   * [[graft.ops.RlQueries.qPassAtK]] and
@@ -25,27 +23,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * (ts, event_id)) so Σd² is an exact integer — arrival order cannot
   * change any of it, the replay-determinism argument.
   *
-  * Pool BOUNDARIES are event-time-only, the other half of that
-  * argument: the buffer is re-split at every close into maximal runs
-  * whose consecutive event-time gaps are < quietUs (the event-time
-  * mirror of the close rule wm ≥ last + quietUs), and a session is
-  * emitted only once the watermark clears ITS OWN last + quietUs. Two
-  * bursts of one key separated by ≥ quietUs in event time therefore
-  * emit as two pools even when a catch-up / AvailableNow replay
-  * advances the watermark in hour-sized jumps that cover both — the
-  * case where a close keyed on the whole buffer's `lastUs` would have
-  * merged them. A bridging event can only merge OPEN sessions: closing
-  * a session needs wm ≥ last + quietUs, and any later event that could
-  * bridge it (ts < last + quietUs ≤ wm) is behind the watermark and
-  * dropped as late on every path, replayed or live. At 100 TB/day
-  * the operator shuffles once on the pool key into the state store;
-  * per-key work is O(N) per batch while a pool is open (a min-scan
-  * early-out guards the sort) and O(N log N) on the batches where the
-  * watermark has reached the earliest possible close. */
+  * Pools are [[GapSessions]] of their key with gap `quietUs`, whose
+  * scaladoc carries the other half of that argument: pool BOUNDARIES
+  * are event-time-only, so two bursts of one key ≥ `quietUs` apart emit
+  * as two pools even when a catch-up replay's watermark jumps past
+  * both. At 100 TB/day the operator shuffles once on the pool key into
+  * the state store; per-key work per batch is a sort of the batch's
+  * candidates and one pass over the open pools. */
 object StreamingRlMetrics {
 
   final case class Cand(eventId: Long, tsUs: Long, value: Double)
-  final case class PoolState(cands: List[Cand], lastUs: Long)
   final case class RlMetricsOut(user_id: Long, event_type: String,
       n: Long, c: Long, pass_at_1: Option[Double], pass_at_5: Option[Double],
       pass_at_10: Option[Double], spearman: Option[Double])
@@ -103,82 +90,14 @@ object StreamingRlMetrics {
       watermark: String = "10 minutes"): Dataset[RlMetricsOut] = {
     import spark.implicits._
     require(quietUs > 0, s"quietUs must be positive, got $quietUs")
-
-    events
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"), col("value"))
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), col("ts_us"), col("event_id"),
-        col("event_type"), col("value"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String, Double)]
-      .groupByKey(r => (r._1, r._5))
-      .flatMapGroupsWithState[PoolState, RlMetricsOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case ((user, etype), rows, state: GroupState[PoolState]) =>
-          var st = state.getOption.getOrElse(PoolState(Nil, Long.MinValue))
-          rows.foreach { case (_, _, tsUs, eid, _, value) =>
-            st = PoolState(Cand(eid, tsUs, value) :: st.cands,
-              math.max(st.lastUs, tsUs))
-          }
-          if (st.cands.isEmpty) { state.remove(); Iterator.empty }
-          else {
-            val wmUs = state.getCurrentWatermarkMs() * 1000L
-            // Early-out for the common per-batch path: every session's
-            // last ts is ≥ the buffer's MIN ts, so while the watermark
-            // has not even reached minTs + quietUs nothing can close —
-            // skip the sort/split entirely (an O(N) scan instead of
-            // O(N log N) per batch on long-open pools). The timeout may
-            // fire before the true earliest close; the handler then
-            // lands here again and just re-arms.
-            var minUs = Long.MaxValue
-            st.cands.foreach(cd => if (cd.tsUs < minUs) minUs = cd.tsUs)
-            if (wmUs < minUs + quietUs) {
-              state.update(st)
-              state.setTimeoutTimestamp(
-                math.max((minUs + quietUs) / 1000L + 1L,
-                  state.getCurrentWatermarkMs() + 1L))
-              Iterator.empty
-            } else {
-            // Re-split the buffer into event-time sessions: a gap of
-            // ≥ quietUs between consecutive candidates starts a new
-            // pool (mirrors the close rule below, which fires exactly
-            // when wm reaches last + quietUs). Sort is deterministic
-            // ((ts, event_id)) so arrival order can't change the split.
-            val sorted = st.cands.sortBy(cd => (cd.tsUs, cd.eventId))
-            val sessions =
-              scala.collection.mutable.ListBuffer.empty[
-                scala.collection.mutable.ListBuffer[Cand]]
-            sorted.foreach { cd =>
-              if (sessions.isEmpty ||
-                  cd.tsUs - sessions.last.last.tsUs >= quietUs)
-                sessions += scala.collection.mutable.ListBuffer(cd)
-              else sessions.last += cd
-            }
-            // Sessions are event-time-ordered, so closed ones form a
-            // prefix; emit them oldest-first.
-            val (closed, open) =
-              sessions.partition(s => wmUs >= s.last.tsUs + quietUs)
-            val out = closed.iterator.map { s =>
-              val cands = s.toList
-              val n = cands.length.toLong
-              val c = cands.count(_.value >= 60.0).toLong
-              RlMetricsOut(user, etype, n, c,
-                passAtK(n, c, 1), passAtK(n, c, 5), passAtK(n, c, 10),
-                spearman(cands))
-            }.toList
-            if (open.isEmpty) state.remove()
-            else {
-              state.update(
-                PoolState(open.iterator.flatten.toList, open.last.last.tsUs))
-              // wake at the EARLIEST open session's close time
-              state.setTimeoutTimestamp(
-                math.max((open.head.last.tsUs + quietUs) / 1000L + 1L,
-                  state.getCurrentWatermarkMs() + 1L))
-            }
-            out.iterator
-            }
-          }
-      }
+    GapSessions.sessions[StreamingBestOfN.Ev, (Long, String), List[Cand], RlMetricsOut](
+        events, StreamingBestOfN.Cols, watermark, quietUs)(
+      e => (e._1, e._2), (ts, e) => List(Cand(e._3, ts, e._4)), GapSessions.concat) {
+      case ((user, etype), _, pool) =>
+        val n = pool.s.length.toLong
+        val c = pool.s.count(_.value >= 60.0).toLong
+        Iterator.single(RlMetricsOut(user, etype, n, c,
+          passAtK(n, c, 1), passAtK(n, c, 5), passAtK(n, c, 10), spearman(pool.s)))
+    }
   }
 }

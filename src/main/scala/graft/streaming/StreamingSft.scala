@@ -1,8 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Ingest-time SFT transcript assembly — the streaming sibling of
   * [[graft.ops.SftQueries.qSftAssemble]]: gap-defined user sessions
@@ -22,17 +20,17 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * window's running session number — StreamingSftSpec pins closed rows
   * equal to the batch output field-for-field.
   *
-  * State shape ([[StreamingQueries.sessionizeWithState]] pattern:
-  * multiple open sessions per user, out-of-order merges inside the
-  * watermark, EventTimeTimeout wake-ups): per user, the open sessions'
-  * turn buffers — bounded by one human's activity inside gap windows,
-  * never corpus-sized. At 100 TB/day the operator shuffles once on
-  * user_id into the state store; everything else is per-key. */
+  * State shape: a [[GapSessions]] caller whose per-session summary is
+  * the turn buffer and whose per-user ordinal is the `sid`, so the
+  * counter outlives the user's sessions (multiple open sessions per
+  * user, out-of-order merges inside the watermark and the
+  * EventTimeTimeout wake-ups all come from the kernel). Per user, the
+  * open sessions' turn buffers — bounded by one human's activity inside
+  * gap windows, never corpus-sized. At 100 TB/day the operator shuffles
+  * once on user_id into the state store; everything else is per-key. */
 object StreamingSft {
 
   final case class SftTurn(tsUs: Long, eventId: Long, eventType: String, props: String)
-  final case class OpenSft(startUs: Long, lastUs: Long, turns: List[SftTurn])
-  final case class SftState(nextSid: Long, open: List[OpenSft])
   final case class SftSessionOut(user_id: Long, sid: Long, n_turns: Long,
       transcript: String, transcript_chars: Long, assistant_chars: Long,
       mask_frac: Double)
@@ -42,8 +40,8 @@ object StreamingSft {
     * sorted by (ts, event_id); odd 1-based positions are `user`, even
     * `assistant`; char counts are code points (Spark `length`
     * semantics, so the row is bit-comparable to the batch query). */
-  private[streaming] def assemble(userId: Long, sid: Long, s: OpenSft): SftSessionOut = {
-    val ordered = s.turns.sortBy(t => (t.tsUs, t.eventId))
+  private[streaming] def assemble(userId: Long, sid: Long, turns: List[SftTurn]): SftSessionOut = {
+    val ordered = turns.sortBy(t => (t.tsUs, t.eventId))
     val sb = new java.lang.StringBuilder
     var assistantChars = 0L
     var idx = 0
@@ -71,64 +69,10 @@ object StreamingSft {
       events: DataFrame,
       watermark: String = "10 minutes"): Dataset[SftSessionOut] = {
     import spark.implicits._
-    val gapUs = graft.ops.SftQueries.GapMicros
-
-    def mergeInto(sessions: List[OpenSft], t: SftTurn): List[OpenSft] = {
-      // kept sorted by startUs; a turn joins a session when it lands
-      // within gap of its span; bridging turns merge adjacent sessions
-      val joined = OpenSft(t.tsUs, t.tsUs, List(t))
-      val merged = (joined :: sessions).sortBy(_.startUs)
-      merged.foldLeft(List.empty[OpenSft]) { (acc, s) =>
-        acc match {
-          case head :: tail if s.startUs < head.lastUs + gapUs =>
-            OpenSft(head.startUs, math.max(head.lastUs, s.lastUs),
-              head.turns ::: s.turns) :: tail
-          case _ => s :: acc
-        }
-      }.reverse
-    }
-
-    // the watermarked event-time column must flow INTO the stateful
-    // operator; the kernel reads exact micros from ts_us
-    events
-      .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-        col("event_id"), col("event_type"), col("props"))
-      .withColumn("ts", timestamp_micros(col("ts_us")))
-      .withWatermark("ts", watermark)
-      .select(col("user_id"), col("ts"), col("ts_us"), col("event_id"),
-        col("event_type"), col("props"))
-      .as[(Long, java.sql.Timestamp, Long, Long, String, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SftState, SftSessionOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (user, rows, state: GroupState[SftState]) =>
-          var st = state.getOption.getOrElse(SftState(1L, Nil))
-          rows.foreach { case (_, _, tsUs, eid, etype, props) =>
-            st = st.copy(open = mergeInto(st.open,
-              SftTurn(tsUs, eid, etype, if (props == null) "" else props)))
-          }
-          val watermarkUs = state.getCurrentWatermarkMs() * 1000L
-          val (closed, open) = st.open.partition(_.lastUs + gapUs <= watermarkUs)
-          val ordered = closed.sortBy(_.startUs)
-          val out = ordered.zipWithIndex.map { case (s, i) =>
-            assemble(user, st.nextSid + i, s)
-          }
-          val nextSid = st.nextSid + ordered.length
-          if (open.nonEmpty) {
-            state.update(SftState(nextSid, open))
-            // wake when the earliest open session could close
-            val wakeMs = (open.map(_.lastUs).min + gapUs) / 1000L + 1L
-            state.setTimeoutTimestamp(math.max(wakeMs, state.getCurrentWatermarkMs() + 1L))
-          } else if (nextSid > 1L) {
-            // no open span to wake for, but the sid counter must
-            // outlive the sessions (batch numbering counts from the
-            // start of the log): one counter row per ever-active user,
-            // no timeout — the next event for this user reads it back
-            state.update(SftState(nextSid, Nil))
-          } else {
-            state.remove()
-          }
-          out.iterator
-      }
+    GapSessions.sessions[(Long, Long, String, String), Long, List[SftTurn], SftSessionOut](
+        events, Seq("user_id", "event_id", "event_type", "props"), watermark,
+        graft.ops.SftQueries.GapMicros, ordinals = true)(
+      _._1, (ts, e) => List(SftTurn(ts, e._2, e._3, if (e._4 == null) "" else e._4)),
+      GapSessions.concat) { (user, sid, s) => Iterator.single(assemble(user, sid, s.s)) }
   }
 }

@@ -182,4 +182,63 @@ class StreamingBestOfNSpec extends SparkTestBase {
       "restart lost or duplicated pools (or broke the fold)")
     assert(spark.read.parquet(out).count() === 4L, "duplicate emissions")
   }
+
+  test("two bursts of one key ≥ quietUs apart in EVENT time emit as two " +
+      "pools from selectBest and advantages even when a catch-up replay's " +
+      "watermark jumps past both; the earlier closes while the later stays open") {
+    // burst A (0–5 min) and burst B (100–105 min): 95 min apart, far
+    // beyond quietUs = 30 min. One batch feeds both; a close keyed on
+    // the pool's single last event time merged them into one pool.
+    val burstA: Seq[Ev] = Seq(
+      (7L, 0 * Min, 711L, "gen", 7.0),
+      (7L, 2 * Min, 712L, "gen", 5.0),
+      (7L, 5 * Min, 713L, "gen", 8.0))
+    val burstB: Seq[Ev] = Seq(
+      (7L, 100 * Min, 714L, "gen", 1.0),
+      (7L, 102 * Min, 715L, "gen", 9.0),
+      (7L, 105 * Min, 716L, "gen", 2.0))
+    // watermark advancer: wm = 160 − 120 (delay) = 40 min — past A's
+    // close boundary (5 + 30 = 35 min), before B's (105 + 30 = 135 min)
+    val advance: Seq[Ev] = Seq((998L, 160 * Min, 991L, "gen", 0.0))
+    val sentinel: Seq[Ev] = Seq((999L, 13 * Hour, 901L, "gen", 0.0))
+
+    val arms: Seq[(String, DataFrame => DataFrame, DataFrame => DataFrame)] = Seq(
+      ("bestofn", ev => StreamingBestOfN.selectBest(spark, ev,
+        quietUs = 30L * Min, watermark = "2 hours").toDF(), RlQueries.bestOfNOf),
+      ("grpo", ev => StreamingBestOfN.advantages(spark, ev,
+        quietUs = 30L * Min, watermark = "2 hours").toDF(), RlQueries.grpoAdvOf))
+    for ((name, op, batchOf) <- arms) {
+      val cols = batchOf(eventsDf(burstA)).columns.map(col)
+      def slice(evs: Seq[Ev]): Set[org.apache.spark.sql.Row] =
+        batchOf(eventsDf(evs)).select(cols: _*).collect().toSet
+      def u7(out: String): Set[org.apache.spark.sql.Row] =
+        spark.read.parquet(out).filter(col("user_id") === 7L)
+          .select(cols: _*).collect().toSet
+
+      val root = Files.createTempDirectory(s"$name-burst-")
+      new FileStreamClient(root).createStream("cands", 1)
+      val ck = Files.createTempDirectory(s"$name-burst-ck-").toString
+      val out = Files.createTempDirectory(s"$name-burst-out-").toString
+      def run(): Unit = {
+        val q = op(readEvents(root, 1000))
+          .writeStream.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ck)
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination(180000)
+      }
+
+      produce(root, burstA ++ burstB ++ advance)
+      run() // one data batch: wm covers A only
+      assert(u7(out) === slice(burstA),
+        s"$name: burst A must close as its own pool while B stays open in state")
+
+      produce(root, sentinel)
+      run()
+      assert(u7(out) === slice(burstA) ++ slice(burstB),
+        s"$name: burst B must emit as a SECOND pool, never merged with A")
+    }
+  }
 }
