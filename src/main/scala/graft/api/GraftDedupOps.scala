@@ -803,7 +803,9 @@ trait GraftDedupOps { this: Graft.type =>
     * ~8-10 Spark jobs PER ROUND (joins, checkpoints, the convergence
     * aggregate — AQE runs each stage as its own job), a fixed ~1-2 s
     * floor per round that dwarfs tiny graphs; one bounded collect
-    * (≤ 50k edges ≈ 800 KB) replaces all of it with a single job.
+    * (≤ 50k edges ≈ 800 KB) replaces all of it with a single job. The
+    * union-find is [[componentMins]], which the near-dup stores'
+    * within-batch keeper step shares.
     * The labels are identical by the GraftApiSpec union-find pinning;
     * per-micro-batch ingest dedup (IncrementalDedup, whose within-batch
     * pair lists are small by construction) is the shape this exists
@@ -858,30 +860,40 @@ trait GraftDedupOps { this: Graft.type =>
       val nEdges = edges.count()
       if (nEdges <= 2L * LocalEdgeCap) {
         val spark = pairs.sparkSession
-        val parent = new java.util.HashMap[Long, Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.get(r) != r) r = parent.get(r)
-          var c = x // path compression
-          while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-          r
-        }
-        edges.collect().foreach { row =>
-          val (a, b) = (row.getLong(0), row.getLong(1))
-          parent.putIfAbsent(a, a)
-          parent.putIfAbsent(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { // union by min root: labels only ever decrease
-            if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-          }
-        }
-        val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-        parent.keySet.forEach(k => rows += ((k, find(k))))
         import spark.implicits._
-        return (rows.toSeq.toDF("id", "cluster_id"), 0)
+        val rows = componentMins(edges.collect().iterator.map(r => (r.getLong(0), r.getLong(1))))
+        return (rows.toDF("id", "cluster_id"), 0)
       }
     }
     dupClustersDistributed(edges, reliable)
+  }
+
+  /** The driver union-find behind [[dupClusters]]' fast path and the
+    * near-dup stores' within-batch keepers
+    * ([[graft.streaming.Admission.nonKeepers]]): (node, its component's
+    * min id) for every node of the `edges` list. Union by min root, so
+    * a label only ever decreases and ends at the component minimum —
+    * [[clusterDedup]]'s keeper is the node whose label is itself. */
+  private[graft] def componentMins(edges: Iterator[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.putIfAbsent(a, a)
+      parent.putIfAbsent(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { // union by min root: labels only ever decrease
+        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    val rows = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
+    parent.keySet.forEach(k => rows += ((k, find(k))))
+    rows.toSeq
   }
 
   /** Eager truncation for [[dupClusters]]: a reliable checkpoint when

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The lifecycle every Incremental* admission store shares, written
@@ -92,6 +92,53 @@ private[streaming] object Admission {
       if (over) compact
       over
     }
+  }
+
+  /** The distinct values of `df`'s column `c` as a driver set, from one
+    * map-only job: each partition dedups its own values and the driver
+    * merges them, so no exchange runs. The driver receives at most
+    * (distinct values × `df`'s partitions) rows — callers pass columns
+    * whose distinct values are bounded by the batch or by a fan-out. */
+  def distinctOf[T](df: DataFrame, c: Column)(implicit enc: Encoder[T]): Set[T] =
+    df.select(c).as[T].mapPartitions(_.toSet.iterator).collect().toSet
+
+  /** `df`'s rows whose `doc_id` is not in `ids`: a `left_anti` join
+    * against a broadcast local relation of the (batch-bounded) set, so
+    * the result's lineage holds no other frame. An empty set plans no
+    * join at all. */
+  def minus(df: DataFrame, ids: Set[Long]): DataFrame = {
+    val spark = df.sparkSession
+    df.join(broadcast(spark.createDataset(ids.toSeq)(Encoders.scalaLong).toDF("doc_id")),
+      Seq("doc_id"), "left_anti")
+  }
+
+  /** The ids among `ids`' column `id` that are NOT their within-batch
+    * duplicate cluster's keeper: the rows
+    * `Graft.clusterDedup(ids, id, pairs, idA, idB)` marks `kept = false`
+    * (the keeper is the component's min id). Both near-dup stores call
+    * this on their survivors and verified survivor pairs.
+    *
+    * Up to `cap` distinct pairs it is one job: each partition of
+    * `pairs` sends at most `cap + 1` distinct pairs, and the driver
+    * union-find ([[graft.api.Graft.componentMins]]) labels the
+    * components — the driver holds at most (`cap` + 1) × `pairs`'
+    * partitions pairs. Above `cap` it falls back to the distributed
+    * `clusterDedup` and collects its non-keepers (≤ the batch). */
+  def nonKeepers(ids: DataFrame, id: String, pairs: DataFrame, idA: String, idB: String,
+      cap: Int = graft.api.Graft.LocalEdgeCap): Set[Long] = {
+    val edges = pairs.select(col(idA).cast("long"), col(idB).cast("long"))
+      .as[(Long, Long)](Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .mapPartitions { it =>
+        val seen = scala.collection.mutable.HashSet.empty[(Long, Long)]
+        while (it.hasNext && seen.size <= cap) seen += it.next()
+        seen.iterator
+      }(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+      .collect().distinct
+    if (edges.length <= cap)
+      graft.api.Graft.componentMins(edges.iterator).collect { case (n, m) if n != m => n }.toSet
+    else
+      distinctOf[Long](graft.api.Graft.clusterDedup(ids, id, pairs, idA, idB)
+        .filter(!col("kept")), col(id).cast("long"))(Encoders.scalaLong)
   }
 
   /** Fail if any `keys` tuple appears more than once in the batch. */

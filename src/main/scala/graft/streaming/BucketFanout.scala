@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The bucketed-index layout of the incremental admission stores, and
@@ -285,10 +285,13 @@ object BucketFanout {
     }
 
     /** The distinct buckets `keys` (a frame carrying this index's key
-      * column) touch at `fanout` — a driver-side collect bounded by
-      * `fanout`, not by data size. */
+      * column) touch at `fanout`, ascending — one map-only job
+      * ([[Admission.distinctOf]]): each partition dedups its own
+      * buckets and the driver merges them, so the driver receives at
+      * most `fanout` × `keys`' partitions values, bounded by the
+      * fan-out and the batch's partitioning, not by data size. */
     def bucketsOf(keys: DataFrame, fanout: Int): Seq[Int] =
-      keys.select(bucket(fanout)).distinct().collect().map(_.getInt(0)).toSeq
+      Admission.distinctOf[Int](keys, bucket(fanout))(Encoders.scalaInt).toSeq.sorted
 
     /** The pruned read of the index at `indexPath`: a static `IN` filter
       * on the dir column, so Spark plans the read over only those

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.DedupQueries
@@ -44,6 +44,21 @@ import graft.streaming.BucketFanout.{Bands, Docs}
   * disk-resident LSH index, so a 100 TB admitted corpus costs
   * (bands × docs) long-triples of storage and the per-batch join
   * shuffles only batch-sized band rows.
+  *
+  * Each trigger's decisions are id sets bounded by the batch, and each
+  * is collected to the driver once ([[Admission.distinctOf]],
+  * [[Admission.nonKeepers]]), so no later action re-runs the step that
+  * made it or joins it back in as a frame:
+  *  - the bucket lists of both pruned reads — ≤ fanout × input
+  *    partitions values ([[BucketFanout.Index.bucketsOf]]);
+  *  - the ids history rejects — ≤ the batch's ids × the verify's
+  *    partitions;
+  *  - the survivors that are not their within-batch cluster's keeper —
+  *    from ≤ [[graft.api.Graft.LocalEdgeCap]] + 1 verified pairs per
+  *    pair partition, else the distributed fallback's ≤ batch ids.
+  * The survivors, their bands and the admitted rows are the cached
+  * batch frames minus a local set ([[Admission.minus]]), so after the
+  * history verify no frame of the trigger reads the store again.
   *
   * Admission semantics (deterministic given batch boundaries):
   *  1. a new doc with a verified near-dup among ADMITTED history is
@@ -100,8 +115,10 @@ object IncrementalDedup {
     //    candidate (new, seen) pairs → exact verify on shingles of the
     //    candidate subset only. The index read is pruned to the batch's
     //    own bucket directories (≤ fanout literals — bounded
-    //    driver-side by construction, not by data size).
-    val rejectedByHistory: DataFrame =
+    //    driver-side by construction, not by data size). The rejected
+    //    ids come back as a driver set (≤ the batch's ids), so nothing
+    //    after this reads the store again.
+    val rejected: Set[Long] =
       if (AtomicStore.exists(spark, bandsPath)) {
         phase("bucket-discovery")
         val seenBands = Bands.scan(spark, bandsPath, Bands.bucketsOf(newBands, fanout))
@@ -117,22 +134,12 @@ object IncrementalDedup {
         val seenIds = cand.select(col("seen_id").as("doc_id"))
         val docsPruned = Docs.scan(spark, docsPath, Docs.bucketsOf(seenIds, docFanout))
         val seenSh = DedupQueries.shingleFrame(
-          docsPruned.select(col("doc_id"), col("text")).join(seenIds.distinct(), Seq("doc_id")),
+          docsPruned.select(col("doc_id"), col("text")).join(seenIds, Seq("doc_id"), "left_semi"),
           "doc_id", "text")
-        DedupQueries.verifyJaccard(cand, "new_id", "seen_id", newSigs, seenSh, threshold)
-          .select(col("new_id").as("doc_id")).distinct()
-          // eager checkpoint of the (tiny) rejected-id frame: both the
-          // within-batch pair probe and the admitted build consume
-          // survivors, and without this each re-runs the whole history
-          // verify (band scan + candidate re-shingle + jaccard)
-          .localCheckpoint(true)
-      } else spark.range(0).select(col("id").as("doc_id"))
-
-    // the rejected ids here and the keeper ids below are subsets of the
-    // batch's ids, so both joins broadcast them: left to AQE, each starts
-    // as a sort-merge join and pays its shuffle stages as extra jobs
-    // before the runtime switch to broadcast
-    val survivors = newDocs.join(broadcast(rejectedByHistory), Seq("doc_id"), "left_anti")
+        Admission.distinctOf[Long](
+          DedupQueries.verifyJaccard(cand, "new_id", "seen_id", newSigs, seenSh, threshold),
+          col("new_id"))(Encoders.scalaLong)
+      } else Set.empty
 
     // 2. within-batch canonicalization: near-dup pairs among survivors →
     //    connected clusters → clusterDedup's keepers. The pairs reuse the
@@ -140,23 +147,23 @@ object IncrementalDedup {
     //    function of a doc's own signature, so restricting the cached
     //    rows to survivors is exactly minhashDupes(survivors) without a
     //    second kernel pass
-    val sBands = newBands.join(survivors.select(col("doc_id")), Seq("doc_id"), "left_semi")
+    val sBands = Admission.minus(newBands, rejected)
     // no .distinct() here: a pair colliding in several bands just
-    // evaluates the (cheap, array-local) jaccard filter more than once
-    // and dupClusters' own edges-distinct dedups — the distinct cost a
-    // full exchange + AQE stage round per trigger for nothing
+    // evaluates the (cheap, array-local) jaccard filter more than once,
+    // and the keeper step dedups pairs per partition — the distinct
+    // cost a full exchange + AQE stage round per trigger for nothing
     val pairs = DedupQueries.verifyJaccard(
       DedupQueries.bandCandidates(sBands, sBands, "id_a", "id_b", Some(_ < _)),
       "id_a", "id_b", newSigs, newSigs, threshold)
     phase("within-batch-cc")
-    val keep = graft.api.Graft.clusterDedup(survivors, "doc_id", pairs, "id_a", "id_b")
-      .filter(col("kept")).select(col("doc_id"))
-    // localCheckpoint (eager) truncates lineage BEFORE the store writes:
-    // the admitted plan reads the store's current files, so a lazy
-    // recompute after the appends below would see its own output
+    val nonKeepers = Admission.nonKeepers(
+      Admission.minus(newDocs, rejected), "doc_id", pairs, "id_a", "id_b")
+    // the admitted rows are the pinned batch minus two driver sets, so
+    // their lineage never reads the store; the eager localCheckpoint
+    // hands the caller a frame that outlives the batch pin
     phase("admitted-checkpoint")
-    val admitted = survivors.join(broadcast(keep), Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
+    val refused = rejected ++ nonKeepers
+    val admitted = Admission.minus(newDocs, refused).localCheckpoint(true)
 
     // The two store appends are independent (different subdirs, both
     // inputs eagerly materialized above) and each pays a fixed cost
@@ -179,8 +186,7 @@ object IncrementalDedup {
       },
       () => {
         phase("bands-append")
-        Bands.append(newBands.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi"),
-          storeDir, fanout)
+        Bands.append(Admission.minus(newBands, refused), storeDir, fanout)
       }))
     admitted
     }
@@ -191,8 +197,8 @@ object IncrementalDedup {
     * with a running [[compactStore]] (see its scaladoc for why). */
   def admittedDocs(spark: SparkSession, storeDir: String): DataFrame = {
     store.recover(spark, storeDir)
-    if (AtomicStore.exists(spark, s"$storeDir/docs"))
-      spark.read.parquet(s"$storeDir/docs").select(col("doc_id"), col("text"))
+    if (AtomicStore.exists(spark, Docs.path(storeDir)))
+      spark.read.parquet(Docs.path(storeDir)).select(col("doc_id"), col("text"))
     else spark.range(0).select(col("id").as("doc_id"), lit("").as("text")).limit(0)
   }
 

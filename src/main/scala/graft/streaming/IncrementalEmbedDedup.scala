@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VecMath.{cos12, float_dot}
@@ -36,6 +36,17 @@ import graft.streaming.BucketFanout.Vecs
   * bucket directories (static partition pruning — an O(batch)-bounded
   * subset of files). No history vector is re-embedded, re-assigned, or
   * re-scanned outside the probed buckets.
+  *
+  * The trigger's decisions are driver id sets, as in
+  * [[IncrementalDedup]]: the probed buckets (≤ fanout × input
+  * partitions values, [[BucketFanout.Index.bucketsOf]]), the ids
+  * history rejects (≤ the batch's ids × the probe join's partitions)
+  * and the survivors that are not their within-batch cluster's keeper
+  * ([[Admission.nonKeepers]]: ≤ [[graft.api.Graft.LocalEdgeCap]] + 1
+  * pairs per pair partition, else the distributed fallback's ≤ batch
+  * ids). The survivors and the admitted rows are the batch frames
+  * minus a local set, so no frame after the history probe reads the
+  * store.
   *
   * Completeness under a stale index: centroids never change after the
   * first batch, but the radius rule only needs `radii` to bound every
@@ -127,8 +138,10 @@ object IncrementalEmbedDedup {
 
     // 1. history rejection: radius-rule probe → equi-join the persisted
     //    vector index on cell, pruned to the probed buckets' directories
-    //    (≤ fanout literals — bounded driver-side by construction)
-    val rejectedByHistory: DataFrame =
+    //    (≤ fanout literals — bounded driver-side by construction). The
+    //    rejected ids come back as a driver set (≤ the batch's ids), so
+    //    nothing after this reads the store again.
+    val rejected: Set[Long] =
       if (AtomicStore.exists(spark, vecsPath)) {
         phase("bucket-discovery")
         val radii = liveRadii(spark, radiiPath, index.nlist)
@@ -143,17 +156,13 @@ object IncrementalEmbedDedup {
         // a replayed vector meets its admitted copy in its home cell and
         // is rejected by id: a zero vector's cosine to itself is 0.0, so
         // only the id makes its replay a no-op too
-        probed.join(hist, Seq("cell"))
+        Admission.distinctOf[Long](probed.join(hist, Seq("cell"))
           .filter(col("doc_id") === col("__hid") ||
             cos12(float_dot(col("__v"), col("__hv")), col("nrm"), col("__hnrm"))
-              >= threshold)
-          .select(col("doc_id")).distinct()
-          // eager: the within-batch pairs and the admitted build re-read
-          // it in separate jobs ([[graft.Frames]])
-          .localCheckpoint(true)
-      } else spark.range(0).select(col("id").as("doc_id"))
+              >= threshold), col("doc_id"))(Encoders.scalaLong)
+      } else Set.empty
 
-    val survivors = newVecs.join(rejectedByHistory, Seq("doc_id"), "left_anti")
+    val survivors = Admission.minus(newVecs, rejected)
 
     // 2. within-batch canonicalization: near-dup pairs among survivors
     //    (reusing the amortized centroids — the indexed overload measures
@@ -161,14 +170,12 @@ object IncrementalEmbedDedup {
     //    connected clusters → clusterDedup's keepers
     phase("within-batch-cc")
     val pairs = graft.api.Graft.embedNearDup(survivors, "doc_id", "vec", threshold, index)
-    val keep = graft.api.Graft.clusterDedup(survivors, "doc_id", pairs, "id_a", "id_b")
-      .filter(col("kept")).select(col("doc_id"))
-    // localCheckpoint (eager) truncates lineage BEFORE the store writes:
-    // the admitted plan reads the store's current files via the history
-    // anti-join, so a lazy recompute after the appends below would see
-    // its own output
+    val nonKeepers = Admission.nonKeepers(survivors, "doc_id", pairs, "id_a", "id_b")
+    // the admitted rows are the checkpointed home assignment minus two
+    // driver sets, so their lineage never reads the store; the eager
+    // localCheckpoint serves both appends and the caller
     phase("admitted-checkpoint")
-    val admittedHome = home.join(keep, Seq("doc_id"), "left_semi").localCheckpoint(true)
+    val admittedHome = Admission.minus(home, rejected ++ nonKeepers).localCheckpoint(true)
 
     // radii BEFORE vectors: a crash between the two appends must leave
     // radii as the OVER-bound side (rows whose vectors never landed only
@@ -189,8 +196,8 @@ object IncrementalEmbedDedup {
     * recovers the store): do not run concurrently with [[compactStore]]. */
   def admittedVecs(spark: SparkSession, storeDir: String): DataFrame = {
     store.recover(spark, storeDir)
-    if (AtomicStore.exists(spark, s"$storeDir/vecs"))
-      spark.read.parquet(s"$storeDir/vecs").select(col("doc_id"), col("vec"))
+    if (AtomicStore.exists(spark, Vecs.path(storeDir)))
+      spark.read.parquet(Vecs.path(storeDir)).select(col("doc_id"), col("vec"))
     else spark.range(0).select(col("id").as("doc_id"),
       lit(null).cast("array<float>").as("vec"))
   }

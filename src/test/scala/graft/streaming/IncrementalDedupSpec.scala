@@ -535,6 +535,60 @@ class IncrementalDedupSpec extends SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("admitBatch stays within its per-phase job budget on a fresh store " +
+      "and on a trigger with history and within-batch near-dups") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val store = Files.createTempDirectory("incdedup-budget-").toString
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(js.properties).flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        jobs.add(prop("spark.jobGroup.id") -> prop("spark.job.description"))
+      }
+    }
+    // trigger 2 holds a history near-dup of doc 1 (rejected) and a
+    // within-batch near-dup pair 42~43 (43 is not its cluster's keeper)
+    val first = (1L to 40L).map(doc(_, "lb"))
+    val second = Seq(41L -> (first.head._2 + " hx"), 42L -> doc(42L, "lb")._2,
+      43L -> (doc(42L, "lb")._2 + " wx")) ++ (44L to 80L).map(doc(_, "lb"))
+    // jobs per admitBatch/<phase> in either trigger, at most: the
+    // rejected and non-keeper ids are collected to the driver once, so
+    // no later phase re-runs the history verify or joins a
+    // checkpointed id frame back in
+    val budget = Map("requireUnique" -> 3, "bucket-discovery" -> 13,
+      "within-batch-cc" -> 8, "admitted-checkpoint" -> 2,
+      "docs-append" -> 2, "bands-append" -> 3)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      for ((batch, t) <- Seq(first, second).zipWithIndex) {
+        // the group covers the call only, not the check's own collect
+        spark.sparkContext.setJobGroup(s"budget-$t", "admitBatch")
+        val admitted = try admit(batch, store) finally spark.sparkContext.clearJobGroup()
+        assert(admitted.collect().map(_.getLong(0)).toSet ===
+          batch.map(_._1).toSet -- Set(41L, 43L))
+      }
+      val marker = "incdedup-budget-marker"
+      spark.sparkContext.setJobDescription(marker)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      def seen = jobs.toArray(Array.empty[(String, String)]).toSeq
+      while (!seen.exists(_._2 == marker) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(seen.exists(_._2 == marker), "listener never saw the marker job")
+      for (t <- 0 to 1) {
+        val perPhase = seen.filter(_._1 == s"budget-$t").map(_._2)
+          .groupBy(identity).map { case (d, js) => d -> js.size }
+        info(s"trigger $t jobs: ${perPhase.toSeq.sorted.mkString(", ")}")
+        assert(perPhase.keySet.forall(d => budget.contains(d.stripPrefix("admitBatch/"))),
+          s"trigger $t ran jobs outside the budgeted phases: $perPhase")
+        for ((p, max) <- budget) {
+          val n = perPhase.getOrElse(s"admitBatch/$p", 0)
+          assert(n <= max, s"trigger $t: admitBatch/$p ran $n jobs, budget $max ($perPhase)")
+        }
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("within-batch canonicalization keeps clusterDedup's keeper: only the " +
       "min id of a chain x~y~z (x and z not near-dups) is admitted") {
     val store = Files.createTempDirectory("incdedup-chain-").toString
